@@ -38,11 +38,95 @@ remaining transient: a PURGE fold's post-barrier window pairs the live
 dst with pre-purge collection stats until _purge_docs_and_stats
 re-baselines at fold close — scores (not membership) can drift for
 those seconds, healing with the 'done' row or the next GC.
+
+Tombstone liveness is one type, DeadDocs: the set of deleted doc ids
+every query kernel masks. Doc ids are never reused (extend and merge
+allocate past every docs and postings segment), so one set holding
+every tombstone partition is correct in every fold window — ids a
+segment never held simply never match.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Tuple
+
+import numpy as np
+
+from .codec import SEG_STRIDE
+
+
+class DeadDocs:
+    """Tombstoned doc-id set: one packed bitmap per ORIGIN segment
+    (doc_id // SEG_STRIDE — doc ids keep their origin across merges,
+    only the postings holding them move), each sized by the largest
+    dead row seen in that segment. Memory is at most one bit per corpus
+    row however many tombstones accumulate (a sorted id array costs 64
+    bits per tombstone). Immutable once built."""
+
+    __slots__ = ("_bits",)
+
+    def __init__(self, bits: dict[int, np.ndarray]):
+        self._bits = bits
+
+    @classmethod
+    def from_ids(cls, ids) -> "DeadDocs":
+        """From one doc-id array (any order, duplicates allowed)."""
+        return cls.from_batches([ids])
+
+    @classmethod
+    def from_batches(cls, batches: Iterable) -> "DeadDocs":
+        """From an iterable of doc-id arrays (e.g. parquet record
+        batches), never holding their concatenation: bitmaps grow
+        geometrically while streaming and are trimmed once at the end."""
+        bits: dict[int, np.ndarray] = {}
+        used: dict[int, int] = {}
+        for ids in batches:
+            ids = np.asarray(ids, dtype=np.int64)
+            if not len(ids):
+                continue
+            segs, rows = np.divmod(ids, SEG_STRIDE)
+            lo, hi = int(segs.min()), int(segs.max())
+            for seg in [lo] if lo == hi else np.unique(segs).tolist():
+                r = rows if lo == hi else rows[segs == seg]
+                need = int(r.max() >> 3) + 1
+                bm = bits.get(seg, np.zeros(0, dtype=np.uint8))
+                if len(bm) < need:
+                    pad = np.zeros(max(need, 2 * len(bm)) - len(bm), dtype=np.uint8)
+                    bits[seg] = bm = np.concatenate([bm, pad])
+                used[seg] = max(used.get(seg, 0), need)
+                np.bitwise_or.at(bm, r >> 3, (1 << (r & 7)).astype(np.uint8))
+        return cls({s: bm[:used[s]].copy() for s, bm in bits.items()})
+
+    def __bool__(self) -> bool:
+        return bool(self._bits)
+
+    @property
+    def nbytes(self) -> int:
+        return sum(bm.nbytes for bm in self._bits.values())
+
+    def __contains__(self, doc) -> bool:
+        seg, row = divmod(int(doc), SEG_STRIDE)
+        bm = self._bits.get(seg)
+        return (bm is not None and (row >> 3) < len(bm)
+                and bool((int(bm[row >> 3]) >> (row & 7)) & 1))
+
+    def mask(self, ids) -> np.ndarray:
+        """bool[len(ids)]: True where the doc id is dead."""
+        ids = np.asarray(ids, dtype=np.int64)
+        out = np.zeros(len(ids), dtype=bool)
+        if not self._bits or not len(ids):
+            return out
+        segs, rows = np.divmod(ids, SEG_STRIDE)
+        lo, hi = int(segs.min()), int(segs.max())
+        for seg, bm in self._bits.items():
+            if not lo <= seg <= hi:
+                continue
+            sel = slice(None) if lo == hi else np.flatnonzero(segs == seg)
+            r = rows[sel]
+            byte = r >> 3
+            bit = (bm[np.minimum(byte, len(bm) - 1)] >> (r & 7)) & 1
+            out[sel] = (byte < len(bm)) & bit.astype(bool)
+        return out
 
 
 def reader_exclusions(
@@ -54,8 +138,10 @@ def reader_exclusions(
     manifest's protocol columns; rows of other stages are ignored, so
     callers may pass the whole manifest. `union_liveness` is True when
     any merge fold sits between its barriers (committed, not done):
-    per-segment tombstone ownership is then in flux and readers must
-    apply the union of all tombstone partitions to every segment.
+    per-segment tombstone ownership is then in flux and a per-segment
+    liveness read (the Spark task path, operators/wand._load_dead) must
+    add the fold's partitions. The serving reader's one DeadDocs
+    already holds every partition, so it needs no such flag.
     """
     merge_folds: dict[int, dict] = {}
     extend_state: dict[int, tuple[float, str]] = {}

@@ -111,7 +111,8 @@ def tombstone_segments(spark: SparkSession, paths: IndexPaths) -> frozenset[int]
 
 
 def segment_tombstones(tombstones_path: str, segment_id: int) -> np.ndarray:
-    """TASK-side liveness load: the sorted dead doc ids of ONE segment,
+    """TASK-side liveness load: the dead doc ids of ONE segment (any
+    order, may repeat — functions/liveness.DeadDocs takes them as-is),
     read from that segment's partition of the tombstones table. This is
     what replaced the global tombstone array that used to ship in every
     WAND/phrase closure — a task's liveness cost is now one bounded
@@ -121,10 +122,9 @@ def segment_tombstones(tombstones_path: str, segment_id: int) -> np.ndarray:
 
     try:
         d = ds.dataset(f"{tombstones_path}/segment_id={int(segment_id)}", format="parquet")
-        arr = d.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
+        return d.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
     except FileNotFoundError:
         return np.empty(0, dtype=np.int64)
-    return np.unique(arr)
 
 
 def tombstone_count(spark: SparkSession, paths: IndexPaths) -> int:

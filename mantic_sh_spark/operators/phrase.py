@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.codec import decode_block, decode_positions
+from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize
 from ..sources.catalog import IndexPaths
 
@@ -73,7 +74,7 @@ def _gather_runs(flat: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.n
 
 
 def _phrase_match_starts(by_term: dict[str, pd.DataFrame], terms: list[str],
-                         dead: np.ndarray | None = None,
+                         dead: DeadDocs | None = None,
                          slop: int = 0,
                          decoded_cache: dict | None = None,
                          stats: dict | None = None):
@@ -122,12 +123,8 @@ def _phrase_match_starts(by_term: dict[str, pd.DataFrame], terms: list[str],
         cand = np.intersect1d(cand, ds, assume_unique=True)
         if not len(cand):
             break
-    if dead is not None and len(dead) and len(cand):
-        pos_in_dead = np.searchsorted(dead, cand)
-        hit = (pos_in_dead < len(dead)) & (
-            dead[np.minimum(pos_in_dead, len(dead) - 1)] == cand
-        )
-        cand = cand[~hit]
+    if dead is not None and len(cand):
+        cand = cand[~dead.mask(cand)]
     if not len(cand):
         return None
 
@@ -168,7 +165,7 @@ def _phrase_match_starts(by_term: dict[str, pd.DataFrame], terms: list[str],
 
 
 def segment_phrase_matches(by_term: dict[str, pd.DataFrame], terms: list[str],
-                           dead: np.ndarray | None = None,
+                           dead: DeadDocs | None = None,
                            slop: int = 0,
                            decoded_cache: dict | None = None,
                            stats: dict | None = None) -> list[tuple[int, int]]:
@@ -197,7 +194,7 @@ def segment_phrase_matches(by_term: dict[str, pd.DataFrame], terms: list[str],
 
 
 def segment_phrase_positions(by_term: dict[str, pd.DataFrame], terms: list[str],
-                             dead: np.ndarray | None = None,
+                             dead: DeadDocs | None = None,
                              slop: int = 0,
                              decoded_cache: dict | None = None,
                              stats: dict | None = None) -> list[tuple[int, np.ndarray]]:

@@ -82,7 +82,11 @@ def cosine_topk_df(emb: DataFrame, query_df: DataFrame, k: int = 10,
     (broadcast crossJoin) instead of a collected Python list — keeps
     the whole query lazy, so a registry entry never runs a separate
     driver-side `first()` job inside its timed region (r6). Scoring is
-    structurally shared with cosine_scores (_cosine_scored)."""
+    structurally shared with cosine_scores (_cosine_scored).
+
+    `query_df` must hold EXACTLY one row: the crossJoin does not check,
+    so zero rows return an empty result and several rows return
+    duplicated, mis-ranked hits (the collected form failed loudly)."""
     j = emb.crossJoin(F.broadcast(query_df.select(F.col(vec_col).alias("_qv"))))
     s = _cosine_scored(j, F.col("_qv"), id_col, vec_col)
     return _exclude_and_rank(s, k, exclude_id)

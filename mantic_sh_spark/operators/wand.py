@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import B, K1, idf as idf_fn
 from ..functions.codec import decode_block
+from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize_query
 from ..sources.catalog import IndexPaths
 from .query import rank_topk
@@ -150,10 +151,10 @@ class _Cursor:
 
 
 def block_max_wand(cursors: list[_Cursor], k: int,
-                   dead: "np.ndarray | None" = None) -> list[tuple[int, float]]:
+                   dead: DeadDocs | None = None) -> list[tuple[int, float]]:
     """BMW top-k over one segment. Returns [(doc_id, score)] sorted by
-    (score desc, doc_id asc), len ≤ k. `dead` = sorted tombstoned doc
-    ids; dead docs are skipped at heap-push (live-docs check) so the
+    (score desc, doc_id asc), len ≤ k. `dead` = tombstoned doc ids;
+    dead docs are skipped at heap-push (live-docs check) so the
     heap holds the k best LIVE docs — pruning bounds remain sound
     because skipping only keeps θ lower (never higher) than the
     all-docs run."""
@@ -205,9 +206,7 @@ def block_max_wand(cursors: list[_Cursor], k: int,
             mover = max(active[: p + 1], key=lambda c: c.ub)
             mover.seek(target)
         elif active[0].cur == pivot:
-            alive = dead is None or len(dead) == 0 or not (
-                (j := int(np.searchsorted(dead, pivot))) < len(dead) and dead[j] == pivot
-            )
+            alive = dead is None or pivot not in dead
             s = 0.0
             if alive:
                 for c in active:
@@ -262,7 +261,7 @@ def _decode_term_all(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndar
 
 
 def _taat_topk(term_pdfs: list[tuple[str, pd.DataFrame, float]], avgdl: float, k: int,
-               k1: float, b: float, dead: "np.ndarray | None",
+               k1: float, b: float, dead: DeadDocs | None,
                stats: dict | None = None,
                decode_cache=None) -> list[tuple[int, float]]:
     """Exact vectorized term-at-a-time top-k over one segment:
@@ -297,10 +296,9 @@ def _taat_topk(term_pdfs: list[tuple[str, pd.DataFrame, float]], avgdl: float, k
     starts = np.flatnonzero(np.concatenate(([True], docs[1:] != docs[:-1])))
     uniq = docs[starts]
     tot = np.add.reduceat(scores, starts)
-    if dead is not None and len(dead):
-        pos = np.searchsorted(dead, uniq)
-        hit = (pos < len(dead)) & (dead[np.minimum(pos, len(dead) - 1)] == uniq)
-        uniq, tot = uniq[~hit], tot[~hit]
+    if dead is not None:
+        live = ~dead.mask(uniq)
+        uniq, tot = uniq[live], tot[live]
     r = np.round(tot, 4)
     idx = np.lexsort((uniq, -r))[:k]
     return list(zip(uniq[idx].tolist(), r[idx].tolist()))
@@ -309,7 +307,7 @@ def _taat_topk(term_pdfs: list[tuple[str, pd.DataFrame, float]], avgdl: float, k
 def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
                  idf_map: dict[str, float], avgdl: float, k: int,
                  k1: float, b: float, bound_factor: float = 1.0,
-                 dead: "np.ndarray | None" = None,
+                 dead: DeadDocs | None = None,
                  stats: dict | None = None,
                  decode_cache=None) -> list[tuple[int, float]]:
     """One (segment, query) top-k with the cost-based TAAT/WAND choice.
@@ -339,7 +337,7 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
     return block_max_wand(cursors, k, dead)
 
 
-def _load_dead(dead_src, seg: int) -> "np.ndarray | None":
+def _load_dead(dead_src, seg: int) -> DeadDocs | None:
     """Per-task liveness: read THIS segment's tombstone partition iff
     the (metadata-sized) dead_src says the segment has one. dead_src's
     optional third element is the set of IN-FLUX partitions — a merge
@@ -357,15 +355,7 @@ def _load_dead(dead_src, seg: int) -> "np.ndarray | None":
         return None
     from .delete import segment_tombstones
 
-    arrs = [segment_tombstones(dead_src[0], s) for s in want]
-    arrs = [a for a in arrs if a is not None and len(a)]
-    if not arrs:
-        return None
-    if len(arrs) == 1:
-        return arrs[0]
-    import numpy as np
-
-    return np.unique(np.concatenate(arrs))
+    return DeadDocs.from_batches(segment_tombstones(dead_src[0], s) for s in want) or None
 
 
 def _wand_udf(queries: dict[int, list[str]], idf_map: dict[str, float],

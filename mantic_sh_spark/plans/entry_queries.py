@@ -373,7 +373,9 @@ def q_stale_diff(spark, sf_dir):
     doc = F.col("doc_id")
     in_old = F.pmod(doc, F.lit(5)) != 0
     in_new = F.pmod(doc, F.lit(7)) != 0
-    # v_old = n_chars, v_new = n_chars + (doc_id%3==0) → modified iff doc_id%3==0
+    # v_old = n_chars, v_new = n_chars + (doc_id%3==0) → modified iff doc_id%3==0.
+    # Assumes n_chars is NOT NULL: the oracle's NULL <> NULL would report
+    # such a row unchanged, while this row-local form says 'modified'.
     status = (
         F.when(~in_old & in_new, F.lit("added"))
         .when(in_old & ~in_new, F.lit("deleted"))

@@ -41,6 +41,7 @@ from collections import OrderedDict
 import numpy as np
 
 from .functions.bm25 import B, K1, idf as idf_fn
+from .functions.liveness import DeadDocs
 from .functions.tokenize import tokenize_query
 from .sources.catalog import IndexPaths
 
@@ -57,18 +58,6 @@ _POSTING_COLS = ["tid", "first_doc", "last_doc", "block_max", "n",
 # while per-segment slices stay cache-resident (topk strategy split).
 _GLOBAL_TAAT_SPILL = 2_000_000
 
-# Tombstone-count bound on the global-kernel liveness union: above this
-# many total tombstone rows the reader refuses to materialize
-# _dead_union (8 B/id resident per replica, ~2x transiently during the
-# concatenate+sort) and routes global-kernel-eligible queries to the
-# per-segment sweep, whose liveness input is ONE segment's array at a
-# time. 8M ids = 64 MB union — a sane replica budget; a heavily-churned
-# index past it should purge-merge, which resets the count to zero.
-# The in-flux merge window (_liveness_union) keeps the union regardless:
-# the sweep's own liveness is the union there, so falling back saves
-# nothing and the window is fold-bounded.
-_DEAD_UNION_CAP = 8_000_000
-
 
 class TierBudgetExceeded(ValueError):
     """A tiered query where EVERY term's tier-field doc list exceeds
@@ -79,14 +68,6 @@ class TierBudgetExceeded(ValueError):
     queries through the batch operator (operators/query.tiered_topk —
     a distributed full-corpus pass, the semantics' native cost), or
     raise the cap on a reader with the memory to back it."""
-
-# Byte budget for the per-segment tombstone-array cache (the sweep's
-# liveness input): without it a query mix touching every segment of a
-# heavily-churned index would converge _dead_cache to the full
-# tombstone volume resident — the very bound the union cap claims
-# (review r5 finding). LRU eviction; one segment's array is the unit.
-_DEAD_CACHE_BUDGET = 256 * 1024 * 1024
-
 
 # Byte budget for the decoded-postings LRU: decoded arrays run ~12x
 # their varint form, so this cache holds far fewer ENTRIES than the
@@ -286,7 +267,6 @@ class IndexReader:
         # excluded until the fold closes or the next mutation GCs it)
         self.bound_factors: dict[int, float] = {}
         self._excluded_segs: frozenset = frozenset()
-        self._liveness_union = False
         man = self._read_optional(
             self.paths.manifest,
             ["segment_id", "build_avgdl", "stage", "status", "started_at"],
@@ -302,39 +282,15 @@ class IndexReader:
             if {"stage", "status", "started_at"} <= set(pdf.columns):
                 from .functions.liveness import reader_exclusions
 
-                self._excluded_segs, self._liveness_union = reader_exclusions(
+                self._excluded_segs, _ = reader_exclusions(
                     zip(pdf["segment_id"], pdf["stage"], pdf["status"],
                         pdf["started_at"].fillna(0.0))
                 )
 
-        # per-SEGMENT liveness: only the metadata-sized set of segments
-        # that have tombstone partitions loads at refresh; each
-        # segment's sorted dead-id array loads lazily on first touch
-        # (and caches until the next refresh). No global tombstone
-        # array exists anywhere in the reader.
-        self._dead_segs: frozenset[int] = frozenset()
-        self._dead_cache: OrderedDict[int, np.ndarray] = OrderedDict()
-        self._dead_cache_bytes = 0
-        self._dead_total = 0  # total tombstone rows (union-cap input)
-        t = self._dataset_or_none(self.paths.tombstones)
-        # a purge deletes every tombstone PARTITION but leaves the root
-        # dir: the dataset then exists with a column-less schema — treat
-        # it as clean, don't crash the refresh.
-        # METADATA-ONLY census (review r5 finding): partition membership
-        # comes from the hive fragment paths and the row count from
-        # parquet footers — materializing the segment_id column here
-        # would allocate one int64 per tombstone (8 GB at 1e9) on every
-        # refresh, exactly the array the union cap exists to avoid.
-        if t is not None and "segment_id" in t.schema.names:
-            import re as _re
-
-            segs = set()
-            for frag in t.get_fragments():
-                m = _re.search(r"segment_id=(-?\d+)", frag.path)
-                if m:
-                    segs.add(int(m.group(1)))
-            self._dead_segs = frozenset(segs)
-            self._dead_total = t.count_rows()
+        # liveness: only the tombstones HANDLE opens here; the epoch's
+        # DeadDocs builds from it on the first query that needs it
+        self._tombstones = self._dataset_or_none(self.paths.tombstones)
+        self._dead = None
 
         # an empty-corpus index commits only collection_stats + manifest
         # (no postings/terms/docs dirs) — serve it as empty, not a crash
@@ -348,9 +304,6 @@ class IndexReader:
         self._pos_lru.clear()
         self._decoded.clear()
         self._df_cache.clear()
-        self._dead_cache.clear()
-        self._dead_cache_bytes = 0
-        self._dead_union_cache = None  # global-kernel liveness input
         # counters restart with the new index state (counters() promises
         # totals "since construction/refresh"); the epoch bump
         # invalidates every thread's thread-local last_stats
@@ -359,8 +312,7 @@ class IndexReader:
         self.totals = {"queries": 0, "segments_touched": 0,
                        "blocks_considered": 0, "blocks_decoded": 0,
                        "terms_cold": 0, "global_fallbacks": 0,
-                       "dead_union_fallbacks": 0, "decoded_hits": 0,
-                       "tier_stream_intersects": 0}
+                       "decoded_hits": 0, "tier_stream_intersects": 0}
 
     @staticmethod
     def _dataset_or_none(path: str):
@@ -457,39 +409,44 @@ class IndexReader:
                 raise first
             return attempt_fn()
 
-    def _dead(self, seg: int) -> "np.ndarray | None":
-        """This segment's sorted tombstoned doc ids (None when clean) —
-        lazy per-segment read of the partitioned liveness sidecar.
-        While a merge fold sits between its barriers (committed, not
-        done — see _refresh_locked), tombstone ownership is in flux
-        (src partitions not yet re-homed/purged while dst already
-        serves those docs): every segment then uses the UNION of all
-        partitions, which is over-inclusive and therefore correct."""
-        if self._liveness_union:
-            return self._dead_union()
-        return self._dead_raw(seg)
+    def _dead_docs(self) -> "DeadDocs | None":
+        """This epoch's tombstoned-doc set (None when nothing is dead):
+        ONE reader-wide set serves every segment and every fold window,
+        since doc ids are never reused (functions/liveness.py). Built
+        lazily on the first query that needs liveness by streaming
+        `doc_id` batches through the tombstones handle opened at
+        refresh — not a fresh listing — so a partition a purge deleted
+        since raises OSError into the refresh-and-retry path instead of
+        reading as "no tombstones". The segment_id=-1 partition is
+        skipped: its ids were never held by any postings (see
+        delete.delete_docs_df) and are unvalidated input that must not
+        size a bitmap."""
+        import pyarrow.dataset as ds
 
-    def _dead_raw(self, seg: int) -> "np.ndarray | None":
-        """The per-partition read behind _dead (no union dispatch —
-        _dead_union builds FROM these, so routing it through _dead
-        would recurse)."""
-        if seg not in self._dead_segs:
-            return None
         with self._lock:
-            arr = self._dead_cache.get(seg)
-            if arr is not None:
-                self._dead_cache.move_to_end(seg)
+            dead, tomb, epoch = self._dead, self._tombstones, self._epoch
+        if dead is None:
+            # a purge deletes every tombstone PARTITION but leaves the
+            # root dir: the handle then has a column-less schema (clean)
+            if tomb is None or "segment_id" not in tomb.schema.names:
+                dead = DeadDocs({})
             else:
-                from .operators.delete import segment_tombstones
+                batches = tomb.scanner(columns=["doc_id"],
+                                       filter=ds.field("segment_id") != -1,
+                                       batch_size=1 << 17).to_batches()
+                dead = DeadDocs.from_batches(b.column(0).to_numpy() for b in batches)
+            with self._lock:
+                # never install a pre-refresh set into a newer epoch
+                if self._epoch == epoch:
+                    self._dead = dead
+        return dead or None
 
-                arr = segment_tombstones(self.paths.tombstones, seg)
-                self._dead_cache[seg] = arr
-                self._dead_cache_bytes += arr.nbytes
-                while (self._dead_cache_bytes > _DEAD_CACHE_BUDGET
-                       and len(self._dead_cache) > 1):
-                    _, old = self._dead_cache.popitem(last=False)
-                    self._dead_cache_bytes -= old.nbytes
-        return arr if len(arr) else None
+    def live_mask(self, ids) -> "np.ndarray":
+        """bool[len(ids)]: True where the doc id is NOT tombstoned —
+        the liveness rule for callers outside the query kernels (tier
+        membership, the tiered skip check, session boosts)."""
+        dead = self._dead_docs()
+        return np.ones(len(ids), dtype=bool) if dead is None else ~dead.mask(ids)
 
     def _fetch_blocks(self, lru: OrderedDict, columns: list[str],
                       terms: list[str], stats: dict | None = None,
@@ -586,18 +543,25 @@ class IndexReader:
         return self._fetch_blocks(self._blocks_lru, _POSTING_COLS + ["segment_id"], terms,
                                   stats=stats, verdicts=True)
 
-    def urls(self, doc_ids: list[int]) -> dict[int, str]:
-        """doc_id → url via row-group-pruned docs reads (docs are
-        sorted by doc_id within each segment partition)."""
+    def _docs_rows(self, doc_ids: list[int], column: str) -> dict:
+        """{doc_id: column value} via a row-group-pruned docs read (docs
+        are sorted by doc_id within each segment partition). Self-heals
+        like every query surface: a purging merge rewrites the docs
+        files an open handle lists."""
         import pyarrow.dataset as ds
 
-        if not doc_ids or self._docs is None:
-            return {}
-        tbl = self._docs.to_table(
-            filter=ds.field("doc_id").isin(sorted(doc_ids)), columns=["doc_id", "url"]
-        )
-        d = tbl.to_pydict()
-        return dict(zip(d["doc_id"], d["url"]))
+        def attempt():
+            if not doc_ids or self._docs is None:
+                return {}
+            d = self._docs.to_table(filter=ds.field("doc_id").isin(sorted(doc_ids)),
+                                    columns=["doc_id", column]).to_pydict()
+            return dict(zip(d["doc_id"], d[column]))
+
+        return self._self_heal(attempt)
+
+    def urls(self, doc_ids: list[int]) -> dict[int, str]:
+        """doc_id → url."""
+        return self._docs_rows(doc_ids, "url")
 
     def snippets(self, doc_ids: list[int], terms: list[str],
                  width: int = 160) -> dict[int, str]:
@@ -606,17 +570,9 @@ class IndexReader:
         reference's context-formatter surface, src/context-formatter.ts
         — matched-line context around each hit). One row-group-pruned
         read for the ≤k result docs; O(k) driver-side string work."""
-        import pyarrow.dataset as ds
-
-        if not doc_ids or self._docs is None:
-            return {}
-        tbl = self._docs.to_table(
-            filter=ds.field("doc_id").isin(sorted(doc_ids)), columns=["doc_id", "text"]
-        )
-        d = tbl.to_pydict()
         needles = [t.lower() for t in terms if t]
         out: dict[int, str] = {}
-        for doc_id, text in zip(d["doc_id"], d["text"]):
+        for doc_id, text in self._docs_rows(doc_ids, "text").items():
             low = (text or "").lower()
             pos = -1
             for t in needles:
@@ -740,16 +696,8 @@ class IndexReader:
         )
         if budget_ms is None and not taat_class and not ok_global:
             stats["global_fallbacks"] = 1
-        # union-cap route (what's-wrong r4 #2): a heavily-churned index
-        # can hold ~1e9 live tombstones between purge-merges — the
-        # global kernel's sorted union would be an 8 GB resident array
-        # per replica. Above the cap the sweep serves instead (its
-        # liveness touches one segment's array at a time); COUNTED so
-        # the latency shift is diagnosable from read-amp counters.
-        dead_ok = self._dead_total <= _DEAD_UNION_CAP or self._liveness_union
-        if budget_ms is None and not taat_class and ok_global and not dead_ok:
-            stats["dead_union_fallbacks"] = 1
-        if budget_ms is None and not taat_class and ok_global and dead_ok:
+        dead = self._dead_docs()
+        if budget_ms is None and not taat_class and ok_global:
             # ONE GLOBAL kernel run over every segment's blocks:
             # segments own disjoint ascending doc-id ranges, so the
             # per-term multi-segment frames are valid posting lists
@@ -777,7 +725,7 @@ class IndexReader:
                 }
             hits = segment_topk(nonempty, qterms, idf_map, self.avgdl, k,
                                 self.k1, self.b, bound_factor=1.0,
-                                dead=self._dead_union(), stats=stats,
+                                dead=dead, stats=stats,
                                 decode_cache=_NsDecodeCache(self._decoded, ("k", -1), dgen))
         else:
             # Per-segment sweep: ST4 budgeted queries (deadline checked
@@ -800,7 +748,7 @@ class IndexReader:
                     segment_topk(by_term, qterms, idf_map, self.avgdl, k,
                                  self.k1, self.b,
                                  bound_factor=self.bound_factors.get(seg, 1.0),
-                                 dead=self._dead(seg), stats=stats,
+                                 dead=dead, stats=stats,
                                  decode_cache=_NsDecodeCache(self._decoded, ("k", seg), dgen))
                 )
         hits.sort(key=lambda x: (-x[1], x[0]))
@@ -815,35 +763,6 @@ class IndexReader:
         diagnostics."""
         return all(_frame_disjoint(pdf) for pdf in blocks.values())
 
-    def _dead_union(self) -> "np.ndarray | None":
-        """Sorted union of ALL segments' tombstoned doc ids, built
-        lazily and reset by refresh() — the liveness input of the
-        global-kernel path. This is serving-REPLICA state (the same
-        arrays `_dead_cache` already holds, merged once), not a query
-        closure: the no-global-tombstone-array invariant targets plans
-        and closures shipped to Spark executors, where every query
-        would re-serialize the array."""
-        with self._lock:
-            arr = self._dead_union_cache
-            epoch = self._epoch
-            dead_segs = self._dead_segs
-        if arr is None:
-            parts = [self._dead_raw(s) for s in sorted(dead_segs)]
-            parts = [p for p in parts if p is not None]
-            arr = (
-                np.sort(np.concatenate(parts))
-                if parts else np.empty(0, dtype=np.int64)
-            )
-            with self._lock:
-                # install only if no refresh() interleaved (review r4
-                # finding: a racing reload must not be poisoned with
-                # the PRE-refresh union for its whole epoch); the
-                # in-flight query still uses the snapshot it started
-                # under — the documented refresh visibility contract
-                if self._epoch == epoch and self._dead_union_cache is None:
-                    self._dead_union_cache = arr
-        return arr if len(arr) else None
-
     def _record_stats(self, stats: dict, t0: float) -> None:
         stats["ms"] = round((time.time() - t0) * 1e3, 3)
         self._tls.last_stats = stats
@@ -856,7 +775,7 @@ class IndexReader:
             # path hands stats recording to topk(), which would drop it)
             for key in ("segments_touched", "blocks_considered",
                         "blocks_decoded", "terms_cold", "global_fallbacks",
-                        "dead_union_fallbacks", "decoded_hits"):
+                        "decoded_hits"):
                 self.totals[key] += stats.get(key, 0)
 
     def counters(self) -> dict:
@@ -936,6 +855,7 @@ class IndexReader:
             return []
         dgen = self._decoded.generation  # pin BEFORE the frame fetch
         per_seg = self._pos_blocks_by_segment(sorted(set(terms)), stats)
+        dead = self._dead_docs()
         hits: list[tuple[int, int]] = []
         for seg, by_term in per_seg.items():
             stats["segments_touched"] += 1
@@ -943,7 +863,7 @@ class IndexReader:
             # decoded LRU a hot term is NOT re-decoded, and counting
             # here would over-report (review r5 finding)
             hits.extend(segment_phrase_matches(
-                by_term, terms, self._dead(seg), slop,
+                by_term, terms, dead, slop,
                 decoded_cache=_NsDecodeCache(self._decoded, ("p", seg), dgen),
                 stats=stats))
         hits.sort(key=lambda x: (-x[1], x[0]))
@@ -1092,22 +1012,6 @@ class IndexReader:
             keep[j[ok]] = True
         return cand[keep]
 
-    def _tier_live_mask(self, uniq: "np.ndarray") -> "np.ndarray":
-        """Boolean mask of non-tombstoned entries in a SORTED doc-id
-        array — the one liveness rule shared by tier membership AND the
-        earlier-tiers-pin-top-k skip check (a dead match must neither
-        rank nor pin)."""
-        live = np.ones(len(uniq), dtype=bool)
-        if not len(uniq):
-            return live
-        for seg in self._dead_segs:
-            dead = self._dead(seg)
-            if dead is None:
-                continue
-            j = np.searchsorted(dead, uniq)
-            live &= ~((j < len(dead)) & (dead[np.minimum(j, len(dead) - 1)] == uniq))
-        return live
-
     def tiered_topk(self, query: str, k: int = 10) -> list[tuple[int, int, float]]:
         return self._self_heal(lambda: self._tiered_topk_impl(query, k))
 
@@ -1212,7 +1116,7 @@ class IndexReader:
                 # and skipping on their count would silently drop live
                 # later-tier docs from the answer.
                 pinned = np.unique(np.concatenate(cand_parts))
-                pinned = pinned[self._tier_live_mask(pinned)]
+                pinned = pinned[self.live_mask(pinned)]
                 if k <= len(pinned):
                     continue
             huge = []
@@ -1287,9 +1191,8 @@ class IndexReader:
             tier_arr = np.empty(0, dtype=np.int64)
 
         # liveness: drop tombstoned docs from tier membership
-        if len(uniq) and self._dead_segs:
-            live = self._tier_live_mask(uniq)
-            uniq, tier_arr = uniq[live], tier_arr[live]
+        live = self.live_mask(uniq)
+        uniq, tier_arr = uniq[live], tier_arr[live]
 
         scores = self._scores_array(terms, uniq)
         n_matched = len(uniq)
@@ -1342,11 +1245,12 @@ class IndexReader:
             return []
         dgen = self._decoded.generation  # pin BEFORE the frame fetch
         per_seg = self._pos_blocks_by_segment(sorted(set(terms)), stats)
+        dead = self._dead_docs()
         hits: list[tuple[int, "np.ndarray"]] = []
         for seg, by_term in per_seg.items():
             stats["segments_touched"] += 1
             hits.extend(segment_phrase_positions(
-                by_term, terms, self._dead(seg),
+                by_term, terms, dead,
                 decoded_cache=_NsDecodeCache(self._decoded, ("p", seg), dgen),
                 stats=stats))
         hits.sort(key=lambda x: (-len(x[1]), x[0]))
@@ -1445,6 +1349,7 @@ class IndexReader:
         labels = {rank: label for rank, label, _, _ in forms}
         dgen = self._decoded.generation  # pin BEFORE the frame fetch
         per_seg = self._pos_blocks_by_segment(sorted(set(kws + tws + guards + sym)), stats)
+        dead = self._dead_docs()
         hits: list[tuple[int, int, int]] = []  # (form_rank, pos, doc)
         for seg, by_term in per_seg.items():
             if not all(t in by_term for t in sym):
@@ -1455,7 +1360,6 @@ class IndexReader:
             stats["segments_touched"] += 1
             # decode accounting lives in the kernel (decoded-LRU hits
             # must not be counted as decodes — review r5 finding)
-            dead = self._dead(seg)
             # persistent decoded LRU, not a per-call dict: the probe
             # terms (definition keywords + hot symbols) repeat across
             # queries, and the namespace is shared with phrase/

@@ -320,22 +320,8 @@ def boosted_search(reader, store: SessionStore, session_id: str, query: str,
     merged: dict[int, dict] = {r["doc_id"]: dict(r) for r in base}
     if counts:
         ids = np.array(sorted(counts), dtype=np.int64)
-        # liveness: never resurrect a tombstoned doc through the boost.
-        # Tombstones are hive-partitioned by the POSTINGS-OWNING segment
-        # — after a non-purge merge re-homes them under the dst segment,
-        # doc_id // SEG_STRIDE no longer names the partition (repo
-        # invariant). Check candidates against EVERY dead partition,
-        # like _tiered_topk_impl; the viewed set is session-sized and
-        # dead partitions are lazily cached, so this stays cheap.
-        if len(ids) and getattr(reader, "_dead_segs", None):
-            live = np.ones(len(ids), dtype=bool)
-            for seg in reader._dead_segs:
-                dead = reader._dead(int(seg))
-                if dead is None:
-                    continue
-                j = np.searchsorted(dead, ids)
-                live &= ~((j < len(dead)) & (dead[np.minimum(j, len(dead) - 1)] == ids))
-            ids = ids[live]
+        # liveness: never resurrect a tombstoned doc through the boost
+        ids = ids[reader.live_mask(ids)]
         scores = (
             reader._scores_for_docs(terms, ids) if len(ids) and not phrase_mode else {}
         )

@@ -186,3 +186,38 @@ def test_purge_with_million_tombstones(spark, tmp_path):
         return out
 
     assert normalize(by_url(idx)) == normalize(by_url(fresh))
+
+
+def test_dead_docs_bitmap_matches_isin():
+    """DeadDocs (one packed bitmap per origin segment) must agree with
+    np.isin on random probes: ids over several origin segments,
+    unsorted + duplicated input, probes past a bitmap's end and in
+    segments with no bitmap, streamed batches, and the empty set."""
+    import numpy as np
+
+    from mantic_sh_spark.functions.codec import SEG_STRIDE
+    from mantic_sh_spark.functions.liveness import DeadDocs
+
+    rng = np.random.default_rng(7)
+    ids = np.concatenate([rng.integers(0, 4000, 500) + s * SEG_STRIDE
+                          for s in (0, 2, 5, 11)])
+    ids = np.concatenate([ids, ids[::7]])  # duplicates
+    rng.shuffle(ids)
+    probe = np.concatenate([rng.integers(0, 9000, 3000) + s * SEG_STRIDE
+                            for s in (0, 1, 2, 5, 11, 12)])
+    ref = np.isin(probe, ids)
+    for dd in (DeadDocs.from_ids(ids),
+               DeadDocs.from_batches(np.array_split(ids, 9))):
+        assert (dd.mask(probe) == ref).all()
+        assert [int(p) in dd for p in probe[::13]] == ref[::13].tolist()
+        # one bitmap per origin segment, sized by its largest dead row
+        rows = {s: int(ids[ids // SEG_STRIDE == s].max() % SEG_STRIDE)
+                for s in (0, 2, 5, 11)}
+        assert dd.nbytes == sum(r // 8 + 1 for r in rows.values())
+    one_seg = probe[probe // SEG_STRIDE == 2]
+    assert (DeadDocs.from_ids(ids).mask(one_seg) == np.isin(one_seg, ids)).all()
+
+    empty = DeadDocs.from_ids(np.empty(0, dtype=np.int64))
+    assert not empty and empty.nbytes == 0
+    assert not empty.mask(probe).any() and int(probe[0]) not in empty
+    assert DeadDocs.from_ids(ids).mask(np.empty(0, dtype=np.int64)).shape == (0,)

@@ -3,6 +3,7 @@ src/mcp-server.ts:204-332): parquet sidecar sessions, deterministic
 view boost with liveness, intent analysis, zero-query context."""
 
 import json
+import os
 
 import pytest
 
@@ -182,9 +183,10 @@ def test_boost_liveness_survives_tombstone_rehome(spark, tmp_path):
     # non-purge merge: postings move to a fresh dst segment and the
     # victim's tombstone is re-homed under it — doc_id // SEG_STRIDE
     # now names a partition that no longer exists
-    merge_segments(spark, idx, [0, 1], compact=True, purge=False)
+    merge_segments(spark, idx, [0, 1], dst_segment=2, compact=True, purge=False)
     reader.refresh()
-    assert reader._dead_segs, "re-homed tombstone partition expected"
+    assert os.path.isdir(f"{idx}/tombstones/segment_id=2"), \
+        "re-homed tombstone partition expected"
     boosted = _call(srv, "search_files", {"query": "w1x", "maxResults": 5,
                                           "sessionId": sid})["results"]
     assert all(r["doc_id"] != victim["doc_id"] for r in boosted)

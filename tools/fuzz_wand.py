@@ -11,8 +11,14 @@ the block-pruned path and the vectorized full-decode sweep
 (_SCORES_SWEEP_MIN forced to 1) — then TOMBSTONES the head of several
 rankings and re-checks WAND, serving, and tiered identity against the
 deleted-filtered oracles (stale tier membership must be masked by the
-per-segment liveness sidecars; collection stats stay pre-delete on
-both sides by contract).
+reader's tombstone set; collection stats stay pre-delete on both sides
+by contract).
+
+Merging cases first tombstone a few head docs and THEN run the
+non-purge merge, so their tombstones re-home under the merge's dst
+partition: every check of the case (WAND, serving topk, tiered, and —
+on the positional twin, deleted and merged the same way — phrase_topk
+and references) then runs against re-homed tombstone partitions.
 
 Odd-seeded cases additionally build POSITIONALLY and fuzz the phrase
 engine (incl. stop-term phrases — the batched keyed-searchsorted
@@ -73,6 +79,19 @@ def _tiered_want(idx, tqueries, k, exclude=frozenset()):
     return out
 
 
+def _minus(rows, dead, k):
+    """query_id → [(doc_id, score)]: the first k rows of each ranking
+    whose doc is not in `dead` (rows ordered by query_id, rank)."""
+    out = {}
+    for r in rows:
+        if r.doc_id in dead:
+            continue
+        lst = out.setdefault(r.query_id, [])
+        if len(lst) < k:
+            lst.append((r.doc_id, r.score))
+    return out
+
+
 def _tiered_identity(readers, tqueries, want, k):
     return all(r.tiered_topk(q, k=k) == want.get(qid, [])
                for qid, q in tqueries for r in readers)
@@ -84,13 +103,23 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     idx = f"/tmp/fuzz2_{seed}"
     shutil.rmtree(idx, ignore_errors=True)
     build_index(spark, pages, idx, n_segments=nseg, chunk_size=cs, block_size=bs)
-    if do_merge and nseg > 1:
-        merge_segments(spark, idx, list(range(nseg)), dst_segment=nseg+3, compact=True)
     queries = gen_queries(cfg, n_queries=20)
-    rw = wand_topk(spark, idx, queries, k=8).orderBy("query_id", "rank").collect()
     docs = spark.read.parquet(f"{idx}/docs").withColumn("tokens", tokens_col("text"))
-    rx = bm25_topk(spark, docs, queries, k=8).orderBy("query_id", "rank").collect()
-    ok = [(r.query_id, r.doc_id, r.score) for r in rw] == [(r.query_id, r.doc_id, r.score) for r in rx]
+    pre = set()  # tombstoned BEFORE the merge → re-homed partitions
+    pre_urls = set()
+    if do_merge and nseg > 1:
+        pre = {r.doc_id for r in bm25_topk(spark, docs, queries[4:7], k=1).collect()}
+        pre_urls = {r.url for r in docs.where(F.col("doc_id").isin(sorted(pre)))
+                    .select("url").collect()}
+        delete_docs(spark, idx, doc_ids=sorted(pre))
+        merge_segments(spark, idx, list(range(nseg)), dst_segment=nseg+3, compact=True,
+                       purge=False)
+    rw = wand_topk(spark, idx, queries, k=8).orderBy("query_id", "rank").collect()
+    rx = bm25_topk(spark, docs, queries, k=8 + len(pre)).orderBy("query_id", "rank").collect()
+    got_w = {}
+    for r in rw:
+        got_w.setdefault(r.query_id, []).append((r.doc_id, r.score))
+    ok = got_w == {q: v for q, v in _minus(rx, pre, 8).items() if v}
     # serving-path identity on the same layout
     reader = IndexReader(idx)
     wand_by_q = {}
@@ -108,7 +137,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     build_tier_index(spark, idx)
     r_swp = IndexReader(idx)
     r_swp._SCORES_SWEEP_MIN = 1  # force the full-decode sweep path
-    tier_ok = _tiered_identity([reader, r_swp], tq, _tiered_want(idx, tq, 8), 8)
+    tier_ok = _tiered_identity([reader, r_swp], tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
 
     # tombstone the head of several rankings; WAND + serving + tiered
     # must all equal the deleted-filtered oracles (tier index left
@@ -117,17 +146,11 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     del_ok = True
     if dels:
         delete_docs(spark, idx, doc_ids=dels)
-        dset = set(dels)
+        dset = set(dels) | pre
         rw2 = wand_topk(spark, idx, queries, k=8).orderBy("query_id", "rank").collect()
-        rx2 = bm25_topk(spark, docs, queries, k=8 + len(dels)).orderBy(
+        rx2 = bm25_topk(spark, docs, queries, k=8 + len(dset)).orderBy(
             "query_id", "rank").collect()
-        want_w = {}
-        for r in rx2:
-            if r.doc_id in dset:
-                continue
-            lst = want_w.setdefault(r.query_id, [])
-            if len(lst) < 8:
-                lst.append((r.doc_id, r.score))
+        want_w = _minus(rx2, dset, 8)
         got_w = {}
         for r in rw2:
             got_w.setdefault(r.query_id, []).append((r.doc_id, r.score))
@@ -148,9 +171,15 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         shutil.rmtree(posidx, ignore_errors=True)
         build_index(spark, pages, posidx, n_segments=nseg, chunk_size=cs,
                     block_size=bs, store_positions=True)
+        if pre_urls:  # same pre-merge deletes + non-purge merge
+            delete_docs(spark, posidx, urls=sorted(pre_urls))
+            merge_segments(spark, posidx, list(range(nseg)), dst_segment=nseg+3,
+                           compact=True, purge=False)
         doc_toks = {
             r.doc_id: tokenize(r.text)
-            for r in spark.read.parquet(f"{posidx}/docs").select("doc_id", "text").collect()
+            for r in spark.read.parquet(f"{posidx}/docs").select("doc_id", "url", "text")
+            .collect()
+            if r.url not in pre_urls
         }
 
         def brute_starts(tokens, terms, slop=0):
@@ -204,7 +233,8 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                 phrase_ok = False
         shutil.rmtree(posidx, ignore_errors=True)
     fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok)
-    print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge}: "
+    print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
+          f"pre_deleted={len(pre)}: "
           f"{'OK' if ok else 'MISMATCH'} serve={'OK' if serve_ok else 'MISMATCH'}"
           f" phrase={'OK' if phrase_ok else 'MISMATCH'}"
           f" tier={'OK' if tier_ok else 'MISMATCH'}"
