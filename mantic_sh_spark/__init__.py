@@ -11,10 +11,10 @@ SURVEY.md) as an idiomatic Spark pipeline:
       → salted range-chunk repartition (ONE wide shuffle) → delta+varint
         posting blocks with block-max metadata (vectorized mapInArrow)
       → per-segment postings + norms + build_manifest (resumable)
-      → query: exhaustive DataFrame BM25 or Block-Max WAND top-k
+      → query: exhaustive DataFrame BM25 or block-interval top-k
 
 Everything is DataFrame / Arrow-UDF based; no per-row Python in hot
-paths, no RDDs. Queries are served by Block-Max WAND over compressed
+paths, no RDDs. Queries are served by a block-max pruned top-k over compressed
 posting blocks with per-segment execution and a deterministic global
 merge; builds are resumable via a per-segment manifest; incremental
 pages fold in as fresh segments and compact via a streaming k-way merge.

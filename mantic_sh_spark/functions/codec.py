@@ -1,5 +1,5 @@
 """Posting-list codec: delta + varint compression, fixed-size blocks,
-block-max metadata for Block-Max WAND (U2 in SURVEY.md §2.10).
+block-max metadata for the block-interval top-k kernel (U2 in SURVEY.md §2.10).
 
 The reference has no inverted index (it brute-force scans all docs per
 query — src/brain-scorer.ts:168-179); this codec is the scale-path
@@ -24,7 +24,7 @@ postings. Each block stores:
   tfs                  : varint bytes of term frequencies.
   dls                  : varint bytes of per-posting doc lengths —
                          scoring is self-contained per block (no
-                         random-access norms lookup inside WAND);
+                         random-access norms lookup inside top-k);
                          ~1-2 bytes/posting, the Lucene-norms analog.
 
 All encode/decode is numpy-vectorized (no per-element Python loops);
@@ -97,20 +97,27 @@ def varint_encode(values: np.ndarray, nbytes: np.ndarray | None = None) -> bytes
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode LEB128 bytes → uint64 array, vectorized."""
+    """Decode LEB128 bytes → uint64 array, vectorized: one pass finds
+    the value ends, then byte j of every value at least j+1 bytes long
+    is OR-ed in — a pass per byte length, not per byte position, so
+    the common 1-2 byte values cost ~2 passes over the values."""
     if not buf:
         return np.empty(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    payload = (b & 0x7F).astype(np.uint64)
-    is_end = b < 0x80
-    ends = np.nonzero(is_end)[0]
+    ends = np.flatnonzero(b < 0x80)
+    if len(ends) == len(b):  # every value fits one byte (tfs, dense-term gaps)
+        return b.astype(np.uint64)
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    # byte position within its varint
-    pos = np.arange(len(b), dtype=np.int64) - np.repeat(starts, ends - starts + 1)
-    shifted = payload << (np.uint64(7) * pos.astype(np.uint64))
-    return np.add.reduceat(shifted, starts)
+    out = (b[starts] & 0x7F).astype(np.uint64)
+    sel = np.flatnonzero(ends > starts)
+    j = 1
+    while len(sel):
+        out[sel] |= (b[starts[sel] + j] & 0x7F).astype(np.uint64) << np.uint64(7 * j)
+        j += 1
+        sel = sel[ends[sel] >= starts[sel] + j]
+    return out
 
 
 def delta_encode(doc_ids: np.ndarray) -> bytes:
@@ -494,14 +501,14 @@ def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK
     materializing its posting list.
 
     split_ranges=True keeps every emitted block within ONE doc-id
-    stride range (doc_id DIV SEG_STRIDE): a merge that leaves OTHER
-    live segments behind must not re-encode blocks spanning the gap
-    between non-contiguous source ranges, or the spanning interval
-    envelops a live segment's range and the serving reader's
-    global-kernel premise (per-term block intervals globally disjoint)
-    breaks. Cost: at most one short block per (term, source range) —
-    exactly the cross-range merging that would be unsound. merge sets
-    it automatically iff live segments remain (operators/merge.py).
+    stride range (doc_id DIV SEG_STRIDE): when a merge leaves OTHER
+    live segments behind, a block spanning the gap between
+    non-contiguous source ranges would envelop a live segment's range
+    and loosen the top-k kernel's interval bounds there (overlapping
+    blocks stay correct — they are just overlapping intervals — but
+    every query on the term decodes more). Cost: at most one short
+    block per (term, source range). merge sets it automatically iff
+    live segments remain (operators/merge.py).
 
     `dead_src` = (tombstones_path, [src_segment_ids]) purges tombstoned
     postings: each TASK loads the union of those segments' liveness

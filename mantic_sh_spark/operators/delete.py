@@ -2,9 +2,9 @@
 reference's stale-file diff, src/cache.ts:179-186 / A10 in SURVEY.md).
 
 `delete_docs` appends doc ids to a tombstones table: queries exclude
-them IMMEDIATELY (Block-Max WAND checks liveness at heap-push time —
-the Lucene live-docs pattern — so pruning bounds stay sound and the
-heap fills with the k best LIVE docs). The postings themselves are
+them IMMEDIATELY (the top-k kernel checks liveness as it finalizes
+docs — the Lucene live-docs pattern — so pruning bounds stay sound and
+the top-k fills with the k best LIVE docs). The postings themselves are
 immutable until `merge_segments(..., purge=True)` rewrites them away
 and re-baselines collection stats.
 

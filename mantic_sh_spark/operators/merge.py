@@ -516,14 +516,14 @@ def merge_segments(
         # over the whole merged segment streams, never materializes.
         # When live postings segments REMAIN after this merge, the
         # compactor keeps every re-encoded block within one doc-id
-        # stride range (split_ranges): blocks spanning the gap between
+        # stride range (split_ranges): a block spanning the gap between
         # non-contiguous source ranges would envelop a surviving
-        # segment's doc range and break the serving reader's
-        # global-kernel disjointness premise (which would silently
-        # demote those terms to the swept path forever). A merge that
-        # folds EVERY live segment compacts maximally — nothing remains
-        # to interleave, and future extends allocate ranges strictly
-        # above all existing ones.
+        # segment's doc range, and its block max would then bound every
+        # interval of that range — still correct, but a looser bound
+        # means more decoded blocks for every query on the term. A
+        # merge that folds EVERY live segment compacts maximally —
+        # nothing remains to interleave, and future extends allocate
+        # ranges strictly above all existing ones.
         from .index_build import BLOCK_ROW_SCHEMA_POS
 
         # split only when a SURVIVING segment's doc span overlaps the

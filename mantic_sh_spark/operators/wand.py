@@ -1,21 +1,31 @@
-"""Block-Max WAND top-k over the compressed index (U3/K2/K3/O2).
+"""Block-interval top-k over the compressed index (U3/K2/K3/O2).
 
 Reference analogs: the partitioned per-chunk top-k + identical-
 comparator merge of src/parallel-mantic.ts:26-75 (here: per-SEGMENT
-WAND inside applyInPandas, merged by a rank window), and the
+top-k inside applyInPandas, merged by a rank window), and the
 early-termination heuristic of src/smart-filter.ts:289-297 (here: the
-principled version — skip every block whose max possible score cannot
-beat the current k-th best).
+principled version — never decode a block whose best possible score
+cannot beat the current k-th best).
 
-Algorithm: Block-Max WAND (Ding & Suel, SIGIR 2011 — public
-literature). Per segment and query:
-  * one cursor per query term over its block list; blocks are decoded
-    LAZILY — a block skipped by the block-max check is never decoded
-    (that is where the speed comes from);
-  * bounded min-heap of size k with deterministic tie-break
-    (score desc, doc_id asc);
-  * pivot selection on term upper bounds (idf × segment max tf_norm),
-    refined by per-block maxima before any full evaluation.
+Algorithm: filter-then-verify top-k with per-candidate upper bounds
+(the MaxScore / Block-Max WAND family — Ding & Suel, SIGIR 2011 —
+in block-interval form), vectorized in numpy. Per query:
+  * every query term's blocks are laid over one doc-id axis, cut into
+    elementary intervals at each first_doc / last_doc + 1; an
+    interval's bound is the sum of idf × block_max over the blocks
+    covering it (a difference array);
+  * intervals are visited in descending bound order, in rounds sized
+    in expected postings still to decode (k, then doubling; blocks of
+    a decode-cached term are free): a round batch-decodes the blocks
+    covering its intervals in one varint pass, scores them
+    term-at-a-time, finalizes the docs of those intervals and merges
+    them into the top-k, raising θ;
+  * the run stops once the next interval's bound is below θ − EPS.
+Plain TAAT is the case where nothing is pruned (and where the first
+round would take every interval, the kernel runs it without building
+the interval order); overlapping blocks (e.g. a legacy non-contiguous
+compaction) are just overlapping intervals, so no layout premise is
+needed.
 
 idf uses GLOBAL df (summed across segments at query start), so scores
 are identical to the exhaustive engine; block maxima are
@@ -25,7 +35,7 @@ stay valid upper bounds under any df.
 
 from __future__ import annotations
 
-import heapq
+import time
 
 import numpy as np
 import pandas as pd
@@ -33,275 +43,87 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import B, K1, idf as idf_fn
-from ..functions.codec import decode_block
+from ..functions.codec import tf_norm, varint_decode
 from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize_query
 from ..sources.catalog import IndexPaths
 from .query import rank_topk
 
-INF = 1 << 62
-# Ranking everywhere (exhaustive engine, pure oracle, WAND heap) is on
+# Ranking everywhere (exhaustive engine, pure oracle, this kernel) is on
 # scores rounded to SCORE_DECIMALS (fp-sum order is not deterministic
 # across partitions). EPS must cover the rounding half-step so the
-# block-max skip can never drop a doc that would TIE the heap floor
+# interval prune can never drop a doc that would TIE the top-k floor
 # after rounding: skip ⇒ true < θ - EPS ⇒ round(true) < θ. Looser
 # pruning by 1e-4, never an incorrect result.
 EPS = 1e-4
 
 
-class _Cursor:
-    """Lazy-decoding posting-list cursor for one (term, segment)."""
+class _TermBlocks:
+    """numpy columns of one term's blocks frame, pulled once per frame
+    and memoized on it (term_blocks). `bmax` has the bound factors the
+    memo was built with folded in; `segs` = the segment ids present."""
 
-    __slots__ = ("first", "last", "bmax", "gaps", "tfs", "dls", "idf", "ub", "bf",
-                 "k1", "b", "avgdl", "nb", "bi", "docs", "tf_arr", "dl_arr", "pi", "cur",
-                 "stats")
+    __slots__ = ("owner", "factors", "first", "last", "bmax", "n", "gaps", "tfs", "dls",
+                 "segs")
 
-    def __init__(self, pdf: pd.DataFrame, idf: float, avgdl: float, k1: float, b: float,
-                 bound_factor: float = 1.0, stats: dict | None = None):
-        pdf = pdf.sort_values("first_doc")
-        self.first = pdf["first_doc"].to_numpy()
-        self.last = pdf["last_doc"].to_numpy()
-        self.bmax = pdf["block_max"].to_numpy()
-        self.gaps = pdf["doc_gaps"].tolist()
-        self.tfs = pdf["tfs"].tolist()
-        self.dls = pdf["dls"].tolist()
-        self.nb = len(self.first)
-        self.idf = idf
-        # bound_factor ≥ 1 inflates build-time maxima when the global
-        # avgdl has drifted upward since this segment was built
-        # (tf_norm is monotone in avgdl with limit ratio new/old) —
-        # keeps the bound sound after incremental extends.
-        self.bf = bound_factor
-        self.ub = idf * float(self.bmax.max()) * bound_factor
-        self.k1, self.b, self.avgdl = k1, b, avgdl
-        self.bi = -1
-        self.docs = None
-        self.pi = 0
-        self.cur = -1
-        # optional read-amplification counter (serving observability):
-        # stats["blocks_decoded"] += 1 per lazy block decode
-        self.stats = stats
-        self.seek(0)
+    def __init__(self, pdf: pd.DataFrame, bound_factors: dict | None):
+        self.owner, self.factors = id(pdf), bound_factors
+        self.first = pdf["first_doc"].to_numpy(np.int64)
+        self.last = pdf["last_doc"].to_numpy(np.int64)
+        self.bmax = pdf["block_max"].to_numpy(np.float64)
+        self.n = pdf["n"].to_numpy(np.int64)
+        self.gaps, self.tfs, self.dls = (pdf[c].to_numpy(object) for c in ("doc_gaps", "tfs", "dls"))
+        self.segs = np.empty(0, dtype=np.int64)
+        if "segment_id" in pdf.columns:
+            self.segs, inv = np.unique(pdf["segment_id"].to_numpy(np.int64),
+                                       return_inverse=True)
+            if bound_factors:
+                f = np.array([bound_factors.get(int(s), 1.0) for s in self.segs])
+                self.bmax = self.bmax * f[inv]
 
-    def _enter(self, bi: int) -> None:
-        self.bi = bi
-        if bi >= self.nb:
-            self.docs = None
-            self.cur = INF
-            return
-        if self.stats is not None:
-            self.stats["blocks_decoded"] = self.stats.get("blocks_decoded", 0) + 1
-        self.docs, self.tf_arr, self.dl_arr = decode_block(self.gaps[bi], self.tfs[bi], self.dls[bi])
-
-    def seek(self, target: int) -> None:
-        """Advance to the first posting with doc_id >= target (monotone)."""
-        if self.cur >= target:
-            return
-        lo = max(self.bi, 0)
-        bi = lo + int(np.searchsorted(self.last[lo:], target, side="left"))
-        if bi >= self.nb:
-            self.bi = self.nb
-            self.cur = INF
-            return
-        if bi != self.bi or self.docs is None:
-            self._enter(bi)
-        self.pi = int(np.searchsorted(self.docs, target, side="left"))
-        self.cur = int(self.docs[self.pi])
-
-    def advance(self) -> None:
-        """Move to the next posting."""
-        self.pi += 1
-        if self.docs is not None and self.pi < len(self.docs):
-            self.cur = int(self.docs[self.pi])
-        else:
-            bi = self.bi + 1
-            if bi >= self.nb:
-                self.cur = INF
-                return
-            self._enter(bi)
-            self.pi = 0
-            self.cur = int(self.docs[0])
-
-    def score(self) -> float:
-        tf = float(self.tf_arr[self.pi])
-        dl = float(self.dl_arr[self.pi])
-        return self.idf * tf * (self.k1 + 1.0) / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-
-    def _block_for(self, d: int) -> int:
-        lo = max(self.bi, 0)
-        return lo + int(np.searchsorted(self.last[lo:], d, side="left"))
-
-    def block_max_upto(self, d: int) -> float:
-        """Max score this cursor could contribute to doc d (shallow —
-        no decode)."""
-        bi = self._block_for(d)
-        if bi >= self.nb or self.first[bi] > d:
-            return 0.0
-        return self.idf * float(self.bmax[bi]) * self.bf
-
-    def next_boundary(self, d: int) -> int:
-        """Smallest doc id > d at which this cursor's block-max bound
-        can change (shallow)."""
-        bi = self._block_for(d)
-        if bi >= self.nb:
-            return INF
-        if self.first[bi] > d:
-            return int(self.first[bi])
-        return int(self.last[bi]) + 1
+    def __deepcopy__(self, memo):
+        # pandas deep-copies .attrs into every derived frame; the memo
+        # is immutable, and term_blocks' owner check keeps a derived
+        # frame from ever using it
+        return self
 
 
-def block_max_wand(cursors: list[_Cursor], k: int,
-                   dead: DeadDocs | None = None) -> list[tuple[int, float]]:
-    """BMW top-k over one segment. Returns [(doc_id, score)] sorted by
-    (score desc, doc_id asc), len ≤ k. `dead` = tombstoned doc ids;
-    dead docs are skipped at heap-push (live-docs check) so the
-    heap holds the k best LIVE docs — pruning bounds remain sound
-    because skipping only keeps θ lower (never higher) than the
-    all-docs run."""
-    # min-heap of (score, -doc_id): root = currently-worst kept result
-    heap: list[tuple[float, int]] = []
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) == k else -1.0
-
-    active = cursors
-    while True:
-        active = [c for c in active if c.cur < INF]
-        if not active:
-            break
-        active.sort(key=lambda c: c.cur)
-        th = theta()
-        acc = 0.0
-        p = -1
-        for i, c in enumerate(active):
-            acc += c.ub
-            if acc >= th - EPS:
-                p = i
-                break
-        if p == -1:
-            break  # sum of all term bounds can't reach the heap floor
-        pivot = active[p].cur
-        if pivot >= INF:
-            break
-        # extend the pivot set across ties: every list already AT the
-        # pivot doc contributes to its score, so it must be inside the
-        # bound (and the d' cap below must start strictly beyond pivot)
-        while p + 1 < len(active) and active[p + 1].cur == pivot:
-            p += 1
-        # block-max refinement (shallow: no block decode)
-        bacc = 0.0
-        for c in active[: p + 1]:
-            bacc += c.block_max_upto(pivot)
-        if bacc < th - EPS:
-            # skip: jump past the earliest block boundary among the
-            # cursors that defined this bound — but never past the
-            # NEXT list's current doc (bacc only bounded cursors 0..p;
-            # docs ≥ active[p+1].cur get that list's contribution too,
-            # so the proof does not extend beyond it — Ding & Suel's d')
-            nxt = min(c.next_boundary(pivot) for c in active[: p + 1])
-            if p + 1 < len(active):
-                nxt = min(nxt, active[p + 1].cur)
-            target = max(pivot + 1, nxt)
-            # advance the highest-impact cursor (fewest future evals)
-            mover = max(active[: p + 1], key=lambda c: c.ub)
-            mover.seek(target)
-        elif active[0].cur == pivot:
-            alive = dead is None or pivot not in dead
-            s = 0.0
-            if alive:
-                for c in active:
-                    if c.cur == pivot:
-                        s += c.score()
-            for c in active:
-                if c.cur == pivot:
-                    c.advance()
-            if alive:
-                item = (round(s, 4), -pivot)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-        else:
-            # align: advance a lagging cursor up to the pivot
-            mover = max((c for c in active[:p] if c.cur < pivot), key=lambda c: c.ub)
-            mover.seek(pivot)
-    return sorted([(-nd, s) for s, nd in heap], key=lambda x: (-x[1], x[0]))
+def term_blocks(pdf: pd.DataFrame, bound_factors: dict | None = None) -> _TermBlocks:
+    """The frame's memoized _TermBlocks. `bound_factors` ({segment:
+    factor ≥ 1}, the avgdl-drift bound inflation) pre-scales block_max
+    per row's segment; the serving reader passes its epoch's dict at
+    fetch, and the kernel (None) then reuses whatever memo the frame
+    carries. The memo is valid only for the exact frame object it was
+    built from — frames are treated as immutable everywhere."""
+    tb = pdf.attrs.get("_blocks")
+    if tb is None or tb.owner != id(pdf) or (
+            bound_factors is not None and tb.factors is not bound_factors):
+        tb = _TermBlocks(pdf, bound_factors)
+        pdf.attrs["_blocks"] = tb
+    return tb
 
 
-# Per-segment engine choice: Block-Max WAND's per-doc evaluation loop
-# wins when a selective term drives skipping; when every query term is
-# common (or the query has one term), pruning cannot skip and the
-# vectorized term-at-a-time scorer is ~10× faster per posting. Both
-# are exact, so the choice is pure cost-based. TAAT decodes at most
-# TAAT_CAP postings per (segment, query) — above that, posting lists
-# are long enough that WAND's skipping dominates even without a rare
-# term (θ rises fast when k ≪ df).
-TAAT_CAP = 4_000_000
-TAAT_SELECTIVITY = 8  # TAAT unless some term is ≥8× rarer than the total
-
-
-def _decode_term_all(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch-decode ALL blocks of one (term, segment): one varint pass
-    per column for the whole list (the per-block decode_block call has
-    ~170µs fixed overhead; this is what makes full-list scoring cheap).
-    Blocks' first values are absolute doc ids → cumsum with per-block
-    rebase."""
-    from ..functions.codec import varint_decode
-
-    counts = pdf["n"].to_numpy().astype(np.int64)
-    gaps = varint_decode(b"".join(pdf["doc_gaps"])).astype(np.int64)
+def _decode_term_all(counts: np.ndarray, gaps: np.ndarray, tfs: np.ndarray,
+                     dls: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Batch-decode a list of blocks (any terms) in ONE varint pass over
+    all three columns (the per-block decode_block call has ~170µs fixed
+    overhead; this is what makes scoring many blocks cheap). Blocks'
+    first values are absolute doc ids → cumsum with per-block rebase."""
+    counts = np.asarray(counts, dtype=np.int64)
+    p = int(counts.sum())
+    v = varint_decode(b"".join(np.concatenate((gaps, tfs, dls)))).astype(np.int64)
+    g = v[:p]
     starts = np.zeros(len(counts), dtype=np.int64)
     np.cumsum(counts[:-1], out=starts[1:])
-    c = np.cumsum(gaps)
-    base = c[starts] - gaps[starts]
-    docs = c - np.repeat(base, counts)
-    tfs = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
-    dls = varint_decode(b"".join(pdf["dls"])).astype(np.int64)
-    return docs, tfs, dls
+    c = np.cumsum(g)
+    docs = c - np.repeat(c[starts] - g[starts], counts)
+    return docs, v[p:2 * p], v[2 * p:]
 
 
-def _taat_topk(term_pdfs: list[tuple[str, pd.DataFrame, float]], avgdl: float, k: int,
-               k1: float, b: float, dead: DeadDocs | None,
-               stats: dict | None = None,
-               decode_cache=None) -> list[tuple[int, float]]:
-    """Exact vectorized term-at-a-time top-k over one segment:
-    decode → per-posting scores → sort-merge accumulate by doc →
-    lexsort top-k. No per-doc Python.
-
-    `decode_cache` (optional, .get(term)/.put(term, value) — the
-    serving reader passes a byte-budgeted LRU namespaced per segment)
-    memoizes the decoded (docs, tfs, dls) arrays: TAAT-class terms are
-    the corpus-dense head of the vocabulary, and their decode is the
-    dominant per-query cost once the compressed frames are hot."""
-    from ..functions.codec import tf_norm
-
-    doc_parts, score_parts = [], []
-    for t, pdf, idf in term_pdfs:
-        dec = decode_cache.get(t) if decode_cache is not None else None
-        if dec is None:
-            if stats is not None:  # TAAT decodes every block of its lists
-                stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(pdf)
-            dec = _decode_term_all(pdf)
-            if decode_cache is not None:
-                decode_cache.put(t, dec)
-        elif stats is not None:
-            stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
-        d, tf, dl = dec
-        doc_parts.append(d)
-        score_parts.append(idf * tf_norm(tf, dl, avgdl, k1, b))
-    docs = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    order = np.argsort(docs, kind="stable")
-    docs, scores = docs[order], scores[order]
-    starts = np.flatnonzero(np.concatenate(([True], docs[1:] != docs[:-1])))
-    uniq = docs[starts]
-    tot = np.add.reduceat(scores, starts)
-    if dead is not None:
-        live = ~dead.mask(uniq)
-        uniq, tot = uniq[live], tot[live]
-    r = np.round(tot, 4)
-    idx = np.lexsort((uniq, -r))[:k]
-    return list(zip(uniq[idx].tolist(), r[idx].tolist()))
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated index ranges [starts[i], starts[i] + counts[i])."""
+    rel = np.arange(int(counts.sum())) - np.repeat(np.cumsum(counts) - counts, counts)
+    return np.repeat(starts, counts) + rel
 
 
 def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
@@ -309,32 +131,203 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
                  k1: float, b: float, bound_factor: float = 1.0,
                  dead: DeadDocs | None = None,
                  stats: dict | None = None,
-                 decode_cache=None) -> list[tuple[int, float]]:
-    """One (segment, query) top-k with the cost-based TAAT/WAND choice.
-    Shared by the distributed UDF and the serving reader so both
-    surfaces rank identically by construction. `stats` (optional dict)
+                 decode_cache=None,
+                 deadline: float | None = None) -> list[tuple[int, float]]:
+    """Exact top-k [(doc_id, score)] over the given blocks frames (one
+    segment for the distributed UDF, every segment for the serving
+    reader), sorted (score desc, doc_id asc) — the block-interval
+    kernel of the module docstring, shared by both surfaces so they rank
+    identically by construction.
+
+    `dead` docs are dropped at finalization (θ only ever stays lower,
+    so the prune stays sound). `decode_cache` (optional .get(term) /
+    .put(term, value)) memoizes the idf-independent (docs, tf_norm), in
+    block order and tagged with the frame's first_doc / n columns, of
+    every term this query decoded at least half of (the rest is decoded
+    to complete it); a cached term's blocks cost no decode. `deadline`
+    (a time.time() instant) is checked between rounds: the first round
+    always completes, returned docs always carry exact scores, and
+    stats["truncated"] is set when intervals that could still reach θ
+    were left unvisited. `stats`
     accumulates read-amplification counters — blocks_considered (block
-    rows of the consulted lists) and blocks_decoded (blocks actually
-    materialized; the gap between the two is WAND's skip win)."""
-    present = [t for t in terms if t in by_term and idf_map.get(t, 0.0) > 0.0]
-    if not present:
+    rows of the consulted lists), blocks_decoded (blocks varint-decoded;
+    the gap is the prune's win) and decoded_hits (cached terms)."""
+    present = [t for t in terms
+               if t in by_term and idf_map.get(t, 0.0) > 0.0 and len(by_term[t])]
+    if not present or k <= 0:
         return []
-    counts = [int(by_term[t]["n"].sum()) for t in present]
-    total = sum(counts)
+    nt = len(present)
+    tbs = [term_blocks(by_term[t]) for t in present]
+    nb = [len(tb.first) for tb in tbs]
+    term = np.repeat(np.arange(nt), nb)
+    first, last, n, bmax = (np.concatenate([getattr(tb, c) for tb in tbs])
+                            for c in ("first", "last", "n", "bmax"))
+    idf = np.array([idf_map[t] for t in present])
+
+    # cached terms: their blocks are slices of the cached arrays, no
+    # decode. An entry keeps the (first_doc, n) columns of the frame it
+    # was decoded from: a frame re-fetched in another row order, or from
+    # another epoch (a query straddling refresh), is a miss.
+    cached = [decode_cache.get(t) if decode_cache is not None else None for t in present]
+    cached = [c if c is not None and np.array_equal(c[2], tb.first)
+              and np.array_equal(c[3], tb.n) else None
+              for c, tb in zip(cached, tbs)]
+    is_cached = np.repeat([c is not None for c in cached], nb)
+    n_cached = int(is_cached.sum())
+    if n_cached:
+        if stats is not None:
+            stats["decoded_hits"] = stats.get("decoded_hits", 0) + sum(
+                c is not None for c in cached)
+        cdocs = np.concatenate([c[0] for c in cached if c is not None])
+        ctfn = np.concatenate([c[1] for c in cached if c is not None])
+        coff = np.zeros(len(n), dtype=np.int64)
+        coff[is_cached] = np.cumsum(n[is_cached]) - n[is_cached]
+        cterm = np.repeat(term[is_cached], n[is_cached])
+    to_decode = ~is_cached  # blocks whose postings still cost a decode
+    decoded = []  # (blk, docs, tf_norm) per decode, for the decode cache
+    raw = []
+    top_d = np.empty(0, dtype=np.int64)
+    top_s = np.empty(0, dtype=np.float64)
+    theta = -np.inf
+
+    def materialize(new):
+        """(term, docs, tf_norm) of the postings of blocks `new`: decoded
+        in one varint pass, or sliced from the cached arrays."""
+        parts = []
+        dec = np.sort(new[to_decode[new]])
+        if len(dec):
+            if not decoded:  # first decode: the blocks' byte columns
+                raw.extend(np.concatenate([getattr(tb, c) for tb in tbs])
+                           for c in ("gaps", "tfs", "dls"))
+            to_decode[dec] = False
+            d, tf, dl = _decode_term_all(n[dec], *(col[dec] for col in raw))
+            blk = np.repeat(dec, n[dec])
+            decoded.append((blk, d, tf_norm(tf, dl, avgdl, k1, b)))
+            parts.append((term[blk],) + decoded[-1][1:])
+        cac = new[is_cached[new]]
+        if len(cac) and len(cac) == n_cached:  # every cached block
+            parts.append((cterm, cdocs, ctfn))
+        elif len(cac):
+            idx = _ranges(coff[cac], n[cac])
+            parts.append((np.repeat(term[cac], n[cac]), cdocs[idx], ctfn[idx]))
+        return [x[0] if len(x) == 1 else np.concatenate(x) for x in zip(*parts)]
+
+    def finalize(pt, pd_, pc):
+        """Merge the docs of these (complete) postings into the top-k."""
+        nonlocal top_d, top_s, theta
+        pc = pc * idf[pt]
+        if nt == 1:  # one posting per doc
+            uniq, sc = pd_, np.round(pc, 4)
+        else:
+            o = np.lexsort((pt, pd_))  # per doc, summed in term order
+            pd_, pc = pd_[o], pc[o]
+            starts = np.flatnonzero(np.concatenate(([True], pd_[1:] != pd_[:-1])))
+            uniq, sc = pd_[starts], np.round(np.add.reduceat(pc, starts), 4)
+        keep = sc >= theta
+        if dead is not None:
+            keep &= ~dead.mask(uniq)
+        if np.count_nonzero(keep) > k:  # only the k best of these can enter
+            keep &= sc >= np.partition(sc[keep], -k)[-k]
+        cand_d = np.concatenate((top_d, uniq[keep]))
+        cand_s = np.concatenate((top_s, sc[keep]))
+        sel = np.lexsort((cand_d, -cand_s))[:k]
+        top_d, top_s = cand_d[sel], cand_s[sel]
+        if len(top_d) == k:
+            theta = top_s[-1]
+
+    truncated = False
+    if n[to_decode].sum() <= k:
+        # the first round would take every interval (cached blocks cost
+        # no decode): nothing to prune, so plain term-at-a-time
+        finalize(*materialize(np.arange(len(n))))
+    else:
+        # elementary intervals [cuts[i], cuts[i+1]); block j covers a[j]..e[j]-1
+        cuts = np.unique(np.concatenate((first, last + 1)))
+        a, e = np.searchsorted(cuts, first), np.searchsorted(cuts, last + 1)
+
+        def sweep(w=None):  # per-interval sum of w over covering blocks
+            return np.cumsum(np.bincount(a, w, len(cuts)) - np.bincount(e, w, len(cuts)))[:-1]
+
+        bound = sweep(bmax * idf[term] * bound_factor)
+        order = np.flatnonzero(sweep())  # covered intervals, visited by bound desc
+        order = order[np.argsort(-bound[order], kind="stable")]
+        neg_bound = -bound[order]  # ascending, for the θ cut
+        width = np.diff(cuts)[order]
+        density = n / (last - first + 1)
+        rank = np.zeros(len(cuts), dtype=np.int64)
+        rank[order] = np.arange(len(order))
+        # the round that first needs each block: its best-ranked interval
+        need = np.minimum.reduceat(rank, np.stack((a, e), axis=1).ravel())[::2]
+        by_need = np.argsort(need, kind="stable")
+        need_sorted = need[by_need]
+        # pending pool: one chunk per round, postings sorted by interval
+        # rank, each finalized (sliced off) exactly once
+        chunks: list[list] = []
+        r0 = j0 = 0
+        want = float(k)
+        while r0 < len(order):
+            if len(top_d) == k and -neg_bound[r0] < theta - EPS:
+                break
+            if r0 and deadline is not None and time.time() > deadline:
+                truncated = True
+                break
+            # the round: intervals in bound order until their expected
+            # postings still to decode reach `want` (cached or decoded
+            # blocks are free), cut at θ; `want` doubles each round
+            cost = np.cumsum(sweep(density * to_decode)[order[r0:]] * width[r0:])
+            r1 = r0 + int(np.searchsorted(cost, want)) + 1
+            if len(top_d) == k:
+                r1 = min(r1, int(np.searchsorted(neg_bound, EPS - theta, side="right")))
+            r1 = max(r0 + 1, min(r1, len(order)))
+            want = 2.0 * max(want, cost[r1 - r0 - 1])
+
+            j1 = int(np.searchsorted(need_sorted, r1))
+            if j1 > j0:
+                pt, docs, tfn = materialize(by_need[j0:j1])
+                j0 = j1
+                if nt == 1 or r1 == len(order):  # complete at once
+                    chunks.append([None, pt, docs, tfn, 0])
+                else:
+                    r = rank[np.searchsorted(cuts, docs, side="right") - 1]
+                    o = np.argsort(r, kind="stable")
+                    chunks.append([r[o], pt[o], docs[o], tfn[o], 0])
+            # finalize every doc of the round's intervals
+            parts = []
+            for ch in chunks:
+                hi = len(ch[1]) if ch[0] is None else int(np.searchsorted(ch[0], r1))
+                if hi > ch[4]:
+                    parts.append((ch[1][ch[4]:hi], ch[2][ch[4]:hi], ch[3][ch[4]:hi]))
+                    ch[4] = hi
+            r0 = r1
+            if parts:
+                finalize(*(x[0] if len(parts) == 1 else np.concatenate(x)
+                           for x in zip(*parts)))
+
+    if stats is not None and truncated:
+        stats["truncated"] = True
+    elif decode_cache is not None and decoded:
+        # a term this query decoded at least half of is finished and
+        # cached: that costs no more than the query already spent on
+        # it, and repeats of the term then decode nothing
+        tstart = np.cumsum([0] + nb)
+        left = np.add.reduceat(n * to_decode, tstart[:-1])
+        full = [i for i, c in enumerate(cached)
+                if c is None and left[i] <= n[tstart[i]:tstart[i + 1]].sum() - left[i]]
+        rest = np.flatnonzero(to_decode & np.isin(term, full))
+        if len(rest):
+            materialize(rest)
+        if full:
+            blk, docs, tfn = (np.concatenate(x) for x in zip(*decoded))
+            tt = term[blk]
+            for i in full:
+                s = np.flatnonzero(tt == i)
+                s = s[np.argsort(blk[s], kind="stable")]  # block order
+                decode_cache.put(present[i], (docs[s], tfn[s], tbs[i].first, tbs[i].n))
     if stats is not None:
-        stats["blocks_considered"] = stats.get("blocks_considered", 0) + sum(
-            len(by_term[t]) for t in present
-        )
-    if len(present) == 1 or (total <= TAAT_CAP and min(counts) * TAAT_SELECTIVITY >= total):
-        return _taat_topk([(t, by_term[t], idf_map[t]) for t in present],
-                          avgdl, k, k1, b, dead, stats=stats,
-                          decode_cache=decode_cache)
-    cursors = [
-        _Cursor(by_term[t], idf_map[t], avgdl, k1, b, bound_factor=bound_factor,
-                stats=stats)
-        for t in present
-    ]
-    return block_max_wand(cursors, k, dead)
+        stats["blocks_considered"] = stats.get("blocks_considered", 0) + len(n)
+        stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + int(
+            (~is_cached & ~to_decode).sum())
+    return list(zip(top_d.tolist(), top_s.tolist()))
 
 
 def _load_dead(dead_src, seg: int) -> DeadDocs | None:
@@ -595,7 +588,7 @@ def wand_topk(
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
-    """Top-k via the index: per-segment BMW (applyInPandas) → global
+    """Top-k via the index: per-segment segment_topk (applyInPandas) → global
     rank-window merge. Parquet scan is pruned to the query terms
     (predicate pushdown on `term` + row-group stats from the
     sort-by-term layout)."""

@@ -210,7 +210,7 @@ SELECT doc_id, score FROM ranked WHERE rn <= 10
 def q_wand_multi(spark, sf_dir):
     """THE index round-trip under the oracle gate: build the compressed
     posting-block index over the documents table (once per sf_dir),
-    serve the same query set via Block-Max WAND, and map the engine's
+    serve the same query set via the block-interval top-k kernel, and map the engine's
     segment-sharded doc ids back to the table's doc_id. Must be
     value-identical to the plain-SQL BM25 oracle — proving codec +
     block-max pruning + per-segment merge change nothing."""

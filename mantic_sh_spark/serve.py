@@ -6,8 +6,9 @@ README.md:82-85).
 Architecture: Spark is the BUILD/ANALYTICS plane; serving replicas run
 this module — a long-lived `IndexReader` that reads the exact parquet
 artifacts the Spark jobs commit, via pyarrow row-group-pruned reads,
-and executes the SAME per-segment kernels the distributed path uses
-(`operators/wand.py::segment_topk` for BM25,
+and executes the SAME kernels the distributed path uses
+(`operators/wand.py::segment_topk` for BM25 — one call over every
+segment's blocks here, one per segment there —
 `operators/phrase.py::segment_phrase_matches` for positional phrase /
 proximity queries). No Spark job
 — and no JVM — is on the per-query path, so latency is decode-bound
@@ -51,13 +52,6 @@ from .sources.catalog import IndexPaths
 _POSTING_COLS = ["tid", "first_doc", "last_doc", "block_max", "n",
                  "doc_gaps", "tfs", "dls"]
 
-# Posting volume above which a WAND-hopeless (dense) query routes to
-# the per-segment sliced TAAT sweep instead of the global kernel: one
-# global decode of N postings allocates ~10 N-sized temporaries, which
-# turns memory-bandwidth-bound once they outgrow cache (~50 MB here),
-# while per-segment slices stay cache-resident (topk strategy split).
-_GLOBAL_TAAT_SPILL = 2_000_000
-
 
 class TierBudgetExceeded(ValueError):
     """A tiered query where EVERY term's tier-field doc list exceeds
@@ -72,7 +66,7 @@ class TierBudgetExceeded(ValueError):
 # Byte budget for the decoded-postings LRU: decoded arrays run ~12x
 # their varint form, so this cache holds far fewer ENTRIES than the
 # compressed block LRU — but each hit skips the decode pass that
-# dominates dense-term (TAAT/phrase) queries once frames are hot
+# dominates dense-term (top-k/phrase) queries once frames are hot
 # (measured: the stop-word-phrase p50 is ~100% decode+kernel, 0% fetch).
 _DECODE_BUDGET = 256 * 1024 * 1024
 
@@ -158,23 +152,6 @@ class _NsDecodeCache:
         self._lru.put(self._ns + (term,), value, generation=self._gen)
 
 
-def _frame_disjoint(pdf) -> bool:
-    """Global-kernel precondition for ONE term's blocks frame: sorted
-    by first_doc, block [first, last] intervals are non-overlapping —
-    true for any freshly built or extended index (segments own disjoint
-    ascending doc-id ranges); a COMPACTED merge of NON-CONTIGUOUS
-    source segments re-encodes blocks that can span the stride gap and
-    envelop a live segment's range, where _Cursor's searchsorted seek
-    would silently mis-rank (review r4 finding — such terms fall back
-    to the per-segment sweep)."""
-    if len(pdf) < 2:
-        return True
-    first = pdf["first_doc"].to_numpy()
-    last = pdf["last_doc"].to_numpy()
-    order = np.argsort(first, kind="stable")
-    return bool(np.all(first[order][1:] > last[order][:-1]))
-
-
 class IndexReader:
     """Long-lived single-index reader: metadata memo + hot-term block
     LRU + per-term df cache. THREAD-SAFE for concurrent queries under a
@@ -185,8 +162,8 @@ class IndexReader:
     (no torn refresh). Observability: per-query and cumulative
     read-amplification counters — segments_touched, blocks_considered,
     blocks_decoded, terms_cold — via `counters()`; the considered/
-    decoded gap is WAND's skip win, the number an operator watches at
-    100× scale."""
+    decoded gap is the top-k kernel's skip win, the number an operator
+    watches at 100× scale."""
 
     def __init__(self, index_dir: str, k1: float = K1, b: float = B,
                  max_hot_terms: int = 4096):
@@ -207,9 +184,6 @@ class IndexReader:
         self._last_shared: dict = {}  # most-recent counters, any thread
         self._epoch = 0  # bumped by refresh(): invalidates ALL threads'
         #                  thread-local last_stats, not just the caller's
-        self.totals: dict = {"queries": 0, "segments_touched": 0,
-                             "blocks_considered": 0, "blocks_decoded": 0,
-                             "terms_cold": 0}
         self.refresh()
 
     @property
@@ -259,7 +233,7 @@ class IndexReader:
         cs = pq.read_table(self.paths.collection_stats).to_pydict()
         self.n_docs, self.avgdl = int(cs["n_docs"][0]), float(cs["avgdl"][0])
 
-        # per-segment WAND bound inflation under avgdl drift (same rule
+        # per-segment top-k bound inflation under avgdl drift (same rule
         # as operators/wand.py _index_meta), plus reader live-segment
         # gating: the manifest's fold-protocol rows, not the partition
         # listing, decide which segments serve (functions/liveness.py —
@@ -311,8 +285,8 @@ class IndexReader:
         self._epoch += 1
         self.totals = {"queries": 0, "segments_touched": 0,
                        "blocks_considered": 0, "blocks_decoded": 0,
-                       "terms_cold": 0, "global_fallbacks": 0,
-                       "decoded_hits": 0, "tier_stream_intersects": 0}
+                       "terms_cold": 0, "decoded_hits": 0,
+                       "tier_stream_intersects": 0}
 
     @staticmethod
     def _dataset_or_none(path: str):
@@ -449,8 +423,7 @@ class IndexReader:
         return np.ones(len(ids), dtype=bool) if dead is None else ~dead.mask(ids)
 
     def _fetch_blocks(self, lru: OrderedDict, columns: list[str],
-                      terms: list[str], stats: dict | None = None,
-                      verdicts: bool = False) -> dict[str, "object"]:
+                      terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
         """Shared LRU-cached block fetch (BM25 and positional paths
         differ only in cache + column list): term → tid resolution via
         the terms directory, row-group-pruned read of the missing tids,
@@ -512,16 +485,6 @@ class IndexReader:
                 for tid, g in pdf.groupby("tid"):
                     t = tid2term[int(tid)]
                     g = g.reset_index(drop=True)
-                    if verdicts:
-                        # memoized global-kernel precondition, attached
-                        # to the FRAME (.attrs) rather than a term-keyed
-                        # dict: the verdict then always pairs with the
-                        # exact frame a query holds — a term-keyed memo
-                        # could pair a post-refresh verdict with a
-                        # pre-refresh frame across two racing refreshes
-                        # (review r4 finding) — and is evicted with the
-                        # frame (no unbounded per-term growth)
-                        g.attrs["disjoint"] = _frame_disjoint(g)
                     out[t] = g
                     found.add(t)
                     if fresh:
@@ -529,8 +492,6 @@ class IndexReader:
                 for t in missing:
                     if t not in found:
                         empty = pdf.iloc[0:0]
-                        if verdicts:
-                            empty.attrs["disjoint"] = True
                         out[t] = empty
                         if fresh:
                             lru[t] = empty
@@ -539,9 +500,19 @@ class IndexReader:
         return out
 
     def _blocks(self, terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
-        """term → pandas blocks frame (with segment_id), LRU-cached."""
-        return self._fetch_blocks(self._blocks_lru, _POSTING_COLS + ["segment_id"], terms,
-                                  stats=stats, verdicts=True)
+        """term → pandas blocks frame (with segment_id), LRU-cached.
+        Each frame carries its numpy columns (wand.term_blocks), built
+        once per frame with this epoch's bound factors pre-scaled into
+        block_max — the memo lives ON the frame, so it always pairs
+        with the exact frame a query holds and is evicted with it."""
+        from .operators.wand import term_blocks
+
+        out = self._fetch_blocks(self._blocks_lru, _POSTING_COLS + ["segment_id"], terms,
+                                 stats=stats)
+        factors = self.bound_factors
+        for pdf in out.values():
+            term_blocks(pdf, factors)
+        return out
 
     def _docs_rows(self, doc_ids: list[int], column: str) -> dict:
         """{doc_id: column value} via a row-group-pruned docs read (docs
@@ -593,14 +564,15 @@ class IndexReader:
     def topk(self, query: str, k: int = 10,
              budget_ms: float | None = None) -> list[tuple[int, float]]:
         """[(doc_id, score)] — value-identical to wand_topk (same
-        per-segment kernel — segment_topk's cost-based TAAT/WAND choice
-        — same rounding, same tie-break).
+        kernel, wand.segment_topk, run once over every segment's
+        blocks; same rounding, same tie-break).
 
         budget_ms is the ST4 timeout guard (reference: the search
         timeout that returns partial results rather than hanging an
-        agent): the deadline is checked between SEGMENTS — at least one
-        segment always completes — and exceeding it stops the sweep;
-        self.truncated records whether the last answer was partial.
+        agent): the kernel checks the deadline between its rounds — the
+        first round always completes and every returned doc carries its
+        exact score; self.truncated records whether intervals that could
+        still reach the top k were left unvisited.
 
         A query that straddles a concurrent refresh() re-runs once
         against the new epoch: without the retry an attempt could mix
@@ -635,7 +607,7 @@ class IndexReader:
 
     def _topk_attempt(self, query: str, k: int, budget_ms: float | None,
                       stats: dict, t0: float) -> list[tuple[int, float]]:
-        from .operators.wand import segment_topk
+        from .operators.wand import segment_topk, term_blocks
 
         self.truncated = False
         if self._postings is None:
@@ -650,118 +622,17 @@ class IndexReader:
         # put from this query a dropped no-op instead of a stale install
         dgen = self._decoded.generation
         blocks = self._blocks(sorted(idf_map), stats=stats)
-        qterms = sorted(idf_map)
-        hits: list[tuple[int, float]] = []
-        # Execution-strategy split (exactness is unaffected — both
-        # forms are exact). WAND pruning is hopeless exactly when even
-        # the RAREST query term is dense in the corpus (block maxima
-        # then barely vary, θ never skips, and the Python pivot walk
-        # visits ~every doc): single terms and all-head combos. Those
-        # queries run the per-SEGMENT sliced TAAT sweep — each slice's
-        # vectorized decode stays cache-resident, while one global
-        # decode allocates corpus-sized temporaries and turns memory-
-        # bandwidth-bound (measured 5x slower on 8M-doc head terms on
-        # this bandwidth-starved box). Everything else runs the ONE
-        # global kernel below (mid/needle combos: measured 64 ms p50 at
-        # 8M docs vs 200+ ms swept).
-        from .operators.wand import TAAT_SELECTIVITY
-
-        counts = [int(blocks[t]["n"].sum()) for t in qterms if len(blocks[t])]
-        total = sum(counts)
-        # dense_min: even the rarest term is corpus-dense (θ hopeless);
-        # the min*sel >= total clause mirrors segment_topk's OWN TAAT
-        # predicate so a skewed multi-term query the kernel would run
-        # as one giant global TAAT is routed to the sweep too (review
-        # r4 finding: the two cost models must agree above the spill)
-        dense_min = bool(counts) and (
-            min(counts) * TAAT_SELECTIVITY >= max(1, self.n_docs)
-            or min(counts) * TAAT_SELECTIVITY >= total
-        )
-        # the sliced sweep only pays off once the global decode's
-        # temporaries outgrow cache — below this posting volume the
-        # global kernel wins for every query class
-        taat_class = (len(counts) <= 1 or dense_min) and total >= _GLOBAL_TAAT_SPILL
-        # per-term global-kernel precondition, memoized ON each frame
-        # (.attrs, set once at fetch) so the verdict always describes
-        # the exact frame this query holds — immune to refresh races by
-        # construction. A violation (non-contiguous compacted merge)
-        # falls back to the sweep and is COUNTED so the latency cliff
-        # is diagnosable from read-amp observability. A frame without
-        # the memo (e.g. rescaled/derived) is verified directly — never
-        # assume-True on an unverified frame
-        ok_global = all(
-            v if (v := blocks[t].attrs.get("disjoint")) is not None
-            else _frame_disjoint(blocks[t])
-            for t in qterms
-        )
-        if budget_ms is None and not taat_class and not ok_global:
-            stats["global_fallbacks"] = 1
-        dead = self._dead_docs()
-        if budget_ms is None and not taat_class and ok_global:
-            # ONE GLOBAL kernel run over every segment's blocks:
-            # segments own disjoint ascending doc-id ranges, so the
-            # per-term multi-segment frames are valid posting lists
-            # after the cursor's first_doc sort, and the WAND heap
-            # threshold climbs GLOBALLY — one cursor set instead of a
-            # per-segment Python sweep (per-query cost stops growing
-            # with segment count: at 128 segments the swept form paid
-            # 128 kernel setups and decoded ≥k docs per segment).
-            # Per-segment bound factors fold in by pre-scaling each
-            # block's max (bounds only — scoring is untouched); rank
-            # identity with the swept form is by construction and
-            # pinned by test + fuzz.
-            nonempty = {t: pdf for t, pdf in blocks.items() if len(pdf)}
-            segs: set[int] = set()
-            for pdf in nonempty.values():
-                segs.update(int(s) for s in np.unique(pdf["segment_id"].to_numpy()))
-            stats["segments_touched"] = len(segs)
-            if any(self.bound_factors.get(s, 1.0) != 1.0 for s in segs):
-                nonempty = {
-                    t: pdf.assign(
-                        block_max=pdf["block_max"].to_numpy()
-                        * pdf["segment_id"].map(self.bound_factors).fillna(1.0).to_numpy()
-                    )
-                    for t, pdf in nonempty.items()
-                }
-            hits = segment_topk(nonempty, qterms, idf_map, self.avgdl, k,
-                                self.k1, self.b, bound_factor=1.0,
-                                dead=dead, stats=stats,
-                                decode_cache=_NsDecodeCache(self._decoded, ("k", -1), dgen))
-        else:
-            # Per-segment sweep: ST4 budgeted queries (deadline checked
-            # between segments, so at least one segment always completes
-            # and partial results stay segment-aligned) AND TAAT-class
-            # queries (cache-resident sliced decode — see above).
-            per_seg: dict[int, dict[str, object]] = {}
-            for t, pdf in blocks.items():
-                if not len(pdf):
-                    continue
-                for seg, g in pdf.groupby("segment_id"):
-                    per_seg.setdefault(int(seg), {})[t] = g
-            for i, (seg, by_term) in enumerate(sorted(per_seg.items())):
-                if (budget_ms is not None and i > 0
-                        and (time.time() - t0) * 1e3 > budget_ms):
-                    self.truncated = True
-                    break
-                stats["segments_touched"] += 1
-                hits.extend(
-                    segment_topk(by_term, qterms, idf_map, self.avgdl, k,
-                                 self.k1, self.b,
-                                 bound_factor=self.bound_factors.get(seg, 1.0),
-                                 dead=dead, stats=stats,
-                                 decode_cache=_NsDecodeCache(self._decoded, ("k", seg), dgen))
-                )
-        hits.sort(key=lambda x: (-x[1], x[0]))
-        return hits[:k]
-
-    @staticmethod
-    def _blocks_globally_disjoint(blocks: dict) -> bool:
-        """Direct (non-memoized) form of the global-kernel premise —
-        every term's block intervals non-overlapping when sorted by
-        first_doc. The hot path uses per-term verdicts memoized at LRU
-        fetch (frame .attrs["disjoint"]); this form exists for tests and
-        diagnostics."""
-        return all(_frame_disjoint(pdf) for pdf in blocks.values())
+        stats["segments_touched"] = len(
+            set().union(*(term_blocks(pdf).segs.tolist() for pdf in blocks.values())))
+        # ONE kernel call over every segment's blocks: bound factors are
+        # pre-scaled into the frames' block maxima (_blocks), liveness is
+        # the epoch's one DeadDocs
+        hits = segment_topk(blocks, sorted(idf_map), idf_map, self.avgdl, k,
+                            self.k1, self.b, dead=self._dead_docs(), stats=stats,
+                            decode_cache=_NsDecodeCache(self._decoded, ("k", -1), dgen),
+                            deadline=None if budget_ms is None else t0 + budget_ms / 1e3)
+        self.truncated = stats.pop("truncated", False)
+        return hits
 
     def _record_stats(self, stats: dict, t0: float) -> None:
         stats["ms"] = round((time.time() - t0) * 1e3, 3)
@@ -774,8 +645,7 @@ class IndexReader:
             # straight into totals at the stream site (the tiered fill
             # path hands stats recording to topk(), which would drop it)
             for key in ("segments_touched", "blocks_considered",
-                        "blocks_decoded", "terms_cold", "global_fallbacks",
-                        "decoded_hits"):
+                        "blocks_decoded", "terms_cold", "decoded_hits"):
                 self.totals[key] += stats.get(key, 0)
 
     def counters(self) -> dict:
@@ -937,12 +807,13 @@ class IndexReader:
                 # per-block path below, which stays within the frame's
                 # memory envelope
                 if sweep and dfs[t] <= self._SWEEP_DF_CAP:
-                    from .operators.wand import _decode_term_all
+                    from .operators.wand import _decode_term_all, term_blocks
 
                     cache = _NsDecodeCache(self._decoded, ("s", -1), dgen)
                     dec = cache.get(t)
                     if dec is None:
-                        d, tf, dl = _decode_term_all(pdf)
+                        tb = term_blocks(pdf)
+                        d, tf, dl = _decode_term_all(tb.n, tb.gaps, tb.tfs, tb.dls)
                         order = np.argsort(d, kind="stable")
                         dec = (d[order], tf[order], dl[order])
                         cache.put(t, dec)
@@ -1028,10 +899,10 @@ class IndexReader:
         Per-query cost: one tid-pruned probe of each (tiny) tier field
         index, one score lookup bounded by the TIER-MATCHED doc count,
         and — only when fewer than k docs tier-match — one ordinary
-        WAND run for the final tier. For a head/stop term that
+        top-k run for the final tier. For a head/stop term that
         tier-matches much of the corpus the ladder semantics themselves
         require ranking every match (the batch mode scans everything
-        too); the WAND fill is skipped in exactly that case, so its k
+        too); the top-k fill is skipped in exactly that case, so its k
         never exceeds 2k."""
         import pyarrow.dataset as ds
 
@@ -1197,7 +1068,7 @@ class IndexReader:
         scores = self._scores_array(terms, uniq)
         n_matched = len(uniq)
         if n_matched < k:
-            # final tier: ordinary WAND top-k, minus the tier-matched
+            # final tier: ordinary BM25 top-k, minus the tier-matched
             # docs (fetch enough extra to survive the exclusion — < 2k).
             # When k or more docs tier-matched, final-tier rows can
             # never reach the top k (tier sorts first): skip the run.

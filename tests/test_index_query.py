@@ -442,3 +442,125 @@ def test_tid_collision_gate_on_extend(spark, small_corpus, tmp_path, monkeypatch
 
     st = index_stats(spark, idx)
     assert st["n_docs"] == cfg.n_docs + 80
+
+
+def _kernel_case(seed):
+    """Random per-term postings over a few origin segments, encoded with
+    codec.encode_blocks. Some terms come from two interleaved sources,
+    so one term's blocks overlap; block sizes 2 and 3 make many tiny
+    intervals; every fourth case has all-equal per-term scores, so
+    interval bounds tie θ and only the doc-id tie-break decides."""
+    from mantic_sh_spark.functions.codec import SEG_STRIDE, encode_blocks
+
+    rng = np.random.default_rng(seed)
+    n_docs = int(rng.integers(50, 600))
+    ids = np.sort(rng.integers(0, 3, n_docs) * SEG_STRIDE + rng.permutation(4 * n_docs)[:n_docs])
+    ties = seed % 4 == 2
+    dl = np.full(n_docs, 10) if ties else rng.integers(1, 60, n_docs)
+    avgdl = float(dl.mean())
+    build_avgdl = avgdl * (0.8 if seed % 3 == 0 else 1.0)  # drifted → bound_factor > 1
+    bs = int(rng.choice([2, 3, 128]))
+    by_term, postings = {}, {}
+    for t in range(int(rng.integers(1, 5))):
+        sel = np.sort(rng.choice(n_docs, int(rng.integers(1, n_docs)), replace=False))
+        tf = np.ones(len(sel), dtype=np.int64) if ties else rng.integers(1, 6, len(sel))
+        postings[f"t{t}"] = (ids[sel], tf, dl[sel])
+        sources = [np.arange(len(sel))]
+        if rng.random() < 0.5:  # two interleaved sources → overlapping blocks
+            half = rng.random(len(sel)) < 0.5
+            sources = [np.flatnonzero(half), np.flatnonzero(~half)]
+        blocks = [blk for src in sources if len(src)
+                  for blk in encode_blocks(ids[sel][src], tf[src], dl[sel][src],
+                                           build_avgdl, 1.2, 0.75, block_size=bs)]
+        by_term[f"t{t}"] = pd.DataFrame(
+            {c: [getattr(blk, c) for blk in blocks]
+             for c in ("first_doc", "last_doc", "block_max", "n", "doc_gaps", "tfs", "dls")})
+    idf_map = {t: 1.0 if ties else float(rng.uniform(0.1, 3.0)) for t in by_term}
+    dead = None
+    if seed % 2:
+        from mantic_sh_spark.functions.liveness import DeadDocs
+
+        dead = DeadDocs.from_ids(rng.choice(ids, max(1, n_docs // 10), replace=False))
+    return by_term, postings, idf_map, avgdl, avgdl / build_avgdl, dead
+
+
+def _brute_scores(postings, idf_map, avgdl, dead):
+    """doc → BM25 score rounded to 4 decimals, summed in term order."""
+    from mantic_sh_spark.functions.codec import tf_norm
+
+    acc: dict[int, float] = {}
+    for t, (d, tf, dl) in postings.items():
+        for doc, s in zip(d.tolist(), (idf_map[t] * tf_norm(tf, dl, avgdl, 1.2, 0.75)).tolist()):
+            acc[doc] = acc.get(doc, 0.0) + s
+    return {d: float(np.round(s, 4)) for d, s in acc.items()
+            if dead is None or d not in dead}
+
+
+def test_segment_topk_matches_brute_force():
+    """The block-interval kernel equals a brute-force scorer on seeded
+    frames: overlapping blocks, block_size 2/3, DeadDocs, drifted avgdl
+    (bound_factor > 1), k from 1 to past the match count, a warm
+    decode cache (and frames whose rows it no longer matches), and a
+    deadline of 0 (partial, exact-scored answer)."""
+    from mantic_sh_spark.operators.wand import segment_topk
+
+    class Cache(dict):
+        def put(self, key, value):
+            self[key] = value
+
+    for seed in range(60):
+        by_term, postings, idf_map, avgdl, bf, dead = _kernel_case(seed)
+        brute = _brute_scores(postings, idf_map, avgdl, dead)
+        ranked = sorted(brute.items(), key=lambda x: (-x[1], x[0]))
+        terms = sorted(by_term)
+        cache = Cache()
+        for k in (1, 7, 50, len(brute) + 5):
+            stats = {}
+            got = segment_topk(by_term, terms, idf_map, avgdl, k, 1.2, 0.75,
+                               bound_factor=bf, dead=dead, stats=stats, decode_cache=cache)
+            assert got == ranked[:k], (seed, k)
+            assert "truncated" not in stats
+            assert stats["blocks_decoded"] <= stats["blocks_considered"]
+        # every term was fully decoded by the k > matches run → cached
+        assert set(cache) == set(terms), seed
+        stats = {}
+        hot = segment_topk(by_term, terms, idf_map, avgdl, 7, 1.2, 0.75, bound_factor=bf,
+                           dead=dead, stats=stats, decode_cache=cache)
+        assert hot == ranked[:7] and stats["blocks_decoded"] == 0, seed
+        # the same blocks in another row order must not reuse the entries
+        # (one term left uncached, so cached blocks are sliced per block)
+        flipped = {t: f.iloc[::-1].reset_index(drop=True) for t, f in by_term.items()}
+        part = Cache({t: v for t, v in cache.items() if t != terms[0]})
+        assert segment_topk(flipped, terms, idf_map, avgdl, 7, 1.2, 0.75, bound_factor=bf,
+                            dead=dead, decode_cache=part) == ranked[:7], seed
+
+        stats = {}
+        partial = segment_topk(by_term, terms, idf_map, avgdl, 7, 1.2, 0.75,
+                               bound_factor=bf, dead=dead, stats=stats, deadline=0.0)
+        assert len(partial) <= 7 and partial == sorted(partial, key=lambda x: (-x[1], x[0]))
+        assert all(brute[d] == s for d, s in partial), seed
+        if not stats.get("truncated"):
+            assert partial == ranked[:7], seed
+
+
+def test_segment_topk_visits_intervals_that_tie_theta():
+    """An interval whose bound only TIES θ must still be visited: its
+    docs can equal the k-th score with a lower doc id. Dense term a over
+    docs 0..99 and term b over 90, 95, 99 (equal per-posting scores):
+    [90, 100) is bounded by a + b and visited first, filling the top 5
+    with 90, 95, 99, 91, 92; [0, 90) is bounded by a alone — exactly θ —
+    and holds docs 0 and 1, which outrank 91 and 92."""
+    from mantic_sh_spark.functions.codec import encode_blocks
+    from mantic_sh_spark.operators.wand import segment_topk
+
+    def frame(docs):
+        docs = np.asarray(docs, dtype=np.int64)
+        ones = np.ones(len(docs), dtype=np.int64)
+        blocks = encode_blocks(docs, ones, ones * 10, 10.0, 1.2, 0.75)
+        return pd.DataFrame({c: [getattr(blk, c) for blk in blocks]
+                             for c in ("first_doc", "last_doc", "block_max", "n",
+                                       "doc_gaps", "tfs", "dls")})
+
+    by_term = {"a": frame(range(100)), "b": frame([90, 95, 99])}
+    got = segment_topk(by_term, ["a", "b"], {"a": 1.0, "b": 1.0}, 10.0, 5, 1.2, 0.75)
+    assert [d for d, _ in got] == [90, 95, 99, 0, 1]

@@ -252,13 +252,18 @@ def test_get_definition(spark, tmp_path):
 
 
 def test_timeout_guard_returns_partial(spark, small_corpus):
-    """ST4: a per-request time budget stops the segment sweep after the
-    deadline — at least one segment always answers, the reader flags
-    truncation, and an un-budgeted rerun is complete again."""
+    """ST4: a per-request time budget stops the top-k kernel between
+    rounds after the deadline — the first round always answers with
+    exact scores, the reader flags truncation, and an un-budgeted rerun
+    is complete again."""
     reader = IndexReader(small_corpus["index_dir"])
     full = reader.topk("w1x w2x", k=8)
     assert not reader.truncated and full
 
+    # the full query cached both terms decoded, and a query over cached
+    # terms prunes nothing, so it finishes in one round: drop the caches
+    # so the budgeted query needs several rounds
+    reader.refresh()
     partial = reader.topk("w1x w2x", k=8, budget_ms=0.0)
     assert reader.truncated
     assert partial and set(partial) <= {(d, s) for d, s in full} | set(partial)
@@ -519,12 +524,40 @@ def test_stale_reader_self_heals_across_external_merge(spark, tmp_path):
     ) == [9]
 
 
-def test_global_kernel_matches_segment_sweep(spark, tmp_path):
-    """The unbudgeted serving path runs ONE global WAND kernel over all
-    segments (bound factors pre-scaled into block maxima, union
-    liveness); a budgeted query with an unreachable deadline runs the
-    per-segment sweep. Both must rank identically on an index with
-    deletes AND an extend (avgdl drift → bound_factor != 1)."""
+def _exhaustive_minus(spark, idx, queries, k, dead=frozenset()):
+    """q → exhaustive bm25_topk over the docs table, minus tombstoned
+    docs: ask for k+|dead| and drop them (the rank order is a total
+    order, so the prefix is stable — tools/fuzz_wand.py::_minus)."""
+    from mantic_sh_spark.functions.tokenize import tokens_col
+    from mantic_sh_spark.operators.query import bm25_topk
+
+    docs = spark.read.parquet(f"{idx}/docs").withColumn("tokens", tokens_col("text"))
+    rows = (bm25_topk(spark, docs, list(enumerate(queries)), k=k + len(dead))
+            .orderBy("query_id", "rank").collect())
+    out = {q: [] for q in queries}
+    for r in rows:
+        lst = out[queries[r.query_id]]
+        if r.doc_id not in dead and len(lst) < k:
+            lst.append((r.doc_id, r.score))
+    return out
+
+
+def _blocks_overlap(pdf) -> bool:
+    """Do any two of this term frame's block [first_doc, last_doc]
+    intervals overlap?"""
+    import numpy as np
+
+    first, last = pdf["first_doc"].to_numpy(), pdf["last_doc"].to_numpy()
+    o = np.argsort(first, kind="stable")
+    return bool(np.any(first[o][1:] <= last[o][:-1]))
+
+
+def test_topk_matches_oracles_after_deletes_and_extend(spark, tmp_path):
+    """The reader's one kernel call over every segment (bound factors
+    pre-scaled into block maxima, the epoch's DeadDocs) must equal the
+    distributed engine and the exhaustive engine minus tombstoned docs,
+    on an index with deletes AND an extend (avgdl drift → bound_factor
+    != 1)."""
     from mantic_sh_spark.operators.delete import delete_docs
     from mantic_sh_spark.operators.index_build import build_index
     from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
@@ -545,23 +578,24 @@ def test_global_kernel_matches_segment_sweep(spark, tmp_path):
     reader = IndexReader(idx)
     assert any(f != 1.0 for f in reader.bound_factors.values()), \
         "fixture must exercise the bound-factor scaling path"
-    for q in ("w1x", "w1x w2x", "w0x w3x w9x", "qqabsent"):
-        global_hits = reader.topk(q, k=8)
-        swept = reader.topk(q, k=8, budget_ms=60_000)
-        assert global_hits == swept, q
-        assert all(d not in victims[:2] for d, _ in global_hits), q
+    queries = ("w1x", "w1x w2x", "w0x w3x w9x", "qqabsent")
+    wand = _spark_results(spark, idx, [(0, q) for q in queries], k=8)
+    exhaustive = _exhaustive_minus(spark, idx, queries, 8, frozenset(victims[:2]))
+    for q in queries:
+        hits = reader.topk(q, k=8)
+        assert hits == wand[q] == exhaustive[q], q
+        assert all(d not in victims[:2] for d, _ in hits), q
 
 
-def test_noncontiguous_merge_stays_global(spark, tmp_path):
+def test_noncontiguous_merge_keeps_blocks_disjoint(spark, tmp_path):
     """The compactor keeps re-encoded blocks within one stride range
     when live segments remain (merge sets split_ranges automatically),
-    so a non-contiguous merge PRESERVES the global-kernel premise: no
-    fallback fires, and results match both the sweep and the
-    independent exhaustive engine."""
-    from mantic_sh_spark.functions.tokenize import tokenize_query, tokens_col
+    so a non-contiguous merge keeps every term's block intervals
+    disjoint (tight interval bounds); results match the distributed
+    engine and the independent exhaustive engine."""
+    from mantic_sh_spark.functions.tokenize import tokenize_query
     from mantic_sh_spark.operators.index_build import build_index
     from mantic_sh_spark.operators.merge import merge_segments
-    from mantic_sh_spark.operators.query import bm25_topk
     from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
 
     pages = gen_pages(spark, SynthConfig(n_docs=400, vocab_size=200, seed=23),
@@ -573,24 +607,20 @@ def test_noncontiguous_merge_stays_global(spark, tmp_path):
     reader = IndexReader(idx)
     queries = ("w1x", "w1x w2x", "w0x w4x w7x", "w3x w9x")
     for q in queries:
-        assert reader._blocks_globally_disjoint(
-            reader._blocks(sorted(set(tokenize_query(q))))), q
-        assert reader.topk(q, k=8) == reader.topk(q, k=8, budget_ms=60_000), q
-    assert reader.counters()["total"]["global_fallbacks"] == 0
-    docs = spark.read.parquet(f"{idx}/docs").withColumn("tokens", tokens_col("text"))
-    for qi, q in enumerate(queries):
-        ex = [(r.doc_id, r.score)
-              for r in bm25_topk(spark, docs, [(qi, q)], k=8).orderBy("rank").collect()]
-        assert reader.topk(q, k=8) == ex, q
+        frames = reader._blocks(sorted(set(tokenize_query(q))))
+        assert not any(_blocks_overlap(pdf) for pdf in frames.values()), q
+    wand = _spark_results(spark, idx, [(0, q) for q in queries], k=8)
+    exhaustive = _exhaustive_minus(spark, idx, queries, 8)
+    for q in queries:
+        assert reader.topk(q, k=8) == wand[q] == exhaustive[q], q
 
 
-def test_global_kernel_noncontiguous_merge_falls_back(spark, tmp_path, monkeypatch):
+def test_topk_ranks_legacy_overlapping_compaction(spark, tmp_path, monkeypatch):
     """LEGACY layout (compactions from before split_ranges existed): a
     non-contiguous merge whose re-encoded blocks span the stride gap
-    and envelop a live segment's doc range. The per-query guard must
-    detect it and fall back, and results must stay identical to the
-    per-segment sweep (review r4 finding: without the guard the global
-    cursor's searchsorted seek silently mis-ranks)."""
+    and envelop a live segment's doc range. Those are just overlapping
+    intervals to the kernel: the reader and the distributed engine must
+    still equal the exhaustive engine."""
     import mantic_sh_spark.functions.codec as codec_mod
     from mantic_sh_spark.functions.tokenize import tokenize_query
     from mantic_sh_spark.operators.index_build import build_index
@@ -613,40 +643,20 @@ def test_global_kernel_noncontiguous_merge_falls_back(spark, tmp_path, monkeypat
     merge_segments(spark, idx, [0, 2], dst_segment=5, compact=True, purge=True)
 
     reader = IndexReader(idx)
-    # the fixture must actually produce the overlapping layout
-    head = tokenize_query("w1x")
-    assert not reader._blocks_globally_disjoint(reader._blocks(head)), \
+    # the fixture must actually produce the overlapping layout, and at
+    # least one multi-term query must run over it
+    assert _blocks_overlap(reader._blocks(["w1x"])["w1x"]), \
         "expected a spanning block from the legacy non-contiguous compaction"
     queries = ("w1x", "w1x w2x", "w0x w4x w7x", "w3x w9x")
-    # at least one multi-term query must EXERCISE the guard (otherwise
-    # the identity check degenerates to sweep-vs-sweep); record which
-    guarded = [
-        q for q in queries
-        if not reader._blocks_globally_disjoint(
-            reader._blocks(sorted(set(tokenize_query(q)))))
-    ]
-    assert guarded, "no query hit the overlapping layout — fixture drifted"
-    before = reader.counters()["total"]["global_fallbacks"]
+    assert any(
+        len(tokenize_query(q)) > 1
+        and any(_blocks_overlap(pdf) for pdf in reader._blocks(tokenize_query(q)).values())
+        for q in queries
+    ), "no multi-term query hit the overlapping layout — fixture drifted"
+    wand = _spark_results(spark, idx, [(0, q) for q in queries], k=8)
+    exhaustive = _exhaustive_minus(spark, idx, queries, 8)
     for q in queries:
-        assert reader.topk(q, k=8) == reader.topk(q, k=8, budget_ms=60_000), q
-    assert reader.counters()["total"]["global_fallbacks"] > before
-
-    # ... and the sweep itself must be RIGHT on this layout, not just
-    # self-consistent: compare a guarded query against the independent
-    # exhaustive engine over the (purged) docs table
-    from pyspark.sql import functions as F
-
-    from mantic_sh_spark.functions.tokenize import tokens_col
-    from mantic_sh_spark.operators.query import bm25_topk
-
-    docs = spark.read.parquet(f"{idx}/docs").withColumn("tokens", tokens_col("text"))
-    for qi, q in enumerate(q for q in queries if len(tokenize_query(q)) > 1):
-        ex = [
-            (r.doc_id, r.score)
-            for r in bm25_topk(spark, docs, [(qi, q)], k=8)
-            .orderBy("rank").collect()
-        ]
-        assert reader.topk(q, k=8) == ex, q
+        assert reader.topk(q, k=8) == wand[q] == exhaustive[q], q
 
 
 def test_heavy_churn_liveness_stays_bitmap_bounded(spark, small_corpus, tmp_path):

@@ -1,8 +1,11 @@
 """Randomized rank-identity campaign across adversarial index layouts
 (tiny blocks, tiny salt chunks, 1-5 segments, optional compacting
-merges): the distributed engine (wand_topk — cost-routed TAAT/WAND)
-must equal exhaustive BM25, and the serving reader (serve.IndexReader,
-no Spark on the query path) must equal the distributed engine.
+merges): the distributed engine (wand_topk — the block-interval
+kernel, once per segment) must equal exhaustive BM25, and the serving
+reader (serve.IndexReader — the same kernel once over every segment,
+no Spark on the query path) must equal the distributed engine. A
+budget_ms=0 reader answer (a deadline that cuts the kernel after its
+first round) must carry exact scores.
 
 Every case also builds the tier containment index and checks
 tiered serving (IndexReader.tiered_topk) against the batch operator
@@ -19,6 +22,10 @@ non-purge merge, so their tombstones re-home under the merge's dst
 partition: every check of the case (WAND, serving topk, tiered, and —
 on the positional twin, deleted and merged the same way — phrase_topk
 and references) then runs against re-homed tombstone partitions.
+"legacy" cases fold only segments [0, 2] of 3-5 with the compactor's
+split_ranges off (the layout of compactions from before it existed):
+re-encoded blocks span the stride gap and envelop segment 1, so the
+kernels rank over overlapping block intervals.
 
 Odd-seeded cases additionally build POSITIONALLY and fuzz the phrase
 engine (incl. stop-term phrases — the batched keyed-searchsorted
@@ -30,14 +37,17 @@ import bisect
 import shutil
 import sys
 
+import numpy as np
+
 sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
+import mantic_sh_spark.functions.codec as codec_mod
 from mantic_sh_spark.session import get_spark
 from mantic_sh_spark.functions.tokenize import tokens_col
 from mantic_sh_spark.operators.index_build import build_index
 from mantic_sh_spark.operators.merge import merge_segments
-from mantic_sh_spark.functions.tokenize import tokenize
+from mantic_sh_spark.functions.tokenize import tokenize, tokenize_query
 from mantic_sh_spark.operators.delete import delete_docs
 from mantic_sh_spark.operators.phrase import phrase_topk
 from mantic_sh_spark.operators.query import bm25_topk
@@ -95,9 +105,55 @@ def _minus(rows, dead, k):
 def _tiered_identity(readers, tqueries, want, k):
     return all(r.tiered_topk(q, k=k) == want.get(qid, [])
                for qid, q in tqueries for r in readers)
-cases = [(101+i, [2,3,5,7,11,13][i%6], [16,24,48,96][i%4], (i%5)+1, [60,200,700,1500][i%4], i%2==0)
+
+
+def _merge(idx, srcs, dst, legacy):
+    """Non-purge compacting merge of `srcs`; `legacy` turns the
+    compactor's split_ranges off."""
+    orig = codec_mod.compact_stream_fn
+
+    def no_split(*a, **kw):
+        kw["split_ranges"] = False
+        return orig(*a, **kw)
+
+    if legacy:
+        codec_mod.compact_stream_fn = no_split
+    try:
+        merge_segments(spark, idx, srcs, dst_segment=dst, compact=True, purge=False)
+    finally:
+        codec_mod.compact_stream_fn = orig
+
+
+def _budget0_exact(reader, queries, k):
+    """A budget_ms=0 answer: ≤ k docs, ranked, each with its exact
+    score (checked against the reader's separate per-doc scorer)."""
+    for _, q in queries:
+        part = reader.topk(q, k=k, budget_ms=0)
+        if len(part) > k or part != sorted(part, key=lambda x: (-x[1], x[0])):
+            return False
+        docs = np.array(sorted(d for d, _ in part), dtype=np.int64)
+        exact = reader._scores_for_docs(tokenize_query(q), docs)
+        if any(abs(exact[d] - s) > 1.0001e-4 for d, s in part):
+            return False
+    return True
+
+
+def _overlapping(reader, terms):
+    """Does any term's block-interval list overlap itself?"""
+    for pdf in reader._blocks(sorted(set(terms))).values():
+        first, last = pdf["first_doc"].to_numpy(), pdf["last_doc"].to_numpy()
+        o = np.argsort(first, kind="stable")
+        if np.any(first[o][1:] <= last[o][:-1]):
+            return True
+    return False
+
+
+cases = [(101+i, [2,3,5,7,11,13][i%6], [16,24,48,96][i%4], (i%5)+1, [60,200,700,1500][i%4],
+          "all" if i % 2 == 0 else None)
          for i in range(12)]
+cases += [(113+i, [2,3,5][i], [16,24,48][i], 3+i, [60,200,700][i], "legacy") for i in range(3)]
 for seed, bs, cs, nseg, vocab, do_merge in cases:
+    srcs = [0, 2] if do_merge == "legacy" else list(range(nseg))
     cfg = SynthConfig(n_docs=350, vocab_size=vocab, seed=seed)
     pages = gen_pages(spark, cfg, partitions=3)
     idx = f"/tmp/fuzz2_{seed}"
@@ -112,8 +168,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         pre_urls = {r.url for r in docs.where(F.col("doc_id").isin(sorted(pre)))
                     .select("url").collect()}
         delete_docs(spark, idx, doc_ids=sorted(pre))
-        merge_segments(spark, idx, list(range(nseg)), dst_segment=nseg+3, compact=True,
-                       purge=False)
+        _merge(idx, srcs, nseg + 3, do_merge == "legacy")
     rw = wand_topk(spark, idx, queries, k=8).orderBy("query_id", "rank").collect()
     rx = bm25_topk(spark, docs, queries, k=8 + len(pre)).orderBy("query_id", "rank").collect()
     got_w = {}
@@ -128,7 +183,8 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     serve_ok = all(
         [(d, round(s, 4)) for d, s in reader.topk(q, k=8)] == wand_by_q.get(qid, [])
         for qid, q in queries
-    )
+    ) and _budget0_exact(reader, queries, 8)
+    overlap = any(_overlapping(reader, tokenize_query(q)) for _, q in queries)
     # tiered serving vs batch identity on this layout, both scorer
     # strategies (block-pruned and the vectorized sweep), incl. a
     # stop-term head query and an absent-term query
@@ -160,7 +216,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         del_ok &= all(
             [(d, round(s, 4)) for d, s in reader.topk(q, k=8)] == got_w.get(qid, [])
             for qid, q in queries
-        )
+        ) and _budget0_exact(reader, queries, 8)
         del_ok &= _tiered_identity(
             [reader, r_swp], tq, _tiered_want(idx, tq, 8, exclude=dset), 8)
 
@@ -173,8 +229,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                     block_size=bs, store_positions=True)
         if pre_urls:  # same pre-merge deletes + non-purge merge
             delete_docs(spark, posidx, urls=sorted(pre_urls))
-            merge_segments(spark, posidx, list(range(nseg)), dst_segment=nseg+3,
-                           compact=True, purge=False)
+            _merge(posidx, srcs, nseg + 3, do_merge == "legacy")
         doc_toks = {
             r.doc_id: tokenize(r.text)
             for r in spark.read.parquet(f"{posidx}/docs").select("doc_id", "url", "text")
@@ -234,7 +289,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         shutil.rmtree(posidx, ignore_errors=True)
     fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok)
     print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
-          f"pre_deleted={len(pre)}: "
+          f"pre_deleted={len(pre)} overlapping_blocks={overlap}: "
           f"{'OK' if ok else 'MISMATCH'} serve={'OK' if serve_ok else 'MISMATCH'}"
           f" phrase={'OK' if phrase_ok else 'MISMATCH'}"
           f" tier={'OK' if tier_ok else 'MISMATCH'}"
