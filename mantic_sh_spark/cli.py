@@ -70,7 +70,6 @@ def main(argv: list[str] | None = None) -> int:
     m.add_argument("--index", required=True)
     m.add_argument("--segments", required=True, help="comma-separated src segment ids")
     m.add_argument("--dst", type=int, default=None)
-    m.add_argument("--no-compact", action="store_true")
     m.add_argument("--no-purge", action="store_true")
 
     d = sub.add_parser("delete", help="tombstone documents by url or doc id")
@@ -217,7 +216,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = _spark(args)
         dst = merge_segments(
             spark, args.index, [int(x) for x in args.segments.split(",")],
-            dst_segment=args.dst, compact=not args.no_compact, purge=not args.no_purge,
+            dst_segment=args.dst, purge=not args.no_purge,
         )
         print(json.dumps({"merged_into": dst}))
 

@@ -27,13 +27,17 @@ postings. Each block stores:
                          random-access norms lookup inside top-k);
                          ~1-2 bytes/posting, the Lucene-norms analog.
 
-All encode/decode is numpy-vectorized (no per-element Python loops);
-this code runs inside applyInPandas/mapInPandas workers.
+The format has ONE decoder, decode_blocks (any batch of blocks in one
+varint pass — every reader: the top-k kernel, phrase, the per-doc
+scorer, the merge compactor), and ONE encoder, encode_rows (the build
+and the merge compactor). All encode/decode is numpy-vectorized (no
+per-element or per-block Python loops); this code runs inside
+applyInPandas/mapInArrow workers.
 """
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from itertools import chain
 
 import numpy as np
 
@@ -120,96 +124,52 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return out
 
 
-def delta_encode(doc_ids: np.ndarray) -> bytes:
-    """Sorted absolute doc ids → varint([first, diffs...])."""
-    d = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    if d.size == 0:
-        return b""
-    gaps = np.empty_like(d)
-    gaps[0] = d[0]
-    np.subtract(d[1:], d[:-1], out=gaps[1:])
-    return varint_encode(gaps)
-
-
-def delta_decode(buf: bytes) -> np.ndarray:
-    gaps = varint_decode(buf).astype(np.int64)
-    return np.cumsum(gaps)
-
-
-class Block(NamedTuple):
-    first_doc: int
-    last_doc: int
-    block_max: float
-    n: int
-    doc_gaps: bytes
-    tfs: bytes
-    dls: bytes
-    positions: bytes = b""
-
-
 def tf_norm(tfs: np.ndarray, dls: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
     """idf-independent BM25 factor, vectorized (float64)."""
     tfs = tfs.astype(np.float64)
     return tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
 
 
-def encode_blocks(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    avgdl: float,
-    k1: float,
-    b: float,
-    block_size: int = BLOCK_SIZE,
-    positions_flat: np.ndarray | None = None,
-) -> list[Block]:
-    """Sorted-by-doc_id postings (one term) → list of Blocks.
-    positions_flat: concatenated within-doc positions (posting j owns
-    positions_flat[off[j]:off[j+1]] with off = cumsum(tfs))."""
-    n = len(doc_ids)
-    if n == 0:
+def _values(col):
+    """A binary column's values as joinable pieces: the bytes objects
+    of an object array as they are, or an Arrow binary array's value
+    bytes as ONE zero-copy slice of its data buffer."""
+    if not hasattr(col, "buffers"):
+        return col
+    _, offsets, data = col.buffers()
+    if data is None:
         return []
-    norms = tf_norm(tfs, dls, avgdl, k1, b)
-    off = None
-    if positions_flat is not None:
-        off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(np.asarray(tfs, dtype=np.int64), out=off[1:])
-    blocks: list[Block] = []
-    for s in range(0, n, block_size):
-        e = min(s + block_size, n)
-        d, t, l = doc_ids[s:e], tfs[s:e], dls[s:e]
-        pos_bytes = b""
-        if positions_flat is not None:
-            chunk = np.asarray(positions_flat[off[s] : off[e]], dtype=np.int64)
-            if len(chunk):
-                pg = np.empty(len(chunk), dtype=np.int64)
-                pg[0] = chunk[0]
-                np.subtract(chunk[1:], chunk[:-1], out=pg[1:])
-                starts = off[s : e] - off[s]  # run starts within chunk
-                pg[starts] = chunk[starts]
-                pos_bytes = varint_encode(pg)
-        blocks.append(
-            Block(
-                first_doc=int(d[0]),
-                last_doc=int(d[-1]),
-                block_max=float(norms[s:e].max()),
-                n=e - s,
-                doc_gaps=delta_encode(d),
-                tfs=varint_encode(t),
-                dls=varint_encode(l),
-                positions=pos_bytes,
-            )
-        )
-    return blocks
+    width = np.int64 if str(col.type) == "large_binary" else np.int32
+    o = np.frombuffer(offsets, dtype=width, count=len(col) + 1,
+                      offset=np.dtype(width).itemsize * col.offset)
+    return [memoryview(data)[int(o[0]):int(o[-1])]]
 
 
-def decode_block(doc_gaps: bytes, tfs: bytes, dls: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """One block → (doc_ids int64, tfs int64, dls int64)."""
-    return (
-        delta_decode(doc_gaps),
-        varint_decode(tfs).astype(np.int64),
-        varint_decode(dls).astype(np.int64),
-    )
+def decode_blocks(counts, gaps, tfs, dls, positions=None) -> tuple[np.ndarray, ...]:
+    """Batch-decode blocks (any terms, any order) in ONE varint pass
+    over all their byte columns — the single decoder of the block
+    format. Columns are object arrays of bytes or Arrow binary arrays;
+    `counts` is the blocks' n. Returns int64 (doc_ids, tfs, dls), one
+    entry per posting in block order, plus — when `positions` is given
+    — the flat absolute positions: posting j owns flat[off[j]:off[j+1]]
+    with off = cumsum(tfs) from 0. Both delta chains restart at every
+    run head (a block's first doc id, a posting's first position is
+    absolute), so one cumsum with a per-run rebase undoes them."""
+    counts = np.asarray(counts, dtype=np.int64)
+    p = int(counts.sum())
+    cols = (gaps, tfs, dls) if positions is None else (gaps, tfs, dls, positions)
+    v = varint_decode(b"".join(chain.from_iterable(map(_values, cols)))).astype(np.int64)
+
+    def rebase(g, lens):
+        starts = np.zeros(len(lens), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        c = np.cumsum(g)
+        return c - np.repeat(c[starts] - g[starts], lens)
+
+    docs, tf, dl = rebase(v[:p], counts), v[p:2 * p], v[2 * p:3 * p]
+    if positions is None:
+        return docs, tf, dl
+    return docs, tf, dl, rebase(v[3 * p:], tf)
 
 
 def encode_groups(
@@ -278,16 +238,88 @@ def encode_groups(
         "block_max": bmax,
         "n": (bends - bstarts).astype(np.int32),
         # posting-space block bounds — callers slicing sidecar buffers
-        # (e.g. positions) pop these
+        # (e.g. positions) read these
         "p_start": bstarts,
         "p_end": bends,
     }
     for name, arr in (("doc_gaps", gaps), ("tfs", tf), ("dls", dl)):
-        nbytes = varint_nbytes(arr)
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(nbytes, out=offsets[1:])
-        out[name] = (varint_encode(arr, nbytes), offsets)
+        out[name] = _varint_column(arr)
     return out
+
+
+def _varint_column(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """(one varint buffer for the whole array, per-value byte offsets
+    with a trailing end) — value i is buf[offsets[i]:offsets[i+1]]."""
+    nbytes = varint_nbytes(values)
+    offsets = np.zeros(len(values) + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=offsets[1:])
+    return varint_encode(values, nbytes), offsets
+
+
+def _binary_column(buf: bytes, offsets: np.ndarray, lo: np.ndarray, hi: np.ndarray):
+    """Zero-copy Arrow binary column of the rows [offsets[lo[j]],
+    offsets[hi[j]]) of `buf`: rows tile the value space, so the Arrow
+    offsets are offsets[lo] plus one trailing end."""
+    import pyarrow as pa
+
+    nb = len(lo)
+    end = int(offsets[hi[-1]]) if nb else 0
+    if end >= 2**31:  # int32 Arrow offsets would wrap silently
+        raise OverflowError(
+            f"varint batch buffer {end} B exceeds binary-column int32 "
+            "offsets; lower CHUNK_SIZE/block_size so one Arrow batch "
+            "stays under 2 GiB")
+    offs = np.empty(nb + 1, dtype=np.int32)
+    offs[:-1] = offsets[lo]
+    offs[-1] = end
+    return pa.Array.from_buffers(
+        pa.binary(), nb, [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(buf)]
+    )
+
+
+def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, avgdl: float, k1: float,
+                b: float, block_size: int = BLOCK_SIZE, positions=None):
+    """Postings of MANY groups → one RecordBatch of block rows (the
+    postings-table schema) — the encoder the build and the merge
+    compactor share. Arrays as in encode_groups; `tids` / `segs` hold
+    one value per GROUP. `positions` = (flat, off): posting j's
+    ascending within-doc positions are flat[off[j]:off[j+1]]."""
+    import pyarrow as pa
+
+    enc = encode_groups(group_starts, doc_ids, tfs, dls, avgdl, k1, b, block_size)
+    gi, bs_p, be_p = enc["group_idx"], enc["p_start"], enc["p_end"]
+    arrays = [
+        pa.array(np.asarray(tids)[gi].astype(np.int64)),
+        pa.array(np.asarray(segs)[gi].astype(np.int32)),
+        pa.array(np.asarray(enc["first_doc"], dtype=np.int64)),
+        pa.array(np.asarray(enc["last_doc"], dtype=np.int64)),
+        pa.array(np.asarray(enc["block_max"], dtype=np.float64)),
+        pa.array(np.asarray(enc["n"], dtype=np.int32)),
+    ] + [_binary_column(*enc[c], bs_p, be_p) for c in ("doc_gaps", "tfs", "dls")]
+    # per-block compressed size (gaps+tfs+dls — positions excluded, as
+    # in the terms-directory metric): stored so index maintenance can
+    # aggregate sizes from a few int columns instead of scanning the
+    # binary payloads (measured 2.8 s of the 4.5 s terms job at sf0.1).
+    # Block j owns postings [bs_p[j], be_p[j]), so its bytes in each
+    # column are offsets[be_p[j]] - offsets[bs_p[j]].
+    blk_bytes = sum(
+        enc[c][1][be_p] - enc[c][1][bs_p] for c in ("doc_gaps", "tfs", "dls")
+    )
+    arrays.append(pa.array(np.asarray(blk_bytes, dtype=np.int32)))
+    names = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "n",
+             "doc_gaps", "tfs", "dls", "nbytes"]
+    if positions is not None:
+        # per-posting position deltas (the first value of each posting
+        # run is the absolute position), one varint buffer for the
+        # whole batch sliced by each block's flat-position bounds
+        flat, off = positions
+        pgaps = np.empty(len(flat), dtype=np.int64)
+        pgaps[0] = flat[0]
+        np.subtract(flat[1:], flat[:-1], out=pgaps[1:])
+        pgaps[off[:-1]] = flat[off[:-1]]
+        arrays.append(_binary_column(*_varint_column(pgaps), off[bs_p], off[be_p]))
+        names.append("positions")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 # --------------------------------------------------------------------
@@ -315,7 +347,6 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
     column, rows are pre-aggregated postings (the doc-local combine
     path); without it, rows are occurrences and tf falls out of a
     run-length pass."""
-    import numpy as np
     import pyarrow as pa
 
     n = tbl.num_rows
@@ -346,57 +377,8 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
         tf = np.diff(np.append(pstarts, n))
         # group starts re-expressed in posting index space
         gstarts = np.searchsorted(pstarts, grows)
-    enc = encode_groups(gstarts, doc[pstarts], tf, dl[pstarts], avgdl, k1, b, block_size)
-    gi = enc.pop("group_idx")
-    bs_p = enc.pop("p_start")
-    be_p = enc.pop("p_end")
-    tidx = grows[gi]
-
-    def _bin(pair):
-        # zero-copy binary column: blocks tile the value space, so the
-        # Arrow offsets are offsets[bstarts] + one trailing end
-        buf, offsets = pair
-        nb = len(bs_p)
-        end = int(offsets[be_p[-1]]) if nb else 0
-        if end >= 2**31:  # int32 Arrow offsets would wrap silently
-            raise OverflowError(
-                f"varint batch buffer {end} B exceeds binary-column int32 "
-                "offsets; lower CHUNK_SIZE/block_size so one Arrow batch "
-                "stays under 2 GiB")
-        offs = np.empty(nb + 1, dtype=np.int32)
-        offs[:-1] = offsets[bs_p]
-        offs[-1] = end
-        return pa.Array.from_buffers(
-            pa.binary(), nb, [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(buf)]
-        )
-
-    arrays = [
-        pa.array(tid[tidx].astype(np.int64)),
-        pa.array(seg[tidx].astype(np.int32)),
-        pa.array(np.asarray(enc["first_doc"], dtype=np.int64)),
-        pa.array(np.asarray(enc["last_doc"], dtype=np.int64)),
-        pa.array(np.asarray(enc["block_max"], dtype=np.float64)),
-        pa.array(np.asarray(enc["n"], dtype=np.int32)),
-        _bin(enc["doc_gaps"]),
-        _bin(enc["tfs"]),
-        _bin(enc["dls"]),
-    ]
-    # per-block compressed size (gaps+tfs+dls — positions excluded, as
-    # in the terms-directory metric): stored so index maintenance can
-    # aggregate sizes from a few int columns instead of scanning the
-    # binary payloads (measured 2.8 s of the 4.5 s terms job at sf0.1).
-    # Block j owns postings [bs_p[j], be_p[j]), so its bytes in each
-    # column are offsets[be_p[j]] - offsets[bs_p[j]].
-    blk_bytes = sum(
-        enc[c][1][be_p] - enc[c][1][bs_p] for c in ("doc_gaps", "tfs", "dls")
-    )
-    arrays.append(pa.array(np.asarray(blk_bytes, dtype=np.int32)))
-    names = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "n",
-             "doc_gaps", "tfs", "dls", "nbytes"]
+    positions = None
     if with_positions:
-        # per-posting position deltas (first value of each posting run
-        # is the absolute position), one varint buffer for the whole
-        # batch sliced by each block's flat-position bounds
         if "tf" in tbl.schema.names:
             # pre-aggregated rows: positions arrive as an int-ARRAY
             # column per posting — flatten keeps per-row order, and
@@ -404,294 +386,103 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
             parr = tbl.column("positions").combine_chunks()
             if isinstance(parr, pa.ChunkedArray):
                 parr = parr.chunk(0) if parr.num_chunks == 1 else pa.concat_arrays(parr.chunks)
-            flat = parr.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
             off = np.zeros(len(tf) + 1, dtype=np.int64)
             np.cumsum(tf, out=off[1:])
-            pgaps = np.empty(len(flat), dtype=np.int64)
-            pgaps[0] = flat[0]
-            np.subtract(flat[1:], flat[:-1], out=pgaps[1:])
-            pgaps[off[:-1]] = flat[off[:-1]]
-            nbytes = varint_nbytes(pgaps)
-            offsets = np.zeros(len(flat) + 1, dtype=np.int64)
-            np.cumsum(nbytes, out=offsets[1:])
-            buf = varint_encode(pgaps, nbytes)
-            rs = off[bs_p]
-            re = off[be_p]
+            positions = (parr.flatten().to_numpy(zero_copy_only=False), off)
         else:
             # occurrence rows: one `pos` per raw row; posting runs are
             # the pstarts segmentation
-            pos = tbl.column("pos").to_numpy()
-            pgaps = np.empty(n, dtype=np.int64)
-            pgaps[0] = pos[0]
-            np.subtract(pos[1:], pos[:-1], out=pgaps[1:])
-            pgaps[pstarts] = pos[pstarts]
-            nbytes = varint_nbytes(pgaps)
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(nbytes, out=offsets[1:])
-            buf = varint_encode(pgaps, nbytes)
-            pstarts_ext = np.append(pstarts, n)
-            rs = pstarts_ext[bs_p]
-            re = pstarts_ext[be_p]
-        nbp = len(rs)
-        pend = int(offsets[re[-1]]) if nbp else 0
-        if pend >= 2**31:  # same int32-offset wraparound guard as _bin
-            raise OverflowError(
-                f"positions batch buffer {pend} B exceeds binary-column "
-                "int32 offsets; lower CHUNK_SIZE/block_size so one Arrow "
-                "batch stays under 2 GiB")
-        poffs = np.empty(nbp + 1, dtype=np.int32)
-        poffs[:-1] = offsets[rs]
-        poffs[-1] = pend
-        arrays.append(
-            pa.Array.from_buffers(
-                pa.binary(), nbp, [None, pa.py_buffer(poffs.tobytes()), pa.py_buffer(buf)]
-            )
-        )
-        names.append("positions")
-    return pa.RecordBatch.from_arrays(arrays, names=names)
-
-
-def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """One block's positions bytes + its tf array → (flat absolute
-    positions, posting offsets). Posting j's positions are
-    flat[offsets[j]:offsets[j+1]] — vectorized cumsum with per-run
-    rebase (the first delta of each posting run is absolute)."""
-    g = varint_decode(buf).astype(np.int64)
-    offsets = np.zeros(len(tfs) + 1, dtype=np.int64)
-    np.cumsum(tfs, out=offsets[1:])
-    cum = np.cumsum(g)
-    base = np.zeros(len(tfs), dtype=np.int64)
-    rs = offsets[:-1]
-    base[1:] = cum[rs[1:] - 1]
-    flat = cum - np.repeat(base, tfs)
-    return flat, offsets
-
-
-def _load_segment_dead(tombstones_path: str, segments) -> "np.ndarray | None":
-    """TASK-side union of the given segments' liveness sidecars (the
-    per-partition form of operators/delete.segment_tombstones, inlined
-    here so hot worker code keeps its numpy/pyarrow-only import set).
-    Returns a sorted unique int64 array, or None when every sidecar is
-    absent/empty."""
-    import pyarrow.dataset as ds
-
-    parts = []
-    for s in segments:
-        try:
-            d = ds.dataset(f"{tombstones_path}/segment_id={int(s)}", format="parquet")
-            arr = d.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
-        except FileNotFoundError:
-            continue
-        if len(arr):
-            parts.append(arr)
-    if not parts:
-        return None
-    return np.unique(np.concatenate(parts))
+            positions = (tbl.column("pos").to_numpy(), np.append(pstarts, n))
+    return encode_rows(gstarts, tid[grows], seg[grows], doc[pstarts], tf, dl[pstarts],
+                       avgdl, k1, b, block_size, positions)
 
 
 def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK_SIZE,
                       dead_src=None, with_positions: bool = False,
                       split_ranges: bool = False):
     """mapInArrow block compactor for segment merges: input is block
-    rows sorted by (tid, first_doc) within each partition. Full blocks
-    PASS THROUGH without decode; undersized blocks (chunk/segment tails)
-    buffer into a per-term leftover that re-emits full blocks greedily.
-    Memory is O(block_size) regardless of term frequency — a stop term
-    over a billion-doc merged segment streams through, never
-    materializing its posting list.
+    rows sorted by (tid, first_doc) within each partition (a term's
+    blocks never overlap, so postings arrive in (tid, doc_id) order).
+    Each Arrow batch is decoded in one pass (decode_blocks), its
+    tombstoned postings dropped, and the survivors re-encoded at
+    `avgdl` in one encode_rows pass: every block of a group is full but
+    its last. Only the batch's last group's short tail (< block_size
+    postings) carries into the next batch, so memory is one batch plus
+    one block however long a posting list is.
 
-    split_ranges=True keeps every emitted block within ONE doc-id
-    stride range (doc_id DIV SEG_STRIDE): when a merge leaves OTHER
-    live segments behind, a block spanning the gap between
-    non-contiguous source ranges would envelop a live segment's range
-    and loosen the top-k kernel's interval bounds there (overlapping
-    blocks stay correct — they are just overlapping intervals — but
-    every query on the term decodes more). Cost: at most one short
-    block per (term, source range). merge sets it automatically iff
-    live segments remain (operators/merge.py).
+    A group is one term's postings; with split_ranges=True it also ends
+    at every doc-id stride range (doc_id DIV SEG_STRIDE), so no block
+    spans two ranges. merge sets it iff a surviving segment's span
+    overlaps the sources' (operators/merge.py): a block spanning the
+    gap between non-contiguous source ranges would envelop that
+    segment's range and loosen the top-k kernel's interval bounds there
+    (still correct — overlapping blocks are just overlapping intervals
+    — but every query on the term decodes more). Cost: at most one
+    short block per (term, source range).
 
     `dead_src` = (tombstones_path, [src_segment_ids]) purges tombstoned
-    postings: each TASK loads the union of those segments' liveness
-    sidecars itself (one bounded columnar read — the same per-segment
-    discipline as the query kernels; no dead-id array ever materializes
-    on the driver or ships in this closure, so a full purge-compaction
-    of a billion-tombstone index plans the same as a ten-tombstone
-    one). A block whose [first_doc, last_doc] range contains no dead id
-    still passes through untouched; only intersecting blocks decode and
-    drop the dead docs."""
+    postings: each TASK loads those segments' liveness partitions into
+    one DeadDocs itself (the per-segment discipline of the query
+    kernels: no dead-id array ever materializes on the driver or ships
+    in this closure, so a purge of a billion-tombstone index plans the
+    same as a ten-tombstone one)."""
 
     def run(batches):
-        import numpy as np
-        import pyarrow as pa
+        from .liveness import DeadDocs, segment_tombstones
 
-        dead_arr = (
-            _load_segment_dead(dead_src[0], dead_src[1]) if dead_src is not None else None
-        )
+        dead = None
+        if dead_src is not None:
+            dead = DeadDocs.from_batches(
+                segment_tombstones(dead_src[0], s) for s in dead_src[1]) or None
+        byte_cols = ["doc_gaps", "tfs", "dls"] + (["positions"] if with_positions else [])
+        carry = None  # the last group's short tail: ([tid, seg, doc, tf, dl], flat)
 
-        cols = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "n",
-                "doc_gaps", "tfs", "dls", "nbytes"] + (["positions"] if with_positions else [])
-        cur_tid = None
-        cur_seg = 0
-        buf_d: list = []  # leftover decoded postings for cur_term
-        buf_t: list = []
-        buf_l: list = []
-        buf_p: list = []  # flat positions parallel to buf_d pieces
-        out: dict = {c: [] for c in cols}
-
-        def buffered() -> int:
-            return sum(len(x) for x in buf_d)
-
-        def emit_from_buffer(final: bool) -> None:
-            """Re-encode leftover into blocks; keep a < block_size tail
-            unless final."""
-            nonlocal buf_d, buf_t, buf_l, buf_p
-            if not buf_d:
-                return
-            d = np.concatenate(buf_d)
-            t = np.concatenate(buf_t)
-            l = np.concatenate(buf_l)
-            pflat = np.concatenate(buf_p) if with_positions else None
-            n_full = (len(d) // block_size) * block_size
-            take = len(d) if final else n_full
-            ptake = 0
-            if take:
-                if with_positions:
-                    ptake = int(t[:take].sum())
-                for bl in encode_blocks(
-                    d[:take], t[:take], l[:take], avgdl, k1, b, block_size,
-                    positions_flat=pflat[:ptake] if with_positions else None,
-                ):
-                    out["tid"].append(cur_tid)
-                    out["segment_id"].append(cur_seg)
-                    out["first_doc"].append(bl.first_doc)
-                    out["last_doc"].append(bl.last_doc)
-                    out["block_max"].append(bl.block_max)
-                    out["n"].append(bl.n)
-                    out["doc_gaps"].append(bl.doc_gaps)
-                    out["tfs"].append(bl.tfs)
-                    out["dls"].append(bl.dls)
-                    out["nbytes"].append(len(bl.doc_gaps) + len(bl.tfs) + len(bl.dls))
-                    if with_positions:
-                        out["positions"].append(bl.positions)
-            buf_d = [d[take:]] if take < len(d) else []
-            buf_t = [t[take:]] if take < len(d) else []
-            buf_l = [l[take:]] if take < len(d) else []
+        def encode(cols, flat, gstarts):
+            tid, seg, doc, tf, dl = cols
+            pos = None
             if with_positions:
-                buf_p = [pflat[ptake:]] if take < len(d) else []
-
-        def flush_out():
-            nonlocal out
-            if not out["tid"]:
-                return None
-            rb = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["tid"], pa.int64()),
-                    pa.array(out["segment_id"], pa.int32()),
-                    pa.array(out["first_doc"], pa.int64()),
-                    pa.array(out["last_doc"], pa.int64()),
-                    pa.array(out["block_max"], pa.float64()),
-                    pa.array(out["n"], pa.int32()),
-                    pa.array(out["doc_gaps"], pa.binary()),
-                    pa.array(out["tfs"], pa.binary()),
-                    pa.array(out["dls"], pa.binary()),
-                    pa.array(out["nbytes"], pa.int32()),
-                ]
-                + ([pa.array(out["positions"], pa.binary())] if with_positions else []),
-                names=cols,
-            )
-            out = {c: [] for c in cols}
-            return rb
+                off = np.zeros(len(tf) + 1, dtype=np.int64)
+                np.cumsum(tf, out=off[1:])
+                pos = (flat, off)
+            return encode_rows(gstarts, tid[gstarts], seg[gstarts], doc, tf, dl,
+                               avgdl, k1, b, block_size, pos)
 
         for rb in batches:
-            tids = rb.column("tid").to_numpy()
-            segs = rb.column("segment_id").to_numpy()
-            firsts = rb.column("first_doc").to_numpy()
-            lasts = rb.column("last_doc").to_numpy()
-            bmaxs = rb.column("block_max").to_numpy()
-            ns = rb.column("n").to_numpy()
-            gaps = rb.column("doc_gaps").to_pylist()
-            tfs_b = rb.column("tfs").to_pylist()
-            dls_b = rb.column("dls").to_pylist()
-            pos_b = rb.column("positions").to_pylist() if with_positions else None
-            for i in range(rb.num_rows):
-                if tids[i] != cur_tid:
-                    emit_from_buffer(final=True)
-                    cur_tid = int(tids[i])
-                    cur_seg = int(segs[i])
-                if (split_ranges and buf_d
-                        and int(buf_d[-1][-1]) // SEG_STRIDE
-                        != int(firsts[i]) // SEG_STRIDE):
-                    # crossing into a new stride range: flush the tail
-                    # so no block ever spans the gap
-                    emit_from_buffer(final=True)
-                intersects = dead_arr is not None and (
-                    int(np.searchsorted(dead_arr, firsts[i]))
-                    < int(np.searchsorted(dead_arr, lasts[i], side="right"))
-                )
-                if (not buf_d and ns[i] == block_size and not intersects
-                        and not (split_ranges
-                                 and int(firsts[i]) // SEG_STRIDE
-                                 != int(lasts[i]) // SEG_STRIDE)):
-                    # aligned full block, no tombstones in range: pass
-                    # through untouched
-                    out["tid"].append(cur_tid)
-                    out["segment_id"].append(int(segs[i]))
-                    out["first_doc"].append(int(firsts[i]))
-                    out["last_doc"].append(int(lasts[i]))
-                    out["block_max"].append(float(bmaxs[i]))
-                    out["n"].append(int(ns[i]))
-                    out["doc_gaps"].append(gaps[i])
-                    out["tfs"].append(tfs_b[i])
-                    out["dls"].append(dls_b[i])
-                    out["nbytes"].append(len(gaps[i]) + len(tfs_b[i]) + len(dls_b[i]))
-                    if with_positions:
-                        out["positions"].append(pos_b[i])
-                    continue
-                d, t, l = decode_block(gaps[i], tfs_b[i], dls_b[i])
-                pf = None
+            if not rb.num_rows:
+                continue
+            n = rb.column("n").to_numpy().astype(np.int64)
+            dec = decode_blocks(n, *(rb.column(c) for c in byte_cols))
+            cols = [np.repeat(rb.column("tid").to_numpy(), n),
+                    np.repeat(rb.column("segment_id").to_numpy(), n)] + list(dec[:3])
+            flat = dec[3] if with_positions else None
+            if dead is not None:
+                keep = ~dead.mask(cols[2])
                 if with_positions:
-                    pf, _poff = decode_positions(pos_b[i], t)
-                if intersects:
-                    pos = np.searchsorted(dead_arr, d)
-                    keep = ~((pos < len(dead_arr)) & (dead_arr[np.minimum(pos, len(dead_arr) - 1)] == d))
-                    if with_positions:
-                        pf = pf[np.repeat(keep, t)]
-                    d, t, l = d[keep], t[keep], l[keep]
-                    if not len(d):
-                        continue
-                if split_ranges and int(d[0]) // SEG_STRIDE != int(d[-1]) // SEG_STRIDE:
-                    # a SOURCE block that already spans ranges (legacy
-                    # compaction of non-contiguous sources): split it
-                    # so the re-encoded output is range-pure
-                    rng = d // SEG_STRIDE
-                    cuts = (np.flatnonzero(rng[1:] != rng[:-1]) + 1).tolist()
-                    pieces = []
-                    lo = 0
-                    for hi in cuts + [len(d)]:
-                        pieces.append((lo, hi))
-                        lo = hi
-                else:
-                    pieces = [(0, len(d))]
-                pos_off = np.concatenate(([0], np.cumsum(t))) if with_positions else None
-                for lo, hi in pieces:
-                    if (split_ranges and buf_d
-                            and int(buf_d[-1][-1]) // SEG_STRIDE
-                            != int(d[lo]) // SEG_STRIDE):
-                        emit_from_buffer(final=True)
-                    buf_d.append(d[lo:hi])
-                    buf_t.append(t[lo:hi])
-                    buf_l.append(l[lo:hi])
-                    if with_positions:
-                        buf_p.append(pf[pos_off[lo]:pos_off[hi]])
-                    if buffered() >= block_size:
-                        emit_from_buffer(final=False)
-            rb_out = flush_out()
-            if rb_out is not None:
-                yield rb_out
-        emit_from_buffer(final=True)
-        rb_out = flush_out()
-        if rb_out is not None:
-            yield rb_out
+                    flat = flat[np.repeat(keep, cols[3])]
+                cols = [c[keep] for c in cols]
+            if carry is not None:
+                cols = [np.concatenate(x) for x in zip(carry[0], cols)]
+                if with_positions:
+                    flat = np.concatenate((carry[1], flat))
+            tid, doc, tf = cols[0], cols[2], cols[3]
+            if not len(doc):
+                carry = None
+                continue
+            brk = tid[1:] != tid[:-1]
+            if split_ranges:
+                brk |= doc[1:] // SEG_STRIDE != doc[:-1] // SEG_STRIDE
+            gstarts = np.flatnonzero(np.concatenate(([True], brk)))
+            # the last group may continue in the next batch: emit its
+            # full blocks now (they are cut from the group start either
+            # way) and carry only the short tail
+            cut = len(doc) - (len(doc) - int(gstarts[-1])) % block_size
+            pcut = int(tf[:cut].sum()) if with_positions else 0
+            carry = ([c[cut:] for c in cols], flat[pcut:] if with_positions else None)
+            if cut:
+                yield encode([c[:cut] for c in cols],
+                             flat[:pcut] if with_positions else None, gstarts[gstarts < cut])
+        if carry is not None and len(carry[0][2]):
+            yield encode(carry[0], carry[1], np.zeros(1, dtype=np.int64))
 
     return run
 

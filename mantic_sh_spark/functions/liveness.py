@@ -129,6 +129,24 @@ class DeadDocs:
         return out
 
 
+def segment_tombstones(tombstones_path: str, segment_id: int) -> np.ndarray:
+    """TASK-side liveness load: the dead doc ids of ONE segment (any
+    order, may repeat — DeadDocs takes them as-is), read from that
+    segment's partition of the tombstones table (operators/delete.py
+    writes it). Lives here, with numpy/pyarrow imports only, so the
+    query kernels and the merge compactor share one worker-side read:
+    a task's liveness cost is one bounded columnar read of the
+    segments it touches (zero when delete.tombstone_segments says a
+    segment is clean)."""
+    import pyarrow.dataset as ds
+
+    try:
+        d = ds.dataset(f"{tombstones_path}/segment_id={int(segment_id)}", format="parquet")
+        return d.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
+    except FileNotFoundError:
+        return np.empty(0, dtype=np.int64)
+
+
 def reader_exclusions(
     rows: Iterable[Tuple[int, str, str, float]],
 ) -> tuple[frozenset, bool]:

@@ -16,7 +16,6 @@ the remaining corpus).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,23 +107,6 @@ def tombstone_segments(spark: SparkSession, paths: IndexPaths) -> frozenset[int]
     from .index_build import _list_segments
 
     return frozenset(_list_segments(spark, paths.tombstones))
-
-
-def segment_tombstones(tombstones_path: str, segment_id: int) -> np.ndarray:
-    """TASK-side liveness load: the dead doc ids of ONE segment (any
-    order, may repeat — functions/liveness.DeadDocs takes them as-is),
-    read from that segment's partition of the tombstones table. This is
-    what replaced the global tombstone array that used to ship in every
-    WAND/phrase closure — a task's liveness cost is now one bounded
-    columnar read of its own segment's churn (and zero when
-    tombstone_segments says the segment is clean)."""
-    import pyarrow.dataset as ds
-
-    try:
-        d = ds.dataset(f"{tombstones_path}/segment_id={int(segment_id)}", format="parquet")
-        return d.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
-    except FileNotFoundError:
-        return np.empty(0, dtype=np.int64)
 
 
 def tombstone_count(spark: SparkSession, paths: IndexPaths) -> int:

@@ -6,17 +6,18 @@ several small segments are folded into one, the standard LSM-style
 maintenance step after incremental builds.
 
 Because segments own DISJOINT doc-id ranges (operators/docs.py gives
-segment s the range [s·SEG_STRIDE, …)), posting blocks from different
-segments never interleave: a merged posting list is just the union of
-block rows ordered by (term, first_doc). The merge is therefore pure
-Catalyst — union + re-sort — with NO decode. `compact=True` adds an
-applyInPandas pass that re-encodes each term's blocks to full
-BLOCK_SIZE (chunk-boundary tails leave ragged blocks behind), grouped
-by (term, src segment) so no group exceeds one source segment's
-postings — the same bounded-group discipline as the build.
+segment s the range [s·SEG_STRIDE, …)), a merged posting list is the
+union of the sources' block rows ordered by (term, first_doc): Catalyst
+range-partitions and sorts them, then one mapInArrow pass
+(codec.compact_stream_fn) decodes each Arrow batch of blocks, drops
+purged postings and re-encodes the survivors into full BLOCK_SIZE
+blocks (chunk-boundary tails leave ragged blocks behind) — vectorized
+per batch, with only one term's short tail carried between batches.
 
-Block-max metadata survives unchanged: maxima are idf-independent
-(functions/codec.py) and doc_len/avgdl are not altered by a merge.
+Every block is re-encoded at the merge-time avgdl, which the dst
+segment records as its build_avgdl: block maxima are idf-independent
+(functions/codec.py), and the query-time bound inflation
+max(1, avgdl_now / build_avgdl) covers any later drift.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from pyspark.sql import functions as F
 from ..functions import codec
 from ..functions.bm25 import B, K1
 from ..sources.catalog import IndexPaths, append_manifest, read_or_none
-from .index_build import BLOCK_ROW_SCHEMA, _delete_path
+from .index_build import BLOCK_ROW_SCHEMA, BLOCK_ROW_SCHEMA_POS, _delete_path
 
 
 def _write_complete(spark, path: str) -> bool:
@@ -356,7 +357,7 @@ def maybe_compact(
     # same combined max — never reuse either side's id space
     dst = max(segs + _list_segments(spark, paths.docs)) + 1
     return merge_segments(spark, index_dir, victims, dst_segment=dst,
-                          compact=True, purge=True, k1=k1, b=b)
+                          purge=True, k1=k1, b=b)
 
 
 def merge_segments(
@@ -364,17 +365,16 @@ def merge_segments(
     index_dir: str,
     src_segments: list[int],
     dst_segment: int | None = None,
-    compact: bool = True,
     purge: bool = True,
     k1: float = K1,
     b: float = B,
 ) -> int:
     """Fold src segments into one. Returns the destination segment id.
 
-    purge=True (requires compact) rewrites away tombstoned postings of
-    the source segments, drops their docs/norms rows, re-baselines
-    collection_stats, and clears the satisfied tombstones — the LSM
-    "deletes become real at merge time" step.
+    purge=True rewrites away tombstoned postings of the source segments,
+    drops their docs/norms rows, re-baselines collection_stats, and
+    clears the satisfied tombstones — the LSM "deletes become real at
+    merge time" step.
 
     Crash safety is a two-barrier manifest protocol, swept end to end
     by tools/fuzz_crash.py: intent rows land before any durable
@@ -469,7 +469,7 @@ def merge_segments(
     # purge-vs-rehome from this dir's existence, so it must never be
     # confused with another fold's leftovers
     purge_stage = f"{paths.root}/purge_ids_tmp_{int(round(started * 1000))}"
-    if purge and compact:
+    if purge:
         # the vocabulary/tier sidecars are dropped inside
         # _purge_docs_and_stats (the replayed post-barrier region,
         # before the tombstone partitions clear) — crash-safe there,
@@ -496,57 +496,40 @@ def merge_segments(
 
     raw = spark.read.parquet(paths.postings)
     has_positions = "positions" in raw.columns
-    blocks = (
-        raw.filter(F.col("segment_id").isin(srcs))
-        .withColumn("src_segment", F.col("segment_id"))
-        .withColumn("segment_id", F.lit(int(dst_segment)))
+    # split_ranges: when a SURVIVING segment's doc span overlaps the
+    # sources' combined span, the compactor keeps every block within one
+    # doc-id stride range — a block spanning the gap between
+    # non-contiguous source ranges would envelop that segment's range,
+    # and its block max would then bound every interval there (still
+    # correct, but a looser bound means more decoded blocks for every
+    # query on the term). A contiguous fold with everything else above
+    # or below — and any fold of ALL live segments — compacts across
+    # ranges: nothing remains to interleave, and future extends
+    # allocate ranges strictly above all existing ones. One tiny
+    # stats-pruned agg (two int columns) decides it.
+    spans = {
+        r.segment_id: (r.lo, r.hi)
+        for r in raw.groupBy("segment_id").agg(
+            F.min("first_doc").alias("lo"), F.max("last_doc").alias("hi")
+        ).collect()
+    }
+    src_spans = [spans[s] for s in srcs if s in spans]
+    src_lo = min(lo for lo, _ in src_spans) if src_spans else 0
+    src_hi = max(hi for _, hi in src_spans) if src_spans else 0
+    split_ranges = any(
+        lo <= src_hi and hi >= src_lo
+        for s, (lo, hi) in spans.items()
+        if s not in srcs
     )
     # range-partition by (tid, first_doc): sorted multi-file layout
     # (row-group AND file-level tid pruning); AQE coalesces small
     # merges. A single-file write would serialize the merged segment.
-    ordered = (
-        blocks.drop("src_segment")
+    merged = (
+        raw.filter(F.col("segment_id").isin(srcs))
+        .withColumn("segment_id", F.lit(int(dst_segment)))
         .repartitionByRange(F.col("tid"), F.col("first_doc"))
         .sortWithinPartitions("tid", "first_doc")
-    )
-    if compact:
-        # streaming Arrow compactor: aligned full blocks pass through
-        # WITHOUT decode; ragged chunk/segment tails buffer into
-        # O(block_size) leftovers and re-emit full blocks — a stop term
-        # over the whole merged segment streams, never materializes.
-        # When live postings segments REMAIN after this merge, the
-        # compactor keeps every re-encoded block within one doc-id
-        # stride range (split_ranges): a block spanning the gap between
-        # non-contiguous source ranges would envelop a surviving
-        # segment's doc range, and its block max would then bound every
-        # interval of that range — still correct, but a looser bound
-        # means more decoded blocks for every query on the term. A
-        # merge that folds EVERY live segment compacts maximally —
-        # nothing remains to interleave, and future extends allocate
-        # ranges strictly above all existing ones.
-        from .index_build import BLOCK_ROW_SCHEMA_POS
-
-        # split only when a SURVIVING segment's doc span overlaps the
-        # sources' combined span (then a cross-range block would
-        # envelop it): a contiguous fold with everything else above or
-        # below — and any fold of ALL live segments — keeps maximal
-        # cross-range compaction. One tiny stats-pruned agg (two int
-        # columns) decides it.
-        spans = {
-            r.segment_id: (r.lo, r.hi)
-            for r in raw.groupBy("segment_id").agg(
-                F.min("first_doc").alias("lo"), F.max("last_doc").alias("hi")
-            ).collect()
-        }
-        src_spans = [spans[s] for s in srcs if s in spans]
-        src_lo = min(lo for lo, _ in src_spans) if src_spans else 0
-        src_hi = max(hi for _, hi in src_spans) if src_spans else 0
-        split_ranges = any(
-            lo <= src_hi and hi >= src_lo
-            for s, (lo, hi) in spans.items()
-            if s not in srcs
-        )
-        merged = ordered.mapInArrow(
+        .mapInArrow(
             codec.compact_stream_fn(
                 avgdl, k1, b,
                 dead_src=(paths.tombstones, srcs) if purge_df is not None else None,
@@ -555,8 +538,7 @@ def merge_segments(
             ),
             schema=BLOCK_ROW_SCHEMA_POS if has_positions else BLOCK_ROW_SCHEMA,
         )
-    else:
-        merged = ordered
+    )
 
     # dst is always a FRESH segment id (enforced above), so the merged
     # postings write straight into the dst partition dir — no staging
@@ -589,25 +571,6 @@ def merge_segments(
         "doc_id"
     ).write.mode("overwrite").parquet(f"{paths.norms}/segment_id={int(dst_segment)}")
 
-    # dst inherits the MIN src build_avgdl (wand takes the per-segment
-    # min, so the inflation factor stays an upper bound whether or not
-    # the blocks were re-encoded at the current avgdl)
-    mn = None
-    manifest = read_or_none(spark, paths.manifest)
-    if manifest is not None:
-        mn = (
-            manifest.filter(F.col("segment_id").isin(srcs) & F.col("build_avgdl").isNotNull())
-            .agg(F.min("build_avgdl"))
-            .collect()[0][0]
-        )
-    if compact:
-        # ragged tails were re-encoded at the CURRENT avgdl while full
-        # blocks passed through at their src build avgdl — the recorded
-        # encoding avgdl must be the min over BOTH so the query-time
-        # inflation factor max(1, avgdl_now/build_avgdl) stays an upper
-        # bound after later upward drift.
-        mn = avgdl if mn is None else min(float(mn), avgdl)
-
     # BARRIER: dst postings/terms/norms are durable. The committed row
     # carries the dst metrics so a roll-forward can close the manifest
     # without recomputing them.
@@ -623,11 +586,11 @@ def merge_segments(
                 "n_postings": n_postings,
                 "bytes": nbytes,
                 "started_at": started,
-                "build_avgdl": float(mn) if mn is not None else None,
+                "build_avgdl": avgdl,
             }
         ],
     )
     _finish_merge(spark, paths, srcs, int(dst_segment), started,
                   n_terms=n_terms, n_postings=n_postings, nbytes=nbytes,
-                  build_avgdl=mn)
+                  build_avgdl=avgdl)
     return int(dst_segment)

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.codec import decode_block, decode_positions
+from ..functions.codec import decode_blocks
 from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize
 from ..sources.catalog import IndexPaths
@@ -27,26 +27,14 @@ from ..sources.catalog import IndexPaths
 def _term_postings(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All blocks of one (term, segment) → (doc_ids, flat positions,
     offsets): doc j's within-doc positions are flat[off[j]:off[j+1]],
-    concatenated in doc order. Ragged (flat + offsets) rather than a
-    list of per-doc arrays — the verification pass operates on the
-    whole candidate set at once and never touches per-doc Python
-    objects."""
-    pdf = pdf.sort_values("first_doc")
-    docs_all: list[np.ndarray] = []
-    flats: list[np.ndarray] = []
-    tfs_all: list[np.ndarray] = []
-    for gaps, tfs, dls, posb in zip(pdf["doc_gaps"], pdf["tfs"], pdf["dls"], pdf["positions"]):
-        d, tf, _ = decode_block(gaps, tfs, dls)
-        flat, _off = decode_positions(posb, tf)
-        docs_all.append(d)
-        flats.append(flat)
-        tfs_all.append(tf)
-    if not docs_all:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, np.zeros(1, dtype=np.int64)
-    docs = np.concatenate(docs_all)
-    flat = np.concatenate(flats)
-    tf = np.concatenate(tfs_all)
+    concatenated in doc order — one batched decode of every block.
+    Ragged (flat + offsets) rather than a list of per-doc arrays — the
+    verification pass operates on the whole candidate set at once and
+    never touches per-doc Python objects."""
+    o = np.argsort(pdf["first_doc"].to_numpy(np.int64), kind="stable")
+    docs, tf, _dl, flat = decode_blocks(
+        pdf["n"].to_numpy(np.int64)[o],
+        *(pdf[c].to_numpy(object)[o] for c in ("doc_gaps", "tfs", "dls", "positions")))
     off = np.zeros(len(docs) + 1, dtype=np.int64)
     np.cumsum(tf, out=off[1:])
     return docs, flat, off

@@ -43,8 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import B, K1, idf as idf_fn
-from ..functions.codec import tf_norm, varint_decode
-from ..functions.liveness import DeadDocs
+from ..functions.codec import decode_blocks, tf_norm
+from ..functions.liveness import DeadDocs, segment_tombstones
 from ..functions.tokenize import tokenize_query
 from ..sources.catalog import IndexPaths
 from .query import rank_topk
@@ -103,21 +103,15 @@ def term_blocks(pdf: pd.DataFrame, bound_factors: dict | None = None) -> _TermBl
     return tb
 
 
-def _decode_term_all(counts: np.ndarray, gaps: np.ndarray, tfs: np.ndarray,
-                     dls: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch-decode a list of blocks (any terms) in ONE varint pass over
-    all three columns (the per-block decode_block call has ~170µs fixed
-    overhead; this is what makes scoring many blocks cheap). Blocks'
-    first values are absolute doc ids → cumsum with per-block rebase."""
-    counts = np.asarray(counts, dtype=np.int64)
-    p = int(counts.sum())
-    v = varint_decode(b"".join(np.concatenate((gaps, tfs, dls)))).astype(np.int64)
-    g = v[:p]
-    starts = np.zeros(len(counts), dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    c = np.cumsum(g)
-    docs = c - np.repeat(c[starts] - g[starts], counts)
-    return docs, v[p:2 * p], v[2 * p:]
+def cached_postings(decode_cache, term: str, tb: _TermBlocks):
+    """The decode cache's (docs, tf_norm, first_doc, n) entry for
+    `term` when it was decoded from blocks with exactly tb's first_doc
+    / n columns, else None: a frame re-fetched in another row order, or
+    from another epoch (a query straddling refresh), is a miss."""
+    c = decode_cache.get(term) if decode_cache is not None else None
+    if c is None or not (np.array_equal(c[2], tb.first) and np.array_equal(c[3], tb.n)):
+        return None
+    return c
 
 
 def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
@@ -165,13 +159,8 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
     idf = np.array([idf_map[t] for t in present])
 
     # cached terms: their blocks are slices of the cached arrays, no
-    # decode. An entry keeps the (first_doc, n) columns of the frame it
-    # was decoded from: a frame re-fetched in another row order, or from
-    # another epoch (a query straddling refresh), is a miss.
-    cached = [decode_cache.get(t) if decode_cache is not None else None for t in present]
-    cached = [c if c is not None and np.array_equal(c[2], tb.first)
-              and np.array_equal(c[3], tb.n) else None
-              for c, tb in zip(cached, tbs)]
+    # decode
+    cached = [cached_postings(decode_cache, t, tb) for t, tb in zip(present, tbs)]
     is_cached = np.repeat([c is not None for c in cached], nb)
     n_cached = int(is_cached.sum())
     if n_cached:
@@ -200,7 +189,7 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
                 raw.extend(np.concatenate([getattr(tb, c) for tb in tbs])
                            for c in ("gaps", "tfs", "dls"))
             to_decode[dec] = False
-            d, tf, dl = _decode_term_all(n[dec], *(col[dec] for col in raw))
+            d, tf, dl = decode_blocks(n[dec], *(col[dec] for col in raw))
             blk = np.repeat(dec, n[dec])
             decoded.append((blk, d, tf_norm(tf, dl, avgdl, k1, b)))
             parts.append((term[blk],) + decoded[-1][1:])
@@ -346,8 +335,6 @@ def _load_dead(dead_src, seg: int) -> DeadDocs | None:
     want = sorted(({int(seg)} | set(influx)) & set(dead_src[1]))
     if not want:
         return None
-    from .delete import segment_tombstones
-
     return DeadDocs.from_batches(segment_tombstones(dead_src[0], s) for s in want) or None
 
 
@@ -406,7 +393,7 @@ def _index_meta(spark: SparkSession, paths: IndexPaths):
     dead_src is (tombstones_path, frozenset(segments-with-tombstones),
     in_flux_partitions) or None: the liveness CLOSURE is metadata-
     sized; each task lazily reads its own segment's tombstone partition
-    (delete.segment_tombstones) plus the fold-bounded in-flux ones when
+    (liveness.segment_tombstones) plus the fold-bounded in-flux ones when
     a merge fold sits between its barriers.
     `excluded` is the frozenset of segments a reader must skip (an
     in-flight/crashed fold's partial dirs — functions/liveness.py): the

@@ -739,14 +739,6 @@ class IndexReader:
         hits.sort(key=lambda x: (-x[1], x[0]))
         return hits[:k]
 
-    # Candidate count above which _scores_for_docs switches from the
-    # block-pruned per-block loop to one vectorized full-term decode:
-    # a head-term tier match can cover ~the whole corpus, where the
-    # per-block Python loop (~170 µs/block + a candidates-sized
-    # searchsorted PER BLOCK) ran 8-12 s while the full decode + one
-    # searchsorted is milliseconds (and LRU-cached for repeats).
-    _SCORES_SWEEP_MIN = 4096
-
     # Memory budgets for head terms at corpus scale (both are per-term
     # ROW counts; neither can trigger below ~5M docs, so the common
     # path pays nothing for them):
@@ -759,11 +751,11 @@ class IndexReader:
     #   materializing, and a field where EVERY list is huge raises
     #   TierBudgetExceeded — ranking a corpus-share tier is the batch
     #   operator's job, not one process's.
-    # - _SWEEP_DF_CAP bounds which terms the _scores_array sweep will
-    #   decode IN FULL (decoded form is ~24 B/posting vs ~1-2 B
-    #   compressed in the resident frame): above it the term scores
-    #   via the per-block path — slower per block, but memory stays
-    #   within the frame envelope every other serving path already has.
+    # - _SWEEP_DF_CAP bounds the postings one _scores_array decode pass
+    #   holds (decoded form is ~24 B/posting vs ~1-2 B compressed in
+    #   the resident frame): a term whose candidate blocks hold more
+    #   decodes in several passes, so memory stays within the frame
+    #   envelope every other serving path already has.
     _TIER_DF_CAP = 5_000_000
     _SWEEP_DF_CAP = 20_000_000
 
@@ -779,70 +771,57 @@ class IndexReader:
     def _scores_array(self, terms: list[str],
                       doc_ids: "np.ndarray") -> "np.ndarray":
         """BM25 score of SPECIFIC docs for a term set, aligned to the
-        SORTED input array (the bounded lookup behind tiered serving):
-        for small candidate sets, decode only the hot-LRU blocks whose
-        [first_doc, last_doc] range intersects the candidate range and
-        searchsorted the candidates in; above _SCORES_SWEEP_MIN
-        candidates, decode each term in full (doc-sorted,
-        decoded-LRU-cached under ("s", term)) and do ONE searchsorted.
-        Docs matching no term score 0.0. Rounding matches rank_topk (4
-        decimals) so tier ladders rank identically to the batch mode."""
-        from .functions.codec import decode_block
+        input array (the bounded lookup behind tiered serving). Per
+        term: a valid ("k", -1) entry of the top-k kernel's decode cache
+        scores without decoding; otherwise only the blocks whose
+        [first_doc, last_doc] holds a candidate decode, in passes of at
+        most _SWEEP_DF_CAP postings, and a term decoded whole in one
+        pass is installed for later queries. Docs matching no term
+        score 0.0. Rounding matches rank_topk (4 decimals) so tier
+        ladders rank identically to the batch mode."""
+        from .functions.codec import decode_blocks, tf_norm
+        from .operators.wand import _ranges, cached_postings, term_blocks
 
-        out = np.zeros(len(doc_ids), dtype=np.float64)
-        if not len(doc_ids):
-            return out
+        cand, inv = np.unique(np.asarray(doc_ids, dtype=np.int64), return_inverse=True)
+        acc = np.zeros(len(cand), dtype=np.float64)
+
+        def add(idf, d, tfn):
+            # a doc holds at most one posting per term, so no candidate
+            # is hit twice by one call
+            j = np.minimum(np.searchsorted(cand, d), len(cand) - 1)
+            ok = cand[j] == d
+            acc[j[ok]] += idf * tfn[ok]
+
         dfs = self.df(terms)
         idf_map = {t: idf_fn(self.n_docs, dfs[t]) for t in terms if dfs[t] > 0}
-        if idf_map:
+        if len(cand) and idf_map:
             dgen = self._decoded.generation  # pin BEFORE the frame fetch
-            blocks = self._blocks(sorted(idf_map))
-            lo, hi = int(doc_ids[0]), int(doc_ids[-1])
-            sweep = len(doc_ids) >= self._SCORES_SWEEP_MIN
-            for t, pdf in blocks.items():
+            cache = _NsDecodeCache(self._decoded, ("k", -1), dgen)
+            for t, pdf in self._blocks(sorted(idf_map)).items():
                 if not len(pdf):
                     continue
-                # a head term past _SWEEP_DF_CAP never full-decodes
-                # (decoded form is ~24 B/posting); it scores via the
-                # per-block path below, which stays within the frame's
-                # memory envelope
-                if sweep and dfs[t] <= self._SWEEP_DF_CAP:
-                    from .operators.wand import _decode_term_all, term_blocks
-
-                    cache = _NsDecodeCache(self._decoded, ("s", -1), dgen)
-                    dec = cache.get(t)
-                    if dec is None:
-                        tb = term_blocks(pdf)
-                        d, tf, dl = _decode_term_all(tb.n, tb.gaps, tb.tfs, tb.dls)
-                        order = np.argsort(d, kind="stable")
-                        dec = (d[order], tf[order], dl[order])
-                        cache.put(t, dec)
-                    d, tf, dl = dec
-                    self._bm25_accumulate(out, doc_ids, d, tf, dl, idf_map[t])
+                tb = term_blocks(pdf)
+                hold = np.flatnonzero(np.searchsorted(cand, tb.first)
+                                      < np.searchsorted(cand, tb.last, side="right"))
+                hit = cached_postings(cache, t, tb)
+                if hit is not None:
+                    idx = _ranges((np.cumsum(tb.n) - tb.n)[hold], tb.n[hold])
+                    add(idf_map[t], hit[0][idx], hit[1][idx])
                     continue
-                sel = pdf[(pdf["first_doc"] <= hi) & (pdf["last_doc"] >= lo)]
-                for gaps, tfs, dls in zip(sel["doc_gaps"], sel["tfs"], sel["dls"]):
-                    d, tf, dl = decode_block(gaps, tfs, dls)
-                    self._bm25_accumulate(out, doc_ids, d, tf, dl, idf_map[t])
-        return np.round(out, 4)
-
-    def _bm25_accumulate(self, out: "np.ndarray", doc_ids: "np.ndarray",
-                         d: "np.ndarray", tf: "np.ndarray", dl: "np.ndarray",
-                         idf: float) -> None:
-        """Add one term's BM25 contribution for the doc-sorted postings
-        (d, tf, dl) into `out` aligned to sorted `doc_ids` — the ONE
-        copy of the scoring formula both _scores_array strategies share
-        (sweep full-decode and per-block), so they cannot diverge."""
-        j = np.searchsorted(d, doc_ids)
-        ok = (j < len(d)) & (d[np.minimum(j, len(d) - 1)] == doc_ids)
-        if not ok.any():
-            return
-        tfv = tf[j[ok]].astype(np.float64)
-        dlv = dl[j[ok]].astype(np.float64)
-        out[ok] += (
-            idf * tfv * (self.k1 + 1.0)
-            / (tfv + self.k1 * (1.0 - self.b + self.b * dlv / self.avgdl))
-        )
+                csum = np.cumsum(tb.n[hold])
+                i = 0
+                while i < len(hold):
+                    base = int(csum[i - 1]) if i else 0
+                    j = max(i + 1, int(np.searchsorted(csum, base + self._SWEEP_DF_CAP,
+                                                       side="right")))
+                    blk = hold[i:j]
+                    d, tf, dl = decode_blocks(tb.n[blk], tb.gaps[blk], tb.tfs[blk], tb.dls[blk])
+                    tfn = tf_norm(tf, dl, self.avgdl, self.k1, self.b)
+                    add(idf_map[t], d, tfn)
+                    if not i and j == len(tb.n):  # the whole term in one pass: install
+                        cache.put(t, (d, tfn, tb.first, tb.n))
+                    i = j
+        return np.round(acc, 4)[inv]
 
     def _tier_specs(self) -> list[tuple[int, str]]:
         """Ordered (ord, field-dir name) pairs from tier_index_meta, or

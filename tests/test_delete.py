@@ -69,7 +69,7 @@ def test_purge_matches_fresh_build(spark, tmp_path):
     victim_urls = {r.url for r in docs_tbl.filter(F.col("doc_id").isin(victims)).collect()}
     delete_docs(spark, idx, doc_ids=victims)
 
-    merge_segments(spark, idx, [0, 1], dst_segment=5, compact=True, purge=True)
+    merge_segments(spark, idx, [0, 1], dst_segment=5, purge=True)
 
     # tombstones satisfied, stats re-baselined
     paths = IndexPaths(idx)
@@ -156,7 +156,7 @@ def test_purge_with_million_tombstones(spark, tmp_path):
     live_hits = wand_topk(spark, idx, gen_queries(cfg, n_queries=4), k=5).collect()
     assert live_hits and not ({r.doc_id for r in live_hits} & set(victims))
 
-    merge_segments(spark, idx, [0, 1], dst_segment=7, compact=True, purge=True)
+    merge_segments(spark, idx, [0, 1], dst_segment=7, purge=True)
     assert tombstone_count(spark, IndexPaths(idx)) == 0
 
     fresh = str(tmp_path / "fresh")

@@ -149,7 +149,7 @@ def test_upsert_matches_fresh_build(spark, tmp_path):
         r.segment_id
         for r in spark.read.parquet(f"{idx}/docs").select("segment_id").distinct().collect()
     )
-    merge_segments(spark, idx, all_segs, dst_segment=max(all_segs) + 1, compact=True, purge=True)
+    merge_segments(spark, idx, all_segs, dst_segment=max(all_segs) + 1, purge=True)
 
     updated_corpus = pages.filter(~F.col("url").isin(mod_urls)).unionByName(modified).unionByName(added)
     fresh = str(tmp_path / "fresh")

@@ -328,7 +328,7 @@ def test_format_marker_gates_mutations(spark, tmp_path):
     with pytest.raises(RuntimeError, match="format v1"):
         extend_index(spark, idx, pages, n_new_segments=1)
     with pytest.raises(RuntimeError, match="format v1"):
-        merge_segments(spark, idx, [0, 1], compact=True, purge=True)
+        merge_segments(spark, idx, [0, 1], purge=True)
     # queries still answer
     assert wand_topk(spark, idx, [(0, "w1x")], k=3).count() > 0
 
@@ -446,11 +446,12 @@ def test_tid_collision_gate_on_extend(spark, small_corpus, tmp_path, monkeypatch
 
 def _kernel_case(seed):
     """Random per-term postings over a few origin segments, encoded with
-    codec.encode_blocks. Some terms come from two interleaved sources,
-    so one term's blocks overlap; block sizes 2 and 3 make many tiny
-    intervals; every fourth case has all-equal per-term scores, so
-    interval bounds tie θ and only the doc-id tie-break decides."""
-    from mantic_sh_spark.functions.codec import SEG_STRIDE, encode_blocks
+    the build's encoder (codec.encode_rows). Some terms come from two
+    interleaved sources, so one term's blocks overlap; block sizes 2
+    and 3 make many tiny intervals; every fourth case has all-equal
+    per-term scores, so interval bounds tie θ and only the doc-id
+    tie-break decides."""
+    from mantic_sh_spark.functions.codec import SEG_STRIDE, encode_rows
 
     rng = np.random.default_rng(seed)
     n_docs = int(rng.integers(50, 600))
@@ -469,12 +470,11 @@ def _kernel_case(seed):
         if rng.random() < 0.5:  # two interleaved sources → overlapping blocks
             half = rng.random(len(sel)) < 0.5
             sources = [np.flatnonzero(half), np.flatnonzero(~half)]
-        blocks = [blk for src in sources if len(src)
-                  for blk in encode_blocks(ids[sel][src], tf[src], dl[sel][src],
-                                           build_avgdl, 1.2, 0.75, block_size=bs)]
-        by_term[f"t{t}"] = pd.DataFrame(
-            {c: [getattr(blk, c) for blk in blocks]
-             for c in ("first_doc", "last_doc", "block_max", "n", "doc_gaps", "tfs", "dls")})
+        by_term[f"t{t}"] = pd.concat(
+            [encode_rows([0], [t], [0], ids[sel][src], tf[src], dl[sel][src],
+                         build_avgdl, 1.2, 0.75, bs).to_pandas()
+             for src in sources if len(src)], ignore_index=True
+        )[["first_doc", "last_doc", "block_max", "n", "doc_gaps", "tfs", "dls"]]
     idf_map = {t: 1.0 if ties else float(rng.uniform(0.1, 3.0)) for t in by_term}
     dead = None
     if seed % 2:
@@ -550,16 +550,14 @@ def test_segment_topk_visits_intervals_that_tie_theta():
     [90, 100) is bounded by a + b and visited first, filling the top 5
     with 90, 95, 99, 91, 92; [0, 90) is bounded by a alone — exactly θ —
     and holds docs 0 and 1, which outrank 91 and 92."""
-    from mantic_sh_spark.functions.codec import encode_blocks
+    from mantic_sh_spark.functions.codec import encode_rows
     from mantic_sh_spark.operators.wand import segment_topk
 
     def frame(docs):
         docs = np.asarray(docs, dtype=np.int64)
         ones = np.ones(len(docs), dtype=np.int64)
-        blocks = encode_blocks(docs, ones, ones * 10, 10.0, 1.2, 0.75)
-        return pd.DataFrame({c: [getattr(blk, c) for blk in blocks]
-                             for c in ("first_doc", "last_doc", "block_max", "n",
-                                       "doc_gaps", "tfs", "dls")})
+        return encode_rows([0], [0], [0], docs, ones, ones * 10, 10.0, 1.2, 0.75).to_pandas()[
+            ["first_doc", "last_doc", "block_max", "n", "doc_gaps", "tfs", "dls"]]
 
     by_term = {"a": frame(range(100)), "b": frame([90, 95, 99])}
     got = segment_topk(by_term, ["a", "b"], {"a": 1.0, "b": 1.0}, 10.0, 5, 1.2, 0.75)

@@ -21,8 +21,14 @@ def test_merge_preserves_results(spark, tmp_path):
     queries = gen_queries(cfg, n_queries=12)
 
     before = _collect(wand_topk(spark, idx, queries, k=10))
+    avgdl = spark.read.parquet(f"{idx}/collection_stats").collect()[0].avgdl
 
-    dst = merge_segments(spark, idx, [0, 1], compact=True)
+    dst = merge_segments(spark, idx, [0, 1])
+    # every block is re-encoded at the merge-time avgdl, which the dst
+    # records as its build_avgdl (the query-time bound inflation base)
+    assert {r.build_avgdl for r in spark.read.parquet(f"{idx}/build_manifest").filter(
+        (F.col("segment_id") == dst) & F.col("status").isin("committed", "done")
+    ).collect()} == {avgdl}
     segs = [r.segment_id for r in spark.read.parquet(f"{idx}/postings").select("segment_id").distinct().collect()]
     assert sorted(segs) == sorted({dst, 2, 3})
 
@@ -61,7 +67,7 @@ def test_compaction_defragments_and_preserves_results(spark, tmp_path):
     build_index(spark, pages, idx, n_segments=3, chunk_size=32, block_size=16)
 
     before = spark.read.parquet(f"{idx}/postings").count()
-    dst = merge_segments(spark, idx, [0, 1, 2], dst_segment=7, compact=True)
+    dst = merge_segments(spark, idx, [0, 1, 2], dst_segment=7)
     assert dst == 7
     after_df = spark.read.parquet(f"{idx}/postings")
     after = after_df.count()
@@ -104,8 +110,7 @@ def test_purge_across_compaction_generations(spark, tmp_path):
     paths = IndexPaths(idx)
 
     # generation 1: compact segments [0, 1] → fresh postings segment
-    dst1 = merge_segments(spark, idx, [0, 1], dst_segment=5,
-                          compact=True, purge=True)
+    dst1 = merge_segments(spark, idx, [0, 1], dst_segment=5, purge=True)
     assert dst1 == 5
 
     # (a) extend must allocate PAST the compacted postings id even
@@ -126,7 +131,7 @@ def test_purge_across_compaction_generations(spark, tmp_path):
                    .filter(F.col("doc_id").isin(victims)).collect()}
     delete_docs(spark, idx, doc_ids=victims)
 
-    merge_segments(spark, idx, [dst1], dst_segment=9, compact=True, purge=True)
+    merge_segments(spark, idx, [dst1], dst_segment=9, purge=True)
     assert tombstone_count(spark, paths) == 0, "tombstones must purge across generations"
     remaining_ids = {r.doc_id for r in spark.read.parquet(paths.docs).select("doc_id").collect()}
     assert not (remaining_ids & set(victims)), "purged docs rows must leave the docs table"
@@ -181,7 +186,7 @@ def _crash_fold_setup(spark, tmp_path):
 
     ctrl = str(tmp_path / "ctrl")
     shutil.copytree(idx, ctrl)
-    merge_segments(spark, ctrl, [0, 1], dst_segment=9, compact=True, purge=True)
+    merge_segments(spark, ctrl, [0, 1], dst_segment=9, purge=True)
     return idx, ctrl, queries
 
 
@@ -227,7 +232,7 @@ def test_crashed_merge_rolls_back_before_commit(spark, tmp_path, monkeypatch):
     idx, ctrl, queries = _crash_fold_setup(spark, tmp_path)
     _crashing_append(merge_mod, monkeypatch, crash_at=2)
     with pytest.raises(RuntimeError, match="injected merge crash"):
-        merge_segments(spark, idx, [0, 1], dst_segment=9, compact=True, purge=True)
+        merge_segments(spark, idx, [0, 1], dst_segment=9, purge=True)
     monkeypatch.undo()
 
     paths = IndexPaths(idx)
@@ -237,7 +242,7 @@ def test_crashed_merge_rolls_back_before_commit(spark, tmp_path, monkeypatch):
     assert gc_aborted_merges(spark, paths) == []  # terminal after heal
 
     # documented recovery: re-run the merge → identical to control
-    merge_segments(spark, idx, [0, 1], dst_segment=9, compact=True, purge=True)
+    merge_segments(spark, idx, [0, 1], dst_segment=9, purge=True)
     assert _by_url(spark, idx, queries) == _by_url(spark, ctrl, queries)
 
 
@@ -257,7 +262,7 @@ def test_crashed_merge_rolls_forward_after_commit(spark, tmp_path, monkeypatch):
     idx, ctrl, queries = _crash_fold_setup(spark, tmp_path)
     _crashing_append(merge_mod, monkeypatch, crash_at=3)
     with pytest.raises(RuntimeError, match="injected merge crash"):
-        merge_segments(spark, idx, [0, 1], dst_segment=9, compact=True, purge=True)
+        merge_segments(spark, idx, [0, 1], dst_segment=9, purge=True)
     monkeypatch.undo()
 
     paths = IndexPaths(idx)
@@ -291,10 +296,9 @@ def test_tombstones_rehome_on_nonpurge_merge(spark, tmp_path):
     owned_before = sorted(_list_segments(spark, paths.tombstones))
     assert owned_before and all(s >= 0 for s in owned_before)
 
-    # fold ALL segments, compact but NO purge: tombstones must survive,
-    # re-homed under the new dst partition
-    dst = merge_segments(spark, idx, [0, 1, 2], dst_segment=9,
-                         compact=True, purge=False)
+    # fold ALL segments, NO purge: tombstones must survive, re-homed
+    # under the new dst partition
+    dst = merge_segments(spark, idx, [0, 1, 2], dst_segment=9, purge=False)
     assert dst == 9
     assert sorted(_list_segments(spark, paths.tombstones)) == [9]
     assert tombstone_count(spark, paths) == len(victims)
@@ -305,5 +309,5 @@ def test_tombstones_rehome_on_nonpurge_merge(spark, tmp_path):
     assert after and not ({r.doc_id for r in after} & set(victims))
 
     # and a later purge-merge of the dst still satisfies them
-    merge_segments(spark, idx, [9], dst_segment=12, compact=True, purge=True)
+    merge_segments(spark, idx, [9], dst_segment=12, purge=True)
     assert tombstone_count(spark, paths) == 0

@@ -112,7 +112,7 @@ def test_positional_merge_purge_preserves_phrases(spark, tmp_path):
     phrase = [(0, f"{t0[5]} {t0[6]}")]
     victims = [int(r.doc_id) for r in docs[:20]]
     delete_docs(spark, idx, doc_ids=victims)
-    merge_segments(spark, idx, [0, 1], dst_segment=4, compact=True, purge=True)
+    merge_segments(spark, idx, [0, 1], dst_segment=4, purge=True)
     assert tombstone_count(spark, IndexPaths(idx)) == 0
 
     remaining = [(r.doc_id, r.text) for r in docs if r.doc_id not in set(victims)]

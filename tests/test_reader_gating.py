@@ -101,7 +101,7 @@ def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(merge_mod, "append_manifest", crashing)
     with pytest.raises(RuntimeError, match="injected merge crash"):
-        merge_segments(spark, idx, [0, 1], dst_segment=9, compact=True, purge=True)
+        merge_segments(spark, idx, [0, 1], dst_segment=9, purge=True)
     monkeypatch.undo()
 
     # partial dst exists on disk; NO gc has run — a fresh reader must
@@ -193,7 +193,7 @@ def test_readers_serve_committed_fold_via_union_liveness(spark, tmp_path, monkey
     shutil.copytree(idx, ctrl)
     # non-purge fold: doc ids and scores are invariant across the merge,
     # so healed-vs-control compares exactly
-    merge_segments(spark, ctrl, [0, 1], dst_segment=9, compact=True, purge=False)
+    merge_segments(spark, ctrl, [0, 1], dst_segment=9, purge=False)
     refresh_meta(ctrl)
     control = _wand(spark, ctrl, queries)
     serve_control = _serve(ctrl, cfg, qtexts)
@@ -203,7 +203,7 @@ def test_readers_serve_committed_fold_via_union_liveness(spark, tmp_path, monkey
 
     monkeypatch.setattr(merge_mod, "_finish_merge", boom)
     with pytest.raises(RuntimeError, match="post-barrier"):
-        merge_segments(spark, idx, [0, 1], dst_segment=9, compact=True, purge=False)
+        merge_segments(spark, idx, [0, 1], dst_segment=9, purge=False)
     monkeypatch.undo()
 
     refresh_meta(idx)

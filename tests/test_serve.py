@@ -513,7 +513,7 @@ def test_stale_reader_self_heals_across_external_merge(spark, tmp_path):
     stale = IndexReader(idx)  # holds pre-merge dataset handles
     epoch0 = stale._epoch
     # the "other process": retire ALL source segments under the reader
-    merge_segments(spark, idx, [0, 1, 2], dst_segment=9, compact=True)
+    merge_segments(spark, idx, [0, 1, 2], dst_segment=9)
 
     fresh = IndexReader(idx)
     for q in ("w1x", "w1x w2x", "w0x w3x"):
@@ -602,7 +602,7 @@ def test_noncontiguous_merge_keeps_blocks_disjoint(spark, tmp_path):
                       partitions=4)
     idx = str(tmp_path / "idx")
     build_index(spark, pages, idx, n_segments=4)
-    merge_segments(spark, idx, [0, 2], dst_segment=5, compact=True, purge=True)
+    merge_segments(spark, idx, [0, 2], dst_segment=5, purge=True)
 
     reader = IndexReader(idx)
     queries = ("w1x", "w1x w2x", "w0x w4x w7x", "w3x w9x")
@@ -640,7 +640,7 @@ def test_topk_ranks_legacy_overlapping_compaction(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(codec_mod, "compact_stream_fn", legacy)
     # fold segments 0 and 2, leaving 1 and 3 live in between
-    merge_segments(spark, idx, [0, 2], dst_segment=5, compact=True, purge=True)
+    merge_segments(spark, idx, [0, 2], dst_segment=5, purge=True)
 
     reader = IndexReader(idx)
     # the fixture must actually produce the overlapping layout, and at
@@ -725,7 +725,7 @@ def test_urls_self_heal_across_purging_merge(spark, tmp_path):
     assert len(want_urls) == len(live)
     delete_docs(spark, idx, doc_ids=[victim])
     # purge rewrites the docs dir of every segment holding a victim
-    merge_segments(spark, idx, [0, 1, 2], dst_segment=9, compact=True, purge=True)
+    merge_segments(spark, idx, [0, 1, 2], dst_segment=9, purge=True)
     assert reader.urls(live) == want_urls
     assert reader.snippets(live, ["w1x"]) == want_snips
 

@@ -183,7 +183,7 @@ def test_boost_liveness_survives_tombstone_rehome(spark, tmp_path):
     # non-purge merge: postings move to a fresh dst segment and the
     # victim's tombstone is re-homed under it — doc_id // SEG_STRIDE
     # now names a partition that no longer exists
-    merge_segments(spark, idx, [0, 1], dst_segment=2, compact=True, purge=False)
+    merge_segments(spark, idx, [0, 1], dst_segment=2, purge=False)
     reader.refresh()
     assert os.path.isdir(f"{idx}/tombstones/segment_id=2"), \
         "re-homed tombstone partition expected"

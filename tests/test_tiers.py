@@ -167,43 +167,70 @@ def test_tier_index_gates_crashed_extend_fold(spark, tmp_path, monkeypatch):
     assert reader.tiered_topk("w1x w2x", k=8) == before
 
 
-def test_scores_sweep_path_matches_block_path(spark, small_corpus, monkeypatch):
-    """_scores_array has two internal strategies: the block-pruned
-    per-block loop (small candidate sets) and the vectorized full-term
-    decode taken above _SCORES_SWEEP_MIN candidates (head-term tier
-    matches — serve.py). Tier parity tests run below the threshold, so
-    pin sweep == block directly over every live doc, including docs
-    matching no term (score 0.0) and an absent term."""
+def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
+    """_scores_array (the tier ladder's per-doc scorer) equals a
+    brute-force BM25 scorer over the docs' own tokens, for every live
+    doc — docs matching no term score 0.0, an absent term adds nothing
+    — on each of its routes: a cold single-pass decode (which installs
+    the top-k kernel's ("k", -1) entry), a multi-pass decode under a
+    tiny _SWEEP_DF_CAP (which installs nothing), and a warm entry the
+    kernel cached (which decodes nothing)."""
     import numpy as np
 
+    from mantic_sh_spark.functions import codec
+    from mantic_sh_spark.functions.bm25 import idf
+    from mantic_sh_spark.functions.tokenize import tokenize
+
     idx = small_corpus["index_dir"]
-    docs = np.sort(
-        np.array(
-            [r.doc_id for r in
-             spark.read.parquet(f"{idx}/docs").select("doc_id").collect()],
-            dtype=np.int64,
-        )
-    )
+    toks = {r.doc_id: tokenize(r.text)
+            for r in spark.read.parquet(f"{idx}/docs").select("doc_id", "text").collect()}
+    docs = np.sort(np.array(list(toks), dtype=np.int64))
+    dl = np.array([len(toks[d]) for d in docs])
     terms = ["w1x", "w2x", "qqabsentterm"]
+    brute = np.zeros(len(docs))
+    for t in sorted(terms):  # the reader's summation order
+        tf = np.array([toks[d].count(t) for d in docs])
+        if tf.any():
+            s = idf(len(docs), int((tf > 0).sum())) * codec.tf_norm(tf, dl, dl.mean(), 1.2, 0.75)
+            brute += np.where(tf > 0, s, 0.0)
+    want = np.round(brute, 4)
+    assert (want > 0).any() and (want == 0).any()
+    hot = [("k", -1, t) for t in ("w1x", "w2x")]
 
-    block_reader = IndexReader(idx)
-    assert len(docs) < block_reader._SCORES_SWEEP_MIN  # really the block path
-    block = block_reader._scores_array(terms, docs)
+    decodes = []
+    orig = codec.decode_blocks
 
-    monkeypatch.setattr(IndexReader, "_SCORES_SWEEP_MIN", 1)
-    sweep_reader = IndexReader(idx)
-    sweep = sweep_reader._scores_array(terms, docs)
+    def counting(*a, **kw):
+        decodes.append(len(a[0]))
+        return orig(*a, **kw)
 
-    assert block.shape == sweep.shape == docs.shape
-    assert (block > 0).any() and (block == 0).any()
-    assert np.array_equal(block, sweep)
+    monkeypatch.setattr(codec, "decode_blocks", counting)
+    cold = IndexReader(idx)
+    assert np.array_equal(cold._scores_array(terms, docs), want)
+    assert len(decodes) == 2  # one pass per present term
+    assert all(cold._decoded.get(key) is not None for key in hot)
+    # the dict wrapper rides the same path and rounds identically, and
+    # unsorted input with repeats stays aligned to the input order
+    d = cold._scores_for_docs(terms, docs)
+    assert d == {int(k): float(v) for k, v in zip(docs, want)}
+    perm = np.random.default_rng(0).permutation(len(docs) + 5) % len(docs)
+    assert np.array_equal(cold._scores_array(terms, docs[perm]), want[perm])
 
-    # the dict wrapper rides the same path and rounds identically
-    d = sweep_reader._scores_for_docs(terms, docs)
-    assert d == {int(k): float(v) for k, v in zip(docs, block)}
+    decodes.clear()
+    multi = IndexReader(idx)
+    multi._SWEEP_DF_CAP = 1  # every pass decodes a single block
+    assert np.array_equal(multi._scores_array(terms, docs), want)
+    assert len(decodes) > 2 and set(decodes) == {1}
+    assert all(multi._decoded.get(key) is None for key in hot)
 
-    # repeat query hits the decoded ("s", ·) namespace, same answer
-    assert np.array_equal(sweep_reader._scores_array(terms, docs), block)
+    warm = IndexReader(idx)
+    warm.topk("w1x w2x", k=len(docs))  # the kernel caches both terms whole
+    assert all(warm._decoded.get(key) is not None for key in hot)
+    decodes.clear()
+    assert np.array_equal(warm._scores_array(terms, docs), want)
+    # a strict subset of candidates reuses the entry too
+    assert np.array_equal(warm._scores_array(terms, docs[::7]), want[::7])
+    assert decodes == []
 
 
 def test_tier_budget_guard(spark, tmp_path, monkeypatch):
@@ -212,8 +239,8 @@ def test_tier_budget_guard(spark, tmp_path, monkeypatch):
     STREAMING scan (never materialized) with rank-identical results; a
     field where EVERY query term is over-cap refuses loudly
     (TierBudgetExceeded) instead of materializing a corpus-share
-    array; _SWEEP_DF_CAP routes over-cap terms to the per-block scorer
-    with identical scores."""
+    array; a tiny _SWEEP_DF_CAP splits the scorer's decode into
+    single-block passes with identical scores."""
     import pandas as pd
 
     from mantic_sh_spark.operators.index_build import build_index
@@ -264,9 +291,8 @@ def test_tier_budget_guard(spark, tmp_path, monkeypatch):
     with pytest.raises(TierBudgetExceeded, match="tier field"):
         refuser.tiered_topk("common", k=5)
 
-    # scorer budget: over-cap terms take the block path, same scores
+    # scorer budget: single-block decode passes, same scores
     swp = IndexReader(idx)
-    swp._SCORES_SWEEP_MIN = 1
     swp._SWEEP_DF_CAP = 1
     assert swp.tiered_topk("common rare", k=10) == want
 

@@ -9,9 +9,10 @@ first round) must carry exact scores.
 
 Every case also builds the tier containment index and checks
 tiered serving (IndexReader.tiered_topk) against the batch operator
-(operators/query.tiered_topk) on BOTH internal scorer strategies —
-the block-pruned path and the vectorized full-decode sweep
-(_SCORES_SWEEP_MIN forced to 1) — then TOMBSTONES the head of several
+(operators/query.tiered_topk) twice: with the default per-doc scorer
+(one decode pass per term, reusing the top-k kernel's decode cache)
+and with a forced multi-pass one (_SWEEP_DF_CAP shrunk so every
+decode pass holds one block) — then TOMBSTONES the head of several
 rankings and re-checks WAND, serving, and tiered identity against the
 deleted-filtered oracles (stale tier membership must be masked by the
 reader's tombstone set; collection stats stay pre-delete on both sides
@@ -119,7 +120,7 @@ def _merge(idx, srcs, dst, legacy):
     if legacy:
         codec_mod.compact_stream_fn = no_split
     try:
-        merge_segments(spark, idx, srcs, dst_segment=dst, compact=True, purge=False)
+        merge_segments(spark, idx, srcs, dst_segment=dst, purge=False)
     finally:
         codec_mod.compact_stream_fn = orig
 
@@ -185,14 +186,14 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         for qid, q in queries
     ) and _budget0_exact(reader, queries, 8)
     overlap = any(_overlapping(reader, tokenize_query(q)) for _, q in queries)
-    # tiered serving vs batch identity on this layout, both scorer
-    # strategies (block-pruned and the vectorized sweep), incl. a
-    # stop-term head query and an absent-term query
+    # tiered serving vs batch identity on this layout, single-pass and
+    # forced multi-pass scorer, incl. a stop-term head query and an
+    # absent-term query
     st = cfg.stop_term
     tq = queries + [(900, st), (901, f"{st} w1x"), (902, "qqabsentterm w1x")]
     build_tier_index(spark, idx)
     r_swp = IndexReader(idx)
-    r_swp._SCORES_SWEEP_MIN = 1  # force the full-decode sweep path
+    r_swp._SWEEP_DF_CAP = 1  # force single-block decode passes
     tier_ok = _tiered_identity([reader, r_swp], tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
 
     # tombstone the head of several rankings; WAND + serving + tiered
