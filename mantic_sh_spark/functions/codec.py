@@ -14,13 +14,14 @@ postings. Each block stores:
                          global df, so block maxima survive segment
                          merges and df drift unchanged.
   n                    : posting count
-  doc_gaps             : varint bytes; first value is the ABSOLUTE
-                         first doc id, the rest are deltas. Absolute
-                         first ⇒ blocks are independently decodable
-                         and block sequences from disjoint sorted
-                         doc-id ranges concatenate with no re-encode
-                         (this is what makes the salted two-phase
-                         build and the k-way merge cheap).
+  doc_gaps             : varint bytes of the n-1 deltas after the
+                         block's first doc id (empty for a one-posting
+                         block). The first id itself is first_doc, in
+                         the same row, so it is stored once: blocks
+                         stay independently decodable and block
+                         sequences from disjoint sorted doc-id ranges
+                         concatenate with no re-encode (this is what
+                         makes the salted two-phase build cheap).
   tfs                  : varint bytes of term frequencies.
   dls                  : varint bytes of per-posting doc lengths —
                          scoring is self-contained per block (no
@@ -66,8 +67,8 @@ def _as_u64(values: np.ndarray) -> np.ndarray:
 def varint_nbytes(values: np.ndarray) -> np.ndarray:
     """Per-value LEB128 encoded length (vectorized). Breaks out of the
     threshold ladder as soon as no value needs another byte — tfs stop
-    after one pass, doc lengths after two; only the (rare) absolute
-    block-start doc ids walk the whole ladder."""
+    after one pass, doc lengths after two, and the widest values (the
+    gaps of sparse terms) after a few more."""
     v = _as_u64(values)
     nbytes = np.ones(v.shape, dtype=np.int64)
     for t in _THRESHOLDS:
@@ -145,20 +146,30 @@ def _values(col):
     return [memoryview(data)[int(o[0]):int(o[-1])]]
 
 
-def decode_blocks(counts, gaps, tfs, dls, positions=None) -> tuple[np.ndarray, ...]:
+def decode_blocks(counts, firsts, gaps, tfs, dls, positions=None) -> tuple[np.ndarray, ...]:
     """Batch-decode blocks (any terms, any order) in ONE varint pass
     over all their byte columns — the single decoder of the block
     format. Columns are object arrays of bytes or Arrow binary arrays;
-    `counts` is the blocks' n. Returns int64 (doc_ids, tfs, dls), one
-    entry per posting in block order, plus — when `positions` is given
-    — the flat absolute positions: posting j owns flat[off[j]:off[j+1]]
-    with off = cumsum(tfs) from 0. Both delta chains restart at every
-    run head (a block's first doc id, a posting's first position is
-    absolute), so one cumsum with a per-run rebase undoes them."""
+    `counts` / `firsts` are the blocks' n / first_doc. Returns int64
+    (doc_ids, tfs, dls), one entry per posting in block order, plus —
+    when `positions` is given — the flat absolute positions: posting j
+    owns flat[off[j]:off[j+1]] with off = cumsum(tfs) from 0. Both
+    delta chains restart at every run head (a block's first doc id
+    comes from `firsts`, a posting's first position is absolute), so
+    one cumsum with a per-run rebase undoes them. Raises ValueError
+    when the bytes hold a different number of values than the layout
+    implies (n-1 gaps + n tfs + n dls per block, + sum(tfs) positions)
+    — bytes of another format generation never decode silently."""
     counts = np.asarray(counts, dtype=np.int64)
     p = int(counts.sum())
     cols = (gaps, tfs, dls) if positions is None else (gaps, tfs, dls, positions)
     v = varint_decode(b"".join(chain.from_iterable(map(_values, cols)))).astype(np.int64)
+    ng = p - len(counts)  # gap values: every posting but each block's first
+    tf, dl = v[ng:ng + p], v[ng + p:ng + 2 * p]
+    want = ng + 2 * p + (int(tf.sum()) if positions is not None else 0)
+    if len(v) != want:
+        raise ValueError(f"block bytes hold {len(v)} varint values; {len(counts)} "
+                         f"blocks of {p} postings imply {want}")
 
     def rebase(g, lens):
         starts = np.zeros(len(lens), dtype=np.int64)
@@ -166,10 +177,15 @@ def decode_blocks(counts, gaps, tfs, dls, positions=None) -> tuple[np.ndarray, .
         c = np.cumsum(g)
         return c - np.repeat(c[starts] - g[starts], lens)
 
-    docs, tf, dl = rebase(v[:p], counts), v[p:2 * p], v[2 * p:3 * p]
+    heads = np.zeros(p, dtype=bool)
+    heads[np.cumsum(counts) - counts] = True
+    g = np.empty(p, dtype=np.int64)
+    g[heads] = np.asarray(firsts, dtype=np.int64)
+    g[~heads] = v[:ng]
+    docs = rebase(g, counts)
     if positions is None:
         return docs, tf, dl
-    return docs, tf, dl, rebase(v[3 * p:], tf)
+    return docs, tf, dl, rebase(v[ng + 2 * p:], tf)
 
 
 def encode_groups(
@@ -193,7 +209,8 @@ def encode_groups(
 
     Returns columnar dict: group_idx (block → input group), first_doc,
     last_doc, block_max, n; doc_gaps/tfs/dls are (whole-batch varint
-    buffer, per-value byte offsets) pairs — blocks tile the posting
+    buffer, per-posting byte offsets) pairs (a block's first posting
+    has no doc_gaps bytes: its id is first_doc) — blocks tile the posting
     space contiguously, so a consumer builds the per-block binary
     column ZERO-COPY from the buffer plus offsets[bstarts] (no
     per-block Python slicing; that listcomp was ~15% of encode time at
@@ -222,11 +239,12 @@ def encode_groups(
     bends = np.minimum(bstarts + block_size, np.repeat(g + lens, nb))
     group_idx = np.repeat(np.arange(len(g), dtype=np.int64), nb)
 
-    # gaps: global diff, reset to absolute at every BLOCK start
+    # gaps: global diff; a BLOCK start's value is its first_doc, which
+    # the row stores already, so the doc_gaps column skips it (zeroed
+    # so the varint length ladder stops at the widest stored gap)
     gaps = np.empty(n, dtype=np.int64)
-    gaps[0] = doc[0]
     np.subtract(doc[1:], doc[:-1], out=gaps[1:])
-    gaps[bstarts] = doc[bstarts]
+    gaps[bstarts] = 0
 
     norms = tf_norm(tf, dl, avgdl, k1, b)
     bmax = np.maximum.reduceat(norms, bstarts)
@@ -242,15 +260,18 @@ def encode_groups(
         "p_start": bstarts,
         "p_end": bends,
     }
-    for name, arr in (("doc_gaps", gaps), ("tfs", tf), ("dls", dl)):
-        out[name] = _varint_column(arr)
+    out["doc_gaps"] = _varint_column(gaps, skip=bstarts)
+    out["tfs"], out["dls"] = _varint_column(tf), _varint_column(dl)
     return out
 
 
-def _varint_column(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+def _varint_column(values: np.ndarray, skip=None) -> tuple[bytes, np.ndarray]:
     """(one varint buffer for the whole array, per-value byte offsets
-    with a trailing end) — value i is buf[offsets[i]:offsets[i+1]]."""
+    with a trailing end) — value i is buf[offsets[i]:offsets[i+1]].
+    Values at the `skip` indexes are not stored: they take 0 bytes."""
     nbytes = varint_nbytes(values)
+    if skip is not None:
+        nbytes[skip] = 0
     offsets = np.zeros(len(values) + 1, dtype=np.int64)
     np.cumsum(nbytes, out=offsets[1:])
     return varint_encode(values, nbytes), offsets
@@ -451,7 +472,8 @@ def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK
             if not rb.num_rows:
                 continue
             n = rb.column("n").to_numpy().astype(np.int64)
-            dec = decode_blocks(n, *(rb.column(c) for c in byte_cols))
+            dec = decode_blocks(n, rb.column("first_doc").to_numpy(),
+                                *(rb.column(c) for c in byte_cols))
             cols = [np.repeat(rb.column("tid").to_numpy(), n),
                     np.repeat(rb.column("segment_id").to_numpy(), n)] + list(dec[:3])
             flat = dec[3] if with_positions else None

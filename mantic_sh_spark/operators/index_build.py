@@ -58,8 +58,9 @@ from .docs import build_docs, doc_stats
 #  v5: collection_stats carries exact integer `sum_dl` so incremental
 #  folds update global stats from observed deltas instead of re-scanning
 #  the whole norms table — at 10^12 docs that scan is the extend's
-#  dominant fixed cost)
-INDEX_FORMAT = 5
+#  dominant fixed cost;
+#  v6: doc_gaps drops each block's first doc id, which first_doc holds)
+INDEX_FORMAT = 6
 
 BLOCK_ROW_SCHEMA = (
     "tid long, segment_id int, first_doc long, last_doc long, "
@@ -312,6 +313,16 @@ def write_format_marker(spark: SparkSession, paths: IndexPaths) -> None:
     )
 
 
+def format_mismatch(root: str, version: int, consequence: str) -> RuntimeError:
+    """The error for an index whose on-disk format `version` is not
+    this code's INDEX_FORMAT (shared by the mutation and read gates)."""
+    return RuntimeError(
+        f"index at {root} is on-disk format v{version}, this code "
+        f"writes v{INDEX_FORMAT} — {consequence}; rebuild the index (or "
+        "run the matching code version)"
+    )
+
+
 def check_format(spark: SparkSession, paths: IndexPaths) -> None:
     """Refuse to MUTATE an index whose on-disk format differs from this
     code's INDEX_FORMAT: appending new-format posting files next to
@@ -319,17 +330,17 @@ def check_format(spark: SparkSession, paths: IndexPaths) -> None:
     either fail (column missing in the sampled footer) or silently
     undercount (nulls under F.sum) depending on which footer Spark
     samples (review r4 finding). Indexes predating the marker (≤ v3)
-    read as version 0. Queries on an old index still work where the
-    schema allows — only mutations are gated."""
+    read as version 0. Reads are gated too: serve.IndexReader refuses
+    to open such an index, and the block decoder (codec.decode_blocks)
+    raises on bytes of another layout — a v5 block would otherwise
+    decode into wrong doc ids without an error."""
     marker = read_or_none(spark, paths.format_marker)
     version = 0 if marker is None else int(marker.collect()[0].version)
     if version != INDEX_FORMAT:
-        raise RuntimeError(
-            f"index at {paths.root} is on-disk format v{version}, this code "
-            f"writes v{INDEX_FORMAT} — mutating would mix posting schemas in "
-            "one directory; rebuild the index (or run the matching code "
-            "version) before extend/merge/resume"
-        )
+        raise format_mismatch(
+            paths.root, version,
+            "mutating would mix posting schemas in one directory; "
+            "extend/merge/resume refuse it")
 
 
 def _list_segments(spark: SparkSession, path: str) -> list[int]:

@@ -31,9 +31,10 @@ def _term_postings(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarra
     Ragged (flat + offsets) rather than a list of per-doc arrays — the
     verification pass operates on the whole candidate set at once and
     never touches per-doc Python objects."""
-    o = np.argsort(pdf["first_doc"].to_numpy(np.int64), kind="stable")
+    first = pdf["first_doc"].to_numpy(np.int64)
+    o = np.argsort(first, kind="stable")
     docs, tf, _dl, flat = decode_blocks(
-        pdf["n"].to_numpy(np.int64)[o],
+        pdf["n"].to_numpy(np.int64)[o], first[o],
         *(pdf[c].to_numpy(object)[o] for c in ("doc_gaps", "tfs", "dls", "positions")))
     off = np.zeros(len(docs) + 1, dtype=np.int64)
     np.cumsum(tf, out=off[1:])

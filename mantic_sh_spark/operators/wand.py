@@ -189,7 +189,7 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
                 raw.extend(np.concatenate([getattr(tb, c) for tb in tbs])
                            for c in ("gaps", "tfs", "dls"))
             to_decode[dec] = False
-            d, tf, dl = decode_blocks(n[dec], *(col[dec] for col in raw))
+            d, tf, dl = decode_blocks(n[dec], first[dec], *(col[dec] for col in raw))
             blk = np.repeat(dec, n[dec])
             decoded.append((blk, d, tf_norm(tf, dl, avgdl, k1, b)))
             parts.append((term[blk],) + decoded[-1][1:])

@@ -227,10 +227,21 @@ class IndexReader:
             self._refresh_locked()
 
     def _refresh_locked(self) -> None:
-        import pyarrow.dataset as ds
         import pyarrow.parquet as pq
 
+        from .operators.index_build import INDEX_FORMAT, format_mismatch
+
         cs = pq.read_table(self.paths.collection_stats).to_pydict()
+        # the block layout is versioned: bytes of another format
+        # generation would decode into wrong doc ids, so refuse to serve
+        # them (an index predating the marker reads as version 0)
+        try:
+            version = int(pq.read_table(self.paths.format_marker)["version"][0].as_py())
+        except FileNotFoundError:
+            version = 0
+        if version != INDEX_FORMAT:
+            raise format_mismatch(self.paths.root, version,
+                                  "its posting blocks would decode wrong")
         self.n_docs, self.avgdl = int(cs["n_docs"][0]), float(cs["avgdl"][0])
 
         # per-segment top-k bound inflation under avgdl drift (same rule
@@ -815,7 +826,8 @@ class IndexReader:
                     j = max(i + 1, int(np.searchsorted(csum, base + self._SWEEP_DF_CAP,
                                                        side="right")))
                     blk = hold[i:j]
-                    d, tf, dl = decode_blocks(tb.n[blk], tb.gaps[blk], tb.tfs[blk], tb.dls[blk])
+                    d, tf, dl = decode_blocks(tb.n[blk], tb.first[blk], tb.gaps[blk],
+                                              tb.tfs[blk], tb.dls[blk])
                     tfn = tf_norm(tf, dl, self.avgdl, self.k1, self.b)
                     add(idf_map[t], d, tfn)
                     if not i and j == len(tb.n):  # the whole term in one pass: install

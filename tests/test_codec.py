@@ -21,7 +21,8 @@ def _decode(rows, positions=False):
     cols = ["doc_gaps", "tfs", "dls"] + (["positions"] if positions else [])
     if isinstance(rows, (pa.RecordBatch, pa.Table)):
         rows = rows.to_pandas()
-    return codec.decode_blocks(rows["n"].to_numpy(), *(rows[c].to_numpy(object) for c in cols))
+    return codec.decode_blocks(rows["n"].to_numpy(), rows["first_doc"].to_numpy(),
+                               *(rows[c].to_numpy(object) for c in cols))
 
 
 @pytest.mark.parametrize("n,hi", [(0, 10), (1, 10), (7, 100), (128, 10**6), (129, 10**6), (5000, 2**40), (10000, 2**40)])
@@ -33,9 +34,54 @@ def test_delta_roundtrip(n, hi):
     assert np.array_equal(_decode(rb)[0], docs)
     # Arrow binary columns decode zero-copy, sliced batches included
     sl = rb.slice(1)
-    got = codec.decode_blocks(sl.column("n").to_numpy(),
+    got = codec.decode_blocks(sl.column("n").to_numpy(), sl.column("first_doc").to_numpy(),
                               *(sl.column(c) for c in ("doc_gaps", "tfs", "dls")))[0]
     assert np.array_equal(got, docs[codec.BLOCK_SIZE:])
+
+
+def test_block_stores_first_doc_once():
+    """A block of n postings stores n-1 doc gaps (its first id is the
+    first_doc column), so a one-posting block has empty doc_gaps;
+    nbytes is the three byte columns' length. Segment-3 ids (6-byte
+    varints) round-trip, whole and as sliced Arrow columns; v5-layout
+    bytes (the absolute first id kept in doc_gaps) raise instead of
+    decoding to wrong ids."""
+    rng = np.random.default_rng(9)
+    base = 3 * codec.SEG_STRIDE
+    docs = base + np.sort(rng.choice(10**7, size=300, replace=False))
+    tfs = rng.integers(1, 5, size=300)
+    dls = rng.integers(10, 90, size=300)
+    # groups of 1, 2, 130 and 167 postings → blocks of 1, 2, 128, 2, 128, 39
+    rb = codec.encode_rows([0, 1, 3, 133], [1, 2, 3, 4], [3] * 4, docs, tfs, dls, 50.0, K1, B)
+    blocks = rb.to_pandas()
+    assert blocks["n"].tolist() == [1, 2, 128, 2, 128, 39]
+    for _, bl in blocks.iterrows():
+        assert len(codec.varint_decode(bl.doc_gaps)) == bl.n - 1
+        assert bl["nbytes"] == len(bl.doc_gaps) + len(bl.tfs) + len(bl.dls)
+    assert blocks["doc_gaps"][0] == b""
+    d, t, l = _decode(rb)
+    assert np.array_equal(d, docs) and np.array_equal(t, tfs) and np.array_equal(l, dls)
+    for b0, b1, p0, p1 in ((1, 4, 1, 133), (4, 6, 133, 300)):  # sliced Arrow columns
+        sl = rb.slice(b0, b1 - b0)
+        d = codec.decode_blocks(sl.column("n").to_numpy(), sl.column("first_doc").to_numpy(),
+                                *(sl.column(c) for c in ("doc_gaps", "tfs", "dls")))[0]
+        assert np.array_equal(d, docs[p0:p1])
+
+    # the v5 layout: every block's doc_gaps led by its absolute first id
+    v5 = blocks.copy()
+    v5["doc_gaps"] = [codec.varint_encode(np.array([f])) + g
+                      for f, g in zip(v5["first_doc"], v5["doc_gaps"])]
+    with pytest.raises(ValueError, match="varint values"):
+        _decode(v5)
+    pos = np.arange(int(tfs.sum()))
+    off = np.concatenate(([0], np.cumsum(tfs)))
+    v5p = codec.encode_rows([0], [1], [3], docs, tfs, dls, 50.0, K1, B,
+                            positions=(pos, off)).to_pandas()
+    assert np.array_equal(_decode(v5p, positions=True)[3], pos)
+    v5p["doc_gaps"] = [codec.varint_encode(np.array([f])) + g
+                       for f, g in zip(v5p["first_doc"], v5p["doc_gaps"])]
+    with pytest.raises(ValueError, match="varint values"):
+        _decode(v5p, positions=True)
 
 
 def test_varint_boundaries():

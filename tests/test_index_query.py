@@ -300,8 +300,9 @@ def test_format_marker_gates_mutations(spark, tmp_path):
     """Format generations never mix in one postings dir: a fresh build
     records INDEX_FORMAT; extend/merge against a different (or absent —
     pre-v4) recorded version refuse with a rebuild instruction instead
-    of appending mixed-schema files (review r4 finding). Queries on the
-    old index are NOT gated."""
+    of appending mixed-schema files (review r4 finding). Spark-plane
+    queries read no marker (the serving reader's marker gate is
+    test_serve's; the block decoder raises on old-layout bytes)."""
     import pandas as pd
     import pytest
 

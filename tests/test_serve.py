@@ -88,6 +88,32 @@ def test_reader_refresh_sees_deletes(spark, small_corpus, tmp_path):
     assert {d for d, _ in before[1:]} <= {d for d, _ in after}
 
 
+def test_reader_refuses_other_format_generation(spark, small_corpus, tmp_path):
+    """The block layout is versioned: a reader refuses an index whose
+    format marker is not INDEX_FORMAT — at open and on refresh() of an
+    already-open reader — instead of decoding its blocks into wrong
+    doc ids."""
+    import shutil
+
+    import pandas as pd
+    import pytest
+
+    from mantic_sh_spark.operators.index_build import INDEX_FORMAT
+    from mantic_sh_spark.sources.catalog import IndexPaths, write_small_parquet
+
+    idx = str(tmp_path / "idx_copy")
+    shutil.copytree(small_corpus["index_dir"], idx)
+    reader = IndexReader(idx)
+    assert reader.topk("w1x", k=3)
+    write_small_parquet(spark, IndexPaths(idx).format_marker,
+                        pd.DataFrame({"version": pd.array([5], dtype="int32")}), "version int")
+    assert INDEX_FORMAT != 5
+    with pytest.raises(RuntimeError, match="format v5"):
+        IndexReader(idx)
+    with pytest.raises(RuntimeError, match="format v5"):
+        reader.refresh()
+
+
 def test_query_log_sink_and_session_boost(spark, small_corpus, tmp_path):
     """S9/R13: the serve loop persists query history as a parquet table
     a Spark session can scan, and session_doc_boost aggregates it into
