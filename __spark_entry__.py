@@ -13,7 +13,7 @@ oracle_sql()   — DuckDB-equivalent ANSI SQL for each query (the
                  (field-weighted scoring), and semantic_rerank
                  (BM25 candidates → hashed-embedding cosine). Internals with no SQL form
                  (codec round-trips, WAND pruning, streaming state,
-                 LSH recall, multimodal stubs) are pytest-verified;
+                 LSH recall) are pytest-verified;
                  see COVERAGE.md.
 """
 

@@ -22,7 +22,16 @@ postings. Each block stores:
                          sequences from disjoint sorted doc-id ranges
                          concatenate with no re-encode (this is what
                          makes the salted two-phase build cheap).
-  tfs                  : varint bytes of term frequencies.
+  tfs                  : varint bytes of term frequencies, each with the
+                         posting's tier code folded in: tf·(T+1) + c,
+                         T = len(DEFAULT_TIER_SPECS). c is the first
+                         ladder window holding the term's first
+                         occurrence in the doc (T when none does), so
+                         the R1 tier ladder is served from the main
+                         postings; any tf ≤ 41 still takes one byte.
+  min_tier             : the smallest tier code in the block — with
+                         every query term's covering blocks it bounds
+                         the tier of the docs an interval can hold.
   dls                  : varint bytes of per-posting doc lengths —
                          scoring is self-contained per block (no
                          random-access norms lookup inside top-k);
@@ -43,6 +52,16 @@ from itertools import chain
 import numpy as np
 
 BLOCK_SIZE = 128
+# (name, source column, token window) of the R1 tier ladder (SURVEY.md
+# §2.4 R1; reference: exact title matches above lead matches above body
+# scores, src/brain-scorer.ts:226-253). It is part of the block format:
+# tier i holds the docs whose first `window_i` tokens contain every query
+# term, and the build folds each posting's tier code into its tf. The
+# `tiered_rank` oracle entry ranks by the same windows.
+DEFAULT_TIER_SPECS: tuple[tuple[str, str, int], ...] = (
+    ("title", "text", 8),
+    ("lead", "text", 30),
+)
 # Doc-id stride per segment (segment = doc_id div SEG_STRIDE). Lives
 # here — the numpy-only module — so the encoder can derive segment/salt
 # from doc_id without the build shipping them as shuffle columns;
@@ -151,21 +170,25 @@ def decode_blocks(counts, firsts, gaps, tfs, dls, positions=None) -> tuple[np.nd
     over all their byte columns — the single decoder of the block
     format. Columns are object arrays of bytes or Arrow binary arrays;
     `counts` / `firsts` are the blocks' n / first_doc. Returns int64
-    (doc_ids, tfs, dls), one entry per posting in block order, plus —
-    when `positions` is given — the flat absolute positions: posting j
-    owns flat[off[j]:off[j+1]] with off = cumsum(tfs) from 0. Both
-    delta chains restart at every run head (a block's first doc id
-    comes from `firsts`, a posting's first position is absolute), so
-    one cumsum with a per-run rebase undoes them. Raises ValueError
-    when the bytes hold a different number of values than the layout
-    implies (n-1 gaps + n tfs + n dls per block, + sum(tfs) positions)
-    — bytes of another format generation never decode silently."""
+    (doc_ids, tfs, dls) and int8 tier codes, one entry per posting in
+    block order — the one place the tier code is split back out of the
+    tfs bytes, so every caller sees plain tf — plus, when `positions`
+    is given, the flat absolute positions: posting j owns
+    flat[off[j]:off[j+1]] with off = cumsum(tfs) from 0. Both delta
+    chains restart at every run head (a block's first doc id comes from
+    `firsts`, a posting's first position is absolute), so one cumsum
+    with a per-run rebase undoes them. Raises ValueError when the bytes
+    hold a different number of values than the layout implies (n-1 gaps
+    + n tfs + n dls per block, + sum(tfs) positions) — bytes of another
+    format generation never decode silently."""
     counts = np.asarray(counts, dtype=np.int64)
     p = int(counts.sum())
     cols = (gaps, tfs, dls) if positions is None else (gaps, tfs, dls, positions)
     v = varint_decode(b"".join(chain.from_iterable(map(_values, cols)))).astype(np.int64)
     ng = p - len(counts)  # gap values: every posting but each block's first
-    tf, dl = v[ng:ng + p], v[ng + p:ng + 2 * p]
+    tf, code = np.divmod(v[ng:ng + p], len(DEFAULT_TIER_SPECS) + 1)
+    code = code.astype(np.int8)
+    dl = v[ng + p:ng + 2 * p]
     want = ng + 2 * p + (int(tf.sum()) if positions is not None else 0)
     if len(v) != want:
         raise ValueError(f"block bytes hold {len(v)} varint values; {len(counts)} "
@@ -184,8 +207,8 @@ def decode_blocks(counts, firsts, gaps, tfs, dls, positions=None) -> tuple[np.nd
     g[~heads] = v[:ng]
     docs = rebase(g, counts)
     if positions is None:
-        return docs, tf, dl
-    return docs, tf, dl, rebase(v[ng + 2 * p:], tf)
+        return docs, tf, dl, code
+    return docs, tf, dl, code, rebase(v[ng + 2 * p:], tf)
 
 
 def encode_groups(
@@ -193,6 +216,7 @@ def encode_groups(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
+    codes: np.ndarray,
     avgdl: float,
     k1: float,
     b: float,
@@ -202,14 +226,16 @@ def encode_groups(
 
     Input arrays hold the concatenation of all groups' postings, sorted
     by doc_id within each group; group_starts marks where each group
-    begins. One varint buffer is built per column for the WHOLE batch
-    and sliced per block — the per-group/per-block Python cost is one
+    begins. `tfs` are plain term frequencies (norms and block maxima
+    use them) and `codes` the postings' tier codes, folded into the
+    stored tfs values. One varint buffer is built per column for the
+    WHOLE batch and sliced per block — the per-group/per-block Python cost is one
     bytes-slice, which is what lets the salted build encode ~10^5
     groups per task without per-group pandas overhead.
 
     Returns columnar dict: group_idx (block → input group), first_doc,
-    last_doc, block_max, n; doc_gaps/tfs/dls are (whole-batch varint
-    buffer, per-posting byte offsets) pairs (a block's first posting
+    last_doc, block_max, min_tier, n; doc_gaps/tfs/dls are (whole-batch
+    varint buffer, per-posting byte offsets) pairs (a block's first posting
     has no doc_gaps bytes: its id is first_doc) — blocks tile the posting
     space contiguously, so a consumer builds the per-block binary
     column ZERO-COPY from the buffer plus offsets[bstarts] (no
@@ -220,13 +246,14 @@ def encode_groups(
     if n == 0:
         empty = (b"", np.zeros(1, dtype=np.int64))
         return {"group_idx": [], "first_doc": [], "last_doc": [], "block_max": [],
-                "n": [], "p_start": np.zeros(0, dtype=np.int64),
+                "min_tier": [], "n": [], "p_start": np.zeros(0, dtype=np.int64),
                 "p_end": np.zeros(0, dtype=np.int64),
                 "doc_gaps": empty, "tfs": empty, "dls": empty}
     g = np.ascontiguousarray(group_starts, dtype=np.int64)
     doc = np.ascontiguousarray(doc_ids, dtype=np.int64)
     tf = np.ascontiguousarray(tfs, dtype=np.int64)
     dl = np.ascontiguousarray(dls, dtype=np.int64)
+    code = np.ascontiguousarray(codes, dtype=np.int64)
 
     # block segmentation: within each group, a block every block_size
     lens = np.diff(np.append(g, n))
@@ -254,6 +281,7 @@ def encode_groups(
         "first_doc": doc[bstarts],
         "last_doc": doc[bends - 1],
         "block_max": bmax,
+        "min_tier": np.minimum.reduceat(code, bstarts),
         "n": (bends - bstarts).astype(np.int32),
         # posting-space block bounds — callers slicing sidecar buffers
         # (e.g. positions) read these
@@ -261,7 +289,8 @@ def encode_groups(
         "p_end": bends,
     }
     out["doc_gaps"] = _varint_column(gaps, skip=bstarts)
-    out["tfs"], out["dls"] = _varint_column(tf), _varint_column(dl)
+    out["tfs"] = _varint_column(tf * (len(DEFAULT_TIER_SPECS) + 1) + code)
+    out["dls"] = _varint_column(dl)
     return out
 
 
@@ -298,8 +327,8 @@ def _binary_column(buf: bytes, offsets: np.ndarray, lo: np.ndarray, hi: np.ndarr
     )
 
 
-def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, avgdl: float, k1: float,
-                b: float, block_size: int = BLOCK_SIZE, positions=None):
+def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, codes, avgdl: float,
+                k1: float, b: float, block_size: int = BLOCK_SIZE, positions=None):
     """Postings of MANY groups → one RecordBatch of block rows (the
     postings-table schema) — the encoder the build and the merge
     compactor share. Arrays as in encode_groups; `tids` / `segs` hold
@@ -307,7 +336,7 @@ def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, avgdl: float, k1: f
     ascending within-doc positions are flat[off[j]:off[j+1]]."""
     import pyarrow as pa
 
-    enc = encode_groups(group_starts, doc_ids, tfs, dls, avgdl, k1, b, block_size)
+    enc = encode_groups(group_starts, doc_ids, tfs, dls, codes, avgdl, k1, b, block_size)
     gi, bs_p, be_p = enc["group_idx"], enc["p_start"], enc["p_end"]
     arrays = [
         pa.array(np.asarray(tids)[gi].astype(np.int64)),
@@ -327,8 +356,9 @@ def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, avgdl: float, k1: f
         enc[c][1][be_p] - enc[c][1][bs_p] for c in ("doc_gaps", "tfs", "dls")
     )
     arrays.append(pa.array(np.asarray(blk_bytes, dtype=np.int32)))
+    arrays.append(pa.array(np.asarray(enc["min_tier"], dtype=np.int8)))
     names = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "n",
-             "doc_gaps", "tfs", "dls", "nbytes"]
+             "doc_gaps", "tfs", "dls", "nbytes", "min_tier"]
     if positions is not None:
         # per-posting position deltas (the first value of each posting
         # run is the absolute position), one varint buffer for the
@@ -351,7 +381,7 @@ def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, avgdl: float, k1: f
 def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK_SIZE,
                  with_positions: bool = False, chunk_size: int = 1 << 14):
     """Encode a sorted run of COMPLETE (tid, segment, salt) groups of
-    raw token rows into block rows — fully vectorized, zero pandas.
+    posting rows into block rows — fully vectorized, zero pandas.
 
     `tid` is the dictionary-encoded term key (xxhash64 of the term
     string, computed Catalyst-side before the wide shuffle): the build
@@ -360,62 +390,37 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
     instruction, and the term→string mapping lives in the (vocabulary-
     sized) terms directory instead of on every posting row.
 
-    Input rows are sorted by (tid, doc_id) — segment and salt are
-    derived vectorized from doc_id (segment = id div SEG_STRIDE, salt =
-    rank-in-segment div chunk_size), so they never travel as shuffle
-    columns; the (tid, doc_id) order IS the (tid, segment, salt,
-    doc_id) order because both are monotone in doc_id. With a `tf`
-    column, rows are pre-aggregated postings (the doc-local combine
-    path); without it, rows are occurrences and tf falls out of a
-    run-length pass."""
-    import pyarrow as pa
-
+    Input rows are one per (term, doc) posting, sorted by (tid, doc_id)
+    — segment and salt are derived vectorized from doc_id (segment = id
+    div SEG_STRIDE, salt = rank-in-segment div chunk_size), so they
+    never travel as shuffle columns; the (tid, doc_id) order IS the
+    (tid, segment, salt, doc_id) order because both are monotone in
+    doc_id. The `tf` column arrives with the tier code already folded
+    in (tf·(T+1) + c, index_build); with positions, each row carries
+    its posting's ascending within-doc positions as an int array."""
     n = tbl.num_rows
     tid = tbl.column("tid").to_numpy()
     doc = tbl.column("doc_id").to_numpy()
     seg = doc // SEG_STRIDE
     salt = (doc % SEG_STRIDE) // chunk_size
-    dl = tbl.column("doc_len").to_numpy()
+    tf, code = np.divmod(tbl.column("tf").to_numpy().astype(np.int64),
+                         len(DEFAULT_TIER_SPECS) + 1)
 
     gchanged = np.empty(n, dtype=bool)
     gchanged[0] = True
     gchanged[1:] = tid[1:] != tid[:-1]
     gchanged[1:] |= (seg[1:] != seg[:-1]) | (salt[1:] != salt[:-1])
-    grows = np.flatnonzero(gchanged)
-    if "tf" in tbl.schema.names:
-        # pre-aggregated input: one row per (term, doc) posting with an
-        # explicit tf column (the doc-local combine path) — no
-        # run-length pass, posting index space == row index space
-        pstarts = np.arange(n, dtype=np.int64)
-        tf = tbl.column("tf").to_numpy().astype(np.int64)
-        gstarts = grows
-    else:
-        # occurrence input: posting boundary = group change OR doc
-        # change; tf falls out of the run lengths
-        pchanged = gchanged.copy()
-        pchanged[1:] |= doc[1:] != doc[:-1]
-        pstarts = np.flatnonzero(pchanged)
-        tf = np.diff(np.append(pstarts, n))
-        # group starts re-expressed in posting index space
-        gstarts = np.searchsorted(pstarts, grows)
+    gstarts = np.flatnonzero(gchanged)
     positions = None
     if with_positions:
-        if "tf" in tbl.schema.names:
-            # pre-aggregated rows: positions arrive as an int-ARRAY
-            # column per posting — flatten keeps per-row order, and
-            # posting j owns flat[off[j]:off[j+1]] with off = cumsum(tf)
-            parr = tbl.column("positions").combine_chunks()
-            if isinstance(parr, pa.ChunkedArray):
-                parr = parr.chunk(0) if parr.num_chunks == 1 else pa.concat_arrays(parr.chunks)
-            off = np.zeros(len(tf) + 1, dtype=np.int64)
-            np.cumsum(tf, out=off[1:])
-            positions = (parr.flatten().to_numpy(zero_copy_only=False), off)
-        else:
-            # occurrence rows: one `pos` per raw row; posting runs are
-            # the pstarts segmentation
-            positions = (tbl.column("pos").to_numpy(), np.append(pstarts, n))
-    return encode_rows(gstarts, tid[grows], seg[grows], doc[pstarts], tf, dl[pstarts],
-                       avgdl, k1, b, block_size, positions)
+        # flatten keeps per-row order: posting j owns flat[off[j]:off[j+1]]
+        parr = tbl.column("positions").combine_chunks()
+        off = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(tf, out=off[1:])
+        positions = (parr.flatten().to_numpy(zero_copy_only=False), off)
+    return encode_rows(gstarts, tid[gstarts], seg[gstarts], doc, tf,
+                       tbl.column("doc_len").to_numpy(), code, avgdl, k1, b, block_size,
+                       positions)
 
 
 def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK_SIZE,
@@ -426,8 +431,8 @@ def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK
     blocks never overlap, so postings arrive in (tid, doc_id) order).
     Each Arrow batch is decoded in one pass (decode_blocks), its
     tombstoned postings dropped, and the survivors re-encoded at
-    `avgdl` in one encode_rows pass: every block of a group is full but
-    its last. Only the batch's last group's short tail (< block_size
+    `avgdl`, tier codes carried, in one encode_rows pass: every block
+    of a group is full but its last. Only the batch's last group's short tail (< block_size
     postings) carries into the next batch, so memory is one batch plus
     one block however long a posting list is.
 
@@ -456,16 +461,16 @@ def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK
             dead = DeadDocs.from_batches(
                 segment_tombstones(dead_src[0], s) for s in dead_src[1]) or None
         byte_cols = ["doc_gaps", "tfs", "dls"] + (["positions"] if with_positions else [])
-        carry = None  # the last group's short tail: ([tid, seg, doc, tf, dl], flat)
+        carry = None  # the last group's short tail: ([tid, seg, doc, tf, dl, code], flat)
 
         def encode(cols, flat, gstarts):
-            tid, seg, doc, tf, dl = cols
+            tid, seg, doc, tf, dl, code = cols
             pos = None
             if with_positions:
                 off = np.zeros(len(tf) + 1, dtype=np.int64)
                 np.cumsum(tf, out=off[1:])
                 pos = (flat, off)
-            return encode_rows(gstarts, tid[gstarts], seg[gstarts], doc, tf, dl,
+            return encode_rows(gstarts, tid[gstarts], seg[gstarts], doc, tf, dl, code,
                                avgdl, k1, b, block_size, pos)
 
         for rb in batches:
@@ -475,8 +480,8 @@ def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK
             dec = decode_blocks(n, rb.column("first_doc").to_numpy(),
                                 *(rb.column(c) for c in byte_cols))
             cols = [np.repeat(rb.column("tid").to_numpy(), n),
-                    np.repeat(rb.column("segment_id").to_numpy(), n)] + list(dec[:3])
-            flat = dec[3] if with_positions else None
+                    np.repeat(rb.column("segment_id").to_numpy(), n)] + list(dec[:4])
+            flat = dec[4] if with_positions else None
             if dead is not None:
                 keep = ~dead.mask(cols[2])
                 if with_positions:

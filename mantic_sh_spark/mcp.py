@@ -71,8 +71,7 @@ TOOLS = [
                            "description": "exact in-order phrase match (positional index)"},
                 "tiered": {"type": "boolean", "default": False,
                            "description": "R1 tier ladder: exact title/lead "
-                                          "containment ranks above BM25 "
-                                          "(requires a built tier index)"},
+                                          "containment ranks above BM25"},
                 "slop": {"type": "integer", "default": 0,
                          "description": "max extra tokens a phrase match may stretch"},
                 "snippets": {"type": "boolean", "default": True,
@@ -348,15 +347,14 @@ class McpServer:
             if args.get("tiered"):
                 # R1 ladder is its own ranking mode: phrase and session
                 # boost re-rank BM25 scores, which a tier column would
-                # silently contradict, and the ladder takes no deadline
-                # (ladder semantics rank EVERY tier match) — refuse the
-                # combinations loudly rather than silently dropping one
-                if kw["phrase"] or sid or kw["budget_ms"] is not None:
-                    raise ValueError(
-                        "tiered=true is exclusive with phrase/sessionId/budgetMs")
+                # silently contradict — refuse the combinations loudly
+                # rather than silently dropping one. budgetMs bounds it
+                # like any top-k (partial answers are flagged).
+                if kw["phrase"] or sid:
+                    raise ValueError("tiered=true is exclusive with phrase/sessionId")
                 from .functions.tokenize import tokenize_query
 
-                rows = reader.tiered_topk(args["query"], k=k)
+                rows = reader.tiered_topk(args["query"], k=k, budget_ms=kw["budget_ms"])
                 ids = [d for d, _, _ in rows]
                 url_map = reader.urls(ids)
                 snip_map = (reader.snippets(ids, tokenize_query(args["query"]))

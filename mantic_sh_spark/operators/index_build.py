@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
-from ..functions.codec import encode_stream_fn
+from ..functions.codec import DEFAULT_TIER_SPECS, encode_stream_fn
 from ..functions.bm25 import B, K1
 from ..sources.catalog import IndexPaths, append_manifest, done_segments, read_or_none, write_small_parquet
 from .docs import build_docs, doc_stats
@@ -59,13 +59,15 @@ from .docs import build_docs, doc_stats
 #  folds update global stats from observed deltas instead of re-scanning
 #  the whole norms table — at 10^12 docs that scan is the extend's
 #  dominant fixed cost;
-#  v6: doc_gaps drops each block's first doc id, which first_doc holds)
-INDEX_FORMAT = 6
+#  v6: doc_gaps drops each block's first doc id, which first_doc holds;
+#  v7: each tfs value folds in the posting's tier code of
+#  codec.DEFAULT_TIER_SPECS, plus a per-block `min_tier` column)
+INDEX_FORMAT = 7
 
 BLOCK_ROW_SCHEMA = (
     "tid long, segment_id int, first_doc long, last_doc long, "
     "block_max double, n int, doc_gaps binary, tfs binary, dls binary, "
-    "nbytes int"
+    "nbytes int, min_tier tinyint"
 )
 BLOCK_ROW_SCHEMA_POS = BLOCK_ROW_SCHEMA + ", positions binary"
 
@@ -84,6 +86,19 @@ def tid_col(term) -> F.Column:
     two terms' posting lists merge silently."""
     col = term if isinstance(term, F.Column) else F.col(term)
     return F.xxhash64(col)
+
+
+def _tier_folded_tf(tf: F.Column, first_pos: F.Column) -> F.Column:
+    """tf·(T+1) + c, the value a posting ships in its tf slot: c is the
+    first DEFAULT_TIER_SPECS window holding the term's first (0-based)
+    position in the doc, T = len(DEFAULT_TIER_SPECS) when none does or
+    `first_pos` is null. Folding before the exchange keeps the shuffled
+    row at four int slots; the encoder splits it back (codec)."""
+    n_tiers = len(DEFAULT_TIER_SPECS)
+    code = F.lit(n_tiers)
+    for i in reversed(range(n_tiers)):
+        code = F.when(first_pos < DEFAULT_TIER_SPECS[i][2], F.lit(i)).otherwise(code)
+    return (tf * (n_tiers + 1) + code).cast("int")
 
 
 def _term_tf_pairs(tokens: str | F.Column) -> F.Column:
@@ -278,14 +293,12 @@ def gc_aborted_extends(spark: SparkSession, paths: IndexPaths,
         _delete_path(spark, f"{paths.norms}/segment_id={s}")
         _delete_path(spark, f"{paths.postings}/segment_id={s}")
         _delete_path(spark, f"{paths.terms}/segment_id={s}")
-    # a dictionary/tier sidecar rebuilt during the crash window could
-    # have been derived from the orphan docs (the rebuild gates fold-
-    # partial segments, but a pre-gating or mid-window copy may not be
-    # trustworthy once the dirs above are gone) — drop them; both
-    # rebuild on demand (review r4 finding)
+    # a dictionary sidecar rebuilt during the crash window could have
+    # been derived from the orphan docs (the rebuild gates fold-partial
+    # segments, but a pre-gating or mid-window copy may not be
+    # trustworthy once the dirs above are gone) — drop it; it rebuilds
+    # on demand (review r4 finding)
     _delete_path(spark, paths.term_dict)
-    _delete_path(spark, paths.tier_index)
-    _delete_path(spark, paths.tier_meta)
     norms = read_or_none(spark, paths.norms)
     if norms is None:
         write_collection_stats(spark, paths, 0, 0)
@@ -323,24 +336,24 @@ def format_mismatch(root: str, version: int, consequence: str) -> RuntimeError:
     )
 
 
-def check_format(spark: SparkSession, paths: IndexPaths) -> None:
-    """Refuse to MUTATE an index whose on-disk format differs from this
-    code's INDEX_FORMAT: appending new-format posting files next to
+def check_format(spark: SparkSession, paths: IndexPaths,
+                 consequence: str = "mutating would mix posting schemas in one "
+                                    "directory; extend/merge/resume refuse it") -> None:
+    """Refuse an index whose on-disk format differs from this code's
+    INDEX_FORMAT. Mutations: appending new-format posting files next to
     old-format ones would leave a mixed-schema dir where aggregations
     either fail (column missing in the sampled footer) or silently
     undercount (nulls under F.sum) depending on which footer Spark
-    samples (review r4 finding). Indexes predating the marker (≤ v3)
-    read as version 0. Reads are gated too: serve.IndexReader refuses
-    to open such an index, and the block decoder (codec.decode_blocks)
-    raises on bytes of another layout — a v5 block would otherwise
-    decode into wrong doc ids without an error."""
+    samples (review r4 finding). Reads are gated too — the Spark query
+    plane here (wand._index_meta, which wand_topk and phrase_topk
+    load), serve.IndexReader at open — since bytes of another layout
+    would decode into wrong doc ids or tier codes; the block decoder
+    (codec.decode_blocks) raises only when the value count differs.
+    Indexes predating the marker (≤ v3) read as version 0."""
     marker = read_or_none(spark, paths.format_marker)
     version = 0 if marker is None else int(marker.collect()[0].version)
     if version != INDEX_FORMAT:
-        raise format_mismatch(
-            paths.root, version,
-            "mutating would mix posting schemas in one directory; "
-            "extend/merge/resume refuse it")
+        raise format_mismatch(paths.root, version, consequence)
 
 
 def _list_segments(spark: SparkSession, path: str) -> list[int]:
@@ -444,22 +457,30 @@ def _encode_and_write_postings(
     started = time.time()
     batch = docs.filter(F.col("segment_id").isin(segs))
     # both paths pre-aggregate tf doc-locally (pure Catalyst, no extra
-    # shuffle) and ship ONE ROW PER POSTING; the positional path packs
-    # the within-doc positions as an int-array payload per posting
+    # shuffle) and ship ONE ROW PER POSTING, its tf slot folded with the
+    # tier code; the positional path packs the within-doc positions as
+    # an int-array payload per posting and takes the code from the first
     if store_positions:
         toks = batch.select(
             "doc_id", "doc_len", F.explode(_term_tf_pos_pairs("tokens")).alias("p")
         ).select(
             "doc_id", "doc_len",
-            tid_col(F.col("p.term")).alias("tid"), F.col("p.tf").alias("tf"),
+            tid_col(F.col("p.term")).alias("tid"),
+            _tier_folded_tf(F.col("p.tf"), F.get(F.col("p.positions"), 0)).alias("tf"),
             F.col("p.positions").alias("positions"),
         )
     else:
-        toks = batch.select(
-            "doc_id", "doc_len", F.explode(_term_tf_pairs("tokens")).alias("p")
+        # the tier code from a bounded prefix probe: the term's index in
+        # the doc's first max-window tokens (sliced once per doc),
+        # O(window) per posting and no positions
+        lead = F.slice("tokens", 1, max(w for _n, _s, w in DEFAULT_TIER_SPECS))
+        at = F.array_position(F.col("lead"), F.col("p.term"))  # 1-based, 0: absent
+        toks = batch.withColumn("lead", lead).select(
+            "doc_id", "doc_len", "lead", F.explode(_term_tf_pairs("tokens")).alias("p"),
         ).select(
             "doc_id", "doc_len",
-            tid_col(F.col("p.term")).alias("tid"), F.col("p.tf").alias("tf"),
+            tid_col(F.col("p.term")).alias("tid"),
+            _tier_folded_tf(F.col("p.tf"), F.when(at > 0, at - 1)).alias("tf"),
         )
     # THE salted repartition — the build's single wide shuffle: all rows
     # of a (tid, segment, salt) group land in one partition, sorted so

@@ -93,17 +93,15 @@ def _purge_docs_and_stats(spark, paths, purge_df, srcs) -> None:
 
     from .docs import SEG_STRIDE
 
-    # the purge removes vocabulary/docs — the optional dictionary and
-    # tier-index sidecars go stale the moment docs physically leave, so
-    # drop them INSIDE the replayed region, BEFORE the tombstone
-    # partitions clear below (until then stale sidecars stay liveness-
-    # masked by the tombstones). A crash anywhere after re-deletes them
-    # on replay; a fold that purges nothing never touches them (review
-    # r4 finding: the pre-mutation placement rebuilt them on every
-    # no-tombstone maybe_compact).
+    # the purge removes vocabulary/docs — the optional dictionary
+    # sidecar goes stale the moment docs physically leave, so drop it
+    # INSIDE the replayed region, BEFORE the tombstone partitions clear
+    # below (until then a stale sidecar stays liveness-masked by the
+    # tombstones). A crash anywhere after re-deletes it on replay; a
+    # fold that purges nothing never touches it (review r4 finding: the
+    # pre-mutation placement rebuilt it on every no-tombstone
+    # maybe_compact).
     _delete_path(spark, paths.term_dict)
-    _delete_path(spark, paths.tier_index)
-    _delete_path(spark, paths.tier_meta)
 
     doc_segs = [
         int(r.s)
@@ -470,10 +468,10 @@ def merge_segments(
     # confused with another fold's leftovers
     purge_stage = f"{paths.root}/purge_ids_tmp_{int(round(started * 1000))}"
     if purge:
-        # the vocabulary/tier sidecars are dropped inside
+        # the vocabulary sidecar is dropped inside
         # _purge_docs_and_stats (the replayed post-barrier region,
         # before the tombstone partitions clear) — crash-safe there,
-        # and a fold that purges nothing never touches them
+        # and a fold that purges nothing never touches it
         from .delete import tombstone_df
 
         t = tombstone_df(spark, paths)

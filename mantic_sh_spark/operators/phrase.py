@@ -33,7 +33,7 @@ def _term_postings(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarra
     never touches per-doc Python objects."""
     first = pdf["first_doc"].to_numpy(np.int64)
     o = np.argsort(first, kind="stable")
-    docs, tf, _dl, flat = decode_blocks(
+    docs, tf, _dl, _code, flat = decode_blocks(
         pdf["n"].to_numpy(np.int64)[o], first[o],
         *(pdf[c].to_numpy(object)[o] for c in ("doc_gaps", "tfs", "dls", "positions")))
     off = np.zeros(len(docs) + 1, dtype=np.int64)

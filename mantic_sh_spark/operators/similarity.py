@@ -306,8 +306,7 @@ def hashed_embeddings(docs: DataFrame, dim: int = 32, tokens_col: str = "tokens"
     (src/semantic-scorer.ts:157-244): same algebra (embed → cosine →
     re-sort), deterministic model. The neural swap point is exactly
     here — replace this function with a mapInPandas ONNX batch encoder
-    (operators/multimodal.py shows the Arrow batch plumbing) and
-    nothing downstream changes."""
+    and nothing downstream changes."""
     from .dedup import hash64
 
     t = docs.select("doc_id", F.explode(tokens_col).alias("term"))

@@ -4,87 +4,32 @@ path matches above content scores, src/brain-scorer.ts:226-253).
 
 `operators/query.tiered_topk` is the batch/analytics form: a
 full-corpus containment pass per query batch (exactly the reference's
-own per-query scan). This module is the latency-bound deployment its
-docstring promises: materialize a TINY per-tier-field posting index —
-(tid, doc_id) rows over each field's token SET (url tokens, a title
-window `slice(tokens, 1, W)`, …) — and serve a tiered query by
-intersecting the query terms' doc lists per field, scoring only the
-(few) tier-matched docs against the main index, and filling the final
-tier from the ordinary WAND top-k. Per-query cost is then
-O(query terms × tier fields) pruned probes + one bounded score lookup —
-independent of corpus size, like every other serving path.
-
-Scale shape: each field's index is ~W rows/doc of two int64s, written
-tid-sorted (repartitionByRange) so a probe is a row-group-pruned read;
-at 10^9 docs × W=8 that's an ~128 GB distributed table probed by tid,
-never scanned. Like the term_dictionary sidecar, every index MUTATION
-deletes the tier index (extend/upsert/purge) — stale tiers would
-silently mis-rank — and `build_tier_index` rebuilds on demand.
+own per-query scan). The serving form needs no index of its own: from
+format v7 the build folds each posting's tier code — the first
+DEFAULT_TIER_SPECS window holding the term's first occurrence — into
+its tf (functions/codec.py), so `serve.IndexReader.tiered_topk` is one
+block-interval kernel run over the main postings, and every mutation
+keeps the ladder current with no rebuild.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from ..sources.catalog import IndexPaths
-
-# (name, source column, token window | None=whole field): the default
-# ladder mirrors the `tiered_rank` oracle entry — title window above
-# lead window above body BM25
-DEFAULT_TIER_SPECS: tuple[tuple[str, str, int | None], ...] = (
-    ("title", "text", 8),
-    ("lead", "text", 30),
-)
+from ..functions.codec import DEFAULT_TIER_SPECS
 
 
-def build_tier_index(
-    spark: SparkSession,
-    index_dir: str,
-    specs: tuple[tuple[str, str, int | None], ...] = DEFAULT_TIER_SPECS,
-) -> int:
-    """Materialize the tier containment index: for tier i, the DISTINCT
-    tokens of that field per doc as (tid, doc_id) rows, tid-sorted for
-    pruned probes, under tier_index/field=<i>_<name>; the ordered spec
-    list persists in tier_index_meta. Returns the number of fields."""
-    from ..functions.tokenize import tokens_col
-    from .index_build import _delete_path, gated_docs, tid_col
+def build_tier_index(spark, index_dir: str,
+                     specs: tuple[tuple[str, str, int], ...] = DEFAULT_TIER_SPECS) -> int:
+    """Check that the index at `index_dir` serves the tier ladder
+    `specs`, and return its number of tier fields. The ladder is part of
+    the on-disk format, so this runs no job: it refuses an index of
+    another format (index_build.check_format) and raises ValueError for
+    any ladder but DEFAULT_TIER_SPECS, the one format v7 encodes."""
+    from ..sources.catalog import IndexPaths
+    from .index_build import check_format
 
-    paths = IndexPaths(index_dir)
-    # gated_docs, not the raw docs table: a crashed/in-flight extend
-    # fold's orphan segments must not bake into tier membership, or
-    # tiered_topk would surface docs every other reader path gates out
-    # (same rule as build_term_dictionary).
-    docs = gated_docs(spark, paths)
-    _delete_path(spark, paths.tier_index)
-    _delete_path(spark, paths.tier_meta)
-    for i, (name, source, window) in enumerate(specs):
-        col = tokens_col(source)
-        if window is not None:
-            col = F.slice(col, 1, int(window))
-        rows = (
-            docs.select("doc_id", F.explode(F.array_distinct(col)).alias("term"))
-            .withColumn("tid", tid_col("term"))
-            .select("tid", "doc_id")
-        )
-        (
-            # partition count from spark.sql.shuffle.partitions (AQE
-            # coalesces small builds) — a fixed count would bottleneck
-            # the ~W rows/doc explode at 10^9-doc scale
-            rows.repartitionByRange(F.col("tid"))
-            .sortWithinPartitions("tid", "doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{paths.tier_index}/field={i}_{name}")
-        )
-    import pandas as pd
-
-    meta = pd.DataFrame(
-        {
-            "ord": pd.array(range(len(specs)), dtype="int32"),
-            "name": [s[0] for s in specs],
-            "source": [s[1] for s in specs],
-            "window": pd.array([s[2] for s in specs], dtype="Int32"),
-        }
-    )
-    spark.createDataFrame(meta).coalesce(1).write.mode("overwrite").parquet(paths.tier_meta)
+    check_format(spark, IndexPaths(index_dir),
+                 "its postings carry no tier codes of this ladder")
+    if tuple(map(tuple, specs)) != DEFAULT_TIER_SPECS:
+        raise ValueError(f"tier ladder {specs!r} is not the one the index format "
+                         f"encodes, {DEFAULT_TIER_SPECS!r}")
     return len(specs)

@@ -21,6 +21,10 @@ in block-interval form), vectorized in numpy. Per query:
     term-at-a-time, finalizes the docs of those intervals and merges
     them into the top-k, raising θ;
   * the run stops once the next interval's bound is below θ − EPS.
+The R1 tier ladder runs the same loop on a composite key (see
+segment_topk's `tiers`): each block's min_tier bounds the tier of the
+docs an interval can hold, so an interval of a worse tier is cut by θ
+exactly like a low-scoring one.
 Plain TAAT is the case where nothing is pruned (and where the first
 round would take every interval, the kernel runs it without building
 the interval order); overlapping blocks (e.g. a legacy non-contiguous
@@ -63,14 +67,15 @@ class _TermBlocks:
     and memoized on it (term_blocks). `bmax` has the bound factors the
     memo was built with folded in; `segs` = the segment ids present."""
 
-    __slots__ = ("owner", "factors", "first", "last", "bmax", "n", "gaps", "tfs", "dls",
-                 "segs")
+    __slots__ = ("owner", "factors", "first", "last", "bmax", "mint", "n", "gaps", "tfs",
+                 "dls", "segs")
 
     def __init__(self, pdf: pd.DataFrame, bound_factors: dict | None):
         self.owner, self.factors = id(pdf), bound_factors
         self.first = pdf["first_doc"].to_numpy(np.int64)
         self.last = pdf["last_doc"].to_numpy(np.int64)
         self.bmax = pdf["block_max"].to_numpy(np.float64)
+        self.mint = pdf["min_tier"].to_numpy(np.int64)
         self.n = pdf["n"].to_numpy(np.int64)
         self.gaps, self.tfs, self.dls = (pdf[c].to_numpy(object) for c in ("doc_gaps", "tfs", "dls"))
         self.segs = np.empty(0, dtype=np.int64)
@@ -104,12 +109,13 @@ def term_blocks(pdf: pd.DataFrame, bound_factors: dict | None = None) -> _TermBl
 
 
 def cached_postings(decode_cache, term: str, tb: _TermBlocks):
-    """The decode cache's (docs, tf_norm, first_doc, n) entry for
-    `term` when it was decoded from blocks with exactly tb's first_doc
-    / n columns, else None: a frame re-fetched in another row order, or
-    from another epoch (a query straddling refresh), is a miss."""
+    """The decode cache's (docs, tf_norm, tier codes, first_doc, n)
+    entry for `term` when it was decoded from blocks with exactly tb's
+    first_doc / n columns, else None: a frame re-fetched in another row
+    order, or from another epoch (a query straddling refresh), is a
+    miss."""
     c = decode_cache.get(term) if decode_cache is not None else None
-    if c is None or not (np.array_equal(c[2], tb.first) and np.array_equal(c[3], tb.n)):
+    if c is None or not (np.array_equal(c[3], tb.first) and np.array_equal(c[4], tb.n)):
         return None
     return c
 
@@ -126,26 +132,38 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
                  dead: DeadDocs | None = None,
                  stats: dict | None = None,
                  decode_cache=None,
-                 deadline: float | None = None) -> list[tuple[int, float]]:
+                 deadline: float | None = None,
+                 tiers: int | None = None) -> list[tuple]:
     """Exact top-k [(doc_id, score)] over the given blocks frames (one
     segment for the distributed UDF, every segment for the serving
     reader), sorted (score desc, doc_id asc) — the block-interval
     kernel of the module docstring, shared by both surfaces so they rank
     identically by construction.
 
+    `tiers` (the ladder size T) ranks by the R1 tier ladder instead and
+    returns [(doc_id, tier, score)] sorted (tier asc, score desc,
+    doc_id asc): a doc's tier is the max of its postings' tier codes
+    over ALL distinct `terms`, a term it lacks counting as T (so every
+    doc is tier T when a query term has no postings) — exactly "tier i
+    holds all query terms, first match wins". The run keys on
+    (T − tier)·M + score, with M above any score, so the interval bound,
+    EPS cut and rounding are the plain kernel's: an interval's tier
+    bound is T unless every term has a block covering it, then the max
+    over terms of the covering blocks' min_tier.
+
     `dead` docs are dropped at finalization (θ only ever stays lower,
     so the prune stays sound). `decode_cache` (optional .get(term) /
-    .put(term, value)) memoizes the idf-independent (docs, tf_norm), in
-    block order and tagged with the frame's first_doc / n columns, of
-    every term this query decoded at least half of (the rest is decoded
-    to complete it); a cached term's blocks cost no decode. `deadline`
-    (a time.time() instant) is checked between rounds: the first round
-    always completes, returned docs always carry exact scores, and
-    stats["truncated"] is set when intervals that could still reach θ
-    were left unvisited. `stats`
-    accumulates read-amplification counters — blocks_considered (block
-    rows of the consulted lists), blocks_decoded (blocks varint-decoded;
-    the gap is the prune's win) and decoded_hits (cached terms)."""
+    .put(term, value)) memoizes the idf-independent (docs, tf_norm,
+    tier codes), in block order and tagged with the frame's first_doc /
+    n columns, of every term this query decoded at least half of (the
+    rest is decoded to complete it); a cached term's blocks cost no
+    decode. `deadline` (a time.time() instant) is checked between
+    rounds: the first round always completes, returned docs always
+    carry exact scores, and stats["truncated"] is set when intervals
+    that could still reach θ were left unvisited. `stats` accumulates
+    read-amplification counters — blocks_considered (block rows of the
+    consulted lists), blocks_decoded (blocks varint-decoded; the gap is
+    the prune's win) and decoded_hits (cached terms)."""
     present = [t for t in terms
                if t in by_term and idf_map.get(t, 0.0) > 0.0 and len(by_term[t])]
     if not present or k <= 0:
@@ -154,9 +172,14 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
     tbs = [term_blocks(by_term[t]) for t in present]
     nb = [len(tb.first) for tb in tbs]
     term = np.repeat(np.arange(nt), nb)
-    first, last, n, bmax = (np.concatenate([getattr(tb, c) for tb in tbs])
-                            for c in ("first", "last", "n", "bmax"))
+    first, last, n, bmax, mint = (np.concatenate([getattr(tb, c) for tb in tbs])
+                                  for c in ("first", "last", "n", "bmax", "mint"))
     idf = np.array([idf_map[t] for t in present])
+    if tiers is not None:
+        # M above any doc's score, so one tier step outweighs any score
+        # difference in the key
+        scale = float(np.ceil(idf.sum() * (k1 + 1.0) * bound_factor)) + 1.0
+        absent = nt < len(set(terms))  # every doc is tier T
 
     # cached terms: their blocks are slices of the cached arrays, no
     # decode
@@ -167,21 +190,22 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
         if stats is not None:
             stats["decoded_hits"] = stats.get("decoded_hits", 0) + sum(
                 c is not None for c in cached)
-        cdocs = np.concatenate([c[0] for c in cached if c is not None])
-        ctfn = np.concatenate([c[1] for c in cached if c is not None])
+        cparts = [np.concatenate([c[i] for c in cached if c is not None]) for i in range(3)]
         coff = np.zeros(len(n), dtype=np.int64)
         coff[is_cached] = np.cumsum(n[is_cached]) - n[is_cached]
         cterm = np.repeat(term[is_cached], n[is_cached])
     to_decode = ~is_cached  # blocks whose postings still cost a decode
-    decoded = []  # (blk, docs, tf_norm) per decode, for the decode cache
+    decoded = []  # (blk, docs, tf_norm, codes) per decode, for the decode cache
     raw = []
     top_d = np.empty(0, dtype=np.int64)
     top_s = np.empty(0, dtype=np.float64)
+    top_t = np.empty(0, dtype=np.int64)
+    top_key = np.empty(0, dtype=np.float64)
     theta = -np.inf
 
     def materialize(new):
-        """(term, docs, tf_norm) of the postings of blocks `new`: decoded
-        in one varint pass, or sliced from the cached arrays."""
+        """(term, docs, tf_norm, codes) of the postings of blocks `new`:
+        decoded in one varint pass, or sliced from the cached arrays."""
         parts = []
         dec = np.sort(new[to_decode[new]])
         if len(dec):
@@ -189,40 +213,53 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
                 raw.extend(np.concatenate([getattr(tb, c) for tb in tbs])
                            for c in ("gaps", "tfs", "dls"))
             to_decode[dec] = False
-            d, tf, dl = decode_blocks(n[dec], first[dec], *(col[dec] for col in raw))
+            d, tf, dl, code = decode_blocks(n[dec], first[dec], *(col[dec] for col in raw))
             blk = np.repeat(dec, n[dec])
-            decoded.append((blk, d, tf_norm(tf, dl, avgdl, k1, b)))
+            decoded.append((blk, d, tf_norm(tf, dl, avgdl, k1, b), code))
             parts.append((term[blk],) + decoded[-1][1:])
         cac = new[is_cached[new]]
         if len(cac) and len(cac) == n_cached:  # every cached block
-            parts.append((cterm, cdocs, ctfn))
+            parts.append((cterm, *cparts))
         elif len(cac):
             idx = _ranges(coff[cac], n[cac])
-            parts.append((np.repeat(term[cac], n[cac]), cdocs[idx], ctfn[idx]))
+            parts.append((np.repeat(term[cac], n[cac]), *(c[idx] for c in cparts)))
         return [x[0] if len(x) == 1 else np.concatenate(x) for x in zip(*parts)]
 
-    def finalize(pt, pd_, pc):
+    def finalize(pt, pd_, pc, pcode):
         """Merge the docs of these (complete) postings into the top-k."""
-        nonlocal top_d, top_s, theta
+        nonlocal top_d, top_s, top_t, top_key, theta
         pc = pc * idf[pt]
         if nt == 1:  # one posting per doc
-            uniq, sc = pd_, np.round(pc, 4)
+            uniq, sc, tier = pd_, np.round(pc, 4), pcode
         else:
             o = np.lexsort((pt, pd_))  # per doc, summed in term order
             pd_, pc = pd_[o], pc[o]
             starts = np.flatnonzero(np.concatenate(([True], pd_[1:] != pd_[:-1])))
             uniq, sc = pd_[starts], np.round(np.add.reduceat(pc, starts), 4)
-        keep = sc >= theta
+            if tiers is not None and not absent:
+                tier = np.where(np.diff(np.append(starts, len(pd_))) == nt,
+                                np.maximum.reduceat(pcode[o], starts), tiers)
+        if tiers is None:
+            key = sc
+        else:
+            tier = np.full(len(uniq), tiers) if absent else tier.astype(np.int64)
+            key = (tiers - tier) * scale + sc
+        keep = key >= theta
         if dead is not None:
             keep &= ~dead.mask(uniq)
         if np.count_nonzero(keep) > k:  # only the k best of these can enter
-            keep &= sc >= np.partition(sc[keep], -k)[-k]
+            keep &= key >= np.partition(key[keep], -k)[-k]
         cand_d = np.concatenate((top_d, uniq[keep]))
-        cand_s = np.concatenate((top_s, sc[keep]))
-        sel = np.lexsort((cand_d, -cand_s))[:k]
-        top_d, top_s = cand_d[sel], cand_s[sel]
+        cand_key = np.concatenate((top_key, key[keep]))
+        sel = np.lexsort((cand_d, -cand_key))[:k]
+        top_d, top_key = cand_d[sel], cand_key[sel]
+        if tiers is None:
+            top_s = top_key
+        else:
+            top_s = np.concatenate((top_s, sc[keep]))[sel]
+            top_t = np.concatenate((top_t, tier[keep]))[sel]
         if len(top_d) == k:
-            theta = top_s[-1]
+            theta = top_key[-1]
 
     truncated = False
     if n[to_decode].sum() <= k:
@@ -238,6 +275,15 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
             return np.cumsum(np.bincount(a, w, len(cuts)) - np.bincount(e, w, len(cuts)))[:-1]
 
         bound = sweep(bmax * idf[term] * bound_factor)
+        if tiers is not None:
+            # tier ≤ v is reachable where every term has a covering
+            # block of min_tier ≤ v; the interval's tier bound is the
+            # least such v (T when none)
+            tier_lb = np.full(len(bound), tiers)
+            for v in range(0 if absent else tiers):
+                tier_lb -= np.logical_and.reduce(
+                    [sweep((term == i) & (mint <= v)) > 0.5 for i in range(nt)])
+            bound += (tiers - tier_lb) * scale
         order = np.flatnonzero(sweep())  # covered intervals, visited by bound desc
         order = order[np.argsort(-bound[order], kind="stable")]
         neg_bound = -bound[order]  # ascending, for the θ cut
@@ -272,21 +318,21 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
 
             j1 = int(np.searchsorted(need_sorted, r1))
             if j1 > j0:
-                pt, docs, tfn = materialize(by_need[j0:j1])
+                cols = materialize(by_need[j0:j1])
                 j0 = j1
                 if nt == 1 or r1 == len(order):  # complete at once
-                    chunks.append([None, pt, docs, tfn, 0])
+                    chunks.append([None, cols, 0])
                 else:
-                    r = rank[np.searchsorted(cuts, docs, side="right") - 1]
+                    r = rank[np.searchsorted(cuts, cols[1], side="right") - 1]
                     o = np.argsort(r, kind="stable")
-                    chunks.append([r[o], pt[o], docs[o], tfn[o], 0])
+                    chunks.append([r[o], [c[o] for c in cols], 0])
             # finalize every doc of the round's intervals
             parts = []
             for ch in chunks:
-                hi = len(ch[1]) if ch[0] is None else int(np.searchsorted(ch[0], r1))
-                if hi > ch[4]:
-                    parts.append((ch[1][ch[4]:hi], ch[2][ch[4]:hi], ch[3][ch[4]:hi]))
-                    ch[4] = hi
+                hi = len(ch[1][0]) if ch[0] is None else int(np.searchsorted(ch[0], r1))
+                if hi > ch[2]:
+                    parts.append([c[ch[2]:hi] for c in ch[1]])
+                    ch[2] = hi
             r0 = r1
             if parts:
                 finalize(*(x[0] if len(parts) == 1 else np.concatenate(x)
@@ -306,16 +352,19 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
         if len(rest):
             materialize(rest)
         if full:
-            blk, docs, tfn = (np.concatenate(x) for x in zip(*decoded))
+            blk, docs, tfn, codes = (np.concatenate(x) for x in zip(*decoded))
             tt = term[blk]
             for i in full:
                 s = np.flatnonzero(tt == i)
                 s = s[np.argsort(blk[s], kind="stable")]  # block order
-                decode_cache.put(present[i], (docs[s], tfn[s], tbs[i].first, tbs[i].n))
+                decode_cache.put(present[i], (docs[s], tfn[s], codes[s], tbs[i].first,
+                                              tbs[i].n))
     if stats is not None:
         stats["blocks_considered"] = stats.get("blocks_considered", 0) + len(n)
         stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + int(
             (~is_cached & ~to_decode).sum())
+    if tiers is not None:
+        return list(zip(top_d.tolist(), top_t.tolist(), top_s.tolist()))
     return list(zip(top_d.tolist(), top_s.tolist()))
 
 
@@ -398,10 +447,14 @@ def _index_meta(spark: SparkSession, paths: IndexPaths):
     `excluded` is the frozenset of segments a reader must skip (an
     in-flight/crashed fold's partial dirs — functions/liveness.py): the
     manifest, not the partition listing, is the source of truth for
-    which segments serve."""
+    which segments serve. An index of another on-disk format raises
+    (index_build.check_format) — every Spark-plane query loads this."""
     cached = _META_CACHE.get(_cache_key(paths.root))
     if cached is not None:
         return cached
+    from .index_build import check_format
+
+    check_format(spark, paths, "its posting blocks would decode wrong")
     stats = spark.read.parquet(paths.collection_stats).collect()[0]
     n_docs, avgdl = int(stats.n_docs), float(stats.avgdl)
     # per-segment bound inflation for avgdl drift after incremental
@@ -492,7 +545,7 @@ def _postings_scan(spark: SparkSession, paths: IndexPaths,
     key = (spark.sparkContext.applicationId, _cache_key(paths.root), with_positions)
     df = _SCAN_CACHE.get(key)
     if df is None:
-        cols = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "n",
+        cols = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "min_tier", "n",
                 "doc_gaps", "tfs", "dls"]
         df = spark.read.parquet(paths.postings)
         if with_positions:

@@ -8,7 +8,8 @@ this module — a long-lived `IndexReader` that reads the exact parquet
 artifacts the Spark jobs commit, via pyarrow row-group-pruned reads,
 and executes the SAME kernels the distributed path uses
 (`operators/wand.py::segment_topk` for BM25 — one call over every
-segment's blocks here, one per segment there —
+segment's blocks here, one per segment there — and for the R1 tier
+ladder, whose tier codes ride in the same postings;
 `operators/phrase.py::segment_phrase_matches` for positional phrase /
 proximity queries). No Spark job
 — and no JVM — is on the per-query path, so latency is decode-bound
@@ -26,7 +27,8 @@ Scale notes (what changes at 10^12 docs, nothing structural):
     columnar read. Replicas shard by index or by segment range when
     one box can't hold the hot set.
   * results are (doc_id, score) — identical, by test, to wand_topk;
-    phrase results identical to phrase_topk (positional indexes).
+    phrase results identical to phrase_topk (positional indexes); tiered
+    results identical to the batch operators/query.tiered_topk.
 
 `serve_loop` is the service harness: JSON-lines in, JSON-lines out —
 the same contract an MCP/HTTP adapter would wrap.
@@ -42,6 +44,7 @@ from collections import OrderedDict
 import numpy as np
 
 from .functions.bm25 import B, K1, idf as idf_fn
+from .functions.codec import DEFAULT_TIER_SPECS
 from .functions.liveness import DeadDocs
 from .functions.tokenize import tokenize_query
 from .sources.catalog import IndexPaths
@@ -49,19 +52,9 @@ from .sources.catalog import IndexPaths
 # posting rows are keyed by `tid` (dictionary-encoded term — xxhash64);
 # the reader resolves term → tid from the terms directory, so no hash
 # implementation exists outside the Spark build
-_POSTING_COLS = ["tid", "first_doc", "last_doc", "block_max", "n",
+_POSTING_COLS = ["tid", "first_doc", "last_doc", "block_max", "min_tier", "n",
                  "doc_gaps", "tfs", "dls"]
 
-
-class TierBudgetExceeded(ValueError):
-    """A tiered query where EVERY term's tier-field doc list exceeds
-    the reader's materialization budget (IndexReader._TIER_DF_CAP):
-    the tier ladder's semantics require ranking every tier-matched doc,
-    and with no small list to intersect against the match set is a
-    corpus-share array this one process refuses to hold. Run such
-    queries through the batch operator (operators/query.tiered_topk —
-    a distributed full-corpus pass, the semantics' native cost), or
-    raise the cap on a reader with the memory to back it."""
 
 # Byte budget for the decoded-postings LRU: decoded arrays run ~12x
 # their varint form, so this cache holds far fewer ENTRIES than the
@@ -174,8 +167,6 @@ class IndexReader:
         self._blocks_lru: OrderedDict[str, "object"] = OrderedDict()
         self._pos_lru: OrderedDict[str, "object"] = OrderedDict()
         self._decoded = _DecodedLRU(_DECODE_BUDGET)
-        self._tier_ds_cache: dict[int, "object"] = {}
-        self._tier_over_cap: dict[tuple[int, int], bool] = {}
         self._df_cache: dict[str, tuple[int, int]] = {}  # term → (df, tid)
         # truncated is THREAD-LOCAL: under serve_loop concurrency each
         # worker thread must see its own query's ST4 flag, not a racing
@@ -282,9 +273,6 @@ class IndexReader:
         self._postings = self._dataset_or_none(self.paths.postings)
         self._terms = self._dataset_or_none(self.paths.terms)
         self._docs = self._dataset_or_none(self.paths.docs)
-        self._tier_specs_cache = None
-        self._tier_ds_cache.clear()
-        self._tier_over_cap.clear()
         self._blocks_lru.clear()
         self._pos_lru.clear()
         self._decoded.clear()
@@ -296,8 +284,7 @@ class IndexReader:
         self._epoch += 1
         self.totals = {"queries": 0, "segments_touched": 0,
                        "blocks_considered": 0, "blocks_decoded": 0,
-                       "terms_cold": 0, "decoded_hits": 0,
-                       "tier_stream_intersects": 0}
+                       "terms_cold": 0, "decoded_hits": 0}
 
     @staticmethod
     def _dataset_or_none(path: str):
@@ -428,8 +415,8 @@ class IndexReader:
 
     def live_mask(self, ids) -> "np.ndarray":
         """bool[len(ids)]: True where the doc id is NOT tombstoned —
-        the liveness rule for callers outside the query kernels (tier
-        membership, the tiered skip check, session boosts)."""
+        the liveness rule for callers outside the query kernels (session
+        boosts)."""
         dead = self._dead_docs()
         return np.ones(len(ids), dtype=bool) if dead is None else ~dead.mask(ids)
 
@@ -599,13 +586,33 @@ class IndexReader:
         retired, so the read raises — refresh() rebuilds the handles
         (and the manifest gating) and the query retries once before
         propagating (a genuine I/O error must not loop)."""
+        return self._ranked(query, k, budget_ms, None)
+
+    def tiered_topk(self, query: str, k: int = 10,
+                    budget_ms: float | None = None) -> list[tuple[int, int, float]]:
+        """[(doc_id, tier, score)] — the R1 tier ladder (reference "exact
+        title match wins", src/brain-scorer.ts:226-253), value-identical
+        to operators/query.tiered_topk over the DEFAULT_TIER_SPECS
+        windows: tier i = the doc's first window_i tokens hold ALL query
+        terms (first match wins), the final tier = the rest of the BM25
+        matches; rank (tier asc, score desc, doc_id asc). Served like
+        topk — one segment_topk call over the main postings, whose tier
+        codes the build folded in (format v7) — with the same budget_ms
+        deadline, liveness, fold gating, straddling-refresh retry and
+        self-heal."""
+        return self._ranked(query, k, budget_ms, len(DEFAULT_TIER_SPECS))
+
+    def _ranked(self, query: str, k: int, budget_ms: float | None,
+                tiers: int | None) -> list[tuple]:
+        """topk (tiers None) or tiered_topk: the retry loop around one
+        kernel attempt."""
         t0 = time.time()
         for attempt in range(3):
             epoch0 = self._epoch
             stats = {"segments_touched": 0, "blocks_considered": 0,
                      "blocks_decoded": 0, "terms_cold": 0}
             try:
-                hits = self._topk_attempt(query, k, budget_ms, stats, t0)
+                hits = self._topk_attempt(query, k, budget_ms, stats, t0, tiers)
             except OSError:
                 if attempt:
                     raise
@@ -617,13 +624,13 @@ class IndexReader:
         return hits
 
     def _topk_attempt(self, query: str, k: int, budget_ms: float | None,
-                      stats: dict, t0: float) -> list[tuple[int, float]]:
+                      stats: dict, t0: float, tiers: int | None) -> list[tuple]:
         from .operators.wand import segment_topk, term_blocks
 
         self.truncated = False
         if self._postings is None:
             return []
-        terms = tokenize_query(query)
+        terms = sorted(set(tokenize_query(query)))
         dfs = self.df(terms)
         idf_map = {t: idf_fn(self.n_docs, dfs[t]) for t in terms if dfs[t] > 0}
         if not idf_map:
@@ -637,11 +644,13 @@ class IndexReader:
             set().union(*(term_blocks(pdf).segs.tolist() for pdf in blocks.values())))
         # ONE kernel call over every segment's blocks: bound factors are
         # pre-scaled into the frames' block maxima (_blocks), liveness is
-        # the epoch's one DeadDocs
-        hits = segment_topk(blocks, sorted(idf_map), idf_map, self.avgdl, k,
+        # the epoch's one DeadDocs; the ladder needs every query term,
+        # absent ones included (a doc lacking one is in the final tier)
+        hits = segment_topk(blocks, terms, idf_map, self.avgdl, k,
                             self.k1, self.b, dead=self._dead_docs(), stats=stats,
                             decode_cache=_NsDecodeCache(self._decoded, ("k", -1), dgen),
-                            deadline=None if budget_ms is None else t0 + budget_ms / 1e3)
+                            deadline=None if budget_ms is None else t0 + budget_ms / 1e3,
+                            tiers=tiers)
         self.truncated = stats.pop("truncated", False)
         return hits
 
@@ -652,9 +661,6 @@ class IndexReader:
         with self._lock:
             self._last_shared = stats
             self.totals["queries"] += 1
-            # tier_stream_intersects is NOT aggregated here: it counts
-            # straight into totals at the stream site (the tiered fill
-            # path hands stats recording to topk(), which would drop it)
             for key in ("segments_touched", "blocks_considered",
                         "blocks_decoded", "terms_cold", "decoded_hits"):
                 self.totals[key] += stats.get(key, 0)
@@ -750,24 +756,12 @@ class IndexReader:
         hits.sort(key=lambda x: (-x[1], x[0]))
         return hits[:k]
 
-    # Memory budgets for head terms at corpus scale (both are per-term
-    # ROW counts; neither can trigger below ~5M docs, so the common
-    # path pays nothing for them):
-    # - _TIER_DF_CAP bounds any per-(field, tid) doc list this reader
-    #   will MATERIALIZE for tier membership (5M rows = 40 MB int64).
-    #   A term whose body df exceeds it gets one pushed-down count
-    #   probe (the windowed tier list is usually far smaller than the
-    #   body df); a genuinely-huge list is intersected by STREAMING
-    #   scan against the already-bounded candidate set instead of
-    #   materializing, and a field where EVERY list is huge raises
-    #   TierBudgetExceeded — ranking a corpus-share tier is the batch
-    #   operator's job, not one process's.
-    # - _SWEEP_DF_CAP bounds the postings one _scores_array decode pass
-    #   holds (decoded form is ~24 B/posting vs ~1-2 B compressed in
-    #   the resident frame): a term whose candidate blocks hold more
-    #   decodes in several passes, so memory stays within the frame
-    #   envelope every other serving path already has.
-    _TIER_DF_CAP = 5_000_000
+    # Memory budget for head terms at corpus scale: _SWEEP_DF_CAP bounds
+    # the postings (a ROW count; it cannot trigger below ~20M docs) one
+    # _scores_array decode pass holds (decoded form is ~25 B/posting vs
+    # ~1-2 B compressed in the resident frame): a term whose candidate
+    # blocks hold more decodes in several passes, so memory stays within
+    # the frame envelope every other serving path already has.
     _SWEEP_DF_CAP = 20_000_000
 
     def _scores_for_docs(self, terms: list[str],
@@ -782,14 +776,14 @@ class IndexReader:
     def _scores_array(self, terms: list[str],
                       doc_ids: "np.ndarray") -> "np.ndarray":
         """BM25 score of SPECIFIC docs for a term set, aligned to the
-        input array (the bounded lookup behind tiered serving). Per
+        input array (the bounded lookup behind session boosts). Per
         term: a valid ("k", -1) entry of the top-k kernel's decode cache
         scores without decoding; otherwise only the blocks whose
         [first_doc, last_doc] holds a candidate decode, in passes of at
         most _SWEEP_DF_CAP postings, and a term decoded whole in one
         pass is installed for later queries. Docs matching no term
-        score 0.0. Rounding matches rank_topk (4 decimals) so tier
-        ladders rank identically to the batch mode."""
+        score 0.0. Rounding matches rank_topk (4 decimals), like every
+        ranked answer."""
         from .functions.codec import decode_blocks, tf_norm
         from .operators.wand import _ranges, cached_postings, term_blocks
 
@@ -826,254 +820,14 @@ class IndexReader:
                     j = max(i + 1, int(np.searchsorted(csum, base + self._SWEEP_DF_CAP,
                                                        side="right")))
                     blk = hold[i:j]
-                    d, tf, dl = decode_blocks(tb.n[blk], tb.first[blk], tb.gaps[blk],
-                                              tb.tfs[blk], tb.dls[blk])
+                    d, tf, dl, code = decode_blocks(tb.n[blk], tb.first[blk], tb.gaps[blk],
+                                                    tb.tfs[blk], tb.dls[blk])
                     tfn = tf_norm(tf, dl, self.avgdl, self.k1, self.b)
                     add(idf_map[t], d, tfn)
                     if not i and j == len(tb.n):  # the whole term in one pass: install
-                        cache.put(t, (d, tfn, tb.first, tb.n))
+                        cache.put(t, (d, tfn, code, tb.first, tb.n))
                     i = j
         return np.round(acc, 4)[inv]
-
-    def _tier_specs(self) -> list[tuple[int, str]]:
-        """Ordered (ord, field-dir name) pairs from tier_index_meta, or
-        [] when no tier index is materialized. Cached until refresh()
-        (mutations delete + rebuild the sidecar, and the refresh
-        contract already governs when the reader sees mutations)."""
-        import pyarrow.dataset as ds
-
-        cached = getattr(self, "_tier_specs_cache", None)
-        if cached is not None:
-            return cached
-        try:
-            d = ds.dataset(self.paths.tier_meta, format="parquet")
-            t = d.to_table(columns=["ord", "name"]).to_pydict()
-            specs = sorted(zip((int(o) for o in t["ord"]), t["name"]))
-        except FileNotFoundError:
-            specs = []
-        self._tier_specs_cache = specs
-        return specs
-
-    @staticmethod
-    def _tier_stream_intersect(d, tid: int, cand: "np.ndarray") -> "np.ndarray":
-        """cand ∩ (tid's tier doc list) WITHOUT materializing the list:
-        scan its rows in record batches and flag candidate membership
-        via searchsorted. Memory = the candidate array (≤ _TIER_DF_CAP
-        by construction) + one batch; the huge list is never resident
-        and never cached. cand must be sorted (np.unique/intersect1d
-        outputs are)."""
-        import pyarrow.dataset as ds
-
-        keep = np.zeros(len(cand), dtype=bool)
-        scanner = d.scanner(filter=ds.field("tid") == tid,
-                            columns=["doc_id"], batch_size=1 << 17)
-        for batch in scanner.to_batches():
-            arr = batch.column(0).to_numpy()
-            j = np.searchsorted(cand, arr)
-            ok = (j < len(cand)) & (cand[np.minimum(j, len(cand) - 1)] == arr)
-            keep[j[ok]] = True
-        return cand[keep]
-
-    def tiered_topk(self, query: str, k: int = 10) -> list[tuple[int, int, float]]:
-        return self._self_heal(lambda: self._tiered_topk_impl(query, k))
-
-    def _tiered_topk_impl(self, query: str, k: int = 10) -> list[tuple[int, int, float]]:
-        """[(doc_id, tier, score)] — the R1 tier ladder SERVED from the
-        materialized tier containment index (operators/tiers.py;
-        reference "exact title match wins", src/brain-scorer.ts:226-253)
-        instead of the batch mode's full-corpus pass. Value-identical to
-        operators/query.tiered_topk over the same fields: tier i = the
-        doc's i-th tier field contains ALL query terms (first match
-        wins), final tier = BM25 order; rank (tier asc, score desc,
-        doc_id asc).
-
-        Per-query cost: one tid-pruned probe of each (tiny) tier field
-        index, one score lookup bounded by the TIER-MATCHED doc count,
-        and — only when fewer than k docs tier-match — one ordinary
-        top-k run for the final tier. For a head/stop term that
-        tier-matches much of the corpus the ladder semantics themselves
-        require ranking every match (the batch mode scans everything
-        too); the top-k fill is skipped in exactly that case, so its k
-        never exceeds 2k."""
-        import pyarrow.dataset as ds
-
-        from .functions.termhash import term_tid
-
-        t0 = time.time()
-        # reset the thread-local ST4 flag like every other query impl:
-        # without it, a prior budget-truncated query's True leaks into
-        # this answer whenever tier matches satisfy k (the fill-path
-        # topk resets it, the ≥k branch otherwise would not)
-        self.truncated = False
-        stats = {"segments_touched": 0, "blocks_considered": 0,
-                 "blocks_decoded": 0, "terms_cold": 0}
-        specs = self._tier_specs()
-        if not specs:
-            raise FileNotFoundError(
-                f"no tier index at {self.paths.tier_index} — run "
-                "operators.tiers.build_tier_index(spark, index_dir) once"
-            )
-        terms = sorted(set(tokenize_query(query)))
-        if not terms:
-            self._record_stats(stats, t0)
-            return []
-        tids = {term_tid(t) for t in terms}
-        # body df bounds every tier-field list for the same term (tier
-        # fields are token windows of the same text) — the free signal
-        # the materialization budget gates on; cached, so the later
-        # _scores_array call pays nothing extra
-        df_by_tid = {term_tid(t): n for t, n in self.df(terms).items()}
-        n_tiers = len(specs)
-        dgen = self._decoded.generation  # pin BEFORE any tier probe
-
-        # tier membership: intersect each field's per-tid doc lists;
-        # first (best) tier wins per doc. Doc lists ride the decoded
-        # LRU (namespace ("t", field) — zipfian query terms repeat) and
-        # the dataset HANDLES are cached per refresh: per-query
-        # ds.dataset() re-discovery was a fixed several-ms cost, and a
-        # stale handle after an external mutation raises OSError into
-        # the _self_heal refresh+retry like every other surface.
-        # Membership/ranking is ARRAY-shaped end to end: a head term
-        # tier-matches a large corpus share, and the former per-doc
-        # dict/list/sort Python loops were ~0.8 s at 300k matches where
-        # the vectorized form is milliseconds.
-        cand_parts: list = []
-        tier_parts: list = []
-        epoch0 = self._epoch  # cache installs below re-check this
-        for ordi, name in specs:
-            with self._lock:
-                d = self._tier_ds_cache.get(ordi)
-            if d is None:
-                d = ds.dataset(f"{self.paths.tier_index}/field={ordi}_{name}",
-                               format="parquet")
-                with self._lock:
-                    # don't resurrect a pre-refresh handle into the
-                    # just-cleared cache (same discipline as _df_cache
-                    # and the decoded LRU's generation guard)
-                    if self._epoch == epoch0:
-                        self._tier_ds_cache[ordi] = d
-            cache = _NsDecodeCache(self._decoded, ("t", ordi), dgen)
-            by_tid: dict[int, np.ndarray] = {}
-            missing = []
-            suspects = []
-            for tid in tids:
-                hit = cache.get(tid)
-                if hit is not None:
-                    by_tid[tid] = hit
-                elif df_by_tid[tid] > self._TIER_DF_CAP:
-                    suspects.append(tid)  # body df bounds the tier list
-                else:
-                    missing.append(tid)
-            if suspects and cand_parts and k <= sum(map(len, cand_parts)):
-                # earlier tiers sort above this one, so once they hold
-                # ≥ k UNIQUE LIVE docs this field cannot reach the top
-                # k — skip the probes, the streams, and (critically)
-                # the refusal: a query whose answer is already pinned
-                # by an earlier tier must never error on a later
-                # head-term field. parts can overlap across tiers, so
-                # confirm with the deduped count only when the cheap
-                # sum passes — and the dedup must mask TOMBSTONED docs
-                # (same liveness rule applied to the final membership
-                # below): dead earlier-tier matches don't pin anything,
-                # and skipping on their count would silently drop live
-                # later-tier docs from the answer.
-                pinned = np.unique(np.concatenate(cand_parts))
-                pinned = pinned[self.live_mask(pinned)]
-                if k <= len(pinned):
-                    continue
-            huge = []
-            for tid in sorted(suspects):
-                # one pushed-down count decides (verdict cached per
-                # epoch — zipfian head terms repeat, and the probe is
-                # a filtered column scan worth paying once, not per
-                # query): the windowed tier list is often far smaller
-                # than the body df
-                key = (ordi, tid)
-                with self._lock:
-                    over = self._tier_over_cap.get(key)
-                if over is None:
-                    over = (d.count_rows(filter=ds.field("tid") == tid)
-                            > self._TIER_DF_CAP)
-                    with self._lock:
-                        if self._epoch == epoch0:
-                            self._tier_over_cap[key] = over
-                if over:
-                    huge.append(tid)
-                else:
-                    missing.append(tid)
-            if missing:
-                tbl = d.to_table(filter=ds.field("tid").isin(sorted(missing)),
-                                 columns=["tid", "doc_id"])
-                tid_arr = tbl.column("tid").to_numpy()
-                doc_arr = tbl.column("doc_id").to_numpy()
-                for tid in missing:
-                    arr = doc_arr[tid_arr == tid]
-                    cache.put(tid, arr)
-                    by_tid[tid] = arr
-            if any(not len(v) for v in by_tid.values()):
-                continue
-            if huge and not by_tid:
-                raise TierBudgetExceeded(
-                    f"every query term's doc list in tier field {name!r} "
-                    f"exceeds _TIER_DF_CAP={self._TIER_DF_CAP} rows; this "
-                    "reader will not materialize a corpus-share tier — "
-                    "use operators/query.tiered_topk (batch) or raise the cap"
-                )
-            lists = sorted(by_tid.values(), key=len)
-            cand = np.unique(lists[0])
-            for arr in lists[1:]:
-                cand = np.intersect1d(cand, arr)
-                if not len(cand):
-                    break
-            for tid in huge:
-                if not len(cand):
-                    break
-                # counted straight into totals: the <k fill path hands
-                # stats recording to topk(), which would drop a
-                # stats-dict-only increment — and a huge term cut down
-                # to few matches by a selective term is the COMMON
-                # streaming shape
-                with self._lock:
-                    self.totals["tier_stream_intersects"] += 1
-                stats["tier_stream_intersects"] = (
-                    stats.get("tier_stream_intersects", 0) + 1)
-                cand = self._tier_stream_intersect(d, tid, cand)
-            if len(cand):
-                cand_parts.append(cand)
-                tier_parts.append(np.full(len(cand), ordi, dtype=np.int64))
-
-        if cand_parts:
-            # first occurrence in tier order = best tier per doc
-            docs_all = np.concatenate(cand_parts)
-            tiers_all = np.concatenate(tier_parts)
-            uniq, first = np.unique(docs_all, return_index=True)
-            tier_arr = tiers_all[first]
-        else:
-            uniq = np.empty(0, dtype=np.int64)
-            tier_arr = np.empty(0, dtype=np.int64)
-
-        # liveness: drop tombstoned docs from tier membership
-        live = self.live_mask(uniq)
-        uniq, tier_arr = uniq[live], tier_arr[live]
-
-        scores = self._scores_array(terms, uniq)
-        n_matched = len(uniq)
-        if n_matched < k:
-            # final tier: ordinary BM25 top-k, minus the tier-matched
-            # docs (fetch enough extra to survive the exclusion — < 2k).
-            # When k or more docs tier-matched, final-tier rows can
-            # never reach the top k (tier sorts first): skip the run.
-            matched = set(uniq.tolist())
-            fill = [(d, s) for d, s in self.topk(query, k=k + n_matched)
-                    if d not in matched]
-            if fill:
-                uniq = np.concatenate([uniq, np.array([d for d, _ in fill], dtype=np.int64)])
-                tier_arr = np.concatenate([tier_arr, np.full(len(fill), n_tiers, dtype=np.int64)])
-                scores = np.concatenate([scores, np.array([s for _, s in fill], dtype=np.float64)])
-        else:
-            self._record_stats(stats, t0)
-        order = np.lexsort((uniq, -scores, tier_arr))[:k]
-        return [(int(uniq[i]), int(tier_arr[i]), float(scores[i])) for i in order]
 
     def references(self, symbol: str, k: int = 10,
                    max_positions: int = 100) -> list[dict]:
@@ -1288,12 +1042,12 @@ class IndexReader:
     def prewarm(self, queries: "list[str]", k: int = 10,
                 tiered: bool = False) -> int:
         """Fault the serving caches (hot-term block frames, decoded
-        postings, tier doc lists) by replaying a query list — e.g. the
+        postings) by replaying a query list — e.g. the
         query-log tail via `recent_queries` — so a fresh replica does
         not pay cold-fetch latency on its first real traffic (cold p90
         queries are ~50% fetch; the same query served hot is ~ms).
-        Queries that error (absent tier index, TierBudgetExceeded, …)
-        are skipped: warming is best-effort by definition. Returns the
+        Queries that error are skipped: warming is best-effort by
+        definition. Returns the
         number replayed successfully."""
         n = 0
         for q in queries:
@@ -1536,8 +1290,9 @@ def serve_loop(index_dir: str, stdin=None, stdout=None, k1: float = K1, b: float
             elif req.get("tiered"):
                 results = [
                     {"rank": i + 1, "doc_id": d, "tier": t, "score": s}
-                    for i, (d, t, s) in enumerate(
-                        reader.tiered_topk(req["q"], k=int(req.get("k", 10))))
+                    for i, (d, t, s) in enumerate(reader.tiered_topk(
+                        req["q"], k=int(req.get("k", 10)),
+                        budget_ms=float(budget) if budget is not None else None))
                 ]
                 logged_q = req["q"]
             else:

@@ -86,19 +86,6 @@ class IndexPaths:
         return os.path.join(self.root, "term_dictionary")
 
     @property
-    def tier_index(self) -> str:
-        # OPTIONAL per-tier-field (tid, doc_id) containment index for
-        # the R1 tier ladder's SERVING form (operators/tiers.py) —
-        # built on demand like term_dict; mutations delete it
-        return os.path.join(self.root, "tier_index")
-
-    @property
-    def tier_meta(self) -> str:
-        # ordered tier-field specs (ord, name, source, window) for the
-        # tier_index — the reader recovers ladder order from here
-        return os.path.join(self.root, "tier_index_meta")
-
-    @property
     def format_marker(self) -> str:
         # one-row parquet recording the on-disk INDEX_FORMAT the index
         # was built with — mutations (extend/merge/resume) check it and

@@ -73,20 +73,18 @@ def extend_index(
 
     t0 = time.time()
     cand = list(range(seg_base, seg_base + n_new_segments))
-    # drop the optional vocabulary/tier sidecars BEFORE any durable
-    # mutation: they describe the pre-fold index, and once the fold
-    # commits a stale copy silently misses the new docs/terms. Deleting
-    # them after the committing manifest append (as this fold used to)
-    # leaves a crash window where the fold is committed, the sidecars
-    # are stale, and the documented recovery (re-send the batch →
-    # 'unchanged' → early return) never deletes them (crash-sweep
-    # finding, tools/fuzz_crash.py). Deleted-but-uncommitted is always
-    # safe — both sidecars rebuild on demand.
+    # drop the optional vocabulary sidecar BEFORE any durable mutation:
+    # it describes the pre-fold index, and once the fold commits a
+    # stale copy silently misses the new docs/terms. Deleting it after
+    # the committing manifest append (as this fold used to) leaves a
+    # crash window where the fold is committed, the sidecar is stale,
+    # and the documented recovery (re-send the batch → 'unchanged' →
+    # early return) never deletes it (crash-sweep finding,
+    # tools/fuzz_crash.py). Deleted-but-uncommitted is always safe —
+    # the sidecar rebuilds on demand.
     from ..operators.index_build import _delete_path
 
     _delete_path(spark, paths.term_dict)
-    _delete_path(spark, paths.tier_index)
-    _delete_path(spark, paths.tier_meta)
     # intent markers BEFORE any table mutation: a crash anywhere in
     # this fold leaves these as the latest 'started' rows, and the
     # next extend/upsert/merge/build GCs the partial fold and

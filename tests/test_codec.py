@@ -1,6 +1,7 @@
 """Codec properties (FIXTURES.md F4): round-trip over seeded random
 doc-id sets (sizes 1..10000, gaps up to 2^40), block_max soundness,
-and the merge compactor's re-encode (Spark-free)."""
+tier codes folded into tfs, and the merge compactor's re-encode
+(Spark-free); plus the build's tier codes against the docs' tokens."""
 
 import numpy as np
 import pyarrow as pa
@@ -11,9 +12,14 @@ from mantic_sh_spark.functions import codec
 from mantic_sh_spark.functions.bm25 import B, K1
 
 
-def _encode(docs, tfs, dls, avgdl):
-    """One term's postings through the build's encoder → block rows."""
-    return codec.encode_rows([0], [1], [0], docs, tfs, dls, avgdl, K1, B)
+T = len(codec.DEFAULT_TIER_SPECS)
+
+
+def _encode(docs, tfs, dls, avgdl, codes=None):
+    """One term's postings through the build's encoder → block rows
+    (tier code T — no ladder window — unless given)."""
+    codes = np.full(len(docs), T) if codes is None else codes
+    return codec.encode_rows([0], [1], [0], docs, tfs, dls, codes, avgdl, K1, B)
 
 
 def _decode(rows, positions=False):
@@ -52,15 +58,18 @@ def test_block_stores_first_doc_once():
     tfs = rng.integers(1, 5, size=300)
     dls = rng.integers(10, 90, size=300)
     # groups of 1, 2, 130 and 167 postings → blocks of 1, 2, 128, 2, 128, 39
-    rb = codec.encode_rows([0, 1, 3, 133], [1, 2, 3, 4], [3] * 4, docs, tfs, dls, 50.0, K1, B)
+    codes = rng.integers(0, T + 1, size=300)
+    rb = codec.encode_rows([0, 1, 3, 133], [1, 2, 3, 4], [3] * 4, docs, tfs, dls, codes,
+                           50.0, K1, B)
     blocks = rb.to_pandas()
     assert blocks["n"].tolist() == [1, 2, 128, 2, 128, 39]
     for _, bl in blocks.iterrows():
         assert len(codec.varint_decode(bl.doc_gaps)) == bl.n - 1
         assert bl["nbytes"] == len(bl.doc_gaps) + len(bl.tfs) + len(bl.dls)
     assert blocks["doc_gaps"][0] == b""
-    d, t, l = _decode(rb)
+    d, t, l, c = _decode(rb)
     assert np.array_equal(d, docs) and np.array_equal(t, tfs) and np.array_equal(l, dls)
+    assert np.array_equal(c, codes)
     for b0, b1, p0, p1 in ((1, 4, 1, 133), (4, 6, 133, 300)):  # sliced Arrow columns
         sl = rb.slice(b0, b1 - b0)
         d = codec.decode_blocks(sl.column("n").to_numpy(), sl.column("first_doc").to_numpy(),
@@ -75,9 +84,9 @@ def test_block_stores_first_doc_once():
         _decode(v5)
     pos = np.arange(int(tfs.sum()))
     off = np.concatenate(([0], np.cumsum(tfs)))
-    v5p = codec.encode_rows([0], [1], [3], docs, tfs, dls, 50.0, K1, B,
+    v5p = codec.encode_rows([0], [1], [3], docs, tfs, dls, codes, 50.0, K1, B,
                             positions=(pos, off)).to_pandas()
-    assert np.array_equal(_decode(v5p, positions=True)[3], pos)
+    assert np.array_equal(_decode(v5p, positions=True)[4], pos)
     v5p["doc_gaps"] = [codec.varint_encode(np.array([f])) + g
                        for f, g in zip(v5p["first_doc"], v5p["doc_gaps"])]
     with pytest.raises(ValueError, match="varint values"):
@@ -103,15 +112,17 @@ def test_blocks_roundtrip_and_blockmax():
     docs = np.sort(rng.choice(10**9, size=n, replace=False))
     tfs = rng.integers(1, 60, size=n)
     dls = rng.integers(10, 800, size=n)
+    codes = rng.integers(0, T + 1, size=n)
     avgdl = float(dls.mean())
-    blocks = _encode(docs, tfs, dls, avgdl).to_pandas()
+    blocks = _encode(docs, tfs, dls, avgdl, codes).to_pandas()
     assert (blocks["n"] <= codec.BLOCK_SIZE).all()
     off = 0
     for _, bl in blocks.iterrows():
-        d, t, l = _decode(blocks.iloc[[_]])
+        d, t, l, c = _decode(blocks.iloc[[_]])
         assert np.array_equal(d, docs[off : off + bl.n])
         assert np.array_equal(t, tfs[off : off + bl.n])
         assert np.array_equal(l, dls[off : off + bl.n])
+        assert np.array_equal(c, codes[off : off + bl.n]) and bl.min_tier == c.min()
         assert bl.first_doc == d[0] and bl.last_doc == d[-1]
         assert bl["nbytes"] == len(bl.doc_gaps) + len(bl.tfs) + len(bl.dls)
         # soundness: block_max >= every member's tf_norm
@@ -138,7 +149,7 @@ def _compactor_input(rng):
     per-source runs (one per origin stride range, tiny ragged blocks)
     sorted by (tid, first_doc); term 3's source is ONE run over ranges
     0 and 2, so its blocks span the stride gap (a legacy compaction).
-    Returns (rows, {tid: (docs, tfs, dls, flat positions)})."""
+    Returns (rows, {tid: (docs, tfs, dls, tier codes, flat positions)})."""
     S = codec.SEG_STRIDE
     postings, parts = {}, []
     for tid in range(4):
@@ -150,12 +161,13 @@ def _compactor_input(rng):
                 for r in src]))
             tfs = rng.integers(1, 4, len(docs))
             dls = rng.integers(5, 50, len(docs))
+            codes = rng.integers(0, T + 1, len(docs))
             flat = np.concatenate([np.sort(rng.choice(60, t, replace=False)) for t in tfs])
             off = np.concatenate(([0], np.cumsum(tfs)))
             bs = int(rng.choice([2, 3, 5]))
-            parts.append(codec.encode_rows([0], [tid], [9], docs, tfs, dls, 20.0, K1, B, bs,
-                                           (flat, off)))
-            tparts.append((docs, tfs, dls, flat))
+            parts.append(codec.encode_rows([0], [tid], [9], docs, tfs, dls, codes, 20.0, K1, B,
+                                           bs, (flat, off)))
+            tparts.append((docs, tfs, dls, codes, flat))
         postings[tid] = tuple(np.concatenate(x) for x in zip(*tparts))
     rows = pa.Table.from_batches(parts).sort_by([("tid", "ascending"),
                                                  ("first_doc", "ascending")])
@@ -165,8 +177,9 @@ def _compactor_input(rng):
 def test_compact_stream_fn_regroups_and_purges(tmp_path):
     """The merge compactor fed RecordBatches of 1-3 rows (groups
     straddle batches) re-encodes exactly the input postings minus the
-    dead docs, positions included; only each group's last block is
-    short; split_ranges=True keeps every block in one stride range."""
+    dead docs, positions and tier codes included (min_tier re-derived
+    per block); only each group's last block is short; split_ranges=True
+    keeps every block in one stride range."""
     S = codec.SEG_STRIDE
     rng = np.random.default_rng(5)
     rows, postings = _compactor_input(rng)
@@ -190,15 +203,16 @@ def test_compact_stream_fn_regroups_and_purges(tmp_path):
                     avgdl, K1, B, block_size=bs, with_positions=True, split_ranges=split,
                     dead_src=(str(tomb), [0, 1]) if purge else None)
                 out = pa.Table.from_batches(list(run(iter(batches)))).to_pandas()
-                docs, tfs, dls, flat = _decode(out, positions=True)
+                docs, tfs, dls, codes, flat = _decode(out, positions=True)
                 tid_p = np.repeat(out["tid"].to_numpy(), out["n"].to_numpy())
                 off = np.concatenate(([0], np.cumsum(tfs)))
-                for tid, (d, t, l, f) in postings.items():
+                for tid, (d, t, l, c, f) in postings.items():
                     keep = ~np.isin(d, dead_ids) if purge else np.ones(len(d), dtype=bool)
                     sel = np.flatnonzero(tid_p == tid)
                     assert np.array_equal(docs[sel], d[keep]), (bs, split, purge, tid)
                     assert np.array_equal(tfs[sel], t[keep])
                     assert np.array_equal(dls[sel], l[keep])
+                    assert np.array_equal(codes[sel], c[keep])
                     got_pos = np.concatenate([flat[off[j]:off[j + 1]] for j in sel])
                     assert np.array_equal(got_pos, f[np.repeat(keep, t)])
                 first, last = out["first_doc"].to_numpy(), out["last_doc"].to_numpy()
@@ -207,11 +221,82 @@ def test_compact_stream_fn_regroups_and_purges(tmp_path):
                 assert (out["n"].to_numpy()[:-1][same_next] == bs).all()
                 assert (out["n"] <= bs).all() and (out["segment_id"] == 9).all()
                 # blocks are re-encoded at the merge-time avgdl
-                bmax = np.maximum.reduceat(codec.tf_norm(tfs, dls, avgdl, K1, B),
-                                           np.concatenate(([0], np.cumsum(out["n"])[:-1])))
+                bstarts = np.concatenate(([0], np.cumsum(out["n"])[:-1]))
+                bmax = np.maximum.reduceat(codec.tf_norm(tfs, dls, avgdl, K1, B), bstarts)
                 assert np.array_equal(out["block_max"].to_numpy(), bmax)
+                assert np.array_equal(out["min_tier"].to_numpy(),
+                                      np.minimum.reduceat(codes, bstarts))
                 if split:
                     assert (first // S == last // S).all()
                 else:
                     spans_seen |= bool((first // S != last // S).any())
     assert spans_seen  # the unsplit runs really built cross-range blocks
+
+
+def test_tier_code_folds_into_tf():
+    """Each posting's tier code rides in its tfs varint as tf·(T+1) + c:
+    it round-trips through encode_rows → decode_blocks beside a plain
+    tf, norms and block_max see only the plain tf, and a tf of 41 at
+    the worst code still takes one byte where 42 takes two."""
+    docs = np.arange(6, dtype=np.int64) * 3
+    tfs = np.array([1, 41, 42, 7, 41, 42])
+    dls = np.full(6, 20)
+    codes = np.array([0, T, T, 1, 0, 0])
+    rb = codec.encode_rows([0, 3], [1, 2], [0, 0], docs, tfs, dls, codes, 20.0, K1, B)
+    d, t, l, c = _decode(rb)
+    assert np.array_equal(t, tfs) and np.array_equal(c, codes) and c.dtype == np.int8
+    blocks = rb.to_pandas()
+    assert blocks["min_tier"].tolist() == [0, 0]
+    norms = codec.tf_norm(tfs, dls, 20.0, K1, B)
+    assert blocks["block_max"].tolist() == [norms[:3].max(), norms[3:].max()]
+    plain = _encode(docs, tfs, dls, 20.0).to_pandas()  # every code T
+    assert [len(codec.varint_encode(np.array([tf * (T + 1) + T]))) for tf in (41, 42)] == [1, 2]
+    assert len(blocks["tfs"][0]) == 1 + 1 + 2  # tf 1, 41 at code T, 42 at code T
+    assert plain["min_tier"].tolist() == [T]
+
+
+def _expected_codes(tokens, term):
+    """The tier code of `term` in a doc: the first ladder window holding
+    its first occurrence, T when none does."""
+    p = tokens.index(term)
+    return next((i for i, (_n, _s, w) in enumerate(codec.DEFAULT_TIER_SPECS) if p < w), T)
+
+
+@pytest.mark.parametrize("positional", [False, True])
+def test_build_tier_codes_match_tokens(spark, tmp_path, positional):
+    """Every posting's decoded tier code equals the code computed from
+    the doc's own tokens — on the fresh build's segments (the
+    positional path takes it from the first position, the other from a
+    prefix probe) and on the segments an upsert fold adds — and each
+    block's min_tier is its postings' minimum."""
+    import pyarrow.dataset as ds
+    from pyspark.sql import functions as F
+
+    from mantic_sh_spark.functions.termhash import term_tid
+    from mantic_sh_spark.functions.tokenize import tokenize
+    from mantic_sh_spark.operators.index_build import build_index
+    from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
+    from mantic_sh_spark.streaming.incremental import upsert_pages
+
+    cfg = SynthConfig(n_docs=60, vocab_size=80, seed=21)
+    idx = str(tmp_path / "idx")
+    build_index(spark, gen_pages(spark, cfg, partitions=2), idx, n_segments=2,
+                block_size=4, store_positions=positional)
+    more = gen_pages(spark, SynthConfig(n_docs=20, vocab_size=80, seed=22), partitions=1)
+    upsert_pages(spark, idx, more.withColumn("url", F.concat("url", F.lit("-new"))),
+                 n_new_segments=1)
+
+    docs = ds.dataset(f"{idx}/docs", format="parquet", partitioning="hive").to_table(
+        columns=["doc_id", "text"]).to_pydict()
+    toks = {d: tokenize(t) for d, t in zip(docs["doc_id"], docs["text"])}
+    tid_term = {term_tid(t): t for ts in toks.values() for t in ts}
+    blocks = ds.dataset(f"{idx}/postings", format="parquet",
+                        partitioning="hive").to_table().to_pandas()
+    assert blocks["segment_id"].nunique() == 3  # the upsert's segment too
+    d, _tf, _dl, c = _decode(blocks)
+    tid_p = np.repeat(blocks["tid"].to_numpy(), blocks["n"].to_numpy())
+    want = [_expected_codes(toks[int(doc)], tid_term[int(t)]) for doc, t in zip(d, tid_p)]
+    assert np.array_equal(c, want)
+    assert set(want) == set(range(T + 1))
+    bstarts = np.concatenate(([0], np.cumsum(blocks["n"])[:-1]))
+    assert np.array_equal(blocks["min_tier"].to_numpy(), np.minimum.reduceat(c, bstarts))

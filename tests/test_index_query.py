@@ -301,13 +301,14 @@ def test_format_marker_gates_mutations(spark, tmp_path):
     records INDEX_FORMAT; extend/merge against a different (or absent —
     pre-v4) recorded version refuse with a rebuild instruction instead
     of appending mixed-schema files (review r4 finding). Spark-plane
-    queries read no marker (the serving reader's marker gate is
-    test_serve's; the block decoder raises on old-layout bytes)."""
+    queries refuse it too — their blocks would decode wrong (the
+    serving reader's marker gate is test_serve's)."""
     import pandas as pd
     import pytest
 
     from mantic_sh_spark.operators.index_build import INDEX_FORMAT, build_index
     from mantic_sh_spark.operators.merge import merge_segments
+    from mantic_sh_spark.operators.phrase import phrase_topk
     from mantic_sh_spark.operators.wand import wand_topk
     from mantic_sh_spark.sources.catalog import IndexPaths
     from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
@@ -330,8 +331,10 @@ def test_format_marker_gates_mutations(spark, tmp_path):
         extend_index(spark, idx, pages, n_new_segments=1)
     with pytest.raises(RuntimeError, match="format v1"):
         merge_segments(spark, idx, [0, 1], purge=True)
-    # queries still answer
-    assert wand_topk(spark, idx, [(0, "w1x")], k=3).count() > 0
+    with pytest.raises(RuntimeError, match="format v1"):
+        wand_topk(spark, idx, [(0, "w1x")], k=3)
+    with pytest.raises(RuntimeError, match="format v1"):
+        phrase_topk(spark, idx, [(0, "w1x w2x")], k=3)
 
 
 def test_failed_docs_commit_poisons_postings_commits(spark, small_corpus, tmp_path, monkeypatch):
@@ -451,7 +454,8 @@ def _kernel_case(seed):
     interleaved sources, so one term's blocks overlap; block sizes 2
     and 3 make many tiny intervals; every fourth case has all-equal
     per-term scores, so interval bounds tie θ and only the doc-id
-    tie-break decides."""
+    tie-break decides. Postings carry random tier codes, skewed to the
+    best tiers so multi-term docs reach them."""
     from mantic_sh_spark.functions.codec import SEG_STRIDE, encode_rows
 
     rng = np.random.default_rng(seed)
@@ -466,16 +470,17 @@ def _kernel_case(seed):
     for t in range(int(rng.integers(1, 5))):
         sel = np.sort(rng.choice(n_docs, int(rng.integers(1, n_docs)), replace=False))
         tf = np.ones(len(sel), dtype=np.int64) if ties else rng.integers(1, 6, len(sel))
-        postings[f"t{t}"] = (ids[sel], tf, dl[sel])
+        code = rng.choice(3, len(sel), p=[0.6, 0.3, 0.1])
+        postings[f"t{t}"] = (ids[sel], tf, dl[sel], code)
         sources = [np.arange(len(sel))]
         if rng.random() < 0.5:  # two interleaved sources → overlapping blocks
             half = rng.random(len(sel)) < 0.5
             sources = [np.flatnonzero(half), np.flatnonzero(~half)]
         by_term[f"t{t}"] = pd.concat(
-            [encode_rows([0], [t], [0], ids[sel][src], tf[src], dl[sel][src],
+            [encode_rows([0], [t], [0], ids[sel][src], tf[src], dl[sel][src], code[src],
                          build_avgdl, 1.2, 0.75, bs).to_pandas()
              for src in sources if len(src)], ignore_index=True
-        )[["first_doc", "last_doc", "block_max", "n", "doc_gaps", "tfs", "dls"]]
+        )[["first_doc", "last_doc", "block_max", "min_tier", "n", "doc_gaps", "tfs", "dls"]]
     idf_map = {t: 1.0 if ties else float(rng.uniform(0.1, 3.0)) for t in by_term}
     dead = None
     if seed % 2:
@@ -490,7 +495,7 @@ def _brute_scores(postings, idf_map, avgdl, dead):
     from mantic_sh_spark.functions.codec import tf_norm
 
     acc: dict[int, float] = {}
-    for t, (d, tf, dl) in postings.items():
+    for t, (d, tf, dl, _code) in postings.items():
         for doc, s in zip(d.tolist(), (idf_map[t] * tf_norm(tf, dl, avgdl, 1.2, 0.75)).tolist()):
             acc[doc] = acc.get(doc, 0.0) + s
     return {d: float(np.round(s, 4)) for d, s in acc.items()
@@ -544,6 +549,55 @@ def test_segment_topk_matches_brute_force():
             assert partial == ranked[:7], seed
 
 
+def test_segment_topk_tier_ladder_matches_brute_force():
+    """The kernel's tier-ladder mode equals a brute-force ladder on the
+    same seeded frames: a doc's tier is the max of its codes over ALL
+    query terms (T when it lacks one, so T for every doc when a query
+    term is absent), ranked (tier asc, score desc, doc_id asc) — cold,
+    from a decode cache the plain mode filled, and under a deadline
+    of 0 (exact tiers and scores; truncated only when intervals were
+    left)."""
+    from mantic_sh_spark.operators.wand import segment_topk
+
+    class Cache(dict):
+        def put(self, key, value):
+            self[key] = value
+
+    T, seen = 2, set()
+    for seed in range(60):
+        by_term, postings, idf_map, avgdl, bf, dead = _kernel_case(seed)
+        brute = _brute_scores(postings, idf_map, avgdl, dead)
+        codes: dict[int, list[int]] = {}
+        for d, _tf, _dl, code in postings.values():
+            for doc, c in zip(d.tolist(), code.tolist()):
+                codes.setdefault(doc, []).append(c)
+        terms = sorted(by_term)
+        for absent in (False, True):
+            qterms = terms + ["zzabsent"] * absent
+            tier = {d: max(codes[d]) if len(codes[d]) == len(qterms) else T for d in brute}
+            ranked = sorted(((d, tier[d], s) for d, s in brute.items()),
+                            key=lambda x: (x[1], -x[2], x[0]))
+            cache = Cache()
+            segment_topk(by_term, terms, idf_map, avgdl, len(brute) + 5, 1.2, 0.75,
+                         bound_factor=bf, dead=dead, decode_cache=cache)
+            for k in (1, 7, 50, len(brute) + 5):
+                for dc in (None, cache):
+                    got = segment_topk(by_term, qterms, idf_map, avgdl, k, 1.2, 0.75,
+                                       bound_factor=bf, dead=dead, decode_cache=dc, tiers=T)
+                    assert got == ranked[:k], (seed, absent, k, dc is None)
+            seen |= {t for _, t, _ in ranked}
+            stats = {}
+            partial = segment_topk(by_term, qterms, idf_map, avgdl, 7, 1.2, 0.75,
+                                   bound_factor=bf, dead=dead, stats=stats, deadline=0.0,
+                                   tiers=T)
+            assert len(partial) <= 7
+            assert partial == sorted(partial, key=lambda x: (x[1], -x[2], x[0]))
+            assert all((tier[d], brute[d]) == (t, s) for d, t, s in partial), seed
+            if not stats.get("truncated"):
+                assert partial == ranked[:7], seed
+    assert seen == {0, 1, T}
+
+
 def test_segment_topk_visits_intervals_that_tie_theta():
     """An interval whose bound only TIES θ must still be visited: its
     docs can equal the k-th score with a lower doc id. Dense term a over
@@ -557,8 +611,9 @@ def test_segment_topk_visits_intervals_that_tie_theta():
     def frame(docs):
         docs = np.asarray(docs, dtype=np.int64)
         ones = np.ones(len(docs), dtype=np.int64)
-        return encode_rows([0], [0], [0], docs, ones, ones * 10, 10.0, 1.2, 0.75).to_pandas()[
-            ["first_doc", "last_doc", "block_max", "n", "doc_gaps", "tfs", "dls"]]
+        return encode_rows([0], [0], [0], docs, ones, ones * 10, ones * 2, 10.0, 1.2,
+                           0.75).to_pandas()[
+            ["first_doc", "last_doc", "block_max", "min_tier", "n", "doc_gaps", "tfs", "dls"]]
 
     by_term = {"a": frame(range(100)), "b": frame([90, 95, 99])}
     got = segment_topk(by_term, ["a", "b"], {"a": 1.0, "b": 1.0}, 10.0, 5, 1.2, 0.75)

@@ -897,11 +897,9 @@ def test_mcp_tiered_search(spark, small_corpus):
     import json
 
     from mantic_sh_spark.mcp import McpServer
-    from mantic_sh_spark.operators.tiers import build_tier_index
     from mantic_sh_spark.serve import IndexReader
 
     idx = small_corpus["index_dir"]
-    build_tier_index(spark, idx)
     reader = IndexReader(idx)
     srv = McpServer(idx, reader=reader)
     resp = srv.handle({"jsonrpc": "2.0", "id": 1, "method": "tools/call",
@@ -922,6 +920,42 @@ def test_mcp_tiered_search(spark, small_corpus):
                                                  "phrase": True}}})
     assert resp2["result"]["isError"]
     assert "exclusive" in resp2["result"]["content"][0]["text"]
+
+
+def test_mcp_tiered_search_passes_budget(spark, small_corpus):
+    """search_files tiered=true takes budgetMs like any top-k: the
+    deadline reaches IndexReader.tiered_topk (a 0 ms budget stops the
+    kernel after its first round), the answer carries exact tiers and
+    scores, and a cut answer is flagged truncated."""
+    import json
+
+    from mantic_sh_spark.mcp import McpServer
+    from mantic_sh_spark.serve import IndexReader
+
+    idx = small_corpus["index_dir"]
+    reader = IndexReader(idx)
+    srv = McpServer(idx, reader=reader)
+    st = small_corpus["cfg"].stop_term
+    full = {d: (t, s) for d, t, s in reader.tiered_topk(st, k=10**6)}
+    seen = []
+    orig = reader.tiered_topk
+
+    def spy(query, k=10, budget_ms=None):
+        seen.append(budget_ms)
+        return orig(query, k=k, budget_ms=budget_ms)
+
+    reader.tiered_topk = spy
+    resp = srv.handle({"jsonrpc": "2.0", "id": 1, "method": "tools/call",
+                       "params": {"name": "search_files",
+                                  "arguments": {"query": st, "tiered": True,
+                                                "budgetMs": 0, "maxResults": 5}}})
+    assert not resp["result"]["isError"] and seen == [0.0]
+    payload = json.loads(resp["result"]["content"][0]["text"])
+    got = [(r["doc_id"], r["tier"], r["score"]) for r in payload["results"]]
+    assert got and all(full[d] == (t, s) for d, t, s in got)
+    assert payload.get("truncated", False) == reader.truncated
+    if not reader.truncated:
+        assert got == orig(st, k=5)
 
 
 def test_recent_queries_tie_order_and_corrupt_fragment(tmp_path, monkeypatch):

@@ -1,8 +1,8 @@
-"""R1 tier ladder serving form (operators/tiers.py + IndexReader
-.tiered_topk): the materialized tier containment index must serve
-results value-identical to the batch full-corpus mode
-(operators/query.tiered_topk), and invalidate on mutations like the
-other optional sidecars."""
+"""R1 tier ladder serving form (IndexReader.tiered_topk over the tier
+codes the build folds into the postings, format v7): results must be
+value-identical to the batch full-corpus mode
+(operators/query.tiered_topk) on fresh, mutated, tombstoned and
+fold-crashed indexes, and under a budget_ms deadline."""
 
 import os
 
@@ -29,8 +29,9 @@ def test_tiered_serving_matches_batch(spark, small_corpus):
     fields = [f"{name}_tokens" for name, _s, _w in DEFAULT_TIER_SPECS]
     reader = IndexReader(idx)
 
+    st = small_corpus["cfg"].stop_term
     saw_tier_match = False
-    for q in ("w1x", "w2x w3x", "w0x w1x w5x", "qqabsentterm w1x"):
+    for q in ("w1x", "w2x w3x", "w0x w1x w5x", "qqabsentterm w1x", st, f"{st} w1x"):
         want = [
             (r.doc_id, r.tier, r.score)
             for r in tiered_topk(spark, docs, [(0, q)], tier_fields=fields, k=10)
@@ -39,6 +40,19 @@ def test_tiered_serving_matches_batch(spark, small_corpus):
         got = reader.tiered_topk(q, k=10)
         assert got == want, q
         saw_tier_match |= any(t < len(fields) for _, t, _ in want)
+        if q.startswith("qqabsent"):  # no doc holds every term: all final tier
+            assert want and {t for _, t, _ in want} == {len(fields)}
+
+        # budget_ms=0 cuts the kernel after its first round: every
+        # returned doc carries its exact tier and score, and the answer
+        # is partial only when the reader says so
+        part = reader.tiered_topk(q, k=10, budget_ms=0)
+        exact = {r.doc_id: (r.tier, r.score) for r in tiered_topk(
+            spark, docs, [(0, q)], tier_fields=fields, k=10**6).collect()}
+        assert len(part) <= 10 and all(exact[d] == (t, s) for d, t, s in part), q
+        assert part == sorted(part, key=lambda x: (x[1], -x[2], x[0]))
+        if not reader.truncated:
+            assert part == want, q
     # the comparison must have exercised a real tier hit, not just the
     # final-tier BM25 path
     assert saw_tier_match
@@ -58,17 +72,28 @@ def test_tiered_serving_matches_batch(spark, small_corpus):
              for i, (d, t, s) in enumerate(reader.tiered_topk("w1x", k=4))]
     assert resp["results"] == json.loads(json.dumps(want4))
 
-    # no tier index → instructive error
-    reader2 = IndexReader(idx)
-    reader2.paths = type(reader.paths)(str(idx) + "_nope")
-    with pytest.raises(FileNotFoundError, match="tier index"):
-        reader2.tiered_topk("w1x")
+
+def test_build_tier_index_checks_format_and_ladder(spark, small_corpus, tmp_path):
+    """build_tier_index runs no job: it returns the ladder size for the
+    ladder the format encodes, and refuses any other ladder or an index
+    of another format."""
+    import shutil
+
+    idx = small_corpus["index_dir"]
+    assert build_tier_index(spark, idx) == len(DEFAULT_TIER_SPECS)
+    with pytest.raises(ValueError, match="tier ladder"):
+        build_tier_index(spark, idx, specs=(("title", "text", 10),))
+    old = str(tmp_path / "old")
+    shutil.copytree(idx, old)
+    shutil.rmtree(f"{old}/format_version")
+    with pytest.raises(RuntimeError, match="format v0"):
+        build_tier_index(spark, old)
 
 
 def test_tiered_excludes_deleted_docs(spark, tmp_path):
     """Liveness on the tiered path: tombstoning a tier-matched doc (no
-    purge, tier index left in place) must drop it from tiered serving
-    after refresh — the per-segment sidecar check inside tiered_topk."""
+    purge) must drop it from tiered serving after refresh — the
+    kernel's DeadDocs check, as for every top-k."""
     from mantic_sh_spark.operators.delete import delete_docs
     from mantic_sh_spark.operators.index_build import build_index
     from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
@@ -77,7 +102,6 @@ def test_tiered_excludes_deleted_docs(spark, tmp_path):
     pages = gen_pages(spark, cfg, partitions=2)
     idx = str(tmp_path / "idx")
     build_index(spark, pages, idx, n_segments=2)
-    build_tier_index(spark, idx)
 
     reader = IndexReader(idx)
     before = reader.tiered_topk("w1x", k=6)
@@ -93,8 +117,10 @@ def test_tiered_excludes_deleted_docs(spark, tmp_path):
 
 
 def test_tier_index_invalidated_by_mutation(spark, tmp_path):
+    """The ladder lives in the postings, so a mutation can never leave
+    it stale: after an extend, tiered serving equals the batch mode
+    over the extended corpus with no rebuild step."""
     from mantic_sh_spark.operators.index_build import build_index
-    from mantic_sh_spark.sources.catalog import IndexPaths
     from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
     from mantic_sh_spark.streaming.incremental import extend_index
 
@@ -102,17 +128,12 @@ def test_tier_index_invalidated_by_mutation(spark, tmp_path):
     pages = gen_pages(spark, cfg, partitions=2)
     idx = str(tmp_path / "idx")
     build_index(spark, pages, idx, n_segments=1)
-    build_tier_index(spark, idx)
-    paths = IndexPaths(idx)
-    assert os.path.isdir(paths.tier_index) and os.path.isdir(paths.tier_meta)
+    reader = IndexReader(idx)
+    before = reader.tiered_topk("w1x w2x", k=8)
 
     more = gen_pages(spark, SynthConfig(n_docs=20, vocab_size=100, seed=8), partitions=1)
     extend_index(spark, idx, more, n_new_segments=1)
-    assert not os.path.isdir(paths.tier_index)  # stale tiers dropped
-    assert not os.path.isdir(paths.tier_meta)
-
-    # rebuild covers the extended corpus: serving == batch again
-    build_tier_index(spark, idx)
+    reader.refresh()
     docs = _batch_docs(spark, idx)
     fields = [f"{name}_tokens" for name, _s, _w in DEFAULT_TIER_SPECS]
     want = [
@@ -120,15 +141,16 @@ def test_tier_index_invalidated_by_mutation(spark, tmp_path):
         for r in tiered_topk(spark, docs, [(0, "w1x w2x")], tier_fields=fields, k=8)
         .orderBy("rank").collect()
     ]
-    assert IndexReader(idx).tiered_topk("w1x w2x", k=8) == want
+    assert reader.tiered_topk("w1x w2x", k=8) == want
+    assert want != before  # the extension reached the ladder
 
 
 def test_tier_index_gates_crashed_extend_fold(spark, tmp_path, monkeypatch):
-    """A tier index built while a crashed extend fold awaits GC must NOT
-    bake the fold's orphan docs into tier membership (ADVICE r4): tier
-    matches outrank every final-tier hit, so an orphan that tier-matches
-    would surface even though every gated reader path excludes it.
-    build_tier_index must read gated_docs, like build_term_dictionary."""
+    """While a crashed extend fold awaits GC, its orphan docs must NOT
+    tier-match (ADVICE r4): tier matches outrank every final-tier hit,
+    so an orphan that tier-matches would surface even though every
+    gated reader path excludes it. The ladder rides in the postings, so
+    the reader's manifest gating of the fold's segments covers it."""
     from mantic_sh_spark.operators import index_build as ib
     from mantic_sh_spark.operators.index_build import build_index
     from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
@@ -138,7 +160,6 @@ def test_tier_index_gates_crashed_extend_fold(spark, tmp_path, monkeypatch):
     pages = gen_pages(spark, cfg, partitions=2)
     idx = str(tmp_path / "idx")
     build_index(spark, pages, idx, n_segments=2)
-    build_tier_index(spark, idx)
     before = IndexReader(idx).tiered_topk("w1x w2x", k=8)
 
     # crash the fold at the deferred stats commit: every table dir
@@ -159,16 +180,15 @@ def test_tier_index_gates_crashed_extend_fold(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert os.path.isdir(f"{idx}/docs/segment_id=2")  # orphan docs exist
 
-    # rebuilding the tier index mid-crash must reproduce the gated view:
-    # no orphan doc tier-matches, and the shared-vocab ladder is stable
-    build_tier_index(spark, idx)
+    # the gated view: no orphan doc tier-matches, and the shared-vocab
+    # ladder is stable
     reader = IndexReader(idx)
     assert reader.tiered_topk("zzzorphan", k=8) == []
     assert reader.tiered_topk("w1x w2x", k=8) == before
 
 
 def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
-    """_scores_array (the tier ladder's per-doc scorer) equals a
+    """_scores_array (the session boost's per-doc scorer) equals a
     brute-force BM25 scorer over the docs' own tokens, for every live
     doc — docs matching no term score 0.0, an absent term adds nothing
     — on each of its routes: a cold single-pass decode (which installs
@@ -233,125 +253,17 @@ def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
     assert decodes == []
 
 
-def test_tier_budget_guard(spark, tmp_path, monkeypatch):
-    """Head-term memory budgets on the tiered serving path: a term
-    whose tier doc list exceeds _TIER_DF_CAP is intersected by a
-    STREAMING scan (never materialized) with rank-identical results; a
-    field where EVERY query term is over-cap refuses loudly
-    (TierBudgetExceeded) instead of materializing a corpus-share
-    array; a tiny _SWEEP_DF_CAP splits the scorer's decode into
-    single-block passes with identical scores."""
-    import pandas as pd
-
-    from mantic_sh_spark.operators.index_build import build_index
-    from mantic_sh_spark.serve import TierBudgetExceeded
-
-    n = 64
-    texts = []
-    for i in range(n):
-        # "common" leads every title window; "rare" only docs 5 and 9
-        head = "common rare" if i in (5, 9) else "common filler"
-        texts.append(f"{head} w{i % 7}x padder tokens follow here "
-                     f"body{i} trailing words beyond the windows")
-    pages = spark.createDataFrame(pd.DataFrame({
-        "url": [f"https://ex.com/t{i}" for i in range(n)],
-        "warc_ts": pd.to_datetime(["2026-01-01"] * n),
-        "html": [b""] * n,
-        "text": texts,
-        "lang": ["en"] * n,
-    }))
-    idx = str(tmp_path / "idx")
-    build_index(spark, pages, idx, n_segments=2)
-    build_tier_index(spark, idx)
-
-    base = IndexReader(idx)
-    want = base.tiered_topk("common rare", k=10)
-    assert want and any(t == 0 for _, t, _ in want)  # real tier hits
-
-    calls = []
-    orig = IndexReader._tier_stream_intersect
-
-    def spy(d, tid, cand):
-        calls.append(int(tid))
-        return orig(d, tid, cand)
-
-    monkeypatch.setattr(IndexReader, "_tier_stream_intersect", staticmethod(spy))
-
-    guarded = IndexReader(idx)
-    guarded._TIER_DF_CAP = 2  # df(rare)=2 materializes; "common" streams
-    assert guarded.tiered_topk("common rare", k=10) == want
-    assert calls  # the streaming path actually ran
-    # counted into totals even though the <k fill path ran (2 matches)
-    assert guarded.counters()["total"]["tier_stream_intersects"] == len(calls)
-    assert guarded.tiered_topk("common rare", k=10) == want  # repeat: stable
-
-    # every term over-cap in a tier field → loud refusal, not an OOM
-    refuser = IndexReader(idx)
-    refuser._TIER_DF_CAP = 1
-    with pytest.raises(TierBudgetExceeded, match="tier field"):
-        refuser.tiered_topk("common", k=5)
-
-    # scorer budget: single-block decode passes, same scores
-    swp = IndexReader(idx)
-    swp._SWEEP_DF_CAP = 1
-    assert swp.tiered_topk("common rare", k=10) == want
-
-
-def test_tier_budget_skips_later_fields_once_topk_pinned(spark, tmp_path):
-    """A query whose top k is already pinned by an earlier tier must
-    NEVER refuse on a later all-over-cap field (later tiers sort below
-    k earlier-tier docs, so neither the probe, the stream, nor the
-    refusal can change the answer). The lead window (30) is a superset
-    of the title window (8), so a term placed at positions 1 and ~11
-    has a small title count but a large lead count."""
-    import pandas as pd
-
-    from mantic_sh_spark.operators.index_build import build_index
-
-    texts = []
-    for i in range(12):   # xterm inside the title window
-        texts.append(f"xterm lead{i} words here pad pad pad pad tail{i}")
-    for i in range(20):   # xterm at position 11: lead window only
-        texts.append("a1 a2 a3 a4 a5 a6 a7 a8 a9 a10 xterm "
-                     f"mid{i} trailing words")
-    for i in range(8):    # filler, no xterm
-        texts.append(f"filler only document number f{i} nothing else")
-    n = len(texts)
-    pages = spark.createDataFrame(pd.DataFrame({
-        "url": [f"https://ex.com/p{i}" for i in range(n)],
-        "warc_ts": pd.to_datetime(["2026-01-01"] * n),
-        "html": [b""] * n,
-        "text": texts,
-        "lang": ["en"] * n,
-    }))
-    idx = str(tmp_path / "idx")
-    build_index(spark, pages, idx, n_segments=2)
-    build_tier_index(spark, idx)
-
-    base = IndexReader(idx)
-    want = base.tiered_topk("xterm", k=5)
-    assert len(want) == 5 and all(t == 0 for _, t, _ in want)
-
-    guarded = IndexReader(idx)
-    # title count (12) == cap → materializes; lead count (32) > cap →
-    # the lead field is ALL-over-cap, but tier 0 already pinned the
-    # top 5, so the query must answer (pre-fix: TierBudgetExceeded)
-    guarded._TIER_DF_CAP = 12
-    assert guarded.tiered_topk("xterm", k=5) == want
-
-
 def test_tier_skip_check_masks_tombstones(spark, tmp_path):
-    """The earlier-tiers-pin-top-k skip must count only LIVE docs
-    (r5 advice): with enough tier-0 matches tombstoned that the live
-    pinned count < k, a later all-over-cap field must surface its
-    (correct, loud) refusal — not be skipped on the dead-inflated
-    count, which silently served later-tier docs as WAND fill
-    (tier n_tiers) instead of their real tier."""
+    """The kernel's interval skip must count only LIVE docs (r5
+    advice): with enough tier-0 matches tombstoned that the live count
+    < k, the next slot is the real lead-window (tier 1) doc — dead
+    tier-0 docs must not raise θ and cut the tier-1 intervals. Tier
+    windows are checked at their edges: position 0 is in the title
+    window (8), position 10 only in the lead window (30)."""
     import pandas as pd
 
     from mantic_sh_spark.operators.delete import delete_docs
     from mantic_sh_spark.operators.index_build import build_index
-    from mantic_sh_spark.serve import TierBudgetExceeded
 
     texts = []
     for i in range(12):   # xterm inside the title window → tier 0
@@ -370,65 +282,30 @@ def test_tier_skip_check_masks_tombstones(spark, tmp_path):
         "lang": ["en"] * n,
     }))
     idx = str(tmp_path / "idx")
-    build_index(spark, pages, idx, n_segments=2)
-    build_tier_index(spark, idx)
+    build_index(spark, pages, idx, n_segments=2, block_size=4)
 
-    tier0 = [d for d, t, _ in IndexReader(idx).tiered_topk("xterm", k=12)
-             if t == 0]
-    assert len(tier0) == 12
+    got = IndexReader(idx).tiered_topk("xterm", k=40)
+    assert [t for _, t, _ in got] == [0] * 12 + [1] * 20
+    tier0 = [d for d, t, _ in got if t == 0]
     delete_docs(spark, idx, doc_ids=tier0[:8])  # live tier-0 = 4 < k
 
-    control = IndexReader(idx)
-    want = control.tiered_topk("xterm", k=5)
-    # 4 live tier-0 docs, then a real LEAD-window (tier 1) doc — the
-    # pre-fix skip served that slot as a tier-2 WAND fill instead
+    want = IndexReader(idx).tiered_topk("xterm", k=5)
+    # 4 live tier-0 docs, then a real LEAD-window (tier 1) doc
     assert [t for _, t, _ in want] == [0, 0, 0, 0, 1]
     assert not set(tier0[:8]) & {d for d, _, _ in want}
-
-    guarded = IndexReader(idx)
-    # title list (12) == cap → materializes; lead list (32) > cap → the
-    # lead field is all-over-cap. Live pinned docs (4) < k, so the skip
-    # must NOT fire and the budget refusal must surface loudly.
-    guarded._TIER_DF_CAP = 12
-    with pytest.raises(TierBudgetExceeded, match="tier field"):
-        guarded.tiered_topk("xterm", k=5)
+    fields = [f"{name}_tokens" for name, _s, _w in DEFAULT_TIER_SPECS]
+    batch = [(r.doc_id, r.tier, r.score) for r in tiered_topk(
+        spark, _batch_docs(spark, idx), [(0, "xterm")], tier_fields=fields, k=13)
+        .orderBy("rank").collect() if r.doc_id not in set(tier0[:8])]
+    assert want == batch[:5]
 
 
 def test_tiered_resets_truncated(spark, small_corpus):
     """The thread-local ST4 flag must reset per query on the tiered
     path too: a prior budget-truncated query's True must not leak into
-    a complete tiered answer (the ≥k branch never runs topk, which is
-    where the other impls' reset lived)."""
+    a complete tiered answer."""
     idx = small_corpus["index_dir"]
-    build_tier_index(spark, idx)
     reader = IndexReader(idx)
     reader.truncated = True  # simulate a prior deadline-truncated query
-    got = reader.tiered_topk("w1x", k=1)  # tier matches ≥ k: no fill
+    got = reader.tiered_topk("w1x", k=1)
     assert got and reader.truncated is False
-
-
-def test_tier_build_crash_state_refuses_then_rebuild_heals(spark, tmp_path):
-    """tier_index_meta is written LAST by build_tier_index, so every
-    mid-build crash leaves (possibly partial) field dirs with no meta.
-    Readers must refuse that state with the rebuild instruction —
-    never serve from partial tier fields — and a rebuild fully heals."""
-    import shutil
-
-    from mantic_sh_spark.operators.index_build import build_index
-    from mantic_sh_spark.sources.catalog import IndexPaths
-    from mantic_sh_spark.sources.synth import SynthConfig, gen_pages
-
-    pages = gen_pages(spark, SynthConfig(n_docs=80, vocab_size=100, seed=5),
-                      partitions=2)
-    idx = str(tmp_path / "idx")
-    build_index(spark, pages, idx, n_segments=2)
-    build_tier_index(spark, idx)
-    want = IndexReader(idx).tiered_topk("w1x w2x", k=8)
-
-    # the crash-equivalent state: fields on disk, meta gone
-    shutil.rmtree(IndexPaths(idx).tier_meta)
-    with pytest.raises(FileNotFoundError, match="tier index"):
-        IndexReader(idx).tiered_topk("w1x w2x", k=8)
-
-    build_tier_index(spark, idx)
-    assert IndexReader(idx).tiered_topk("w1x w2x", k=8) == want

@@ -7,16 +7,19 @@ no Spark on the query path) must equal the distributed engine. A
 budget_ms=0 reader answer (a deadline that cuts the kernel after its
 first round) must carry exact scores.
 
-Every case also builds the tier containment index and checks
-tiered serving (IndexReader.tiered_topk) against the batch operator
-(operators/query.tiered_topk) twice: with the default per-doc scorer
-(one decode pass per term, reusing the top-k kernel's decode cache)
-and with a forced multi-pass one (_SWEEP_DF_CAP shrunk so every
-decode pass holds one block) — then TOMBSTONES the head of several
-rankings and re-checks WAND, serving, and tiered identity against the
-deleted-filtered oracles (stale tier membership must be masked by the
-reader's tombstone set; collection stats stay pre-delete on both sides
-by contract).
+Every case also checks tiered serving (IndexReader.tiered_topk — the
+same kernel over the tier codes in the postings) against the batch
+operator (operators/query.tiered_topk), incl. a stop-term head query
+and an absent-term query, and the per-doc scorer behind session boosts
+(_scores_for_docs, which checks the budget_ms=0 answers' scores) twice:
+with its default single pass and with a forced multi-pass one
+(_SWEEP_DF_CAP shrunk so every decode pass holds one block) — then
+TOMBSTONES the head of several rankings and re-checks WAND, serving,
+and tiered identity against the deleted-filtered oracles (collection
+stats stay pre-delete on both sides by contract). Every third case
+then UPSERTS modified versions of a few head docs (tombstones + a fresh
+segment) and re-checks tiered identity, then PURGES with a merge of
+every segment and checks it once more.
 
 Merging cases first tombstone a few head docs and THEN run the
 non-purge merge, so their tombstones re-home under the merge's dst
@@ -53,10 +56,11 @@ from mantic_sh_spark.operators.delete import delete_docs
 from mantic_sh_spark.operators.phrase import phrase_topk
 from mantic_sh_spark.operators.query import bm25_topk
 from mantic_sh_spark.operators.query import tiered_topk as batch_tiered
-from mantic_sh_spark.operators.tiers import DEFAULT_TIER_SPECS, build_tier_index
+from mantic_sh_spark.operators.tiers import DEFAULT_TIER_SPECS
 from mantic_sh_spark.operators.wand import wand_topk
 from mantic_sh_spark.serve import IndexReader
 from mantic_sh_spark.sources.synth import SynthConfig, gen_pages, gen_queries
+from mantic_sh_spark.streaming.incremental import upsert_pages
 
 spark = get_spark(cores=8)
 fails = 0
@@ -103,9 +107,8 @@ def _minus(rows, dead, k):
     return out
 
 
-def _tiered_identity(readers, tqueries, want, k):
-    return all(r.tiered_topk(q, k=k) == want.get(qid, [])
-               for qid, q in tqueries for r in readers)
+def _tiered_identity(reader, tqueries, want, k):
+    return all(reader.tiered_topk(q, k=k) == want.get(qid, []) for qid, q in tqueries)
 
 
 def _merge(idx, srcs, dst, legacy):
@@ -186,19 +189,18 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         for qid, q in queries
     ) and _budget0_exact(reader, queries, 8)
     overlap = any(_overlapping(reader, tokenize_query(q)) for _, q in queries)
-    # tiered serving vs batch identity on this layout, single-pass and
-    # forced multi-pass scorer, incl. a stop-term head query and an
-    # absent-term query
+    # tiered serving vs batch identity on this layout, incl. a
+    # stop-term head query and an absent-term query; the per-doc scorer
+    # again with forced single-block decode passes
     st = cfg.stop_term
     tq = queries + [(900, st), (901, f"{st} w1x"), (902, "qqabsentterm w1x")]
-    build_tier_index(spark, idx)
     r_swp = IndexReader(idx)
     r_swp._SWEEP_DF_CAP = 1  # force single-block decode passes
-    tier_ok = _tiered_identity([reader, r_swp], tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
+    tier_ok = (_tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
+               and _budget0_exact(r_swp, queries, 8))
 
     # tombstone the head of several rankings; WAND + serving + tiered
-    # must all equal the deleted-filtered oracles (tier index left
-    # stale on purpose — liveness sidecars must mask it)
+    # must all equal the deleted-filtered oracles
     dels = sorted({r.doc_id for r in rw if r.query_id < 4 and r.rank <= 2})
     del_ok = True
     if dels:
@@ -217,9 +219,28 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         del_ok &= all(
             [(d, round(s, 4)) for d, s in reader.topk(q, k=8)] == got_w.get(qid, [])
             for qid, q in queries
-        ) and _budget0_exact(reader, queries, 8)
-        del_ok &= _tiered_identity(
-            [reader, r_swp], tq, _tiered_want(idx, tq, 8, exclude=dset), 8)
+        ) and _budget0_exact(reader, queries, 8) and _budget0_exact(r_swp, queries, 8)
+        del_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dset), 8)
+
+    churn_ok = True
+    if seed % 3 == 0:
+        # upsert: new versions of a few live head docs, led by a tier-0
+        # "w1x <stop>" (same url, new text) — their old ids tombstone and
+        # a fresh segment folds in; then a purging merge of every segment
+        heads = {r.doc_id for r in rw if 4 <= r.query_id < 8 and r.rank <= 2} - set(dels) - pre
+        urls = [r.url for r in docs.where(F.col("doc_id").isin(sorted(heads)))
+                .select("url").collect()]
+        upsert_pages(spark, idx, pages.where(F.col("url").isin(urls)).withColumn(
+            "text", F.concat(F.lit(f"w1x {st} "), F.col("text"))), n_new_segments=1)
+        dead = {r.doc_id for r in spark.read.parquet(f"{idx}/tombstones")
+                .select("doc_id").collect()}
+        reader.refresh()
+        churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dead), 8)
+        live = sorted({int(r.segment_id) for r in spark.read.parquet(f"{idx}/postings")
+                       .select("segment_id").distinct().collect()})
+        merge_segments(spark, idx, live, purge=True)
+        reader.refresh()
+        churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8), 8)
 
     phrase_ok = True
     if seed % 2 == 1:
@@ -288,13 +309,14 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
             if rgot != rwant:
                 phrase_ok = False
         shutil.rmtree(posidx, ignore_errors=True)
-    fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok)
+    fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok and churn_ok)
     print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
           f"pre_deleted={len(pre)} overlapping_blocks={overlap}: "
           f"{'OK' if ok else 'MISMATCH'} serve={'OK' if serve_ok else 'MISMATCH'}"
           f" phrase={'OK' if phrase_ok else 'MISMATCH'}"
           f" tier={'OK' if tier_ok else 'MISMATCH'}"
-          f" del={'OK' if del_ok else 'MISMATCH'}", flush=True)
+          f" del={'OK' if del_ok else 'MISMATCH'}"
+          f" churn={'OK' if churn_ok else 'MISMATCH'}", flush=True)
     shutil.rmtree(idx, ignore_errors=True)
 print("FAILS:", fails)
 spark.stop()
