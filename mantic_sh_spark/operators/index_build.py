@@ -336,6 +336,25 @@ def format_mismatch(root: str, version: int, consequence: str) -> RuntimeError:
     )
 
 
+def read_format_version(root: str, spark: SparkSession | None = None) -> int:
+    """The on-disk format version recorded under `root` (0 for an index
+    predating the marker, ≤ v3) — the one marker reader, shared by
+    check_format and serve.IndexReader. A driver-side pyarrow read
+    (~1 ms); Spark reads it only for a non-local URI scheme, given a
+    session."""
+    import pyarrow.parquet as pq
+
+    path = IndexPaths(root).format_marker
+    if spark is not None and "://" in path and not path.startswith("file:"):
+        marker = read_or_none(spark, path)
+        return 0 if marker is None else int(marker.collect()[0].version)
+    try:
+        tbl = pq.read_table(path, columns=["version"])
+    except FileNotFoundError:
+        return 0
+    return int(tbl["version"][0].as_py()) if tbl.num_rows else 0
+
+
 def check_format(spark: SparkSession, paths: IndexPaths,
                  consequence: str = "mutating would mix posting schemas in one "
                                     "directory; extend/merge/resume refuse it") -> None:
@@ -350,8 +369,7 @@ def check_format(spark: SparkSession, paths: IndexPaths,
     would decode into wrong doc ids or tier codes; the block decoder
     (codec.decode_blocks) raises only when the value count differs.
     Indexes predating the marker (≤ v3) read as version 0."""
-    marker = read_or_none(spark, paths.format_marker)
-    version = 0 if marker is None else int(marker.collect()[0].version)
+    version = read_format_version(paths.root, spark)
     if version != INDEX_FORMAT:
         raise format_mismatch(paths.root, version, consequence)
 

@@ -22,20 +22,19 @@ from ..functions.codec import decode_blocks
 from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize
 from ..sources.catalog import IndexPaths
+from .wand import _TermBlocks, split_blocks
 
 
-def _term_postings(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _term_postings(tb: _TermBlocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All blocks of one (term, segment) → (doc_ids, flat positions,
     offsets): doc j's within-doc positions are flat[off[j]:off[j+1]],
     concatenated in doc order — one batched decode of every block.
     Ragged (flat + offsets) rather than a list of per-doc arrays — the
     verification pass operates on the whole candidate set at once and
     never touches per-doc Python objects."""
-    first = pdf["first_doc"].to_numpy(np.int64)
-    o = np.argsort(first, kind="stable")
+    o = np.argsort(tb.first, kind="stable")
     docs, tf, _dl, _code, flat = decode_blocks(
-        pdf["n"].to_numpy(np.int64)[o], first[o],
-        *(pdf[c].to_numpy(object)[o] for c in ("doc_gaps", "tfs", "dls", "positions")))
+        tb.n[o], tb.first[o], tb.gaps[o], tb.tfs[o], tb.dls[o], tb.positions[o])
     off = np.zeros(len(docs) + 1, dtype=np.int64)
     np.cumsum(tf, out=off[1:])
     return docs, flat, off
@@ -62,7 +61,7 @@ def _gather_runs(flat: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.n
     return flat[np.repeat(starts, lens) + within]
 
 
-def _phrase_match_starts(by_term: dict[str, pd.DataFrame], terms: list[str],
+def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
                          dead: DeadDocs | None = None,
                          slop: int = 0,
                          decoded_cache: dict | None = None,
@@ -83,7 +82,7 @@ def _phrase_match_starts(by_term: dict[str, pd.DataFrame], terms: list[str],
     lookup is get-then-decode, never dict.setdefault(t, decode()) —
     setdefault evaluates its default eagerly, which would re-decode on
     every hit and make the cache pure overhead."""
-    if not terms or any(t not in by_term for t in terms):
+    if not terms or any(not len(by_term.get(t, ())) for t in terms):
         return None
     decoded = {}
     for t in set(terms):
@@ -153,7 +152,7 @@ def _phrase_match_starts(by_term: dict[str, pd.DataFrame], terms: list[str],
     return cand, doc_rank0, p0, valid
 
 
-def segment_phrase_matches(by_term: dict[str, pd.DataFrame], terms: list[str],
+def segment_phrase_matches(by_term: dict[str, _TermBlocks], terms: list[str],
                            dead: DeadDocs | None = None,
                            slop: int = 0,
                            decoded_cache: dict | None = None,
@@ -182,7 +181,7 @@ def segment_phrase_matches(by_term: dict[str, pd.DataFrame], terms: list[str],
     return list(zip(cand[nz].tolist(), counts[nz].tolist()))
 
 
-def segment_phrase_positions(by_term: dict[str, pd.DataFrame], terms: list[str],
+def segment_phrase_positions(by_term: dict[str, _TermBlocks], terms: list[str],
                              dead: DeadDocs | None = None,
                              slop: int = 0,
                              decoded_cache: dict | None = None,
@@ -218,10 +217,9 @@ def _phrase_udf(queries: dict[int, list[str]], dead_src=None,
         from .wand import _load_dead
 
         dead = _load_dead(dead_src, int(pdf["segment_id"].iloc[0]))
-        # unknown tids dropped (the scan filter may carry the
-        # codegen-stability sentinel — wand._tid_filter)
-        by_term = {tid2term[int(t)]: g for t, g in pdf.groupby("tid")
-                   if int(t) in tid2term}
+        # split_blocks drops unknown tids (the scan filter may carry
+        # the codegen-stability sentinel — wand._tid_filter)
+        by_term = split_blocks(pdf, tid2term)
         out_q, out_d, out_n = [], [], []
         for qid, terms in queries.items():
             for doc, n in segment_phrase_matches(by_term, terms, dead, slop):

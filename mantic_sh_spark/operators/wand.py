@@ -63,57 +63,89 @@ EPS = 1e-4
 
 
 class _TermBlocks:
-    """numpy columns of one term's blocks frame, pulled once per frame
-    and memoized on it (term_blocks). `bmax` has the bound factors the
-    memo was built with folded in; `segs` = the segment ids present."""
+    """One term's blocks as numpy columns, cut from one fetched table by
+    split_blocks and treated as immutable everywhere: `bmax` has the
+    fetch's bound factors folded in, `seg` is each block's segment id,
+    `positions` the position bytes of a positional fetch (else None).
+    Blocks are ordered by (segment, first_doc)."""
 
-    __slots__ = ("owner", "factors", "first", "last", "bmax", "mint", "n", "gaps", "tfs",
-                 "dls", "segs")
+    __slots__ = ("first", "last", "bmax", "mint", "n", "gaps", "tfs", "dls", "seg",
+                 "positions")
 
-    def __init__(self, pdf: pd.DataFrame, bound_factors: dict | None):
-        self.owner, self.factors = id(pdf), bound_factors
-        self.first = pdf["first_doc"].to_numpy(np.int64)
-        self.last = pdf["last_doc"].to_numpy(np.int64)
-        self.bmax = pdf["block_max"].to_numpy(np.float64)
-        self.mint = pdf["min_tier"].to_numpy(np.int64)
-        self.n = pdf["n"].to_numpy(np.int64)
-        self.gaps, self.tfs, self.dls = (pdf[c].to_numpy(object) for c in ("doc_gaps", "tfs", "dls"))
-        self.segs = np.empty(0, dtype=np.int64)
-        if "segment_id" in pdf.columns:
-            self.segs, inv = np.unique(pdf["segment_id"].to_numpy(np.int64),
-                                       return_inverse=True)
-            if bound_factors:
-                f = np.array([bound_factors.get(int(s), 1.0) for s in self.segs])
-                self.bmax = self.bmax * f[inv]
+    def __init__(self, first, last, bmax, mint, n, gaps, tfs, dls, seg, positions=None):
+        self.first, self.last, self.bmax, self.mint, self.n = first, last, bmax, mint, n
+        self.gaps, self.tfs, self.dls, self.seg = gaps, tfs, dls, seg
+        self.positions = positions
 
-    def __deepcopy__(self, memo):
-        # pandas deep-copies .attrs into every derived frame; the memo
-        # is immutable, and term_blocks' owner check keeps a derived
-        # frame from ever using it
-        return self
+    def __len__(self) -> int:
+        return len(self.n)
+
+    @property
+    def segs(self) -> np.ndarray:
+        """The distinct segment ids holding this term's blocks."""
+        return np.unique(self.seg)
+
+    def take(self, idx) -> "_TermBlocks":
+        """The blocks at `idx` (a slice or an index array)."""
+        return _TermBlocks(*(None if v is None else v[idx]
+                             for v in (getattr(self, f) for f in self.__slots__)))
+
+    def by_segment(self):
+        """(segment id, that segment's blocks) per segment, ascending."""
+        if not len(self):
+            return
+        cuts = np.flatnonzero(np.diff(self.seg)) + 1
+        for lo, hi in zip(np.concatenate(([0], cuts)), np.append(cuts, len(self.seg))):
+            yield int(self.seg[lo]), self.take(slice(lo, hi))
 
 
-def term_blocks(pdf: pd.DataFrame, bound_factors: dict | None = None) -> _TermBlocks:
-    """The frame's memoized _TermBlocks. `bound_factors` ({segment:
+def split_blocks(data, tid2term: dict[int, str],
+                 bound_factors: dict | None = None) -> dict[str, _TermBlocks]:
+    """term → _TermBlocks for every term of `tid2term`, cut from one
+    table of posting block rows (a pyarrow Table/RecordBatch or a pandas
+    frame with the postings columns the kernels read, plus `positions`
+    when present): every column converts to numpy once, rows sort by (tid,
+    segment_id, first_doc), and each term's run is a slice. A term with
+    no rows maps to an empty _TermBlocks (absent, cacheable as such);
+    rows of tids outside `tid2term` are dropped (the Spark scan filter
+    may carry a sentinel tid — _tid_filter). `bound_factors` ({segment:
     factor ≥ 1}, the avgdl-drift bound inflation) pre-scales block_max
-    per row's segment; the serving reader passes its epoch's dict at
-    fetch, and the kernel (None) then reuses whatever memo the frame
-    carries. The memo is valid only for the exact frame object it was
-    built from — frames are treated as immutable everywhere."""
-    tb = pdf.attrs.get("_blocks")
-    if tb is None or tb.owner != id(pdf) or (
-            bound_factors is not None and tb.factors is not bound_factors):
-        tb = _TermBlocks(pdf, bound_factors)
-        pdf.attrs["_blocks"] = tb
-    return tb
+    per row's segment. A term's global df is its blocks' n summed."""
+    dtypes = (np.int64, np.float64, np.int64, np.int64, object, object, object)
+    out = dict.fromkeys(tid2term.values(), _TermBlocks(
+        *(np.empty(0, dtype=t) for t in (np.int64,) + dtypes + (np.int64,))))
+    if data is None or not len(data):
+        return out
+    names = data.column_names if hasattr(data, "column_names") else data.columns
+    tid = np.asarray(data["tid"], dtype=np.int64)
+    seg = np.asarray(data["segment_id"], dtype=np.int64)
+    first = np.asarray(data["first_doc"], dtype=np.int64)
+    o = np.lexsort((first, seg, tid))
+    o = o[np.isin(tid[o], np.fromiter(tid2term, np.int64, len(tid2term)))]
+    if not len(o):
+        return out
+    tid, seg = tid[o], seg[o]
+    cols = [first[o]] + [
+        np.asarray(data[c], dtype=dt)[o]
+        for c, dt in zip(("last_doc", "block_max", "min_tier", "n", "doc_gaps", "tfs", "dls"),
+                         dtypes)]
+    if bound_factors:
+        segs, inv = np.unique(seg, return_inverse=True)
+        cols[2] = cols[2] * np.array([bound_factors.get(int(s), 1.0) for s in segs])[inv]
+    cols.append(seg)
+    pos = np.asarray(data["positions"], dtype=object)[o] if "positions" in names else None
+    cuts = np.flatnonzero(np.diff(tid)) + 1
+    for lo, hi in zip(np.concatenate(([0], cuts)), np.append(cuts, len(tid))):
+        out[tid2term[int(tid[lo])]] = _TermBlocks(
+            *(c[lo:hi] for c in cols), None if pos is None else pos[lo:hi])
+    return out
 
 
 def cached_postings(decode_cache, term: str, tb: _TermBlocks):
     """The decode cache's (docs, tf_norm, tier codes, first_doc, n)
     entry for `term` when it was decoded from blocks with exactly tb's
-    first_doc / n columns, else None: a frame re-fetched in another row
-    order, or from another epoch (a query straddling refresh), is a
-    miss."""
+    first_doc / n columns, else None: blocks in another order, or from
+    another epoch (a query straddling refresh), are a miss."""
     c = decode_cache.get(term) if decode_cache is not None else None
     if c is None or not (np.array_equal(c[3], tb.first) and np.array_equal(c[4], tb.n)):
         return None
@@ -126,7 +158,7 @@ def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return np.repeat(starts, counts) + rel
 
 
-def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
+def segment_topk(by_term: dict[str, _TermBlocks], terms: list[str],
                  idf_map: dict[str, float], avgdl: float, k: int,
                  k1: float, b: float, bound_factor: float = 1.0,
                  dead: DeadDocs | None = None,
@@ -134,7 +166,7 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
                  decode_cache=None,
                  deadline: float | None = None,
                  tiers: int | None = None) -> list[tuple]:
-    """Exact top-k [(doc_id, score)] over the given blocks frames (one
+    """Exact top-k [(doc_id, score)] over the given terms' blocks (one
     segment for the distributed UDF, every segment for the serving
     reader), sorted (score desc, doc_id asc) — the block-interval
     kernel of the module docstring, shared by both surfaces so they rank
@@ -154,7 +186,7 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
     `dead` docs are dropped at finalization (θ only ever stays lower,
     so the prune stays sound). `decode_cache` (optional .get(term) /
     .put(term, value)) memoizes the idf-independent (docs, tf_norm,
-    tier codes), in block order and tagged with the frame's first_doc /
+    tier codes), in block order and tagged with the blocks' first_doc /
     n columns, of every term this query decoded at least half of (the
     rest is decoded to complete it); a cached term's blocks cost no
     decode. `deadline` (a time.time() instant) is checked between
@@ -169,7 +201,7 @@ def segment_topk(by_term: dict[str, pd.DataFrame], terms: list[str],
     if not present or k <= 0:
         return []
     nt = len(present)
-    tbs = [term_blocks(by_term[t]) for t in present]
+    tbs = [by_term[t] for t in present]
     nb = [len(tb.first) for tb in tbs]
     term = np.repeat(np.arange(nt), nb)
     first, last, n, bmax, mint = (np.concatenate([getattr(tb, c) for tb in tbs])
@@ -396,13 +428,10 @@ def _wand_udf(queries: dict[int, list[str]], idf_map: dict[str, float],
         seg = int(pdf["segment_id"].iloc[0])
         bf = (bound_factors or {}).get(seg, 1.0)
         dead = _load_dead(dead_src, seg)
-        # posting rows carry the int64 tid; translate back to the query
-        # term strings via the (query-sized) tid2term closure. Unknown
-        # tids are skipped: the scan filter may be padded with a
-        # never-matching sentinel (codegen-stability trick in
-        # _tid_filter) that could in principle collide with a real term
-        by_term = {tid2term[int(t)]: g for t, g in pdf.groupby("tid")
-                   if int(t) in tid2term}
+        # posting rows carry the int64 tid; the (query-sized) tid2term
+        # closure maps them back to the query terms (split_blocks drops
+        # the _tid_filter sentinel)
+        by_term = split_blocks(pdf, tid2term)
         out_q, out_d, out_s = [], [], []
         for qid, terms in queries.items():
             for doc, score in segment_topk(by_term, terms, idf_map, avgdl, k,
@@ -606,8 +635,9 @@ def _term_meta(spark: SparkSession, paths: IndexPaths, terms: list[str],
                 tbl = ds.dataset(paths.terms, format="parquet", partitioning="hive").to_table(
                     filter=flt, columns=["tid", "df"]
                 )
-                agg = tbl.to_pandas().groupby("tid")["df"].sum()
-                dfs = {int(t): int(v) for t, v in agg.items()}
+                dfs = {}
+                for t, v in zip(tbl["tid"].to_pylist(), tbl["df"].to_pylist()):
+                    dfs[t] = dfs.get(t, 0) + v
             except fallback_errors:
                 dfs = None
         if dfs is None:

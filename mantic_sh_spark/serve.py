@@ -19,13 +19,14 @@ Scale notes (what changes at 10^12 docs, nothing structural):
   * index metadata (collection stats, bound factors, tombstones) loads
     once per refresh — the in-proc memo the reference keeps as an LRU
     over loaded indexes (src/cache.ts:10-47).
-  * per-term df comes from the terms directory with a lazy per-term
-    cache — the reader never materializes the vocabulary.
   * posting blocks load per (term) via parquet row-group pruning (the
-    build sorts each segment by term) and stay in a hot-term LRU —
-    repeated/zipfian query terms hit memory, cold terms cost one
-    columnar read. Replicas shard by index or by segment range when
-    one box can't hold the hot set.
+    build sorts each segment by term): one columnar read per query's
+    cold terms, split straight into per-term numpy block columns, kept
+    in a hot-term LRU — repeated/zipfian query terms hit memory. A
+    term's global df is the n of its fetched blocks summed, so serving
+    never reads the terms directory and never materializes the
+    vocabulary. Replicas shard by index or by segment range when one
+    box can't hold the hot set.
   * results are (doc_id, score) — identical, by test, to wand_topk;
     phrase results identical to phrase_topk (positional indexes); tiered
     results identical to the batch operators/query.tiered_topk.
@@ -47,19 +48,19 @@ from .functions.bm25 import B, K1, idf as idf_fn
 from .functions.codec import DEFAULT_TIER_SPECS
 from .functions.liveness import DeadDocs
 from .functions.tokenize import tokenize_query
+from .operators.wand import split_blocks
 from .sources.catalog import IndexPaths
 
-# posting rows are keyed by `tid` (dictionary-encoded term — xxhash64);
-# the reader resolves term → tid from the terms directory, so no hash
-# implementation exists outside the Spark build
-_POSTING_COLS = ["tid", "first_doc", "last_doc", "block_max", "min_tier", "n",
+# posting rows are keyed by `tid`, the client-side xxhash64 of the term
+# (functions/termhash.py, bit-identical to the build's Catalyst hash)
+_POSTING_COLS = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "min_tier", "n",
                  "doc_gaps", "tfs", "dls"]
 
 
 # Byte budget for the decoded-postings LRU: decoded arrays run ~12x
 # their varint form, so this cache holds far fewer ENTRIES than the
 # compressed block LRU — but each hit skips the decode pass that
-# dominates dense-term (top-k/phrase) queries once frames are hot
+# dominates dense-term (top-k/phrase) queries once blocks are hot
 # (measured: the stop-word-phrase p50 is ~100% decode+kernel, 0% fetch).
 _DECODE_BUDGET = 256 * 1024 * 1024
 
@@ -106,7 +107,7 @@ class _DecodedLRU:
             return
         with self._lock:
             if generation is not None and generation != self.generation:
-                return  # decoded from pre-clear frames — stale
+                return  # decoded from pre-clear blocks — stale
             old = self._d.pop(key, None)
             if old is not None:
                 self._bytes -= old[1]
@@ -133,8 +134,8 @@ class _NsDecodeCache:
 
     def __init__(self, lru: _DecodedLRU, ns: tuple, generation: int | None = None):
         self._lru, self._ns = lru, ns
-        # callers pass the generation captured BEFORE their frame fetch
-        # (the compressed frames being decoded must be no older than the
+        # callers pass the generation captured BEFORE their block fetch
+        # (the compressed blocks being decoded must be no older than the
         # pinned generation); default pins at construction
         self._gen = lru.generation if generation is None else generation
 
@@ -147,10 +148,11 @@ class _NsDecodeCache:
 
 class IndexReader:
     """Long-lived single-index reader: metadata memo + hot-term block
-    LRU + per-term df cache. THREAD-SAFE for concurrent queries under a
-    single-writer refresh discipline: shared caches (term metadata,
-    hot-term LRUs) mutate only under an internal lock, kernel execution
-    runs lock-free on the immutable fetched frames, and refresh() takes
+    LRUs (BM25 and positional; a term's df is the n of its cached
+    blocks summed). THREAD-SAFE for concurrent queries under a
+    single-writer refresh discipline: shared caches (the hot-term LRUs)
+    mutate only under an internal lock, kernel execution runs lock-free
+    on the immutable fetched blocks, and refresh() takes
     the same lock so a reload can never interleave with a cache fill
     (no torn refresh). Observability: per-query and cumulative
     read-amplification counters — segments_touched, blocks_considered,
@@ -167,7 +169,6 @@ class IndexReader:
         self._blocks_lru: OrderedDict[str, "object"] = OrderedDict()
         self._pos_lru: OrderedDict[str, "object"] = OrderedDict()
         self._decoded = _DecodedLRU(_DECODE_BUDGET)
-        self._df_cache: dict[str, tuple[int, int]] = {}  # term → (df, tid)
         # truncated is THREAD-LOCAL: under serve_loop concurrency each
         # worker thread must see its own query's ST4 flag, not a racing
         # neighbor's (review r3 finding)
@@ -220,16 +221,13 @@ class IndexReader:
     def _refresh_locked(self) -> None:
         import pyarrow.parquet as pq
 
-        from .operators.index_build import INDEX_FORMAT, format_mismatch
+        from .operators.index_build import INDEX_FORMAT, format_mismatch, read_format_version
 
         cs = pq.read_table(self.paths.collection_stats).to_pydict()
         # the block layout is versioned: bytes of another format
         # generation would decode into wrong doc ids, so refuse to serve
-        # them (an index predating the marker reads as version 0)
-        try:
-            version = int(pq.read_table(self.paths.format_marker)["version"][0].as_py())
-        except FileNotFoundError:
-            version = 0
+        # them
+        version = read_format_version(self.paths.root)
         if version != INDEX_FORMAT:
             raise format_mismatch(self.paths.root, version,
                                   "its posting blocks would decode wrong")
@@ -248,19 +246,18 @@ class IndexReader:
             ["segment_id", "build_avgdl", "stage", "status", "started_at"],
         )
         if man is not None:
-            pdf = man.to_pandas()
-            ba = pdf.dropna(subset=["build_avgdl"])
-            if len(ba):
-                mins = ba.groupby("segment_id")["build_avgdl"].min()
-                self.bound_factors = {
-                    int(s): max(1.0, self.avgdl / float(v)) for s, v in mins.items()
-                }
-            if {"stage", "status", "started_at"} <= set(pdf.columns):
+            m = man.to_pydict()
+            mins: dict[int, float] = {}
+            for s, ba in zip(m["segment_id"], m["build_avgdl"]):
+                if ba is not None:
+                    mins[s] = min(ba, mins.get(s, ba))
+            self.bound_factors = {s: max(1.0, self.avgdl / v) for s, v in mins.items()}
+            if {"stage", "status", "started_at"} <= m.keys():
                 from .functions.liveness import reader_exclusions
 
                 self._excluded_segs, _ = reader_exclusions(
-                    zip(pdf["segment_id"], pdf["stage"], pdf["status"],
-                        pdf["started_at"].fillna(0.0))
+                    zip(m["segment_id"], m["stage"], m["status"],
+                        (0.0 if t is None else t for t in m["started_at"]))
                 )
 
         # liveness: only the tombstones HANDLE opens here; the epoch's
@@ -269,14 +266,12 @@ class IndexReader:
         self._dead = None
 
         # an empty-corpus index commits only collection_stats + manifest
-        # (no postings/terms/docs dirs) — serve it as empty, not a crash
+        # (no postings/docs dirs) — serve it as empty, not a crash
         self._postings = self._dataset_or_none(self.paths.postings)
-        self._terms = self._dataset_or_none(self.paths.terms)
         self._docs = self._dataset_or_none(self.paths.docs)
         self._blocks_lru.clear()
         self._pos_lru.clear()
         self._decoded.clear()
-        self._df_cache.clear()
         # counters restart with the new index state (counters() promises
         # totals "since construction/refresh"); the epoch bump
         # invalidates every thread's thread-local last_stats
@@ -309,59 +304,12 @@ class IndexReader:
         return d.to_table(columns=[c for c in columns if c in have])
 
     # ---------------------------------------------------------- lookups
-    def _meta(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """{term: (global df, tid)} — lazy, cached; df 0 when absent.
-        tid comes from the client-side xxhash64 (functions/termhash.py,
-        bit-identical to the build's Catalyst expression), so a df
-        lookup is a row-group-pruned int64 probe of the tid-sorted
-        terms directory — no term strings exist anywhere in the core
-        index."""
-        import pyarrow.dataset as ds
-
-        from .functions.termhash import term_tid
-
-        with self._lock:
-            hits = {t: self._df_cache[t] for t in terms if t in self._df_cache}
-            terms_ds = self._terms
-            excl = self._excluded_segs
-            epoch = self._epoch
-        missing = sorted(set(terms) - hits.keys())
-        got: dict[str, tuple[int, int]] = {}
-        if missing:
-            # terms-directory I/O outside the lock (same discipline as
-            # _fetch_blocks): concurrent cache-hit queries never wait on
-            # a cold df probe; racing threads install identical entries
-            tid_of = {t: term_tid(t) for t in missing}
-            if terms_ds is None:
-                got = {t: (0, tid_of[t]) for t in missing}
-            else:
-                flt = ds.field("tid").isin(sorted(tid_of.values()))
-                if excl:
-                    # an in-flight/crashed fold's partial segments would
-                    # double-count df against the live sources
-                    flt = flt & ~ds.field("segment_id").isin(sorted(excl))
-                tbl = terms_ds.to_table(
-                    filter=flt,
-                    columns=["tid", "df"],
-                )
-                agg = tbl.to_pandas().groupby("tid")["df"].sum()
-                dfs = {int(t): int(v) for t, v in agg.items()}
-                got = {t: (dfs.get(tid_of[t], 0), tid_of[t]) for t in missing}
-            with self._lock:
-                if self._epoch == epoch:  # don't resurrect pre-refresh dfs
-                    self._df_cache.update(got)
-        # return the LOCAL snapshot (first-lock hits + this call's own
-        # fetch), never a cache re-read: a refresh() racing between the
-        # install above and a final cache read can clear the cache and
-        # KeyError on terms installed a moment earlier (seen as a rare
-        # concurrent-test failure). A pre-refresh snapshot is valid for
-        # the in-flight query by the same reasoning as every other
-        # epoch-checked path.
-        return {**hits, **got}
-
     def df(self, terms: list[str]) -> dict[str, int]:
-        """Global document frequency per term (lazy, cached)."""
-        return {t: m[0] for t, m in self._meta(terms).items()}
+        """Global document frequency per term: the n of the term's
+        served blocks summed (each posting is one doc), read through the
+        BM25 block LRU — the same fold gating as every query, and no
+        terms-directory read."""
+        return {t: int(tb.n.sum()) for t, tb in self._blocks(terms).items()}
 
     def _self_heal(self, attempt_fn):
         """Run attempt_fn(); on an I/O error from dataset handles an
@@ -421,15 +369,18 @@ class IndexReader:
         return np.ones(len(ids), dtype=bool) if dead is None else ~dead.mask(ids)
 
     def _fetch_blocks(self, lru: OrderedDict, columns: list[str],
-                      terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
-        """Shared LRU-cached block fetch (BM25 and positional paths
-        differ only in cache + column list): term → tid resolution via
-        the terms directory, row-group-pruned read of the missing tids,
-        per-term grouping, negative caching for absent terms, LRU
-        eviction. Runs under the reader lock (cache mutation); the
-        returned frames are treated as immutable by every kernel, so
-        concurrent queries share them safely."""
+                      terms: list[str], stats: dict | None = None) -> dict:
+        """term → wand._TermBlocks, LRU-cached (the BM25 and positional
+        paths differ only in cache + column list): the missing terms'
+        tids (client-side hash) filter ONE row-group-pruned postings
+        read, which wand.split_blocks cuts into per-term numpy block
+        columns with this epoch's bound factors pre-scaled into
+        block_max; absent terms are cached empty. Cache mutation runs
+        under the reader lock; the blocks are immutable, so concurrent
+        queries share them safely."""
         import pyarrow.dataset as ds
+
+        from .functions.termhash import term_tid
 
         with self._lock:
             out = {}
@@ -443,74 +394,47 @@ class IndexReader:
                     missing.append(t)
             postings = self._postings
             excl = self._excluded_segs
+            factors = self.bound_factors
             epoch = self._epoch
         if missing:
             # the parquet fetch runs OUTSIDE the lock — a cold-term read
             # must not serialize concurrent LRU-hit queries (review r3
             # finding); two threads racing on the same term both fetch
-            # and install identical frames (idempotent)
+            # and install identical blocks (idempotent)
             if stats is not None:
                 stats["terms_cold"] = stats.get("terms_cold", 0) + len(missing)
             _tf = time.time()
-            meta = self._meta(missing)
-            tid2term = {m[1]: t for t, m in meta.items() if m[0] > 0}
-            if tid2term:
-                flt = ds.field("tid").isin(list(tid2term))
+            tid2term = {term_tid(t): t for t in missing}
+            tbl = None
+            if postings is not None:
+                flt = ds.field("tid").isin(sorted(tid2term))
                 if excl:
                     # gate out an in-flight/crashed fold's partial
                     # segments (manifest-derived — see _refresh_locked)
                     flt = flt & ~ds.field("segment_id").isin(sorted(excl))
                 tbl = postings.to_table(filter=flt, columns=columns)
-                pdf = tbl.to_pandas()
-            else:
-                import pandas as pd
-
-                pdf = pd.DataFrame({c: [] for c in columns})
+            got = split_blocks(tbl, tid2term, factors)
             if stats is not None:
-                # cold-I/O share of the query (terms-dir probe + pruned
-                # postings read + pandas conversion) — separates "the
-                # fetch got slower" from "the kernel got slower" when a
-                # p90 drifts (r4 what's-wrong #4 diagnosability)
+                # cold-I/O share of the query (pruned postings read +
+                # split) — separates "the fetch got slower" from "the
+                # kernel got slower" when a p90 drifts
                 stats["fetch_ms"] = round(
                     stats.get("fetch_ms", 0.0) + (time.time() - _tf) * 1e3, 3)
+            out.update(got)
             with self._lock:
-                # frames fetched from a pre-refresh dataset handle must
+                # blocks fetched from a pre-refresh dataset handle must
                 # not be INSTALLED after a racing refresh cleared the
                 # caches (they'd serve stale postings to later queries);
                 # the in-flight query still gets them via `out`
-                fresh = self._epoch == epoch
-                found = set()
-                for tid, g in pdf.groupby("tid"):
-                    t = tid2term[int(tid)]
-                    g = g.reset_index(drop=True)
-                    out[t] = g
-                    found.add(t)
-                    if fresh:
-                        lru[t] = g
-                for t in missing:
-                    if t not in found:
-                        empty = pdf.iloc[0:0]
-                        out[t] = empty
-                        if fresh:
-                            lru[t] = empty
-                while len(lru) > self.max_hot_terms:
-                    lru.popitem(last=False)
+                if self._epoch == epoch:
+                    lru.update(got)
+                    while len(lru) > self.max_hot_terms:
+                        lru.popitem(last=False)
         return out
 
-    def _blocks(self, terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
-        """term → pandas blocks frame (with segment_id), LRU-cached.
-        Each frame carries its numpy columns (wand.term_blocks), built
-        once per frame with this epoch's bound factors pre-scaled into
-        block_max — the memo lives ON the frame, so it always pairs
-        with the exact frame a query holds and is evicted with it."""
-        from .operators.wand import term_blocks
-
-        out = self._fetch_blocks(self._blocks_lru, _POSTING_COLS + ["segment_id"], terms,
-                                 stats=stats)
-        factors = self.bound_factors
-        for pdf in out.values():
-            term_blocks(pdf, factors)
-        return out
+    def _blocks(self, terms: list[str], stats: dict | None = None) -> dict:
+        """term → wand._TermBlocks of every serving segment, LRU-cached."""
+        return self._fetch_blocks(self._blocks_lru, _POSTING_COLS, terms, stats=stats)
 
     def _docs_rows(self, doc_ids: list[int], column: str) -> dict:
         """{doc_id: column value} via a row-group-pruned docs read (docs
@@ -625,25 +549,25 @@ class IndexReader:
 
     def _topk_attempt(self, query: str, k: int, budget_ms: float | None,
                       stats: dict, t0: float, tiers: int | None) -> list[tuple]:
-        from .operators.wand import segment_topk, term_blocks
+        from .operators.wand import segment_topk
 
         self.truncated = False
         if self._postings is None:
             return []
         terms = sorted(set(tokenize_query(query)))
-        dfs = self.df(terms)
-        idf_map = {t: idf_fn(self.n_docs, dfs[t]) for t in terms if dfs[t] > 0}
-        if not idf_map:
-            return []
-        # decoded-LRU generation pinned BEFORE the frame fetch: a
+        # decoded-LRU generation pinned BEFORE the block fetch: a
         # refresh racing anywhere after this line makes every decode
         # put from this query a dropped no-op instead of a stale install
         dgen = self._decoded.generation
-        blocks = self._blocks(sorted(idf_map), stats=stats)
-        stats["segments_touched"] = len(
-            set().union(*(term_blocks(pdf).segs.tolist() for pdf in blocks.values())))
+        blocks = self._blocks(terms, stats=stats)
+        idf_map = {t: idf_fn(self.n_docs, int(tb.n.sum()))
+                   for t, tb in blocks.items() if len(tb)}
+        if not idf_map:
+            return []
+        stats["segments_touched"] = len(np.unique(np.concatenate(
+            [tb.seg for tb in blocks.values()])))
         # ONE kernel call over every segment's blocks: bound factors are
-        # pre-scaled into the frames' block maxima (_blocks), liveness is
+        # pre-scaled into the block maxima (_fetch_blocks), liveness is
         # the epoch's one DeadDocs; the ladder needs every query term,
         # absent ones included (a doc lacking one is in the final tier)
         hits = segment_topk(blocks, terms, idf_map, self.avgdl, k,
@@ -677,30 +601,25 @@ class IndexReader:
     def has_positions(self) -> bool:
         return self._postings is not None and "positions" in self._postings.schema.names
 
-    def _pos_blocks(self, terms: list[str], stats: dict | None = None) -> dict[str, "object"]:
-        """term → blocks frame INCLUDING positions bytes (phrase path;
-        cached separately from the BM25 hot set so non-phrase queries
-        never hold position payloads in memory)."""
-        return self._fetch_blocks(self._pos_lru,
-                                  _POSTING_COLS + ["positions", "segment_id"], terms,
+    def _pos_blocks(self, terms: list[str], stats: dict | None = None) -> dict:
+        """term → wand._TermBlocks INCLUDING positions bytes (phrase
+        path; cached separately from the BM25 hot set so non-phrase
+        queries never hold position payloads in memory)."""
+        return self._fetch_blocks(self._pos_lru, _POSTING_COLS + ["positions"], terms,
                                   stats=stats)
 
-    def _pos_blocks_by_segment(self, terms: list[str],
-                               stats: dict) -> dict[int, dict[str, "object"]]:
-        """Positional blocks for `terms`, regrouped per segment —
-        the shared front half of every positional serving query
-        (phrase_topk / references / definitions). Counts
-        blocks_considered; decode accounting is the caller's (it knows
-        which segments its kernel actually decodes)."""
-        blocks = self._pos_blocks(terms, stats=stats)
-        per_seg: dict[int, dict[str, object]] = {}
-        for t, pdf in blocks.items():
-            if not len(pdf):
-                continue
-            for seg, g in pdf.groupby("segment_id"):
-                per_seg.setdefault(int(seg), {})[t] = g
-        for by_term in per_seg.values():
-            stats["blocks_considered"] += sum(len(g) for g in by_term.values())
+    @staticmethod
+    def _by_segment(blocks: dict, stats: dict) -> dict[int, dict]:
+        """Positional blocks regrouped per segment — the shared front
+        half of every positional serving query (phrase_topk /
+        references / definitions). Counts blocks_considered; decode
+        accounting is the kernel's (it knows which blocks it actually
+        decodes)."""
+        per_seg: dict[int, dict] = {}
+        for t, tb in blocks.items():
+            stats["blocks_considered"] += len(tb)
+            for seg, part in tb.by_segment():
+                per_seg.setdefault(seg, {})[t] = part
         return per_seg
 
     def phrase_topk(self, phrase: str, k: int = 10, slop: int = 0) -> list[tuple[int, int]]:
@@ -740,8 +659,8 @@ class IndexReader:
         terms = tokenize(phrase)  # ordered, repeats kept
         if not terms:
             return []
-        dgen = self._decoded.generation  # pin BEFORE the frame fetch
-        per_seg = self._pos_blocks_by_segment(sorted(set(terms)), stats)
+        dgen = self._decoded.generation  # pin BEFORE the block fetch
+        per_seg = self._by_segment(self._pos_blocks(sorted(set(terms)), stats), stats)
         dead = self._dead_docs()
         hits: list[tuple[int, int]] = []
         for seg, by_term in per_seg.items():
@@ -759,9 +678,9 @@ class IndexReader:
     # Memory budget for head terms at corpus scale: _SWEEP_DF_CAP bounds
     # the postings (a ROW count; it cannot trigger below ~20M docs) one
     # _scores_array decode pass holds (decoded form is ~25 B/posting vs
-    # ~1-2 B compressed in the resident frame): a term whose candidate
+    # ~1-2 B compressed in the resident blocks): a term whose candidate
     # blocks hold more decodes in several passes, so memory stays within
-    # the frame envelope every other serving path already has.
+    # the block envelope every other serving path already has.
     _SWEEP_DF_CAP = 20_000_000
 
     def _scores_for_docs(self, terms: list[str],
@@ -785,7 +704,7 @@ class IndexReader:
         score 0.0. Rounding matches rank_topk (4 decimals), like every
         ranked answer."""
         from .functions.codec import decode_blocks, tf_norm
-        from .operators.wand import _ranges, cached_postings, term_blocks
+        from .operators.wand import _ranges, cached_postings
 
         cand, inv = np.unique(np.asarray(doc_ids, dtype=np.int64), return_inverse=True)
         acc = np.zeros(len(cand), dtype=np.float64)
@@ -797,21 +716,19 @@ class IndexReader:
             ok = cand[j] == d
             acc[j[ok]] += idf * tfn[ok]
 
-        dfs = self.df(terms)
-        idf_map = {t: idf_fn(self.n_docs, dfs[t]) for t in terms if dfs[t] > 0}
-        if len(cand) and idf_map:
-            dgen = self._decoded.generation  # pin BEFORE the frame fetch
+        if len(cand) and terms:
+            dgen = self._decoded.generation  # pin BEFORE the block fetch
             cache = _NsDecodeCache(self._decoded, ("k", -1), dgen)
-            for t, pdf in self._blocks(sorted(idf_map)).items():
-                if not len(pdf):
+            for t, tb in self._blocks(sorted(set(terms))).items():
+                if not len(tb):
                     continue
-                tb = term_blocks(pdf)
+                idf = idf_fn(self.n_docs, int(tb.n.sum()))
                 hold = np.flatnonzero(np.searchsorted(cand, tb.first)
                                       < np.searchsorted(cand, tb.last, side="right"))
                 hit = cached_postings(cache, t, tb)
                 if hit is not None:
                     idx = _ranges((np.cumsum(tb.n) - tb.n)[hold], tb.n[hold])
-                    add(idf_map[t], hit[0][idx], hit[1][idx])
+                    add(idf, hit[0][idx], hit[1][idx])
                     continue
                 csum = np.cumsum(tb.n[hold])
                 i = 0
@@ -823,7 +740,7 @@ class IndexReader:
                     d, tf, dl, code = decode_blocks(tb.n[blk], tb.first[blk], tb.gaps[blk],
                                                     tb.tfs[blk], tb.dls[blk])
                     tfn = tf_norm(tf, dl, self.avgdl, self.k1, self.b)
-                    add(idf_map[t], d, tfn)
+                    add(idf, d, tfn)
                     if not i and j == len(tb.n):  # the whole term in one pass: install
                         cache.put(t, (d, tfn, code, tb.first, tb.n))
                     i = j
@@ -859,8 +776,8 @@ class IndexReader:
         if not terms:
             self._record_stats(stats, t0)
             return []
-        dgen = self._decoded.generation  # pin BEFORE the frame fetch
-        per_seg = self._pos_blocks_by_segment(sorted(set(terms)), stats)
+        dgen = self._decoded.generation  # pin BEFORE the block fetch
+        per_seg = self._by_segment(self._pos_blocks(sorted(set(terms)), stats), stats)
         dead = self._dead_docs()
         hits: list[tuple[int, "np.ndarray"]] = []
         for seg, by_term in per_seg.items():
@@ -940,22 +857,26 @@ class IndexReader:
         if not sym:
             self._record_stats(stats, t0)
             return []
-        # df-probe FIRST (cheap terms-dir reads, no position payloads):
+        # symbol df FIRST, from its BM25 blocks (no position payloads):
         # an absent symbol token means no definition phrase can match,
-        # and an absent keyword need not be fetched — without this the
-        # head-term keywords' (large) positional postings would be read
-        # and LRU-cached even for typo symbols (review r4 finding)
-        dfs = self.df(sorted(set(self.DEF_KEYWORDS) | set(self.DEF_TRAILERS)
-                             | set(self.DEF_PROSE_GUARD) | set(sym)))
+        # so a typo symbol returns before any head-term keyword's (large)
+        # positional postings are read and LRU-cached (review r4 finding)
+        dfs = self.df(sorted(set(sym)))
         if any(dfs[t] == 0 for t in sym):
             self._record_stats(stats, t0)
             return []
-        kws = [kw for kw in self.DEF_KEYWORDS if dfs[kw] > 0]
-        tws = [tw for tw in self.DEF_TRAILERS if dfs[tw] > 0]
-        guards = [g for g in self.DEF_PROSE_GUARD if dfs[g] > 0] if tws else []
+        dgen = self._decoded.generation  # pin BEFORE the block fetch
+        blocks = self._pos_blocks(
+            sorted(set(self.DEF_KEYWORDS) | set(self.DEF_TRAILERS) | set(sym)), stats)
+        kws = [kw for kw in self.DEF_KEYWORDS if len(blocks[kw])]
+        tws = [tw for tw in self.DEF_TRAILERS if len(blocks[tw])]
         if not kws and not tws:
             self._record_stats(stats, t0)
             return []
+        guards = []
+        if tws:  # the prose guard only serves trailer forms
+            blocks.update(self._pos_blocks(list(self.DEF_PROSE_GUARD), stats))
+            guards = [g for g in self.DEF_PROSE_GUARD if len(blocks[g])]
         # (form_rank, label, phrase, symbol-position offset within the
         # phrase): leading-keyword probes rank above every trailer probe
         forms = [(ki, kw, [kw] + sym, 1) for ki, kw in enumerate(self.DEF_KEYWORDS)
@@ -963,8 +884,8 @@ class IndexReader:
         forms += [(len(self.DEF_KEYWORDS) + ti, f"={tw}", sym + [tw], 0)
                   for ti, tw in enumerate(self.DEF_TRAILERS) if tw in set(tws)]
         labels = {rank: label for rank, label, _, _ in forms}
-        dgen = self._decoded.generation  # pin BEFORE the frame fetch
-        per_seg = self._pos_blocks_by_segment(sorted(set(kws + tws + guards + sym)), stats)
+        per_seg = self._by_segment({t: blocks[t] for t in set(kws + tws + guards + sym)},
+                                   stats)
         dead = self._dead_docs()
         hits: list[tuple[int, int, int]] = []  # (form_rank, pos, doc)
         for seg, by_term in per_seg.items():
@@ -979,7 +900,7 @@ class IndexReader:
             # persistent decoded LRU, not a per-call dict: the probe
             # terms (definition keywords + hot symbols) repeat across
             # queries, and the namespace is shared with phrase/
-            # references (same frames, same _term_postings decode)
+            # references (same blocks, same _term_postings decode)
             cache = _NsDecodeCache(self._decoded, ("p", seg), dgen)
             for rank, _, phrase, sym_off in seg_forms:
                 matches = segment_phrase_positions(
@@ -1041,14 +962,15 @@ class IndexReader:
 
     def prewarm(self, queries: "list[str]", k: int = 10,
                 tiered: bool = False) -> int:
-        """Fault the serving caches (hot-term block frames, decoded
-        postings) by replaying a query list — e.g. the
-        query-log tail via `recent_queries` — so a fresh replica does
-        not pay cold-fetch latency on its first real traffic (cold p90
-        queries are ~50% fetch; the same query served hot is ~ms).
-        Queries that error are skipped: warming is best-effort by
-        definition. Returns the
-        number replayed successfully."""
+        """Fault the serving caches (the hot-term BM25 block LRU, which
+        also answers df, and the decoded postings) by replaying a query
+        list — e.g. the query-log tail via `recent_queries` — so a fresh
+        replica does not pay cold-fetch latency on its first real
+        traffic. A query's cold terms cost one pruned postings read
+        split into per-term block columns, plus the kernel run that
+        fills the decoded LRU. Queries that error are skipped: warming
+        is best-effort by definition. Returns the number replayed
+        successfully."""
         n = 0
         for q in queries:
             try:

@@ -2,7 +2,6 @@
 WAND == exhaustive, resume, deterministic doc ids across parallelism."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -456,7 +455,10 @@ def _kernel_case(seed):
     per-term scores, so interval bounds tie θ and only the doc-id
     tie-break decides. Postings carry random tier codes, skewed to the
     best tiers so multi-term docs reach them."""
+    import pyarrow as pa
+
     from mantic_sh_spark.functions.codec import SEG_STRIDE, encode_rows
+    from mantic_sh_spark.operators.wand import split_blocks
 
     rng = np.random.default_rng(seed)
     n_docs = int(rng.integers(50, 600))
@@ -466,7 +468,7 @@ def _kernel_case(seed):
     avgdl = float(dl.mean())
     build_avgdl = avgdl * (0.8 if seed % 3 == 0 else 1.0)  # drifted → bound_factor > 1
     bs = int(rng.choice([2, 3, 128]))
-    by_term, postings = {}, {}
+    batches, postings = [], {}
     for t in range(int(rng.integers(1, 5))):
         sel = np.sort(rng.choice(n_docs, int(rng.integers(1, n_docs)), replace=False))
         tf = np.ones(len(sel), dtype=np.int64) if ties else rng.integers(1, 6, len(sel))
@@ -476,11 +478,10 @@ def _kernel_case(seed):
         if rng.random() < 0.5:  # two interleaved sources → overlapping blocks
             half = rng.random(len(sel)) < 0.5
             sources = [np.flatnonzero(half), np.flatnonzero(~half)]
-        by_term[f"t{t}"] = pd.concat(
-            [encode_rows([0], [t], [0], ids[sel][src], tf[src], dl[sel][src], code[src],
-                         build_avgdl, 1.2, 0.75, bs).to_pandas()
-             for src in sources if len(src)], ignore_index=True
-        )[["first_doc", "last_doc", "block_max", "min_tier", "n", "doc_gaps", "tfs", "dls"]]
+        batches += [encode_rows([0], [t], [0], ids[sel][src], tf[src], dl[sel][src], code[src],
+                                build_avgdl, 1.2, 0.75, bs)
+                    for src in sources if len(src)]
+    by_term = split_blocks(pa.Table.from_batches(batches), {t: f"t{t}" for t in range(len(postings))})
     idf_map = {t: 1.0 if ties else float(rng.uniform(0.1, 3.0)) for t in by_term}
     dead = None
     if seed % 2:
@@ -504,9 +505,9 @@ def _brute_scores(postings, idf_map, avgdl, dead):
 
 def test_segment_topk_matches_brute_force():
     """The block-interval kernel equals a brute-force scorer on seeded
-    frames: overlapping blocks, block_size 2/3, DeadDocs, drifted avgdl
+    blocks: overlapping blocks, block_size 2/3, DeadDocs, drifted avgdl
     (bound_factor > 1), k from 1 to past the match count, a warm
-    decode cache (and frames whose rows it no longer matches), and a
+    decode cache (and blocks in an order it no longer matches), and a
     deadline of 0 (partial, exact-scored answer)."""
     from mantic_sh_spark.operators.wand import segment_topk
 
@@ -535,7 +536,7 @@ def test_segment_topk_matches_brute_force():
         assert hot == ranked[:7] and stats["blocks_decoded"] == 0, seed
         # the same blocks in another row order must not reuse the entries
         # (one term left uncached, so cached blocks are sliced per block)
-        flipped = {t: f.iloc[::-1].reset_index(drop=True) for t, f in by_term.items()}
+        flipped = {t: tb.take(slice(None, None, -1)) for t, tb in by_term.items()}
         part = Cache({t: v for t, v in cache.items() if t != terms[0]})
         assert segment_topk(flipped, terms, idf_map, avgdl, 7, 1.2, 0.75, bound_factor=bf,
                             dead=dead, decode_cache=part) == ranked[:7], seed
@@ -551,7 +552,7 @@ def test_segment_topk_matches_brute_force():
 
 def test_segment_topk_tier_ladder_matches_brute_force():
     """The kernel's tier-ladder mode equals a brute-force ladder on the
-    same seeded frames: a doc's tier is the max of its codes over ALL
+    same seeded blocks: a doc's tier is the max of its codes over ALL
     query terms (T when it lacks one, so T for every doc when a query
     term is absent), ranked (tier asc, score desc, doc_id asc) — cold,
     from a decode cache the plain mode filled, and under a deadline
@@ -606,15 +607,14 @@ def test_segment_topk_visits_intervals_that_tie_theta():
     with 90, 95, 99, 91, 92; [0, 90) is bounded by a alone — exactly θ —
     and holds docs 0 and 1, which outrank 91 and 92."""
     from mantic_sh_spark.functions.codec import encode_rows
-    from mantic_sh_spark.operators.wand import segment_topk
+    from mantic_sh_spark.operators.wand import segment_topk, split_blocks
 
-    def frame(docs):
+    def blocks(docs):
         docs = np.asarray(docs, dtype=np.int64)
         ones = np.ones(len(docs), dtype=np.int64)
-        return encode_rows([0], [0], [0], docs, ones, ones * 10, ones * 2, 10.0, 1.2,
-                           0.75).to_pandas()[
-            ["first_doc", "last_doc", "block_max", "min_tier", "n", "doc_gaps", "tfs", "dls"]]
+        rows = encode_rows([0], [0], [0], docs, ones, ones * 10, ones * 2, 10.0, 1.2, 0.75)
+        return split_blocks(rows, {0: "t"})["t"]
 
-    by_term = {"a": frame(range(100)), "b": frame([90, 95, 99])}
+    by_term = {"a": blocks(range(100)), "b": blocks([90, 95, 99])}
     got = segment_topk(by_term, ["a", "b"], {"a": 1.0, "b": 1.0}, 10.0, 5, 1.2, 0.75)
     assert [d for d, _ in got] == [90, 95, 99, 0, 1]

@@ -78,6 +78,19 @@ def _serve(idx, cfg, queries_text):
     return {q: r.topk(q, k=8) for q in queries_text}
 
 
+def _df_agrees(spark, idx, queries_text):
+    """The reader's df (the n of its served blocks summed) equals the
+    Spark plane's terms-directory df under the same fold gating."""
+    from mantic_sh_spark.functions.tokenize import tokenize_query
+    from mantic_sh_spark.operators.wand import _index_meta, _term_meta
+    from mantic_sh_spark.sources.catalog import IndexPaths
+
+    terms = sorted({t for q in queries_text for t in tokenize_query(q)} | {"qqabsent"})
+    paths = IndexPaths(idx)
+    meta = _term_meta(spark, paths, terms, excluded=_index_meta(spark, paths)[4])
+    return IndexReader(idx).df(terms) == {t: m[0] for t, m in meta.items()}
+
+
 def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch):
     """Crash BEFORE the 'committed' barrier (partial dst postings/terms
     dirs on disk, sources + tombstones untouched): fresh readers must
@@ -112,6 +125,7 @@ def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch):
     refresh_meta(idx)  # simulate a fresh process (drop memoized meta)
     assert _wand(spark, idx, queries) == before
     assert _serve(idx, cfg, qtexts) == serve_before
+    assert _df_agrees(spark, idx, qtexts)
 
 
 def test_readers_exclude_crashed_extend_segments(spark, tmp_path, monkeypatch):
@@ -209,3 +223,4 @@ def test_readers_serve_committed_fold_via_union_liveness(spark, tmp_path, monkey
     refresh_meta(idx)
     assert _wand(spark, idx, queries) == control
     assert _serve(idx, cfg, qtexts) == serve_control
+    assert _df_agrees(spark, idx, qtexts)

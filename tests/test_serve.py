@@ -266,6 +266,11 @@ def test_get_definition(spark, tmp_path):
     assert defs[0]["position"] == 6
     assert defs[1]["position"] == 1
     assert reader.definitions("qqnosuchsymbol") == []
+    # a typo symbol returns on its own (BM25) df probe: no positional
+    # block and no keyword is fetched
+    fresh = IndexReader(idx)
+    assert fresh.definitions("qqnosuchsym") == []
+    assert len(fresh._pos_lru) == 0 and list(fresh._blocks_lru) == ["qqnosuchsym"]
 
     # MCP surface
     srv = McpServer(idx, reader=reader)
@@ -545,9 +550,7 @@ def test_stale_reader_self_heals_across_external_merge(spark, tmp_path):
     for q in ("w1x", "w1x w2x", "w0x w3x"):
         assert stale.topk(q, k=8) == fresh.topk(q, k=8), q
     assert stale._epoch > epoch0, "self-heal must have refreshed the reader"
-    assert sorted(
-        {int(s) for pdf in stale._blocks(["w1x"]).values() for s in pdf["segment_id"]}
-    ) == [9]
+    assert stale._blocks(["w1x"])["w1x"].segs.tolist() == [9]
 
 
 def _exhaustive_minus(spark, idx, queries, k, dead=frozenset()):
@@ -568,14 +571,13 @@ def _exhaustive_minus(spark, idx, queries, k, dead=frozenset()):
     return out
 
 
-def _blocks_overlap(pdf) -> bool:
-    """Do any two of this term frame's block [first_doc, last_doc]
-    intervals overlap?"""
+def _blocks_overlap(tb) -> bool:
+    """Do any two of this term's block [first_doc, last_doc] intervals
+    overlap?"""
     import numpy as np
 
-    first, last = pdf["first_doc"].to_numpy(), pdf["last_doc"].to_numpy()
-    o = np.argsort(first, kind="stable")
-    return bool(np.any(first[o][1:] <= last[o][:-1]))
+    o = np.argsort(tb.first, kind="stable")
+    return bool(np.any(tb.first[o][1:] <= tb.last[o][:-1]))
 
 
 def test_topk_matches_oracles_after_deletes_and_extend(spark, tmp_path):
@@ -633,8 +635,8 @@ def test_noncontiguous_merge_keeps_blocks_disjoint(spark, tmp_path):
     reader = IndexReader(idx)
     queries = ("w1x", "w1x w2x", "w0x w4x w7x", "w3x w9x")
     for q in queries:
-        frames = reader._blocks(sorted(set(tokenize_query(q))))
-        assert not any(_blocks_overlap(pdf) for pdf in frames.values()), q
+        blocks = reader._blocks(sorted(set(tokenize_query(q))))
+        assert not any(_blocks_overlap(tb) for tb in blocks.values()), q
     wand = _spark_results(spark, idx, [(0, q) for q in queries], k=8)
     exhaustive = _exhaustive_minus(spark, idx, queries, 8)
     for q in queries:
@@ -676,7 +678,7 @@ def test_topk_ranks_legacy_overlapping_compaction(spark, tmp_path, monkeypatch):
     queries = ("w1x", "w1x w2x", "w0x w4x w7x", "w3x w9x")
     assert any(
         len(tokenize_query(q)) > 1
-        and any(_blocks_overlap(pdf) for pdf in reader._blocks(tokenize_query(q)).values())
+        and any(_blocks_overlap(tb) for tb in reader._blocks(tokenize_query(q)).values())
         for q in queries
     ), "no multi-term query hit the overlapping layout — fixture drifted"
     wand = _spark_results(spark, idx, [(0, q) for q in queries], k=8)
@@ -979,3 +981,118 @@ def test_recent_queries_tie_order_and_corrupt_fragment(tmp_path, monkeypatch):
     with open(f"{log_dir}/log-9999999999999999-0.parquet", "wb") as f:
         f.write(b"PAR1 not really a parquet file")
     assert recent_queries(log_dir) == ["newer-tie", "older-tie"]
+
+
+def test_split_blocks_matches_groupby_reference():
+    """wand.split_blocks (no Spark) on a shuffled multi-segment table,
+    with and without positions, equals a pandas groupby reference
+    column by column: rows of one term ordered by (segment, first_doc),
+    block_max scaled by its segment's bound factor, unknown tids
+    dropped, absent terms and an empty table mapping to empty blocks."""
+    import numpy as np
+    import pyarrow as pa
+
+    from mantic_sh_spark.functions.codec import SEG_STRIDE, encode_rows
+    from mantic_sh_spark.operators.wand import split_blocks
+
+    rng = np.random.default_rng(5)
+    tids = [101, 7, 55, 9999]  # 9999: a tid no query term maps to
+    batches = []
+    for seg in range(3):
+        for tid in tids:
+            docs = np.sort(rng.choice(200, int(rng.integers(1, 40)), replace=False))
+            docs = seg * SEG_STRIDE + docs
+            tf = rng.integers(1, 4, len(docs))
+            flat = np.concatenate([np.sort(rng.choice(50, t, replace=False)) for t in tf])
+            off = np.concatenate(([0], np.cumsum(tf)))
+            batches.append(encode_rows([0], [tid], [seg], docs, tf, rng.integers(5, 60, len(docs)),
+                                       rng.integers(0, 3, len(docs)), 20.0, 1.2, 0.75, 4,
+                                       positions=(flat, off)))
+    tbl = pa.Table.from_batches(batches)
+    tbl = tbl.take(rng.permutation(len(tbl)))
+    tid2term = {101: "a", 7: "b", 55: "c", 4242: "absent"}
+    factors = {0: 1.0, 1: 1.5, 2: 2.25}
+    cols = [("first", "first_doc"), ("last", "last_doc"), ("mint", "min_tier"), ("n", "n"),
+            ("gaps", "doc_gaps"), ("tfs", "tfs"), ("dls", "dls"), ("seg", "segment_id")]
+    for with_positions in (True, False):
+        data = tbl if with_positions else tbl.drop_columns(["positions"])
+        got = split_blocks(data, tid2term, factors)
+        assert set(got) == set(tid2term.values())
+        assert len(got["absent"]) == 0 and got["absent"].n.sum() == 0
+        assert list(got["absent"].by_segment()) == []
+        ref = data.to_pandas()
+        for tid, g in ref.groupby("tid"):
+            if tid not in tid2term:
+                continue
+            g = g.sort_values(["segment_id", "first_doc"])
+            tb = got[tid2term[tid]]
+            for field, col in cols:
+                assert list(getattr(tb, field)) == list(g[col]), (tid, field)
+            assert np.allclose(tb.bmax, g["block_max"] * g["segment_id"].map(factors))
+            assert tb.segs.tolist() == sorted(g["segment_id"].unique())
+            if with_positions:
+                assert list(tb.positions) == list(g["positions"])
+            else:
+                assert tb.positions is None
+            assert [s for s, _ in tb.by_segment()] == tb.segs.tolist()
+            assert sum(len(part) for _, part in tb.by_segment()) == len(tb)
+    # the pandas frame a Spark UDF receives splits identically
+    frame = split_blocks(tbl.to_pandas(), tid2term, factors)
+    arrow = split_blocks(tbl, tid2term, factors)
+    for t in tid2term.values():
+        for f in ("first", "last", "bmax", "mint", "n", "gaps", "tfs", "dls", "seg", "positions"):
+            assert np.array_equal(getattr(frame[t], f), getattr(arrow[t], f)), (t, f)
+    empty = split_blocks(tbl.slice(0, 0), tid2term, factors)
+    assert all(len(tb) == 0 for tb in empty.values()) and set(empty) == set(tid2term.values())
+
+
+def test_reader_serves_without_terms_dir(spark, tmp_path):
+    """Serving never reads the terms directory: a reader on a copy
+    whose terms/ is deleted answers topk, tiered_topk, phrase_topk,
+    definitions and _scores_for_docs exactly like a reader on the intact
+    index, its df equals the Spark plane's terms-directory df, and an
+    absent term is cached as empty blocks."""
+    import shutil
+
+    import numpy as np
+    import pandas as pd
+
+    from mantic_sh_spark.operators.index_build import build_index
+    from mantic_sh_spark.operators.wand import _term_meta
+    from mantic_sh_spark.sources.catalog import IndexPaths
+    from mantic_sh_spark.sources.synth import gen_pages
+
+    synth = gen_pages(spark, SynthConfig(n_docs=160, vocab_size=90, seed=31), partitions=2)
+    defs = spark.createDataFrame(pd.DataFrame({
+        "url": [f"https://ex.com/d{i}" for i in range(3)],
+        "warc_ts": pd.to_datetime(["2026-01-01"] * 3),
+        "html": [b""] * 3,
+        "text": ["def parseHtml then w1x", "class parseHtml wraps w2x",
+                 "parseHtml = function of w1x"],
+        "lang": ["en"] * 3,
+    })).select(*synth.columns)
+    idx = str(tmp_path / "idx")
+    build_index(spark, synth.unionByName(defs), idx, n_segments=2, store_positions=True)
+    bare = str(tmp_path / "bare")
+    shutil.copytree(idx, bare)
+    reader = IndexReader(bare)
+    shutil.rmtree(f"{bare}/terms")
+    intact = IndexReader(idx)
+
+    queries = ["w1x", "w1x w2x", "w0x w3x w5x", "qqabsent w1x", "parseHtml"]
+    for q in queries:
+        assert reader.topk(q, k=8) == intact.topk(q, k=8), q
+        assert reader.tiered_topk(q, k=8) == intact.tiered_topk(q, k=8), q
+    for ph in ("w0x w1x", "w1x w2x w3x", "parse html", "qqabsent w1x"):
+        assert reader.phrase_topk(ph, k=20) == intact.phrase_topk(ph, k=20), ph
+    assert reader.references("qqabsent") == intact.references("qqabsent") == []
+    got = reader.definitions("parseHtml")
+    assert got == intact.definitions("parseHtml") and len(got) == 3
+    docs = np.array(sorted(d for d, _ in intact.topk("w1x w2x", k=30)), dtype=np.int64)
+    assert reader._scores_for_docs(["w1x", "w2x"], docs) == \
+        intact._scores_for_docs(["w1x", "w2x"], docs)
+    assert "qqabsent" in reader._blocks_lru and len(reader._blocks_lru["qqabsent"]) == 0
+
+    terms = ["w0x", "w1x", "w2x", "parse", "html", "qqabsent"]
+    meta = _term_meta(spark, IndexPaths(idx), terms)
+    assert reader.df(terms) == {t: m[0] for t, m in meta.items()}

@@ -19,7 +19,9 @@ and tiered identity against the deleted-filtered oracles (collection
 stats stay pre-delete on both sides by contract). Every third case
 then UPSERTS modified versions of a few head docs (tombstones + a fresh
 segment) and re-checks tiered identity, then PURGES with a merge of
-every segment and checks it once more.
+every segment and checks it once more. Each of those states (and the
+positional twin) also checks the reader's df — the n of its served
+blocks summed — against the Spark plane's terms-directory df.
 
 Merging cases first tombstone a few head docs and THEN run the
 non-purge merge, so their tombstones re-home under the merge's dst
@@ -57,8 +59,9 @@ from mantic_sh_spark.operators.phrase import phrase_topk
 from mantic_sh_spark.operators.query import bm25_topk
 from mantic_sh_spark.operators.query import tiered_topk as batch_tiered
 from mantic_sh_spark.operators.tiers import DEFAULT_TIER_SPECS
-from mantic_sh_spark.operators.wand import wand_topk
+from mantic_sh_spark.operators.wand import _index_meta, _term_meta, refresh_meta, wand_topk
 from mantic_sh_spark.serve import IndexReader
+from mantic_sh_spark.sources.catalog import IndexPaths
 from mantic_sh_spark.sources.synth import SynthConfig, gen_pages, gen_queries
 from mantic_sh_spark.streaming.incremental import upsert_pages
 
@@ -142,12 +145,21 @@ def _budget0_exact(reader, queries, k):
     return True
 
 
+def _df_identity(reader, idx, queries):
+    """The reader's df (the n of its served blocks summed) equals the
+    Spark plane's terms-directory df, both under the same fold gating."""
+    terms = sorted({t for _, q in queries for t in tokenize_query(q)})
+    refresh_meta(idx)
+    paths = IndexPaths(idx)
+    meta = _term_meta(spark, paths, terms, excluded=_index_meta(spark, paths)[4])
+    return reader.df(terms) == {t: m[0] for t, m in meta.items()}
+
+
 def _overlapping(reader, terms):
     """Does any term's block-interval list overlap itself?"""
-    for pdf in reader._blocks(sorted(set(terms))).values():
-        first, last = pdf["first_doc"].to_numpy(), pdf["last_doc"].to_numpy()
-        o = np.argsort(first, kind="stable")
-        if np.any(first[o][1:] <= last[o][:-1]):
+    for tb in reader._blocks(sorted(set(terms))).values():
+        o = np.argsort(tb.first, kind="stable")
+        if np.any(tb.first[o][1:] <= tb.last[o][:-1]):
             return True
     return False
 
@@ -198,6 +210,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     r_swp._SWEEP_DF_CAP = 1  # force single-block decode passes
     tier_ok = (_tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
                and _budget0_exact(r_swp, queries, 8))
+    df_ok = _df_identity(reader, idx, tq)
 
     # tombstone the head of several rankings; WAND + serving + tiered
     # must all equal the deleted-filtered oracles
@@ -221,6 +234,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
             for qid, q in queries
         ) and _budget0_exact(reader, queries, 8) and _budget0_exact(r_swp, queries, 8)
         del_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dset), 8)
+        df_ok &= _df_identity(reader, idx, tq)
 
     churn_ok = True
     if seed % 3 == 0:
@@ -236,11 +250,13 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                 .select("doc_id").collect()}
         reader.refresh()
         churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dead), 8)
+        df_ok &= _df_identity(reader, idx, tq)
         live = sorted({int(r.segment_id) for r in spark.read.parquet(f"{idx}/postings")
                        .select("segment_id").distinct().collect()})
         merge_segments(spark, idx, live, purge=True)
         reader.refresh()
         churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8), 8)
+        df_ok &= _df_identity(reader, idx, tq)
 
     phrase_ok = True
     if seed % 2 == 1:
@@ -287,6 +303,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         phrases = [(0, f"{st} w1x", 0), (1, f"{st} {st}", 0), (2, "w2x w3x", 0),
                    (3, f"w1x {st} w4x", seed % 3), (4, f"{st} w5x", 2), (5, "w7x", 0)]
         preader = IndexReader(posidx)
+        df_ok &= _df_identity(preader, posidx, tq)
         for qid, ph, slop in phrases:
             terms = tokenize(ph)
             want = {d: brute(toks, terms, slop) for d, toks in doc_toks.items()}
@@ -309,14 +326,15 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
             if rgot != rwant:
                 phrase_ok = False
         shutil.rmtree(posidx, ignore_errors=True)
-    fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok and churn_ok)
+    fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok and churn_ok and df_ok)
     print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
           f"pre_deleted={len(pre)} overlapping_blocks={overlap}: "
           f"{'OK' if ok else 'MISMATCH'} serve={'OK' if serve_ok else 'MISMATCH'}"
           f" phrase={'OK' if phrase_ok else 'MISMATCH'}"
           f" tier={'OK' if tier_ok else 'MISMATCH'}"
           f" del={'OK' if del_ok else 'MISMATCH'}"
-          f" churn={'OK' if churn_ok else 'MISMATCH'}", flush=True)
+          f" churn={'OK' if churn_ok else 'MISMATCH'}"
+          f" df={'OK' if df_ok else 'MISMATCH'}", flush=True)
     shutil.rmtree(idx, ignore_errors=True)
 print("FAILS:", fails)
 spark.stop()
