@@ -3,9 +3,15 @@ the reference's in-order path-sequence matching and `references`
 positional lookups, src/brain-scorer.ts:286-360, src/code-intel.ts:337-383
 — here as real positional postings).
 
-Per segment (applyInPandas, like WAND): decode each phrase term's
-postings + positions, intersect doc sets term-by-term (smallest list
-first), then verify adjacency vectorized — a doc matches where
+One kernel, two planes: the serving reader runs it ONCE over every
+segment's blocks (doc ids are global), the distributed engine once per
+segment (applyInPandas, like WAND). Before any decode, each phrase
+term keeps only the blocks that overlap an elementary doc interval
+every distinct phrase term's blocks cover (segment_topk's interval cut,
+conjunctive) — no other block can hold a doc with every term, so a rare
+term paired with a head term decodes a few of the head term's blocks.
+The kept postings + positions then intersect doc sets (smallest list
+first), and adjacency verifies vectorized — a doc matches where
 P_0 ∩ (P_1 − 1) ∩ … ∩ (P_m − m) is non-empty; the intersection size is
 the phrase term-frequency. Results rank by (n_matches desc, doc_id asc)
 with the usual deterministic per-query window merge.
@@ -22,31 +28,58 @@ from ..functions.codec import decode_blocks
 from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize
 from ..sources.catalog import IndexPaths
-from .wand import _TermBlocks, split_blocks
+from .wand import _TermBlocks, cached_postings, split_blocks
 
 
 def _term_postings(tb: _TermBlocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """All blocks of one (term, segment) → (doc_ids, flat positions,
-    offsets): doc j's within-doc positions are flat[off[j]:off[j+1]],
-    concatenated in doc order — one batched decode of every block.
-    Ragged (flat + offsets) rather than a list of per-doc arrays — the
-    verification pass operates on the whole candidate set at once and
-    never touches per-doc Python objects."""
+    """Blocks of one term → (ascending doc_ids, flat positions, offsets):
+    doc j's within-doc positions are flat[off[j]:off[j+1]] — one batched
+    decode of every block. Ragged (flat + offsets) rather than a list of
+    per-doc arrays — the verification pass operates on the whole
+    candidate set at once and never touches per-doc Python objects.
+    Blocks decode in first_doc order, which gives ascending docs unless
+    blocks overlap (a legacy non-contiguous compaction envelops another
+    segment's range); then the docs and their position runs are
+    re-sorted, since callers binary-search them."""
     o = np.argsort(tb.first, kind="stable")
     docs, tf, _dl, _code, flat = decode_blocks(
         tb.n[o], tb.first[o], tb.gaps[o], tb.tfs[o], tb.dls[o], tb.positions[o])
     off = np.zeros(len(docs) + 1, dtype=np.int64)
     np.cumsum(tf, out=off[1:])
+    if np.any(docs[1:] < docs[:-1]):
+        o = np.argsort(docs, kind="stable")
+        flat = _gather_runs(flat, off[o], tf[o])
+        docs = docs[o]
+        np.cumsum(tf[o], out=off[1:])
     return docs, flat, off
+
+
+def _kept_blocks(tbs: list[_TermBlocks]) -> list[np.ndarray]:
+    """Per term, a bool mask of its blocks that overlap an elementary
+    interval (cut at every first_doc / last_doc + 1, as segment_topk
+    cuts) covered by a block of EVERY term: a doc holding every term
+    sits in such an interval, so no other block can hold a match."""
+    first, last = (np.concatenate([getattr(tb, c) for tb in tbs]) for c in ("first", "last"))
+    nb = [len(tb) for tb in tbs]
+    term = np.repeat(np.arange(len(tbs)), nb)
+    cuts = np.unique(np.concatenate((first, last + 1)))
+    a, e = np.searchsorted(cuts, first), np.searchsorted(cuts, last + 1)
+    every = np.ones(len(cuts), dtype=bool)
+    for i in range(len(tbs)):
+        m = term == i
+        every &= np.cumsum(np.bincount(a[m], minlength=len(cuts))
+                           - np.bincount(e[m], minlength=len(cuts))) > 0
+    c = np.concatenate(([0], np.cumsum(every)))
+    return np.split(c[e] > c[a], np.cumsum(nb)[:-1])
 
 
 # doc-rank stride for the keyed-position trick: doc_rank * _POS_STRIDE +
 # position turns per-doc searchsorted into ONE searchsorted over the
 # whole candidate batch. Positions are within-doc token indexes (< 2^31
 # — doc_len is int32), so a 2^32 stride leaves 2^31 rank headroom
-# before int64 overflow: up to ~2.1e9 candidate docs per (segment,
-# query), guarded explicitly below (overflow would silently corrupt
-# the sort order, not raise).
+# before int64 overflow: up to ~2.1e9 candidate docs per query run,
+# guarded explicitly below (overflow would silently corrupt the sort
+# order, not raise).
 _POS_STRIDE = np.int64(1) << np.int64(32)
 
 
@@ -64,7 +97,7 @@ def _gather_runs(flat: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.n
 def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
                          dead: DeadDocs | None = None,
                          slop: int = 0,
-                         decoded_cache: dict | None = None,
+                         decoded_cache=None,
                          stats: dict | None = None):
     """Core batched phrase verification → (cand_docs, doc_rank0, p0,
     valid): one element per START position of the first term across
@@ -74,41 +107,47 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
     (segment_phrase_positions — the `find_references` surface) from the
     same pass. Returns None when no candidate survives.
 
-    `decoded_cache` (term → _term_postings result; plain dict or a
-    .get/.put object like the serving reader's byte-budgeted decoded
-    LRU) lets a caller that probes MANY phrases over one segment
-    (get_definition: one probe per definition form) — or many QUERIES
-    over a long-lived reader — decode each term's blocks once. NB: the
-    lookup is get-then-decode, never dict.setdefault(t, decode()) —
-    setdefault evaluates its default eagerly, which would re-decode on
-    every hit and make the cache pure overhead."""
+    Only the blocks _kept_blocks keeps are decoded. `decoded_cache`
+    (optional .get(term) / .put(term, value), like the serving reader's
+    byte-budgeted decoded LRU) holds whole terms, tagged with their
+    blocks' first_doc / n columns (wand.cached_postings): a term whose
+    kept blocks hold at least half of its postings is decoded whole and
+    cached — no more than the query spends on it anyway — else only its
+    kept blocks decode and nothing is cached. `stats` accumulates
+    blocks_considered (before the block filter), blocks_decoded,
+    decoded_hits and `segs`, the segment ids of the kept blocks."""
     if not terms or any(not len(by_term.get(t, ())) for t in terms):
         return None
+    uniq = sorted(set(terms))
+    tbs = [by_term[t] for t in uniq]
+    kept = _kept_blocks(tbs)
+    if stats is not None:
+        stats["blocks_considered"] = stats.get("blocks_considered", 0) + sum(map(len, tbs))
+        stats.setdefault("segs", set()).update(
+            np.concatenate([tb.seg[m] for tb, m in zip(tbs, kept)]).tolist())
+    if not kept[0].any():  # no interval holds every term
+        return None
     decoded = {}
-    for t in set(terms):
-        got = decoded_cache.get(t) if decoded_cache is not None else None
+    for t, tb, m in zip(uniq, tbs, kept):
+        got = cached_postings(decoded_cache, t, tb)
         if got is None:
-            # decode accounting lives HERE, not in callers: with a
-            # persistent decoded cache a hot term is never re-decoded,
-            # and caller-side counting would over-report blocks_decoded
+            whole = 2 * int(tb.n[m].sum()) >= int(tb.n.sum())
+            part = tb if whole else tb.take(np.flatnonzero(m))
             if stats is not None:
-                stats["blocks_decoded"] = (
-                    stats.get("blocks_decoded", 0) + len(by_term[t]))
-            got = _term_postings(by_term[t])
-            if decoded_cache is not None:
-                put = getattr(decoded_cache, "put", None)
-                if put is not None:
-                    put(t, got)
-                else:
-                    decoded_cache[t] = got
+                stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(part)
+            got = _term_postings(part)
+            if whole and decoded_cache is not None:
+                decoded_cache.put(t, got + (tb.first, tb.n))
         elif stats is not None:
             stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
         decoded[t] = got
-    # candidate docs: intersect doc sets, smallest first
-    doc_sets = [decoded[t][0] for t in terms]
-    cand = doc_sets[0]
-    for ds in sorted(doc_sets[1:], key=len):
-        cand = np.intersect1d(cand, ds, assume_unique=True)
+    # candidate docs: the smallest doc list, narrowed by binary search
+    # in each other list (all ascending)
+    by_len = sorted(uniq, key=lambda t: len(decoded[t][0]))
+    cand = decoded[by_len[0]][0]
+    for t in by_len[1:]:
+        docs_t = decoded[t][0]
+        cand = cand[docs_t[np.minimum(np.searchsorted(docs_t, cand), len(docs_t) - 1)] == cand]
         if not len(cand):
             break
     if dead is not None and len(cand):
@@ -118,7 +157,7 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
 
     nc = len(cand)
     if nc >= (1 << 31):  # keyed-searchsorted rank headroom (see _POS_STRIDE)
-        raise ValueError(f"phrase candidate set too large for one segment pass: {nc}")
+        raise ValueError(f"phrase candidate set too large for one query run: {nc}")
     # per term: the candidate docs' position runs as ONE keyed array
     # (doc_rank * 2^32 + position, ascending — runs are doc-ordered and
     # ascending within a doc), plus that keyed array itself for binary
@@ -126,8 +165,8 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
     # searchsorted: a miss walks into the next doc's key range and is
     # rejected by the rank check.
     keyed: dict[str, np.ndarray] = {}
-    for t in set(terms):
-        docs_t, flat_t, off_t = decoded[t]
+    for t in uniq:
+        docs_t, flat_t, off_t = decoded[t][:3]
         idx = np.searchsorted(docs_t, cand)
         starts, lens = off_t[idx], off_t[idx + 1] - off_t[idx]
         ranks = np.repeat(np.arange(nc, dtype=np.int64), lens)
@@ -155,11 +194,12 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
 def segment_phrase_matches(by_term: dict[str, _TermBlocks], terms: list[str],
                            dead: DeadDocs | None = None,
                            slop: int = 0,
-                           decoded_cache: dict | None = None,
+                           decoded_cache=None,
                            stats: dict | None = None) -> list[tuple[int, int]]:
-    """One (segment, phrase) evaluation → [(doc_id, n_matches)].
-    Shared by the distributed UDF and the serving reader (the same
-    sharing discipline as wand.segment_topk).
+    """One phrase evaluation over the given blocks (one segment's for
+    the distributed UDF, every segment's for the serving reader) →
+    [(doc_id, n_matches)] — the same sharing discipline as
+    wand.segment_topk.
 
     The verification is ONE batched ragged-array pass over ALL
     candidate docs (review r2: the former per-candidate Python loop was
@@ -184,9 +224,9 @@ def segment_phrase_matches(by_term: dict[str, _TermBlocks], terms: list[str],
 def segment_phrase_positions(by_term: dict[str, _TermBlocks], terms: list[str],
                              dead: DeadDocs | None = None,
                              slop: int = 0,
-                             decoded_cache: dict | None = None,
+                             decoded_cache=None,
                              stats: dict | None = None) -> list[tuple[int, np.ndarray]]:
-    """One (segment, phrase/symbol) evaluation → [(doc_id, ascending
+    """One phrase/symbol evaluation → [(doc_id, ascending
     match-START token positions)] — the positional payload behind
     `find_references` (reference: src/code-intel.ts:337-383 /
     src/mcp-server.ts:763-847 answer "where is symbol X" with per-file

@@ -90,14 +90,6 @@ class _TermBlocks:
         return _TermBlocks(*(None if v is None else v[idx]
                              for v in (getattr(self, f) for f in self.__slots__)))
 
-    def by_segment(self):
-        """(segment id, that segment's blocks) per segment, ascending."""
-        if not len(self):
-            return
-        cuts = np.flatnonzero(np.diff(self.seg)) + 1
-        for lo, hi in zip(np.concatenate(([0], cuts)), np.append(cuts, len(self.seg))):
-            yield int(self.seg[lo]), self.take(slice(lo, hi))
-
 
 def split_blocks(data, tid2term: dict[int, str],
                  bound_factors: dict | None = None) -> dict[str, _TermBlocks]:
@@ -142,10 +134,12 @@ def split_blocks(data, tid2term: dict[int, str],
 
 
 def cached_postings(decode_cache, term: str, tb: _TermBlocks):
-    """The decode cache's (docs, tf_norm, tier codes, first_doc, n)
-    entry for `term` when it was decoded from blocks with exactly tb's
-    first_doc / n columns, else None: blocks in another order, or from
-    another epoch (a query straddling refresh), are a miss."""
+    """The decode cache's entry for `term` — the top-k kernel's (docs,
+    tf_norm, tier codes, first_doc, n), the phrase kernel's (docs,
+    positions, offsets, first_doc, n) — when it was decoded from blocks
+    with exactly tb's first_doc / n columns, else None: blocks in
+    another order, or from another epoch (a query straddling refresh),
+    are a miss."""
     c = decode_cache.get(term) if decode_cache is not None else None
     if c is None or not (np.array_equal(c[3], tb.first) and np.array_equal(c[4], tb.n)):
         return None

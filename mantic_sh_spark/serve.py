@@ -6,12 +6,13 @@ README.md:82-85).
 Architecture: Spark is the BUILD/ANALYTICS plane; serving replicas run
 this module — a long-lived `IndexReader` that reads the exact parquet
 artifacts the Spark jobs commit, via pyarrow row-group-pruned reads,
-and executes the SAME kernels the distributed path uses
-(`operators/wand.py::segment_topk` for BM25 — one call over every
-segment's blocks here, one per segment there — and for the R1 tier
+and executes the SAME kernels the distributed path uses — each called
+once over every segment's blocks here, once per segment there:
+`operators/wand.py::segment_topk` for BM25 and for the R1 tier
 ladder, whose tier codes ride in the same postings;
-`operators/phrase.py::segment_phrase_matches` for positional phrase /
-proximity queries). No Spark job
+`operators/phrase.py::segment_phrase_matches` / `segment_phrase_positions`
+for positional phrase / proximity queries, references and definitions,
+which decode only the blocks every phrase term overlaps. No Spark job
 — and no JVM — is on the per-query path, so latency is decode-bound
 (milliseconds), not job-scheduling-bound.
 
@@ -126,7 +127,8 @@ class _DecodedLRU:
 
 class _NsDecodeCache:
     """Namespace adapter handing kernels a flat .get(term)/.put(term,
-    value) view of one _DecodedLRU (e.g. per (kind, segment)). Pins the
+    value) view of one _DecodedLRU (one namespace per kernel: ("k",)
+    for top-k, ("p",) for phrase). Pins the
     LRU generation at construction (query start) so puts from a query
     that straddles refresh() are dropped, not installed stale."""
 
@@ -157,7 +159,7 @@ class IndexReader:
     (no torn refresh). Observability: per-query and cumulative
     read-amplification counters — segments_touched, blocks_considered,
     blocks_decoded, terms_cold — via `counters()`; the considered/
-    decoded gap is the top-k kernel's skip win, the number an operator
+    decoded gap is the kernels' skip win, the number an operator
     watches at 100× scale."""
 
     def __init__(self, index_dir: str, k1: float = K1, b: float = B,
@@ -311,23 +313,50 @@ class IndexReader:
         terms-directory read."""
         return {t: int(tb.n.sum()) for t, tb in self._blocks(terms).items()}
 
-    def _self_heal(self, attempt_fn):
-        """Run attempt_fn(); on an I/O error from dataset handles an
-        EXTERNAL mutation invalidated (a merge retired segment files
-        the handle still lists), refresh() and retry once — same
-        contract as topk's inline form (which also folds in the
-        straddling-refresh epoch retry). If the refresh itself fails,
-        the ORIGINAL error propagates (e.g. a deliberate
-        missing-sidecar FileNotFoundError on a bogus path must not be
-        masked by the refresh's own failure)."""
-        try:
-            return attempt_fn()
-        except OSError as first:
+    def _run(self, attempt, record: bool = True):
+        """attempt(stats) under the one retry discipline every query
+        surface (and the docs reads behind urls/snippets, which record
+        no stats) shares:
+          * a run that straddles a concurrent refresh() re-runs against
+            the new epoch (up to twice): otherwise it could mix
+            pre-refresh postings with post-refresh liveness (a
+            purge-merge clears tombstones whose postings the attempt
+            already fetched → a purged doc resurfaces). The re-run
+            linearizes the answer to the post-refresh state for direct
+            library/MCP embedders; serve_loop also drains before
+            refreshing.
+          * an I/O error on the first attempt — dataset handles that an
+            EXTERNAL mutation invalidated (a merge retired segment files
+            a handle still lists) — refreshes and retries once; a second
+            error propagates (a genuine I/O error must not loop), and if
+            the refresh itself fails the ORIGINAL error propagates (a
+            missing-sidecar FileNotFoundError on a bogus path must not be
+            masked by the refresh's own failure).
+        With `record`, the last attempt's counters become last_stats and
+        its truncation flag `truncated`."""
+        t0 = time.time()
+        for n in range(3):
+            epoch0 = self._epoch
+            stats = {"segments_touched": 0, "blocks_considered": 0,
+                     "blocks_decoded": 0, "terms_cold": 0}
             try:
-                self.refresh()
-            except OSError:
-                raise first
-            return attempt_fn()
+                out = attempt(stats)
+            except OSError as first:
+                if n:
+                    raise
+                try:
+                    self.refresh()
+                except OSError:
+                    raise first
+                continue
+            if self._epoch == epoch0:
+                break
+        if record:
+            self.truncated = stats.pop("truncated", False)
+            if "segs" in stats:  # a positional run: its kept blocks' segments
+                stats["segments_touched"] = len(stats.pop("segs"))
+            self._record_stats(stats, t0)
+        return out
 
     def _dead_docs(self) -> "DeadDocs | None":
         """This epoch's tombstoned-doc set (None when nothing is dead):
@@ -438,19 +467,19 @@ class IndexReader:
 
     def _docs_rows(self, doc_ids: list[int], column: str) -> dict:
         """{doc_id: column value} via a row-group-pruned docs read (docs
-        are sorted by doc_id within each segment partition). Self-heals
-        like every query surface: a purging merge rewrites the docs
-        files an open handle lists."""
+        are sorted by doc_id within each segment partition). Retries
+        like every query surface (_run): a purging merge rewrites the
+        docs files an open handle lists."""
         import pyarrow.dataset as ds
 
-        def attempt():
+        def attempt(_stats):
             if not doc_ids or self._docs is None:
                 return {}
             d = self._docs.to_table(filter=ds.field("doc_id").isin(sorted(doc_ids)),
                                     columns=["doc_id", column]).to_pydict()
             return dict(zip(d["doc_id"], d[column]))
 
-        return self._self_heal(attempt)
+        return self._run(attempt, record=False)
 
     def urls(self, doc_ids: list[int]) -> dict[int, str]:
         """doc_id → url."""
@@ -496,21 +525,11 @@ class IndexReader:
         exact score; self.truncated records whether intervals that could
         still reach the top k were left unvisited.
 
-        A query that straddles a concurrent refresh() re-runs once
-        against the new epoch: without the retry an attempt could mix
-        pre-refresh postings with post-refresh liveness (e.g. a
-        purge-merge clears tombstones whose postings the attempt
-        already fetched → a purged doc resurfaces). The retry
-        linearizes the answer to the post-refresh state for direct
-        library/MCP embedders; serve_loop additionally drains before
-        refreshing.
-
-        A reader whose index was mutated by ANOTHER process self-heals:
-        its dataset handles may list segment files a merge has since
-        retired, so the read raises — refresh() rebuilds the handles
-        (and the manifest gating) and the query retries once before
-        propagating (a genuine I/O error must not loop)."""
-        return self._ranked(query, k, budget_ms, None)
+        Runs under _run: a query straddling a concurrent refresh()
+        re-runs against the new epoch, and a reader whose index ANOTHER
+        process mutated refreshes and retries once."""
+        deadline = None if budget_ms is None else time.time() + budget_ms / 1e3
+        return self._run(lambda stats: self._topk_attempt(query, k, deadline, stats, None))
 
     def tiered_topk(self, query: str, k: int = 10,
                     budget_ms: float | None = None) -> list[tuple[int, int, float]]:
@@ -522,36 +541,16 @@ class IndexReader:
         matches; rank (tier asc, score desc, doc_id asc). Served like
         topk — one segment_topk call over the main postings, whose tier
         codes the build folded in (format v7) — with the same budget_ms
-        deadline, liveness, fold gating, straddling-refresh retry and
-        self-heal."""
-        return self._ranked(query, k, budget_ms, len(DEFAULT_TIER_SPECS))
+        deadline, liveness, fold gating and retries."""
+        deadline = None if budget_ms is None else time.time() + budget_ms / 1e3
+        return self._run(lambda stats: self._topk_attempt(
+            query, k, deadline, stats, len(DEFAULT_TIER_SPECS)))
 
-    def _ranked(self, query: str, k: int, budget_ms: float | None,
-                tiers: int | None) -> list[tuple]:
-        """topk (tiers None) or tiered_topk: the retry loop around one
-        kernel attempt."""
-        t0 = time.time()
-        for attempt in range(3):
-            epoch0 = self._epoch
-            stats = {"segments_touched": 0, "blocks_considered": 0,
-                     "blocks_decoded": 0, "terms_cold": 0}
-            try:
-                hits = self._topk_attempt(query, k, budget_ms, stats, t0, tiers)
-            except OSError:
-                if attempt:
-                    raise
-                self.refresh()
-                continue
-            if self._epoch == epoch0:
-                break
-        self._record_stats(stats, t0)
-        return hits
-
-    def _topk_attempt(self, query: str, k: int, budget_ms: float | None,
-                      stats: dict, t0: float, tiers: int | None) -> list[tuple]:
+    def _topk_attempt(self, query: str, k: int, deadline: float | None,
+                      stats: dict, tiers: int | None) -> list[tuple]:
+        """topk (tiers None) or tiered_topk: one kernel attempt."""
         from .operators.wand import segment_topk
 
-        self.truncated = False
         if self._postings is None:
             return []
         terms = sorted(set(tokenize_query(query)))
@@ -572,10 +571,8 @@ class IndexReader:
         # absent ones included (a doc lacking one is in the final tier)
         hits = segment_topk(blocks, terms, idf_map, self.avgdl, k,
                             self.k1, self.b, dead=self._dead_docs(), stats=stats,
-                            decode_cache=_NsDecodeCache(self._decoded, ("k", -1), dgen),
-                            deadline=None if budget_ms is None else t0 + budget_ms / 1e3,
-                            tiers=tiers)
-        self.truncated = stats.pop("truncated", False)
+                            decode_cache=_NsDecodeCache(self._decoded, ("k",), dgen),
+                            deadline=deadline, tiers=tiers)
         return hits
 
     def _record_stats(self, stats: dict, t0: float) -> None:
@@ -591,9 +588,17 @@ class IndexReader:
 
     def counters(self) -> dict:
         """Read-amplification observability: counters for the LAST query
-        (segments touched, block rows considered, blocks actually
-        decoded — the gap is the skip win — and LRU-miss terms) plus
-        cumulative totals since construction/refresh."""
+        plus cumulative totals since construction/refresh —
+        segments_touched (the distinct segments of the blocks a query
+        used: every fetched block's segment for topk/tiered, the blocks
+        the overlap filter kept for phrase/references/definitions),
+        blocks_considered (block rows the kernels were handed; for the
+        positional surfaces, before the overlap filter), blocks_decoded
+        (blocks actually varint-decoded — the gap is the skip win),
+        terms_cold (LRU-miss terms, including definitions' symbol
+        probe) and decoded_hits (terms served by the decoded LRU). A
+        positional query sums its counters over its kernel calls
+        (definitions runs one per definition form)."""
         with self._lock:
             return {"last": dict(self._last_shared), "total": dict(self.totals)}
 
@@ -601,79 +606,39 @@ class IndexReader:
     def has_positions(self) -> bool:
         return self._postings is not None and "positions" in self._postings.schema.names
 
-    def _pos_blocks(self, terms: list[str], stats: dict | None = None) -> dict:
-        """term → wand._TermBlocks INCLUDING positions bytes (phrase
-        path; cached separately from the BM25 hot set so non-phrase
-        queries never hold position payloads in memory)."""
-        return self._fetch_blocks(self._pos_lru, _POSTING_COLS + ["positions"], terms,
-                                  stats=stats)
-
-    @staticmethod
-    def _by_segment(blocks: dict, stats: dict) -> dict[int, dict]:
-        """Positional blocks regrouped per segment — the shared front
-        half of every positional serving query (phrase_topk /
-        references / definitions). Counts blocks_considered; decode
-        accounting is the kernel's (it knows which blocks it actually
-        decodes)."""
-        per_seg: dict[int, dict] = {}
-        for t, tb in blocks.items():
-            stats["blocks_considered"] += len(tb)
-            for seg, part in tb.by_segment():
-                per_seg.setdefault(seg, {})[t] = part
-        return per_seg
+    def _pos_run(self, terms: list[str], stats: dict, surface: str):
+        """(term → _TermBlocks with positions, DeadDocs, decode cache)
+        for one positional kernel run over every segment. Positional
+        blocks are cached apart from the BM25 hot set, so non-phrase
+        queries never hold position payloads in memory; the decoded LRU's
+        ("p",) namespace is shared by phrase, references and definitions
+        (same blocks, same decode)."""
+        if not self.has_positions:
+            raise ValueError(f"{surface} requires an index built with store_positions=True")
+        dgen = self._decoded.generation  # pin BEFORE the block fetch
+        blocks = self._fetch_blocks(self._pos_lru, _POSTING_COLS + ["positions"],
+                                    sorted(set(terms)), stats=stats)
+        return blocks, self._dead_docs(), _NsDecodeCache(self._decoded, ("p",), dgen)
 
     def phrase_topk(self, phrase: str, k: int = 10, slop: int = 0) -> list[tuple[int, int]]:
         """[(doc_id, n_matches)] ranked (n_matches desc, doc_id asc) —
         exact/sloppy phrase served from positional postings with no
-        Spark job; value-identical to operators.phrase.phrase_topk
-        (same per-segment kernel; phrase stays per-segment by design:
-        verification decodes every candidate block, so there is nothing
-        a global run could prune and the sliced decode is the
-        cache-friendly form). Same straddling-refresh retry and
-        external-mutation self-heal as topk."""
-        t0 = time.time()
-        for attempt in range(3):
-            epoch0 = self._epoch
-            stats = {"segments_touched": 0, "blocks_considered": 0,
-                     "blocks_decoded": 0, "terms_cold": 0}
-            try:
-                hits = self._phrase_attempt(phrase, k, slop, stats)
-            except OSError:
-                if attempt:
-                    raise
-                self.refresh()
-                continue
-            if self._epoch == epoch0:
-                break
-        self._record_stats(stats, t0)
-        return hits
-
-    def _phrase_attempt(self, phrase: str, k: int, slop: int,
-                        stats: dict) -> list[tuple[int, int]]:
+        Spark job; value-identical to operators.phrase.phrase_topk (the
+        same kernel, run once over every segment's blocks: only blocks
+        every phrase term overlaps decode). Retries like topk (_run)."""
         from .functions.tokenize import tokenize
         from .operators.phrase import segment_phrase_matches
 
-        self.truncated = False
-        if not self.has_positions:
-            raise ValueError("phrase serving requires an index built with store_positions=True")
         terms = tokenize(phrase)  # ordered, repeats kept
-        if not terms:
-            return []
-        dgen = self._decoded.generation  # pin BEFORE the block fetch
-        per_seg = self._by_segment(self._pos_blocks(sorted(set(terms)), stats), stats)
-        dead = self._dead_docs()
-        hits: list[tuple[int, int]] = []
-        for seg, by_term in per_seg.items():
-            stats["segments_touched"] += 1
-            # decode accounting lives in the kernel now: with the
-            # decoded LRU a hot term is NOT re-decoded, and counting
-            # here would over-report (review r5 finding)
-            hits.extend(segment_phrase_matches(
-                by_term, terms, dead, slop,
-                decoded_cache=_NsDecodeCache(self._decoded, ("p", seg), dgen),
-                stats=stats))
-        hits.sort(key=lambda x: (-x[1], x[0]))
-        return hits[:k]
+
+        def attempt(stats):
+            blocks, dead, cache = self._pos_run(terms, stats, "phrase serving")
+            hits = segment_phrase_matches(blocks, terms, dead, slop,
+                                          decoded_cache=cache, stats=stats)
+            hits.sort(key=lambda x: (-x[1], x[0]))
+            return hits[:k]
+
+        return self._run(attempt)
 
     # Memory budget for head terms at corpus scale: _SWEEP_DF_CAP bounds
     # the postings (a ROW count; it cannot trigger below ~20M docs) one
@@ -696,7 +661,7 @@ class IndexReader:
                       doc_ids: "np.ndarray") -> "np.ndarray":
         """BM25 score of SPECIFIC docs for a term set, aligned to the
         input array (the bounded lookup behind session boosts). Per
-        term: a valid ("k", -1) entry of the top-k kernel's decode cache
+        term: a valid ("k",) entry of the top-k kernel's decode cache
         scores without decoding; otherwise only the blocks whose
         [first_doc, last_doc] holds a candidate decode, in passes of at
         most _SWEEP_DF_CAP postings, and a term decoded whole in one
@@ -718,7 +683,7 @@ class IndexReader:
 
         if len(cand) and terms:
             dgen = self._decoded.generation  # pin BEFORE the block fetch
-            cache = _NsDecodeCache(self._decoded, ("k", -1), dgen)
+            cache = _NsDecodeCache(self._decoded, ("k",), dgen)
             for t, tb in self._blocks(sorted(set(terms))).items():
                 if not len(tb):
                     continue
@@ -746,12 +711,9 @@ class IndexReader:
                     i = j
         return np.round(acc, 4)[inv]
 
+
     def references(self, symbol: str, k: int = 10,
                    max_positions: int = 100) -> list[dict]:
-        return self._self_heal(lambda: self._references_impl(symbol, k, max_positions))
-
-    def _references_impl(self, symbol: str, k: int = 10,
-                         max_positions: int = 100) -> list[dict]:
         """Where does `symbol` occur — [(doc_id, url, n_matches, token
         positions)] ranked by occurrence count, served from positional
         postings with no Spark job (the reference's `find_references`
@@ -761,40 +723,26 @@ class IndexReader:
         exact phrases and a plain word is a single-term lookup;
         positions are within-doc token indexes (the same coordinate
         space as `token_positions`), truncated to `max_positions` per
-        doc."""
+        doc. One phrase-kernel run over every segment; retries like
+        topk (_run)."""
         from .functions.tokenize import tokenize
         from .operators.phrase import segment_phrase_positions
 
-        t0 = time.time()
-        stats = {"segments_touched": 0, "blocks_considered": 0,
-                 "blocks_decoded": 0, "terms_cold": 0}
-        self.truncated = False
-        if not self.has_positions:
-            raise ValueError(
-                "find_references requires an index built with store_positions=True")
         terms = tokenize(symbol)
-        if not terms:
-            self._record_stats(stats, t0)
-            return []
-        dgen = self._decoded.generation  # pin BEFORE the block fetch
-        per_seg = self._by_segment(self._pos_blocks(sorted(set(terms)), stats), stats)
-        dead = self._dead_docs()
-        hits: list[tuple[int, "np.ndarray"]] = []
-        for seg, by_term in per_seg.items():
-            stats["segments_touched"] += 1
-            hits.extend(segment_phrase_positions(
-                by_term, terms, dead,
-                decoded_cache=_NsDecodeCache(self._decoded, ("p", seg), dgen),
-                stats=stats))
-        hits.sort(key=lambda x: (-len(x[1]), x[0]))
-        hits = hits[:k]
-        url_map = self.urls([d for d, _ in hits])
-        self._record_stats(stats, t0)
-        return [
-            {"doc_id": d, "url": url_map.get(d), "n_matches": len(p),
-             "positions": p[:max_positions].tolist()}
-            for d, p in hits
-        ]
+
+        def attempt(stats):
+            blocks, dead, cache = self._pos_run(terms, stats, "find_references")
+            hits = segment_phrase_positions(blocks, terms, dead, decoded_cache=cache,
+                                            stats=stats)
+            hits.sort(key=lambda x: (-len(x[1]), x[0]))
+            url_map = self.urls([d for d, _ in hits[:k]])
+            return [
+                {"doc_id": d, "url": url_map.get(d), "n_matches": len(p),
+                 "positions": p[:max_positions].tolist()}
+                for d, p in hits[:k]
+            ]
+
+        return self._run(attempt)
 
     # definition-introducing keywords, most-specific first: a
     # "definition" of symbol X is an occurrence of X immediately
@@ -825,13 +773,11 @@ class IndexReader:
     # determiner (the '=' the tokenizer erased sat there). A trailer
     # hit whose symbol is immediately preceded by one of these is
     # dropped (checked with one [det, *sym, trailer] probe per
-    # determiner, decoded once via the LRU) — review r5 finding.
+    # determiner, which decodes only the determiner blocks the symbol's
+    # blocks overlap) — review r5 finding.
     DEF_PROSE_GUARD = ("the", "a", "an", "this", "that")
 
     def definitions(self, symbol: str, k: int = 10) -> list[dict]:
-        return self._self_heal(lambda: self._definitions_impl(symbol, k))
-
-    def _definitions_impl(self, symbol: str, k: int = 10) -> list[dict]:
         """Where is `symbol` DEFINED — [(url, keyword, position)] ranked
         (keyword priority, position asc, doc_id asc): the serving form
         of the reference's `get_definition` MCP tool
@@ -842,100 +788,53 @@ class IndexReader:
         (`X = function` / `X = async () =>` / `X = lambda` — see
         DEF_TRAILERS). The reported position is always the SYMBOL's
         token position. Returns at most one hit per (doc, form) — the
-        first occurrence, like a goto-definition target."""
+        first occurrence, like a goto-definition target. Each probe is
+        one phrase-kernel run over every segment, so a rare symbol
+        decodes only the keyword blocks its own blocks overlap; retries
+        like topk (_run)."""
         from .functions.tokenize import tokenize
         from .operators.phrase import segment_phrase_positions
 
-        t0 = time.time()
-        stats = {"segments_touched": 0, "blocks_considered": 0,
-                 "blocks_decoded": 0, "terms_cold": 0}
-        self.truncated = False
-        if not self.has_positions:
-            raise ValueError(
-                "get_definition requires an index built with store_positions=True")
         sym = tokenize(symbol)
-        if not sym:
-            self._record_stats(stats, t0)
-            return []
-        # symbol df FIRST, from its BM25 blocks (no position payloads):
-        # an absent symbol token means no definition phrase can match,
-        # so a typo symbol returns before any head-term keyword's (large)
-        # positional postings are read and LRU-cached (review r4 finding)
-        dfs = self.df(sorted(set(sym)))
-        if any(dfs[t] == 0 for t in sym):
-            self._record_stats(stats, t0)
-            return []
-        dgen = self._decoded.generation  # pin BEFORE the block fetch
-        blocks = self._pos_blocks(
-            sorted(set(self.DEF_KEYWORDS) | set(self.DEF_TRAILERS) | set(sym)), stats)
-        kws = [kw for kw in self.DEF_KEYWORDS if len(blocks[kw])]
-        tws = [tw for tw in self.DEF_TRAILERS if len(blocks[tw])]
-        if not kws and not tws:
-            self._record_stats(stats, t0)
-            return []
-        guards = []
-        if tws:  # the prose guard only serves trailer forms
-            blocks.update(self._pos_blocks(list(self.DEF_PROSE_GUARD), stats))
-            guards = [g for g in self.DEF_PROSE_GUARD if len(blocks[g])]
-        # (form_rank, label, phrase, symbol-position offset within the
-        # phrase): leading-keyword probes rank above every trailer probe
-        forms = [(ki, kw, [kw] + sym, 1) for ki, kw in enumerate(self.DEF_KEYWORDS)
-                 if kw in set(kws)]
-        forms += [(len(self.DEF_KEYWORDS) + ti, f"={tw}", sym + [tw], 0)
-                  for ti, tw in enumerate(self.DEF_TRAILERS) if tw in set(tws)]
-        labels = {rank: label for rank, label, _, _ in forms}
-        per_seg = self._by_segment({t: blocks[t] for t in set(kws + tws + guards + sym)},
-                                   stats)
-        dead = self._dead_docs()
-        hits: list[tuple[int, int, int]] = []  # (form_rank, pos, doc)
-        for seg, by_term in per_seg.items():
-            if not all(t in by_term for t in sym):
-                continue  # symbol absent from this segment — no decode
-            seg_forms = [f for f in forms if all(t in by_term for t in f[2])]
-            if not seg_forms:
-                continue
-            stats["segments_touched"] += 1
-            # decode accounting lives in the kernel (decoded-LRU hits
-            # must not be counted as decodes — review r5 finding)
-            # persistent decoded LRU, not a per-call dict: the probe
-            # terms (definition keywords + hot symbols) repeat across
-            # queries, and the namespace is shared with phrase/
-            # references (same blocks, same _term_postings decode)
-            cache = _NsDecodeCache(self._decoded, ("p", seg), dgen)
-            for rank, _, phrase, sym_off in seg_forms:
-                matches = segment_phrase_positions(
-                    by_term, phrase, dead, decoded_cache=cache, stats=stats)
-                if sym_off == 0 and matches:
+        # (label, phrase, symbol-position offset within the phrase), in
+        # rank order: leading-keyword probes above every trailer probe
+        forms = [(kw, [kw] + sym, 1) for kw in self.DEF_KEYWORDS]
+        forms += [(f"={tw}", sym + [tw], 0) for tw in self.DEF_TRAILERS]
+
+        def attempt(stats):
+            if not self.has_positions:
+                raise ValueError(
+                    "get_definition requires an index built with store_positions=True")
+            # the symbol's BM25 blocks FIRST (no position payloads): an
+            # absent symbol token means no definition phrase can match,
+            # so a typo symbol returns before any head-term keyword's
+            # (large) positional postings are read and LRU-cached
+            if not sym or not all(map(len, self._blocks(sorted(set(sym)), stats).values())):
+                return []
+            blocks, dead, cache = self._pos_run(
+                [t for _, ph, _ in forms for t in ph] + list(self.DEF_PROSE_GUARD),
+                stats, "get_definition")
+            hits: list[tuple[int, int, int]] = []  # (form rank, position, doc)
+            for rank, (_, phrase, sym_off) in enumerate(forms):
+                matches = segment_phrase_positions(blocks, phrase, dead,
+                                                   decoded_cache=cache, stats=stats)
+                if not sym_off and matches:
                     # trailer form: drop prose references ("the X
-                    # function") — exclude symbol positions immediately
-                    # preceded by a determiner
-                    excl: dict[int, set] = {}
-                    for det in guards:
-                        if det not in by_term:
-                            continue
-                        for doc, dpos in segment_phrase_positions(
-                                by_term, [det] + phrase, dead,
-                                decoded_cache=cache, stats=stats):
-                            excl.setdefault(doc, set()).update(
-                                (p + 1) for p in dpos.tolist())
-                    if excl:
-                        kept = []
-                        for doc, pos in matches:
-                            good = [p for p in pos.tolist()
-                                    if p not in excl.get(doc, ())]
-                            if good:
-                                kept.append((doc, np.asarray(good)))
-                        matches = kept
-                for doc, pos in matches:
-                    hits.append((rank, int(pos[0]) + sym_off, doc))
-        hits.sort()
-        url_map = self.urls([d for _, _, d in hits[:k]])
-        self._record_stats(stats, t0)
-        return [
-            {"doc_id": d, "url": url_map.get(d),
-             "keyword": labels[rank], "position": p}
-            for rank, p, d in hits[:k]
-        ]
+                    # function") — symbol positions immediately preceded
+                    # by a determiner
+                    prose = {(doc, p + 1) for det in self.DEF_PROSE_GUARD
+                             for doc, dpos in segment_phrase_positions(
+                                 blocks, [det] + phrase, dead, decoded_cache=cache, stats=stats)
+                             for p in dpos.tolist()}
+                    matches = [(doc, [p for p in pos.tolist() if (doc, p) not in prose])
+                               for doc, pos in matches]
+                hits += [(rank, int(pos[0]) + sym_off, doc) for doc, pos in matches if len(pos)]
+            hits = sorted(hits)[:k]
+            url_map = self.urls([d for _, _, d in hits])
+            return [{"doc_id": d, "url": url_map.get(d), "keyword": forms[rank][0], "position": p}
+                    for rank, p, d in hits]
+
+        return self._run(attempt)
 
     def search(self, query: str, k: int = 10, with_urls: bool = False,
                phrase: bool = False, slop: int = 0,

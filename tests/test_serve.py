@@ -5,6 +5,8 @@ pick up index mutations on refresh."""
 import io
 import json
 
+import pytest
+
 from mantic_sh_spark.operators.wand import wand_topk
 from mantic_sh_spark.serve import IndexReader, serve_loop
 from mantic_sh_spark.sources.synth import SynthConfig, gen_queries
@@ -1019,7 +1021,7 @@ def test_split_blocks_matches_groupby_reference():
         got = split_blocks(data, tid2term, factors)
         assert set(got) == set(tid2term.values())
         assert len(got["absent"]) == 0 and got["absent"].n.sum() == 0
-        assert list(got["absent"].by_segment()) == []
+        assert got["absent"].segs.tolist() == []
         ref = data.to_pandas()
         for tid, g in ref.groupby("tid"):
             if tid not in tid2term:
@@ -1034,8 +1036,7 @@ def test_split_blocks_matches_groupby_reference():
                 assert list(tb.positions) == list(g["positions"])
             else:
                 assert tb.positions is None
-            assert [s for s, _ in tb.by_segment()] == tb.segs.tolist()
-            assert sum(len(part) for _, part in tb.by_segment()) == len(tb)
+            assert len(tb) == len(g)
     # the pandas frame a Spark UDF receives splits identically
     frame = split_blocks(tbl.to_pandas(), tid2term, factors)
     arrow = split_blocks(tbl, tid2term, factors)
@@ -1096,3 +1097,192 @@ def test_reader_serves_without_terms_dir(spark, tmp_path):
     terms = ["w0x", "w1x", "w2x", "parse", "html", "qqabsent"]
     meta = _term_meta(spark, IndexPaths(idx), terms)
     assert reader.df(terms) == {t: m[0] for t, m in meta.items()}
+
+
+_DEF_WORDS = ("the", "a", "function", "def", "class", "new", "const", "this")
+
+
+@pytest.fixture(scope="module")
+def defs_corpus(spark, tmp_path_factory):
+    """A 4-segment positional index of code-like text: definition
+    keywords and determiners are head terms spanning many blocks per
+    segment, and the rare symbol `zqrare` sits in five docs of ONE
+    segment (segment 1) — a `def` form, an assignment form, a class
+    form, a prose reference the determiner guard must drop, and a bare
+    reference."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from mantic_sh_spark.operators.index_build import build_index
+
+    rng = np.random.default_rng(71)
+    words = list(_DEF_WORDS) + [f"w{i}x" for i in range(40)]
+    p = np.array([0.08] * len(_DEF_WORDS) + [0.36 / 40] * 40)
+    urls = [f"https://ex.com/c{i}" for i in range(800)]
+    texts = [" ".join(rng.choice(words, int(rng.integers(20, 40)), p=p / p.sum()))
+             for _ in urls]
+    seg_of = {r.url: r.s for r in spark.createDataFrame(pd.DataFrame({"url": urls}))
+              .select("url", F.pmod(F.xxhash64("url"), F.lit(4)).alias("s")).collect()}
+    planted = ["def zqrare w1x then the zqrare function", "w2x zqrare function w3x",
+               "class zqrare new w4x", "call the zqrare function w5x", "w6x zqrare zqrare"]
+    for i, extra in zip([i for i, u in enumerate(urls) if seg_of[u] == 1][3:8], planted):
+        texts[i] = f"{texts[i]} {extra} {texts[i]}"
+    pages = spark.createDataFrame(pd.DataFrame({
+        "url": urls, "warc_ts": pd.to_datetime(["2026-01-01"] * len(urls)),
+        "html": [b""] * len(urls), "text": texts, "lang": ["en"] * len(urls)}))
+    idx = str(tmp_path_factory.mktemp("defs") / "idx")
+    build_index(spark, pages, idx, n_segments=4, chunk_size=48, block_size=16,
+                store_positions=True)
+    return idx
+
+
+def _doc_tokens(spark, idx):
+    from mantic_sh_spark.functions.tokenize import tokenize
+
+    return {r.doc_id: tokenize(r.text)
+            for r in spark.read.parquet(f"{idx}/docs").select("doc_id", "text").collect()}
+
+
+def _defs_oracle(doc_toks, symbol, k):
+    """Token-scan definitions: the symbol preceded by a keyword, or
+    followed by a trailer and not preceded by a determiner; first
+    occurrence per (doc, form), ranked (form, position, doc)."""
+    from mantic_sh_spark.functions.tokenize import tokenize
+
+    kws, trs = IndexReader.DEF_KEYWORDS, IndexReader.DEF_TRAILERS
+    sym = tokenize(symbol)
+    m = len(sym)
+    hits = []
+    for d, toks in doc_toks.items():
+        at = [i for i in range(len(toks) - m + 1) if toks[i:i + m] == sym]
+        forms = [[i for i in at if i and toks[i - 1] == kw] for kw in kws]
+        forms += [[i for i in at if i + m < len(toks) and toks[i + m] == tw
+                   and not (i and toks[i - 1] in IndexReader.DEF_PROSE_GUARD)] for tw in trs]
+        hits += [(rank, pos[0], d) for rank, pos in enumerate(forms) if pos]
+    labels = list(kws) + [f"={tw}" for tw in trs]
+    return [(labels[r], p, d) for r, p, d in sorted(hits)[:k]]
+
+
+def _check_positional_oracles(spark, idx, reader):
+    """definitions, phrase_topk and references of `reader` against the
+    token-scan oracles and the Spark phrase engine."""
+    from mantic_sh_spark.functions.tokenize import tokenize
+    from mantic_sh_spark.operators.phrase import phrase_topk
+
+    doc_toks = _doc_tokens(spark, idx)
+    for symbol in ("zqrare", "w1x", "w7x w8x"):
+        got = [(d["keyword"], d["position"], d["doc_id"])
+               for d in reader.definitions(symbol, k=10**6)]
+        assert got == _defs_oracle(doc_toks, symbol, 10**6), symbol
+    assert reader.definitions("zqrare")[0]["keyword"] == "def"
+    phrases = [("zqrare function", 0), ("the zqrare", 0), ("the function", 0),
+               ("def w1x", 2), ("w3x the", 1)]
+    for ph, slop in phrases:
+        want = [(r.doc_id, r.n_matches) for r in phrase_topk(
+            spark, idx, [(0, ph)], k=10**6, slop=slop).orderBy("rank").collect()]
+        assert reader.phrase_topk(ph, k=10**6, slop=slop) == want != [], ph
+    for symbol in ("zqrare", "the function", "w2x"):
+        sym = tokenize(symbol)
+        oracle = {d: [i for i in range(len(t) - len(sym) + 1) if t[i:i + len(sym)] == sym]
+                  for d, t in doc_toks.items()}
+        oracle = {d: v for d, v in oracle.items() if v}
+        refs = reader.references(symbol, k=10**6, max_positions=10**6)
+        assert {r["doc_id"]: r["positions"] for r in refs} == oracle, symbol
+        assert [r["doc_id"] for r in refs] == sorted(oracle, key=lambda d: (-len(oracle[d]), d))
+
+
+def test_positional_run_across_segments_and_legacy_merge(spark, defs_corpus, tmp_path,
+                                                         monkeypatch):
+    """phrase_topk, references and definitions run the phrase kernel
+    once over every segment's blocks and equal their oracles on a
+    4-segment index and again after a legacy merge of segments [0, 2]
+    (the compactor's split_ranges off: the merged blocks envelop
+    segment 1's range, so a term's blocks overlap). The block overlap
+    filter prunes: a cold rare-symbol definitions call decodes no more
+    blocks than a per-segment run would (every probe term's blocks in
+    the symbol's segment), and a cold rare × head phrase decodes fewer."""
+    import shutil
+
+    import numpy as np
+
+    import mantic_sh_spark.functions.codec as codec_mod
+    from mantic_sh_spark.operators.merge import merge_segments
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(defs_corpus, idx)
+    reader = IndexReader(idx)
+    (seg,) = reader._blocks(["zqrare"])["zqrare"].segs.tolist()
+
+    def in_seg(t):
+        return int((reader._blocks([t])[t].seg == seg).sum())
+
+    # a per-segment run decodes, in the symbol's segment, every block of
+    # the symbol and of each definition keyword / trailer present there
+    probe_terms = {"zqrare"} | {t for t in IndexReader.DEF_KEYWORDS + IndexReader.DEF_TRAILERS
+                                if in_seg(t)}
+    cold = IndexReader(idx)
+    assert cold.definitions("zqrare")
+    st = cold.last_stats
+    assert st["blocks_decoded"] <= sum(in_seg(t) for t in probe_terms), st
+    # the symbol's BM25 probe counts as a cold term too
+    assert st["segments_touched"] == 1 and st["terms_cold"] == 1 + len(
+        set(IndexReader.DEF_KEYWORDS + IndexReader.DEF_TRAILERS + IndexReader.DEF_PROSE_GUARD)
+        | {"zqrare"})
+    assert st["blocks_considered"] > st["blocks_decoded"]
+    assert in_seg("function") >= 8
+    cold = IndexReader(idx)
+    assert cold.phrase_topk("zqrare function")
+    assert cold.last_stats["blocks_decoded"] < in_seg("function") + in_seg("zqrare")
+    assert cold.counters()["total"]["queries"] == 1
+
+    _check_positional_oracles(spark, idx, reader)
+
+    orig = codec_mod.compact_stream_fn
+
+    def legacy(*a, **kw):
+        kw["split_ranges"] = False
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(codec_mod, "compact_stream_fn", legacy)
+    merge_segments(spark, idx, [0, 2], dst_segment=5, purge=False)
+    merged = IndexReader(idx)
+    tb = merged._blocks(["the"])["the"]
+    o = np.argsort(tb.first, kind="stable")
+    assert np.any(tb.first[o][1:] <= tb.last[o][:-1]), "fixture must overlap blocks"
+    _check_positional_oracles(spark, idx, merged)
+
+
+def test_references_rerun_when_refresh_straddles(spark, defs_corpus, tmp_path):
+    """references() re-runs when a refresh() lands mid-attempt: a warm
+    reader holds pre-purge blocks of a tombstoned doc; an external
+    purge-merge drops the doc and its tombstone, and a refresh racing
+    the attempt's liveness read must not let the purged doc back in."""
+    import shutil
+
+    from mantic_sh_spark.operators.delete import delete_docs
+    from mantic_sh_spark.operators.merge import merge_segments
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(defs_corpus, idx)
+    reader = IndexReader(idx)
+    victim = reader.references("zqrare")[0]["doc_id"]
+    delete_docs(spark, idx, doc_ids=[victim])
+    reader.refresh()
+    warm = reader.references("zqrare", k=100)
+    assert warm and victim not in {r["doc_id"] for r in warm}
+    merge_segments(spark, idx, [0, 1, 2, 3], dst_segment=9, purge=True)
+
+    orig = reader._dead_docs
+    raced = []
+
+    def racing():
+        if not raced:
+            raced.append(True)
+            reader.refresh()
+        return orig()
+
+    reader._dead_docs = racing
+    got = reader.references("zqrare", k=100)
+    assert raced and victim not in {r["doc_id"] for r in got}
+    assert got == IndexReader(idx).references("zqrare", k=100)

@@ -192,7 +192,7 @@ def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
     brute-force BM25 scorer over the docs' own tokens, for every live
     doc — docs matching no term score 0.0, an absent term adds nothing
     — on each of its routes: a cold single-pass decode (which installs
-    the top-k kernel's ("k", -1) entry), a multi-pass decode under a
+    the top-k kernel's ("k",) entry), a multi-pass decode under a
     tiny _SWEEP_DF_CAP (which installs nothing), and a warm entry the
     kernel cached (which decodes nothing)."""
     import numpy as np
@@ -215,7 +215,7 @@ def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
             brute += np.where(tf > 0, s, 0.0)
     want = np.round(brute, 4)
     assert (want > 0).any() and (want == 0).any()
-    hot = [("k", -1, t) for t in ("w1x", "w2x")]
+    hot = [("k", t) for t in ("w1x", "w2x")]
 
     decodes = []
     orig = codec.decode_blocks

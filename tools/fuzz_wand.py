@@ -37,6 +37,10 @@ Odd-seeded cases additionally build POSITIONALLY and fuzz the phrase
 engine (incl. stop-term phrases — the batched keyed-searchsorted
 verifier's worst case — and random slop) against an INDEPENDENT
 per-doc greedy oracle in pure Python, plus reader↔engine identity.
+The reader runs the phrase kernel once over every segment's blocks,
+so `pos_overlapping_blocks` reports whether the positional twin's
+phrase and reference terms had self-overlapping block lists (True on
+the legacy cases: the global run met the enveloping blocks).
 Usage: python tools/fuzz_wand.py"""
 
 import bisect
@@ -259,6 +263,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         df_ok &= _df_identity(reader, idx, tq)
 
     phrase_ok = True
+    pos_overlap = None
     if seed % 2 == 1:
         # positional build on the same corpus/layout; fuzz phrase+slop
         posidx = f"{idx}_pos"
@@ -317,7 +322,8 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                 phrase_ok = False
         # find_references serving kernel vs the start-position oracle
         # (single-term, multi-term, and stop-term symbols)
-        for sym in (f"{st} w1x", "w2x w3x", "w7x"):
+        refs = [f"{st} w1x", "w2x w3x", "w7x"]
+        for sym in refs:
             terms = tokenize(sym)
             rwant = {d: brute_starts(toks, terms) for d, toks in doc_toks.items()}
             rwant = {d: v for d, v in rwant.items() if v}
@@ -325,10 +331,13 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                     for r in preader.references(sym, k=10**6, max_positions=10**6)}
             if rgot != rwant:
                 phrase_ok = False
+        pos_overlap = any(_overlapping(preader, tokenize(t))
+                          for t in [ph for _, ph, _ in phrases] + refs)
         shutil.rmtree(posidx, ignore_errors=True)
     fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok and churn_ok and df_ok)
     print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
-          f"pre_deleted={len(pre)} overlapping_blocks={overlap}: "
+          f"pre_deleted={len(pre)} overlapping_blocks={overlap}"
+          f"{'' if pos_overlap is None else f' pos_overlapping_blocks={pos_overlap}'}: "
           f"{'OK' if ok else 'MISMATCH'} serve={'OK' if serve_ok else 'MISMATCH'}"
           f" phrase={'OK' if phrase_ok else 'MISMATCH'}"
           f" tier={'OK' if tier_ok else 'MISMATCH'}"
