@@ -8,9 +8,11 @@ crash (or mid-flight fold) and that next mutation a fresh reader would
 see a partial fold: a merge's dst ALONGSIDE its sources (every match
 double-counted), or a crashed extend's postings with no committed
 manifest row. The same manifest rows that drive GC tell a reader
-exactly which segments to skip — this module derives that, purely, so
-the Spark engine (operators/wand.py) and the no-JVM serving reader
-(serve.py) apply one rule.
+exactly which segments to skip — this module derives that, purely.
+It runs in one place: operators/index_build.read_snapshot, the one
+metadata load behind the no-JVM serving reader (serve.py), the Spark
+query plane (operators/wand.py::_index_meta), index_stats and the
+docs-table consumers (gated_docs).
 
 State machine per merge fold (keyed by started_at):
   'started' only   → the fold may still be writing (or crashed

@@ -344,29 +344,14 @@ class McpServer:
             )
             k = int(args.get("maxResults", 10))
             sid = args.get("sessionId")
-            if args.get("tiered"):
+            if args.get("tiered") and (kw["phrase"] or sid):
                 # R1 ladder is its own ranking mode: phrase and session
                 # boost re-rank BM25 scores, which a tier column would
                 # silently contradict — refuse the combinations loudly
                 # rather than silently dropping one. budgetMs bounds it
                 # like any top-k (partial answers are flagged).
-                if kw["phrase"] or sid:
-                    raise ValueError("tiered=true is exclusive with phrase/sessionId")
-                from .functions.tokenize import tokenize_query
-
-                rows = reader.tiered_topk(args["query"], k=k, budget_ms=kw["budget_ms"])
-                ids = [d for d, _, _ in rows]
-                url_map = reader.urls(ids)
-                snip_map = (reader.snippets(ids, tokenize_query(args["query"]))
-                            if kw["with_snippets"] else {})
-                results = [
-                    {"rank": i + 1, "doc_id": d, "tier": t, "score": s,
-                     "url": url_map.get(d),
-                     **({"snippet": snip_map.get(d)}
-                        if kw["with_snippets"] else {})}
-                    for i, (d, t, s) in enumerate(rows)
-                ]
-            elif sid:
+                raise ValueError("tiered=true is exclusive with phrase/sessionId")
+            if sid:
                 from .sessions import boosted_search
 
                 store = self._store_for(reader)
@@ -375,7 +360,8 @@ class McpServer:
                 store.record_query(sid, args["query"], k, results,
                                    (time.time() - t0) * 1e3)
             else:
-                results = reader.search(args["query"], k=k, **kw)
+                results = reader.search(args["query"], k=k,
+                                        tiered=bool(args.get("tiered", False)), **kw)
             payload = {
                 "results": results,
                 "ms": round((time.time() - t0) * 1e3, 2),

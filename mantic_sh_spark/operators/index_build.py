@@ -39,6 +39,7 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Iterable
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +48,7 @@ from pyspark.sql import functions as F
 from ..functions import codec
 from ..functions.codec import DEFAULT_TIER_SPECS, encode_stream_fn
 from ..functions.bm25 import B, K1
+from ..functions.liveness import docs_exclusions, reader_exclusions
 from ..sources.catalog import IndexPaths, append_manifest, done_segments, read_or_none, write_small_parquet
 from .docs import build_docs, doc_stats
 
@@ -336,16 +338,22 @@ def format_mismatch(root: str, version: int, consequence: str) -> RuntimeError:
     )
 
 
+def spark_reads(path: str, spark: SparkSession | None) -> bool:
+    """The storage-reach rule of every driver-side metadata read: Spark
+    reads `path` only for a non-local URI scheme, given a session (the
+    one route that reaches remote filesystems); pyarrow reads the rest
+    (~1 ms, no job)."""
+    return spark is not None and "://" in path and not path.startswith("file:")
+
+
 def read_format_version(root: str, spark: SparkSession | None = None) -> int:
     """The on-disk format version recorded under `root` (0 for an index
     predating the marker, ≤ v3) — the one marker reader, shared by
-    check_format and serve.IndexReader. A driver-side pyarrow read
-    (~1 ms); Spark reads it only for a non-local URI scheme, given a
-    session."""
+    check_format and read_snapshot (spark_reads picks the route)."""
     import pyarrow.parquet as pq
 
     path = IndexPaths(root).format_marker
-    if spark is not None and "://" in path and not path.startswith("file:"):
+    if spark_reads(path, spark):
         marker = read_or_none(spark, path)
         return 0 if marker is None else int(marker.collect()[0].version)
     try:
@@ -353,6 +361,61 @@ def read_format_version(root: str, spark: SparkSession | None = None) -> int:
     except FileNotFoundError:
         return 0
     return int(tbl["version"][0].as_py()) if tbl.num_rows else 0
+
+
+class IndexSnapshot(NamedTuple):
+    """What every reader of one index state needs before it touches a
+    posting: global stats, per-segment bound factors and fold gating."""
+
+    n_docs: int
+    avgdl: float
+    # {segment: avgdl / build_avgdl, floored at 1} — block maxima were
+    # scored at build_avgdl, so an extend's avgdl drift inflates them
+    bound_factors: dict
+    # segments postings readers skip (functions/liveness.reader_exclusions)
+    excluded: frozenset
+    # a merge fold sits between its barriers: tombstone ownership in flux
+    union: bool
+    # segments docs-table readers skip (extend folds only — docs_exclusions)
+    docs_excluded: frozenset
+
+
+def read_snapshot(root: str, spark: SparkSession | None = None) -> IndexSnapshot:
+    """The one metadata load of an index: one read each of
+    format_version, collection_stats and build_manifest (driver-side
+    pyarrow; Spark only where spark_reads says so), refusing any format
+    but INDEX_FORMAT. The serving reader, the Spark query plane
+    (wand._index_meta), index_stats and gated_docs all gate through it,
+    so they cannot disagree on stats, bounds or fold exclusions."""
+    version = read_format_version(root, spark)
+    if version != INDEX_FORMAT:
+        raise format_mismatch(root, version, "its posting blocks would decode wrong")
+    paths = IndexPaths(root)
+    cols = ["segment_id", "build_avgdl", "stage", "status", "started_at"]
+    if spark_reads(paths.collection_stats, spark):
+        cs = spark.read.parquet(paths.collection_stats).collect()[0]
+        n_docs, avgdl = int(cs.n_docs), float(cs.avgdl)
+        m = read_or_none(spark, paths.manifest)
+        rows = [] if m is None else m.select(*cols).collect()
+    else:
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+
+        cs = pq.read_table(paths.collection_stats, columns=["n_docs", "avgdl"]).to_pydict()
+        n_docs, avgdl = int(cs["n_docs"][0]), float(cs["avgdl"][0])
+        try:
+            m = ds.dataset(paths.manifest, format="parquet").to_table(columns=cols).to_pydict()
+            rows = list(zip(*(m[c] for c in cols)))
+        except FileNotFoundError:
+            rows = []
+    mins: dict[int, float] = {}
+    for seg, ba, *_ in rows:
+        if ba is not None:
+            mins[seg] = min(ba, mins.get(seg, ba))
+    protocol = [(seg, stage, status, started) for seg, _, stage, status, started in rows]
+    excluded, union = reader_exclusions(protocol)
+    return IndexSnapshot(n_docs, avgdl, {s: max(1.0, avgdl / v) for s, v in mins.items()},
+                         excluded, union, docs_exclusions(protocol))
 
 
 def check_format(spark: SparkSession, paths: IndexPaths,
@@ -363,12 +426,11 @@ def check_format(spark: SparkSession, paths: IndexPaths,
     old-format ones would leave a mixed-schema dir where aggregations
     either fail (column missing in the sampled footer) or silently
     undercount (nulls under F.sum) depending on which footer Spark
-    samples (review r4 finding). Reads are gated too — the Spark query
-    plane here (wand._index_meta, which wand_topk and phrase_topk
-    load), serve.IndexReader at open — since bytes of another layout
-    would decode into wrong doc ids or tier codes; the block decoder
-    (codec.decode_blocks) raises only when the value count differs.
-    Indexes predating the marker (≤ v3) read as version 0."""
+    samples (review r4 finding). Reads are gated too, by read_snapshot,
+    since bytes of another layout would decode into wrong doc ids or
+    tier codes; the block decoder (codec.decode_blocks) raises only
+    when the value count differs. Indexes predating the marker (≤ v3)
+    read as version 0."""
     version = read_format_version(paths.root, spark)
     if version != INDEX_FORMAT:
         raise format_mismatch(paths.root, version, consequence)
@@ -1018,20 +1080,9 @@ def gated_docs(spark: SparkSession, paths: IndexPaths):
     docs dirs never move across merges, so a fold's retired POSTINGS
     sources still own live docs dirs (review r4 finding)."""
     docs = spark.read.parquet(paths.docs)
-    m = read_or_none(spark, paths.manifest)
-    if m is not None and {"stage", "status", "started_at"} <= set(m.columns):
-        from ..functions.liveness import docs_exclusions
-
-        rows = (
-            m.filter(F.col("stage") == "extend")
-            .select("segment_id", "stage", "status", "started_at")
-            .collect()
-        )
-        excluded = docs_exclusions(
-            (int(r.segment_id), r.stage, r.status, r.started_at) for r in rows
-        )
-        if excluded:
-            docs = docs.filter(~F.col("segment_id").isin(sorted(excluded)))
+    excluded = read_snapshot(paths.root, spark).docs_excluded
+    if excluded:
+        docs = docs.filter(~F.col("segment_id").isin(sorted(excluded)))
     return docs
 
 
@@ -1082,26 +1133,15 @@ def build_term_dictionary(spark: SparkSession, index_dir: str) -> int:
 def index_stats(spark: SparkSession, index_dir: str) -> dict:
     """Build metrics summary (driver-side, small)."""
     paths = IndexPaths(index_dir)
-    out: dict = {}
-    cs = read_or_none(spark, paths.collection_stats)
-    if cs is not None:
-        r = cs.collect()[0]
-        out["n_docs"], out["avgdl"] = r.n_docs, r.avgdl
+    snap = read_snapshot(paths.root, spark)
+    out: dict = {"n_docs": snap.n_docs, "avgdl": snap.avgdl}
     # fold health: segments readers are gating out (an in-flight or
     # crashed extend/merge fold — heals on the next mutation's GC pass);
     # the served-corpus numbers below exclude them, matching what
     # queries actually see
-    excluded: frozenset = frozenset()
-    m = read_or_none(spark, paths.manifest)
-    if m is not None and {"stage", "status", "started_at"} <= set(m.columns):
-        from ..functions.liveness import reader_exclusions
-
-        excluded, _ = reader_exclusions(
-            (int(r.segment_id), r.stage, r.status, r.started_at)
-            for r in m.select("segment_id", "stage", "status", "started_at").collect()
-        )
-        if excluded:
-            out["gated_segments"] = sorted(excluded)
+    excluded = snap.excluded
+    if excluded:
+        out["gated_segments"] = sorted(excluded)
     live = [s for s in _list_segments(spark, paths.postings) if s not in excluded]
     out["segments"] = len(live)
     t = read_or_none(spark, paths.terms)

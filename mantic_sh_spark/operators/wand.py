@@ -470,53 +470,24 @@ def _index_meta(spark: SparkSession, paths: IndexPaths):
     `excluded` is the frozenset of segments a reader must skip (an
     in-flight/crashed fold's partial dirs — functions/liveness.py): the
     manifest, not the partition listing, is the source of truth for
-    which segments serve. An index of another on-disk format raises
-    (index_build.check_format) — every Spark-plane query loads this."""
+    which segments serve. Stats, bound factors and exclusions come
+    from index_build.read_snapshot (no Spark job on a local index),
+    which refuses another on-disk format."""
     cached = _META_CACHE.get(_cache_key(paths.root))
     if cached is not None:
         return cached
-    from .index_build import check_format
-
-    check_format(spark, paths, "its posting blocks would decode wrong")
-    stats = spark.read.parquet(paths.collection_stats).collect()[0]
-    n_docs, avgdl = int(stats.n_docs), float(stats.avgdl)
-    # per-segment bound inflation for avgdl drift after incremental
-    # extends; build_avgdl + the fold-protocol rows live in the
-    # manifest lineage rows — ONE metadata-sized collect serves both
-    from ..functions.liveness import reader_exclusions
-    from ..sources.catalog import read_or_none
-
-    bound_factors: dict[int, float] = {}
-    excluded: frozenset = frozenset()
-    union = False
-    manifest = read_or_none(spark, paths.manifest)
-    if manifest is not None:
-        cols = set(manifest.columns)
-        want = ["segment_id", "build_avgdl"] + [
-            c for c in ("stage", "status", "started_at") if c in cols
-        ]
-        rows = manifest.select(*want).collect()
-        mins: dict[int, float] = {}
-        for r in rows:
-            if r.build_avgdl is not None:
-                s = int(r.segment_id)
-                ba = float(r.build_avgdl)
-                mins[s] = ba if s not in mins else min(mins[s], ba)
-        bound_factors = {s: max(1.0, avgdl / ba) for s, ba in mins.items()}
-        if {"stage", "status", "started_at"} <= cols:
-            excluded, union = reader_exclusions(
-                (int(r.segment_id), r.stage, r.status, r.started_at) for r in rows
-            )
     from .delete import tombstone_segments
+    from .index_build import read_snapshot
 
+    snap = read_snapshot(paths.root, spark)
     dead_segs = tombstone_segments(spark, paths)
     # in-flux partitions: a committed-not-done fold's excluded sources
     # whose tombstones haven't re-homed/purged yet (bounded by the
     # fold; empty in steady state)
-    influx = frozenset(excluded) & set(dead_segs) if union else frozenset()
+    influx = snap.excluded & dead_segs if snap.union else frozenset()
     dead_src = (paths.tombstones, dead_segs, influx) if dead_segs else None
     key = _cache_key(paths.root)
-    _META_CACHE[key] = (n_docs, avgdl, bound_factors, dead_src, excluded)
+    _META_CACHE[key] = (snap.n_docs, snap.avgdl, snap.bound_factors, dead_src, snap.excluded)
     return _META_CACHE[key]
 
 
@@ -597,49 +568,39 @@ def _term_meta(spark: SparkSession, paths: IndexPaths, terms: list[str],
                excluded: frozenset = frozenset()) -> dict[str, tuple[int, int]]:
     """{term: (global df, tid)} per query term (df 0 when absent).
     Driver-side pyarrow row-group-pruned read of the (tiny, tid-sorted)
-    terms directory — no Spark job on the query path; falls back to a
-    Spark agg only when the driver genuinely has no direct reader for
-    the storage scheme (narrow except: a real data/corruption error in
-    the terms directory must propagate, not silently reroute).
+    terms directory — no Spark job on the query path; a Spark agg only
+    for a non-local URI scheme (index_build.spark_reads). A local read
+    error propagates.
     `excluded` segments (an in-flight/crashed fold's partial dirs)
     are dropped from the df sum — their terms rows would double-count
     df against the live sources. Cache safety: the exclusion set is
     constant per refresh epoch and refresh_meta clears _DF_CACHE."""
     from ..functions.termhash import term_tid
+    from .index_build import spark_reads
 
     cache = _DF_CACHE.setdefault(_cache_key(paths.root), {})
     missing = sorted({t for t in terms if t not in cache})
     if missing:
         tid_of = {t: term_tid(t) for t in missing}
         tids = sorted(tid_of.values())
-        try:
-            import pyarrow.dataset as ds
-            from pyarrow.lib import ArrowInvalid, ArrowNotImplementedError
-
-            fallback_errors = (FileNotFoundError, OSError, ArrowInvalid, ArrowNotImplementedError)
-        except ImportError:
-            ds = None
-            fallback_errors = ()
-        dfs: dict[int, int] | None = None
-        if ds is not None:
-            try:
-                flt = ds.field("tid").isin(tids)
-                if excluded:
-                    flt = flt & ~ds.field("segment_id").isin(sorted(excluded))
-                tbl = ds.dataset(paths.terms, format="parquet", partitioning="hive").to_table(
-                    filter=flt, columns=["tid", "df"]
-                )
-                dfs = {}
-                for t, v in zip(tbl["tid"].to_pylist(), tbl["df"].to_pylist()):
-                    dfs[t] = dfs.get(t, 0) + v
-            except fallback_errors:
-                dfs = None
-        if dfs is None:
+        if spark_reads(paths.terms, spark):
             sdf = spark.read.parquet(paths.terms).filter(F.col("tid").isin(tids))
             if excluded:
                 sdf = sdf.filter(~F.col("segment_id").isin(sorted(excluded)))
             rows = sdf.groupBy("tid").agg(F.sum("df").alias("df")).collect()
             dfs = {int(r.tid): int(r.df) for r in rows}
+        else:
+            import pyarrow.dataset as ds
+
+            flt = ds.field("tid").isin(tids)
+            if excluded:
+                flt = flt & ~ds.field("segment_id").isin(sorted(excluded))
+            tbl = ds.dataset(paths.terms, format="parquet", partitioning="hive").to_table(
+                filter=flt, columns=["tid", "df"]
+            )
+            dfs = {}
+            for t, v in zip(tbl["tid"].to_pylist(), tbl["df"].to_pylist()):
+                dfs[t] = dfs.get(t, 0) + v
         cache.update({t: (dfs.get(tid_of[t], 0), tid_of[t]) for t in missing})
     return {t: cache[t] for t in terms}
 

@@ -17,9 +17,10 @@ which decode only the blocks every phrase term overlaps. No Spark job
 (milliseconds), not job-scheduling-bound.
 
 Scale notes (what changes at 10^12 docs, nothing structural):
-  * index metadata (collection stats, bound factors, tombstones) loads
-    once per refresh — the in-proc memo the reference keeps as an LRU
-    over loaded indexes (src/cache.ts:10-47).
+  * index metadata (collection stats, bound factors, fold gating —
+    index_build.read_snapshot, shared with the Spark plane — and
+    tombstones) loads once per refresh — the in-proc memo the reference
+    keeps as an LRU over loaded indexes (src/cache.ts:10-47).
   * posting blocks load per (term) via parquet row-group pruning (the
     build sorts each segment by term): one columnar read per query's
     cold terms, split straight into per-term numpy block columns, kept
@@ -221,46 +222,15 @@ class IndexReader:
             self._refresh_locked()
 
     def _refresh_locked(self) -> None:
-        import pyarrow.parquet as pq
+        from .operators.index_build import read_snapshot
 
-        from .operators.index_build import INDEX_FORMAT, format_mismatch, read_format_version
-
-        cs = pq.read_table(self.paths.collection_stats).to_pydict()
-        # the block layout is versioned: bytes of another format
-        # generation would decode into wrong doc ids, so refuse to serve
-        # them
-        version = read_format_version(self.paths.root)
-        if version != INDEX_FORMAT:
-            raise format_mismatch(self.paths.root, version,
-                                  "its posting blocks would decode wrong")
-        self.n_docs, self.avgdl = int(cs["n_docs"][0]), float(cs["avgdl"][0])
-
-        # per-segment top-k bound inflation under avgdl drift (same rule
-        # as operators/wand.py _index_meta), plus reader live-segment
-        # gating: the manifest's fold-protocol rows, not the partition
-        # listing, decide which segments serve (functions/liveness.py —
-        # an in-flight or crashed merge/extend fold's partial dirs are
-        # excluded until the fold closes or the next mutation GCs it)
-        self.bound_factors: dict[int, float] = {}
-        self._excluded_segs: frozenset = frozenset()
-        man = self._read_optional(
-            self.paths.manifest,
-            ["segment_id", "build_avgdl", "stage", "status", "started_at"],
-        )
-        if man is not None:
-            m = man.to_pydict()
-            mins: dict[int, float] = {}
-            for s, ba in zip(m["segment_id"], m["build_avgdl"]):
-                if ba is not None:
-                    mins[s] = min(ba, mins.get(s, ba))
-            self.bound_factors = {s: max(1.0, self.avgdl / v) for s, v in mins.items()}
-            if {"stage", "status", "started_at"} <= m.keys():
-                from .functions.liveness import reader_exclusions
-
-                self._excluded_segs, _ = reader_exclusions(
-                    zip(m["segment_id"], m["stage"], m["status"],
-                        (0.0 if t is None else t for t in m["started_at"]))
-                )
+        # stats, per-segment bound factors and fold gating: the one
+        # metadata load every reader shares (index_build.read_snapshot),
+        # refusing an index of another format — bytes of another layout
+        # would decode into wrong doc ids
+        snap = read_snapshot(self.paths.root)
+        self.n_docs, self.avgdl = snap.n_docs, snap.avgdl
+        self.bound_factors, self._excluded_segs = snap.bound_factors, snap.excluded
 
         # liveness: only the tombstones HANDLE opens here; the epoch's
         # DeadDocs builds from it on the first query that needs it
@@ -291,19 +261,6 @@ class IndexReader:
             return ds.dataset(path, format="parquet", partitioning="hive")
         except FileNotFoundError:
             return None
-
-    @staticmethod
-    def _read_optional(path: str, columns: list[str]):
-        """Requested columns are intersected with the file schema (a
-        pre-protocol manifest may lack newer columns)."""
-        import pyarrow.dataset as ds
-
-        try:
-            d = ds.dataset(path, format="parquet")
-        except FileNotFoundError:
-            return None
-        have = set(d.schema.names)
-        return d.to_table(columns=[c for c in columns if c in have])
 
     # ---------------------------------------------------------- lookups
     def df(self, terms: list[str]) -> dict[str, int]:
@@ -640,14 +597,6 @@ class IndexReader:
 
         return self._run(attempt)
 
-    # Memory budget for head terms at corpus scale: _SWEEP_DF_CAP bounds
-    # the postings (a ROW count; it cannot trigger below ~20M docs) one
-    # _scores_array decode pass holds (decoded form is ~25 B/posting vs
-    # ~1-2 B compressed in the resident blocks): a term whose candidate
-    # blocks hold more decodes in several passes, so memory stays within
-    # the block envelope every other serving path already has.
-    _SWEEP_DF_CAP = 20_000_000
-
     def _scores_for_docs(self, terms: list[str],
                          doc_ids: "np.ndarray") -> dict[int, float]:
         """Dict form of _scores_array (session boost and other
@@ -662,12 +611,11 @@ class IndexReader:
         """BM25 score of SPECIFIC docs for a term set, aligned to the
         input array (the bounded lookup behind session boosts). Per
         term: a valid ("k",) entry of the top-k kernel's decode cache
-        scores without decoding; otherwise only the blocks whose
-        [first_doc, last_doc] holds a candidate decode, in passes of at
-        most _SWEEP_DF_CAP postings, and a term decoded whole in one
-        pass is installed for later queries. Docs matching no term
-        score 0.0. Rounding matches rank_topk (4 decimals), like every
-        ranked answer."""
+        scores without decoding; otherwise the blocks whose
+        [first_doc, last_doc] holds a candidate decode in one call, and
+        a term whose every block holds one is installed for later
+        queries. Docs matching no term score 0.0. Rounding matches
+        rank_topk (4 decimals), like every ranked answer."""
         from .functions.codec import decode_blocks, tf_norm
         from .operators.wand import _ranges, cached_postings
 
@@ -694,21 +642,13 @@ class IndexReader:
                 if hit is not None:
                     idx = _ranges((np.cumsum(tb.n) - tb.n)[hold], tb.n[hold])
                     add(idf, hit[0][idx], hit[1][idx])
-                    continue
-                csum = np.cumsum(tb.n[hold])
-                i = 0
-                while i < len(hold):
-                    base = int(csum[i - 1]) if i else 0
-                    j = max(i + 1, int(np.searchsorted(csum, base + self._SWEEP_DF_CAP,
-                                                       side="right")))
-                    blk = hold[i:j]
-                    d, tf, dl, code = decode_blocks(tb.n[blk], tb.first[blk], tb.gaps[blk],
-                                                    tb.tfs[blk], tb.dls[blk])
+                elif len(hold):
+                    d, tf, dl, code = decode_blocks(tb.n[hold], tb.first[hold], tb.gaps[hold],
+                                                    tb.tfs[hold], tb.dls[hold])
                     tfn = tf_norm(tf, dl, self.avgdl, self.k1, self.b)
                     add(idf, d, tfn)
-                    if not i and j == len(tb.n):  # the whole term in one pass: install
+                    if len(hold) == len(tb.n):  # the whole term decoded: install
                         cache.put(t, (d, tfn, code, tb.first, tb.n))
-                    i = j
         return np.round(acc, 4)[inv]
 
 
@@ -839,13 +779,21 @@ class IndexReader:
     def search(self, query: str, k: int = 10, with_urls: bool = False,
                phrase: bool = False, slop: int = 0,
                budget_ms: float | None = None,
-               with_snippets: bool = False, snippet_width: int = 160) -> list[dict]:
+               with_snippets: bool = False, snippet_width: int = 160,
+               tiered: bool = False) -> list[dict]:
+        """Ranked rows {rank, doc_id, ...} plus url and snippet when
+        asked: `score` for BM25 top-k, `n_matches` for a phrase, `tier`
+        and `score` for the tier ladder (which refuses phrase — the
+        two rank differently)."""
+        if tiered and phrase:
+            raise ValueError("tiered=true is exclusive with phrase")
         if phrase:
-            hits = self.phrase_topk(query, k, slop=slop)
-            key = "n_matches"
+            hits = [(d, {"n_matches": n}) for d, n in self.phrase_topk(query, k, slop=slop)]
+        elif tiered:
+            hits = [(d, {"tier": t, "score": s})
+                    for d, t, s in self.tiered_topk(query, k, budget_ms=budget_ms)]
         else:
-            hits = self.topk(query, k, budget_ms=budget_ms)
-            key = "score"
+            hits = [(d, {"score": s}) for d, s in self.topk(query, k, budget_ms=budget_ms)]
         ids = [d for d, _ in hits]
         url_map = self.urls(ids) if with_urls else {}
         snip_map = (
@@ -853,10 +801,10 @@ class IndexReader:
             if with_snippets else {}
         )
         return [
-            {"rank": i + 1, "doc_id": d, key: s,
+            {"rank": i + 1, "doc_id": d, **cols,
              **({"url": url_map.get(d)} if with_urls else {}),
              **({"snippet": snip_map.get(d)} if with_snippets else {})}
-            for i, (d, s) in enumerate(hits)
+            for i, (d, cols) in enumerate(hits)
         ]
 
     def prewarm(self, queries: "list[str]", k: int = 10,
@@ -1058,6 +1006,7 @@ def serve_loop(index_dir: str, stdin=None, stdout=None, k1: float = K1, b: float
       {"q": "spark join", "stats": true}             → + read-amp counters
       {"q": "spark join", "phrase": true, "slop": 2} → positional phrase
       {"q": "spark join", "tiered": true}            → R1 tier ladder
+        (urls/snippets as above; not with phrase)
       {"symbol": "parseHtml", "k": 10}             → find_references
       {"q": ..., "id": 7}                          → id echoed in response
       {"op": "stats"}                              → read-amp counters
@@ -1108,21 +1057,14 @@ def serve_loop(index_dir: str, stdin=None, stdout=None, k1: float = K1, b: float
                     req["symbol"], k=int(req.get("k", 10)),
                     max_positions=int(req.get("max_positions", 100)))
                 logged_q = req["symbol"]
-            elif req.get("tiered"):
-                results = [
-                    {"rank": i + 1, "doc_id": d, "tier": t, "score": s}
-                    for i, (d, t, s) in enumerate(reader.tiered_topk(
-                        req["q"], k=int(req.get("k", 10)),
-                        budget_ms=float(budget) if budget is not None else None))
-                ]
-                logged_q = req["q"]
             else:
                 results = reader.search(req["q"], k=int(req.get("k", 10)),
                                         with_urls=bool(req.get("urls", False)),
                                         phrase=bool(req.get("phrase", False)),
                                         slop=int(req.get("slop", 0)),
                                         budget_ms=float(budget) if budget is not None else None,
-                                        with_snippets=bool(req.get("snippets", False)))
+                                        with_snippets=bool(req.get("snippets", False)),
+                                        tiered=bool(req.get("tiered", False)))
                 logged_q = req["q"]
             ms = round((time.time() - t0) * 1e3, 2)
             with served_lock:

@@ -54,10 +54,33 @@ def test_wand_matches_exhaustive(spark, small_corpus, queries):
 
 
 def test_index_stats(spark, small_corpus):
+    from mantic_sh_spark.serve import IndexReader
+
     st = index_stats(spark, small_corpus["index_dir"])
     assert st["n_docs"] == 400
     assert st["segments"] == 4
     assert st["postings"] > 0 and st["index_bytes"] > 0
+    reader = IndexReader(small_corpus["index_dir"])
+    assert (st["n_docs"], st["avgdl"]) == (reader.n_docs, reader.avgdl)
+
+
+def test_cold_index_meta_runs_no_spark_job(spark, small_corpus):
+    """The Spark query plane's metadata load (wand._index_meta, cold
+    after refresh_meta, as after every mutation) reads a local index
+    driver-side: stats, bound factors and fold gating schedule no job."""
+    from mantic_sh_spark.operators.wand import _index_meta, refresh_meta
+    from mantic_sh_spark.sources.catalog import IndexPaths
+
+    idx = small_corpus["index_dir"]
+    sc = spark.sparkContext
+    sc.setJobGroup("cold-index-meta", "cold wand._index_meta")
+    try:
+        refresh_meta(idx)
+        meta = _index_meta(spark, IndexPaths(idx))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert meta[0] == 400 and set(meta[2]) == {0, 1, 2, 3}
+    assert len(sc.statusTracker().getJobIdsForGroup("cold-index-meta")) == 0
 
 
 def test_doc_ids_deterministic_across_parallelism(spark, small_corpus):

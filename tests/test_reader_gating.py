@@ -91,6 +91,20 @@ def _df_agrees(spark, idx, queries_text):
     return IndexReader(idx).df(terms) == {t: m[0] for t, m in meta.items()}
 
 
+def _meta_agrees(spark, idx, gated):
+    """The reader's n_docs, avgdl, bound factors and gated segments
+    equal the Spark plane's (wand._index_meta), and the gated set is
+    the fold's."""
+    from mantic_sh_spark.operators.wand import _index_meta
+    from mantic_sh_spark.sources.catalog import IndexPaths
+
+    n_docs, avgdl, factors, _dead, excluded = _index_meta(spark, IndexPaths(idx))
+    r = IndexReader(idx)
+    return ((r.n_docs, r.avgdl, r.bound_factors, r.gated_segments)
+            == (n_docs, avgdl, factors, sorted(excluded))
+            and excluded == frozenset(gated))
+
+
 def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch):
     """Crash BEFORE the 'committed' barrier (partial dst postings/terms
     dirs on disk, sources + tombstones untouched): fresh readers must
@@ -126,6 +140,7 @@ def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch):
     assert _wand(spark, idx, queries) == before
     assert _serve(idx, cfg, qtexts) == serve_before
     assert _df_agrees(spark, idx, qtexts)
+    assert _meta_agrees(spark, idx, {9})
 
 
 def test_readers_exclude_crashed_extend_segments(spark, tmp_path, monkeypatch):
@@ -175,6 +190,7 @@ def test_readers_exclude_crashed_extend_segments(spark, tmp_path, monkeypatch):
     refresh_meta(idx)
     assert _wand(spark, idx, queries) == before
     assert _serve(idx, cfg, qtexts) == serve_before
+    assert _meta_agrees(spark, idx, orphan_segs)
 
     # heal → 'aborted' closing rows → exclusion cleared, dirs gone
     assert gc_aborted_extends(spark, paths) == orphan_segs
@@ -224,3 +240,4 @@ def test_readers_serve_committed_fold_via_union_liveness(spark, tmp_path, monkey
     assert _wand(spark, idx, queries) == control
     assert _serve(idx, cfg, qtexts) == serve_control
     assert _df_agrees(spark, idx, qtexts)
+    assert _meta_agrees(spark, idx, {0, 1})

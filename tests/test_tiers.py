@@ -57,20 +57,30 @@ def test_tiered_serving_matches_batch(spark, small_corpus):
     # final-tier BM25 path
     assert saw_tier_match
 
-    # serve-loop routing: {"tiered": true} answers with tier column
+    # serve-loop routing: {"tiered": true} answers with tier column,
+    # plus url and snippet when asked; phrase is refused
     import io
     import json
 
+    from mantic_sh_spark.functions.tokenize import tokenize_query
     from mantic_sh_spark.serve import serve_loop
 
     out = io.StringIO()
-    serve_loop(idx, stdin=io.StringIO(
-        json.dumps({"q": "w1x", "tiered": True, "k": 4}) + "\n"
-        + json.dumps({"op": "quit"}) + "\n"), stdout=out)
-    resp = json.loads(out.getvalue().splitlines()[0])
+    serve_loop(idx, stdin=io.StringIO("".join(json.dumps(r) + "\n" for r in [
+        {"q": "w1x", "tiered": True, "k": 4},
+        {"q": "w1x", "tiered": True, "k": 4, "urls": True, "snippets": True},
+        {"q": "w1x", "tiered": True, "phrase": True},
+        {"op": "quit"}])), stdout=out)
+    plain, rich, both = (json.loads(x) for x in out.getvalue().splitlines())
     want4 = [{"rank": i + 1, "doc_id": d, "tier": t, "score": s}
              for i, (d, t, s) in enumerate(reader.tiered_topk("w1x", k=4))]
-    assert resp["results"] == json.loads(json.dumps(want4))
+    assert plain["results"] == json.loads(json.dumps(want4))
+    ids = [r["doc_id"] for r in want4]
+    urls, snips = reader.urls(ids), reader.snippets(ids, tokenize_query("w1x"))
+    assert rich["results"] == json.loads(json.dumps(
+        [{**r, "url": urls[r["doc_id"]], "snippet": snips[r["doc_id"]]} for r in want4]))
+    assert all(r["url"] and r["snippet"] for r in rich["results"])
+    assert "exclusive" in both["error"]
 
 
 def test_build_tier_index_checks_format_and_ladder(spark, small_corpus, tmp_path):
@@ -191,10 +201,10 @@ def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
     """_scores_array (the session boost's per-doc scorer) equals a
     brute-force BM25 scorer over the docs' own tokens, for every live
     doc — docs matching no term score 0.0, an absent term adds nothing
-    — on each of its routes: a cold single-pass decode (which installs
-    the top-k kernel's ("k",) entry), a multi-pass decode under a
-    tiny _SWEEP_DF_CAP (which installs nothing), and a warm entry the
-    kernel cached (which decodes nothing)."""
+    — on each of its routes: a cold decode of the candidate blocks
+    (one call per term, which installs the top-k kernel's ("k",) entry
+    when every block holds a candidate) and a warm entry the kernel
+    cached (which decodes nothing)."""
     import numpy as np
 
     from mantic_sh_spark.functions import codec
@@ -227,7 +237,7 @@ def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
     monkeypatch.setattr(codec, "decode_blocks", counting)
     cold = IndexReader(idx)
     assert np.array_equal(cold._scores_array(terms, docs), want)
-    assert len(decodes) == 2  # one pass per present term
+    assert len(decodes) == 2  # one call per present term
     assert all(cold._decoded.get(key) is not None for key in hot)
     # the dict wrapper rides the same path and rounds identically, and
     # unsorted input with repeats stays aligned to the input order
@@ -235,13 +245,6 @@ def test_scores_array_matches_brute_force(spark, small_corpus, monkeypatch):
     assert d == {int(k): float(v) for k, v in zip(docs, want)}
     perm = np.random.default_rng(0).permutation(len(docs) + 5) % len(docs)
     assert np.array_equal(cold._scores_array(terms, docs[perm]), want[perm])
-
-    decodes.clear()
-    multi = IndexReader(idx)
-    multi._SWEEP_DF_CAP = 1  # every pass decodes a single block
-    assert np.array_equal(multi._scores_array(terms, docs), want)
-    assert len(decodes) > 2 and set(decodes) == {1}
-    assert all(multi._decoded.get(key) is None for key in hot)
 
     warm = IndexReader(idx)
     warm.topk("w1x w2x", k=len(docs))  # the kernel caches both terms whole

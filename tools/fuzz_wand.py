@@ -11,9 +11,7 @@ Every case also checks tiered serving (IndexReader.tiered_topk — the
 same kernel over the tier codes in the postings) against the batch
 operator (operators/query.tiered_topk), incl. a stop-term head query
 and an absent-term query, and the per-doc scorer behind session boosts
-(_scores_for_docs, which checks the budget_ms=0 answers' scores) twice:
-with its default single pass and with a forced multi-pass one
-(_SWEEP_DF_CAP shrunk so every decode pass holds one block) — then
+(_scores_for_docs, which checks the budget_ms=0 answers' scores) — then
 TOMBSTONES the head of several rankings and re-checks WAND, serving,
 and tiered identity against the deleted-filtered oracles (collection
 stats stay pre-delete on both sides by contract). Every third case
@@ -206,14 +204,10 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     ) and _budget0_exact(reader, queries, 8)
     overlap = any(_overlapping(reader, tokenize_query(q)) for _, q in queries)
     # tiered serving vs batch identity on this layout, incl. a
-    # stop-term head query and an absent-term query; the per-doc scorer
-    # again with forced single-block decode passes
+    # stop-term head query and an absent-term query
     st = cfg.stop_term
     tq = queries + [(900, st), (901, f"{st} w1x"), (902, "qqabsentterm w1x")]
-    r_swp = IndexReader(idx)
-    r_swp._SWEEP_DF_CAP = 1  # force single-block decode passes
-    tier_ok = (_tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
-               and _budget0_exact(r_swp, queries, 8))
+    tier_ok = _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
     df_ok = _df_identity(reader, idx, tq)
 
     # tombstone the head of several rankings; WAND + serving + tiered
@@ -232,11 +226,10 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
             got_w.setdefault(r.query_id, []).append((r.doc_id, r.score))
         del_ok &= got_w == {q: v for q, v in want_w.items() if v}
         reader.refresh()
-        r_swp.refresh()
         del_ok &= all(
             [(d, round(s, 4)) for d, s in reader.topk(q, k=8)] == got_w.get(qid, [])
             for qid, q in queries
-        ) and _budget0_exact(reader, queries, 8) and _budget0_exact(r_swp, queries, 8)
+        ) and _budget0_exact(reader, queries, 8)
         del_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dset), 8)
         df_ok &= _df_identity(reader, idx, tq)
 
