@@ -32,10 +32,18 @@ postings. Each block stores:
   min_tier             : the smallest tier code in the block — with
                          every query term's covering blocks it bounds
                          the tier of the docs an interval can hold.
-  dls                  : varint bytes of per-posting doc lengths —
-                         scoring is self-contained per block (no
-                         random-access norms lookup inside top-k);
-                         ~1-2 bytes/posting, the Lucene-norms analog.
+
+Blocks store no doc lengths. A doc's length is a per-doc fact the
+index already holds once, in the norms sidecar (doc_id, doc_len; its
+rows move with every merge), so a per-posting copy would repeat it in
+every posting list the doc appears in (46% of the block payload on the
+perfbench corpus).
+Scorers gather `dl` from one liveness.DocLens right after decode: one
+dense array per origin segment (doc_id // SEG_STRIDE) indexed by
+doc_id % SEG_STRIDE, so the random access is one vectorized gather,
+the cost class of the DeadDocs mask every kernel already pays. The
+encoder still takes `dl`: block_max (and the terms directory's
+max_tf_norm) are computed from tf and dl at build and merge time.
 
 The format has ONE decoder, decode_blocks (any batch of blocks in one
 varint pass — every reader: the top-k kernel, phrase, the per-doc
@@ -75,7 +83,7 @@ _THRESHOLDS = [np.uint64(1) << np.uint64(7 * k) for k in range(1, 10)]
 def _as_u64(values: np.ndarray) -> np.ndarray:
     """Zero-copy uint64 view of a contiguous non-negative int64 array
     (same bits); copies only when dtype/layout genuinely differ. The
-    encoder's inputs are doc gaps / tfs / dls — all non-negative — and
+    encoder's inputs are doc gaps / tfs — all non-negative — and
     these views remove one full-array copy per column per batch (the
     encode is memory-bandwidth-bound in parallel)."""
     if isinstance(values, np.ndarray) and values.dtype == np.int64 and values.flags.c_contiguous:
@@ -86,8 +94,8 @@ def _as_u64(values: np.ndarray) -> np.ndarray:
 def varint_nbytes(values: np.ndarray) -> np.ndarray:
     """Per-value LEB128 encoded length (vectorized). Breaks out of the
     threshold ladder as soon as no value needs another byte — tfs stop
-    after one pass, doc lengths after two, and the widest values (the
-    gaps of sparse terms) after a few more."""
+    after one pass, and the widest values (the gaps of sparse terms)
+    after a few more."""
     v = _as_u64(values)
     nbytes = np.ones(v.shape, dtype=np.int64)
     for t in _THRESHOLDS:
@@ -144,10 +152,11 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return out
 
 
-def tf_norm(tfs: np.ndarray, dls: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
+def tf_norm(tfs: np.ndarray, doc_lens: np.ndarray, avgdl: float, k1: float,
+            b: float) -> np.ndarray:
     """idf-independent BM25 factor, vectorized (float64)."""
     tfs = tfs.astype(np.float64)
-    return tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
+    return tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * doc_lens.astype(np.float64) / avgdl))
 
 
 def _values(col):
@@ -165,31 +174,30 @@ def _values(col):
     return [memoryview(data)[int(o[0]):int(o[-1])]]
 
 
-def decode_blocks(counts, firsts, gaps, tfs, dls, positions=None) -> tuple[np.ndarray, ...]:
+def decode_blocks(counts, firsts, gaps, tfs, positions=None) -> tuple[np.ndarray, ...]:
     """Batch-decode blocks (any terms, any order) in ONE varint pass
     over all their byte columns — the single decoder of the block
     format. Columns are object arrays of bytes or Arrow binary arrays;
     `counts` / `firsts` are the blocks' n / first_doc. Returns int64
-    (doc_ids, tfs, dls) and int8 tier codes, one entry per posting in
-    block order — the one place the tier code is split back out of the
-    tfs bytes, so every caller sees plain tf — plus, when `positions`
-    is given, the flat absolute positions: posting j owns
+    (doc_ids, tfs) and int8 tier codes, one entry per posting in block
+    order — the one place the tier code is split back out of the tfs
+    bytes, so every caller sees plain tf — plus, when `positions` is
+    given, the flat absolute positions: posting j owns
     flat[off[j]:off[j+1]] with off = cumsum(tfs) from 0. Both delta
     chains restart at every run head (a block's first doc id comes from
     `firsts`, a posting's first position is absolute), so one cumsum
     with a per-run rebase undoes them. Raises ValueError when the bytes
     hold a different number of values than the layout implies (n-1 gaps
-    + n tfs + n dls per block, + sum(tfs) positions) — bytes of another
-    format generation never decode silently."""
+    + n tfs per block, + sum(tfs) positions) — bytes of another format
+    generation never decode silently."""
     counts = np.asarray(counts, dtype=np.int64)
     p = int(counts.sum())
-    cols = (gaps, tfs, dls) if positions is None else (gaps, tfs, dls, positions)
+    cols = (gaps, tfs) if positions is None else (gaps, tfs, positions)
     v = varint_decode(b"".join(chain.from_iterable(map(_values, cols)))).astype(np.int64)
     ng = p - len(counts)  # gap values: every posting but each block's first
     tf, code = np.divmod(v[ng:ng + p], len(DEFAULT_TIER_SPECS) + 1)
     code = code.astype(np.int8)
-    dl = v[ng + p:ng + 2 * p]
-    want = ng + 2 * p + (int(tf.sum()) if positions is not None else 0)
+    want = ng + p + (int(tf.sum()) if positions is not None else 0)
     if len(v) != want:
         raise ValueError(f"block bytes hold {len(v)} varint values; {len(counts)} "
                          f"blocks of {p} postings imply {want}")
@@ -207,15 +215,15 @@ def decode_blocks(counts, firsts, gaps, tfs, dls, positions=None) -> tuple[np.nd
     g[~heads] = v[:ng]
     docs = rebase(g, counts)
     if positions is None:
-        return docs, tf, dl, code
-    return docs, tf, dl, code, rebase(v[ng + 2 * p:], tf)
+        return docs, tf, code
+    return docs, tf, code, rebase(v[ng + p:], tf)
 
 
 def encode_groups(
     group_starts: np.ndarray,
     doc_ids: np.ndarray,
     tfs: np.ndarray,
-    dls: np.ndarray,
+    doc_lens: np.ndarray,
     codes: np.ndarray,
     avgdl: float,
     k1: float,
@@ -228,13 +236,14 @@ def encode_groups(
     by doc_id within each group; group_starts marks where each group
     begins. `tfs` are plain term frequencies (norms and block maxima
     use them) and `codes` the postings' tier codes, folded into the
-    stored tfs values. One varint buffer is built per column for the
+    stored tfs values; `doc_lens` (each posting's doc length) feed
+    block_max only — they are not stored. One varint buffer is built per column for the
     WHOLE batch and sliced per block — the per-group/per-block Python cost is one
     bytes-slice, which is what lets the salted build encode ~10^5
     groups per task without per-group pandas overhead.
 
     Returns columnar dict: group_idx (block → input group), first_doc,
-    last_doc, block_max, min_tier, n; doc_gaps/tfs/dls are (whole-batch
+    last_doc, block_max, min_tier, n; doc_gaps/tfs are (whole-batch
     varint buffer, per-posting byte offsets) pairs (a block's first posting
     has no doc_gaps bytes: its id is first_doc) — blocks tile the posting
     space contiguously, so a consumer builds the per-block binary
@@ -248,11 +257,11 @@ def encode_groups(
         return {"group_idx": [], "first_doc": [], "last_doc": [], "block_max": [],
                 "min_tier": [], "n": [], "p_start": np.zeros(0, dtype=np.int64),
                 "p_end": np.zeros(0, dtype=np.int64),
-                "doc_gaps": empty, "tfs": empty, "dls": empty}
+                "doc_gaps": empty, "tfs": empty}
     g = np.ascontiguousarray(group_starts, dtype=np.int64)
     doc = np.ascontiguousarray(doc_ids, dtype=np.int64)
     tf = np.ascontiguousarray(tfs, dtype=np.int64)
-    dl = np.ascontiguousarray(dls, dtype=np.int64)
+    dl = np.ascontiguousarray(doc_lens, dtype=np.int64)
     code = np.ascontiguousarray(codes, dtype=np.int64)
 
     # block segmentation: within each group, a block every block_size
@@ -290,7 +299,6 @@ def encode_groups(
     }
     out["doc_gaps"] = _varint_column(gaps, skip=bstarts)
     out["tfs"] = _varint_column(tf * (len(DEFAULT_TIER_SPECS) + 1) + code)
-    out["dls"] = _varint_column(dl)
     return out
 
 
@@ -327,7 +335,7 @@ def _binary_column(buf: bytes, offsets: np.ndarray, lo: np.ndarray, hi: np.ndarr
     )
 
 
-def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, codes, avgdl: float,
+def encode_rows(group_starts, tids, segs, doc_ids, tfs, doc_lens, codes, avgdl: float,
                 k1: float, b: float, block_size: int = BLOCK_SIZE, positions=None):
     """Postings of MANY groups → one RecordBatch of block rows (the
     postings-table schema) — the encoder the build and the merge
@@ -336,7 +344,7 @@ def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, codes, avgdl: float
     ascending within-doc positions are flat[off[j]:off[j+1]]."""
     import pyarrow as pa
 
-    enc = encode_groups(group_starts, doc_ids, tfs, dls, codes, avgdl, k1, b, block_size)
+    enc = encode_groups(group_starts, doc_ids, tfs, doc_lens, codes, avgdl, k1, b, block_size)
     gi, bs_p, be_p = enc["group_idx"], enc["p_start"], enc["p_end"]
     arrays = [
         pa.array(np.asarray(tids)[gi].astype(np.int64)),
@@ -345,20 +353,20 @@ def encode_rows(group_starts, tids, segs, doc_ids, tfs, dls, codes, avgdl: float
         pa.array(np.asarray(enc["last_doc"], dtype=np.int64)),
         pa.array(np.asarray(enc["block_max"], dtype=np.float64)),
         pa.array(np.asarray(enc["n"], dtype=np.int32)),
-    ] + [_binary_column(*enc[c], bs_p, be_p) for c in ("doc_gaps", "tfs", "dls")]
-    # per-block compressed size (gaps+tfs+dls — positions excluded, as
+    ] + [_binary_column(*enc[c], bs_p, be_p) for c in ("doc_gaps", "tfs")]
+    # per-block compressed size (gaps+tfs — positions excluded, as
     # in the terms-directory metric): stored so index maintenance can
     # aggregate sizes from a few int columns instead of scanning the
     # binary payloads (measured 2.8 s of the 4.5 s terms job at sf0.1).
     # Block j owns postings [bs_p[j], be_p[j]), so its bytes in each
     # column are offsets[be_p[j]] - offsets[bs_p[j]].
     blk_bytes = sum(
-        enc[c][1][be_p] - enc[c][1][bs_p] for c in ("doc_gaps", "tfs", "dls")
+        enc[c][1][be_p] - enc[c][1][bs_p] for c in ("doc_gaps", "tfs")
     )
     arrays.append(pa.array(np.asarray(blk_bytes, dtype=np.int32)))
     arrays.append(pa.array(np.asarray(enc["min_tier"], dtype=np.int8)))
     names = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "n",
-             "doc_gaps", "tfs", "dls", "nbytes", "min_tier"]
+             "doc_gaps", "tfs", "nbytes", "min_tier"]
     if positions is not None:
         # per-posting position deltas (the first value of each posting
         # run is the absolute position), one varint buffer for the
@@ -423,7 +431,7 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
                        positions)
 
 
-def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK_SIZE,
+def compact_stream_fn(avgdl: float, k1: float, b: float, norms_src, block_size: int = BLOCK_SIZE,
                       dead_src=None, with_positions: bool = False,
                       split_ranges: bool = False):
     """mapInArrow block compactor for segment merges: input is block
@@ -446,32 +454,38 @@ def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK
     — but every query on the term decodes more). Cost: at most one
     short block per (term, source range).
 
-    `dead_src` = (tombstones_path, [src_segment_ids]) purges tombstoned
-    postings: each TASK loads those segments' liveness partitions into
-    one DeadDocs itself (the per-segment discipline of the query
-    kernels: no dead-id array ever materializes on the driver or ships
-    in this closure, so a purge of a billion-tombstone index plans the
-    same as a ten-tombstone one)."""
+    `norms_src` = (norms_path, [src_segment_ids]): the re-encode needs
+    each posting's doc length for block_max, and blocks store none, so
+    each TASK loads those segments' norms partitions into one DocLens
+    (the sources' norms are still on disk: merge deletes them only
+    after its 'committed' barrier). `dead_src` = (tombstones_path,
+    [src_segment_ids]) purges tombstoned postings: each task loads
+    those segments' liveness partitions into one DeadDocs itself (the
+    per-segment discipline of the query kernels: no dead-id or length
+    array ever materializes on the driver or ships in this closure, so
+    a purge of a billion-tombstone index plans the same as a
+    ten-tombstone one)."""
 
     def run(batches):
-        from .liveness import DeadDocs, segment_tombstones
+        from .liveness import DeadDocs, DocLens, segment_norms, segment_tombstones
 
+        lens = DocLens.from_batches(segment_norms(norms_src[0], s) for s in norms_src[1])
         dead = None
         if dead_src is not None:
             dead = DeadDocs.from_batches(
                 segment_tombstones(dead_src[0], s) for s in dead_src[1]) or None
-        byte_cols = ["doc_gaps", "tfs", "dls"] + (["positions"] if with_positions else [])
-        carry = None  # the last group's short tail: ([tid, seg, doc, tf, dl, code], flat)
+        byte_cols = ["doc_gaps", "tfs"] + (["positions"] if with_positions else [])
+        carry = None  # the last group's short tail: ([tid, seg, doc, tf, code], flat)
 
         def encode(cols, flat, gstarts):
-            tid, seg, doc, tf, dl, code = cols
+            tid, seg, doc, tf, code = cols
             pos = None
             if with_positions:
                 off = np.zeros(len(tf) + 1, dtype=np.int64)
                 np.cumsum(tf, out=off[1:])
                 pos = (flat, off)
-            return encode_rows(gstarts, tid[gstarts], seg[gstarts], doc, tf, dl, code,
-                               avgdl, k1, b, block_size, pos)
+            return encode_rows(gstarts, tid[gstarts], seg[gstarts], doc, tf, lens.get(doc),
+                               code, avgdl, k1, b, block_size, pos)
 
         for rb in batches:
             if not rb.num_rows:
@@ -480,8 +494,8 @@ def compact_stream_fn(avgdl: float, k1: float, b: float, block_size: int = BLOCK
             dec = decode_blocks(n, rb.column("first_doc").to_numpy(),
                                 *(rb.column(c) for c in byte_cols))
             cols = [np.repeat(rb.column("tid").to_numpy(), n),
-                    np.repeat(rb.column("segment_id").to_numpy(), n)] + list(dec[:4])
-            flat = dec[4] if with_positions else None
+                    np.repeat(rb.column("segment_id").to_numpy(), n)] + list(dec[:3])
+            flat = dec[3] if with_positions else None
             if dead is not None:
                 keep = ~dead.mask(cols[2])
                 if with_positions:

@@ -45,7 +45,9 @@ Tombstone liveness is one type, DeadDocs: the set of deleted doc ids
 every query kernel masks. Doc ids are never reused (extend and merge
 allocate past every docs and postings segment), so one set holding
 every tombstone partition is correct in every fold window — ids a
-segment never held simply never match.
+segment never held simply never match. DocLens, its sibling, holds
+the per-doc lengths every BM25 scorer gathers (the norms sidecar,
+keyed the same way).
 """
 
 from __future__ import annotations
@@ -129,6 +131,105 @@ class DeadDocs:
             bit = (bm[np.minimum(byte, len(bm) - 1)] >> (r & 7)) & 1
             out[sel] = (byte < len(bm)) & bit.astype(bool)
         return out
+
+
+class MissingDocLen(LookupError):
+    """A decoded posting's doc has no norms row in the DocLens it is
+    scored with: the index lost (or never committed) a norms partition
+    its postings need. Scoring with a made-up length would rank wrong
+    without saying so."""
+
+    def __init__(self, doc_id: int):
+        super().__init__(f"doc {doc_id} has a posting but no doc_len in the norms sidecar "
+                         "(its norms partition is missing); the index needs repair or a rebuild")
+        self.doc_id = doc_id
+
+
+class DocLens:
+    """doc_len per doc id, keyed like DeadDocs: one dense array per
+    ORIGIN segment (doc_id // SEG_STRIDE), indexed by doc_id %
+    SEG_STRIDE, in the narrowest unsigned dtype holding that segment's
+    largest doc_len (at most 2 B/doc while every length is < 65,536).
+    Posting blocks store no lengths (functions/codec.py), so every
+    scorer gathers them here right after decode — one vectorized
+    gather per origin segment present, the cost class of DeadDocs.mask.
+    0 means "no row": a doc with a posting has doc_len ≥ 1, so a 0
+    gathered for a posting raises MissingDocLen. Immutable once built."""
+
+    __slots__ = ("_lens",)
+
+    def __init__(self, lens: dict[int, np.ndarray]):
+        self._lens = lens
+
+    @classmethod
+    def from_batches(cls, batches: Iterable) -> "DocLens":
+        """From an iterable of (doc_ids, doc_lens) array pairs (e.g. the
+        norms partitions' record batches; any order). Arrays grow
+        geometrically while streaming and narrow once at the end."""
+        lens: dict[int, np.ndarray] = {}
+        used: dict[int, int] = {}
+        for ids, dl in batches:
+            ids = np.asarray(ids, dtype=np.int64)
+            if not len(ids):
+                continue
+            dl = np.asarray(dl, dtype=np.uint32)
+            segs, rows = np.divmod(ids, SEG_STRIDE)
+            lo, hi = int(segs.min()), int(segs.max())
+            for seg in [lo] if lo == hi else np.unique(segs).tolist():
+                sel = slice(None) if lo == hi else segs == seg
+                r = rows[sel]
+                need = int(r.max()) + 1
+                arr = lens.get(seg, np.zeros(0, dtype=np.uint32))
+                if len(arr) < need:
+                    pad = np.zeros(max(need, 2 * len(arr)) - len(arr), dtype=np.uint32)
+                    lens[seg] = arr = np.concatenate([arr, pad])
+                used[seg] = max(used.get(seg, 0), need)
+                arr[r] = dl[sel]
+        return cls({s: arr[:used[s]].astype(np.min_scalar_type(int(arr.max())))
+                    for s, arr in lens.items()})
+
+    @property
+    def nbytes(self) -> int:
+        return sum(arr.nbytes for arr in self._lens.values())
+
+    def get(self, ids) -> np.ndarray:
+        """doc_len[len(ids)] (an unsigned int array); raises
+        MissingDocLen when an id has no row."""
+        ids = np.asarray(ids, dtype=np.int64)
+        if not len(ids):
+            return np.zeros(0, dtype=np.uint32)
+        segs, rows = np.divmod(ids, SEG_STRIDE)
+        lo, hi = int(segs.min()), int(segs.max())
+        arr = self._lens.get(lo)
+        if lo == hi and arr is not None and int(rows.max()) < len(arr):
+            out = arr[rows]
+        else:
+            out = np.zeros(len(ids), dtype=np.uint32)
+            for seg, arr in self._lens.items():
+                if not lo <= seg <= hi:
+                    continue
+                sel = slice(None) if lo == hi else np.flatnonzero(segs == seg)
+                r = rows[sel]
+                out[sel] = np.where(r < len(arr), arr[np.minimum(r, len(arr) - 1)], 0)
+        if not out.all():
+            raise MissingDocLen(int(ids[np.argmin(out)]))
+        return out
+
+
+def segment_norms(norms_path: str, segment_id: int) -> tuple[np.ndarray, np.ndarray]:
+    """TASK-side length load: (doc_id, doc_len) of ONE segment's norms
+    partition — exactly the docs whose postings live in that segment
+    (norms rows move with merges). A missing partition reads as empty,
+    so a posting it should have covered raises MissingDocLen in
+    DocLens.get instead of being scored."""
+    import pyarrow.dataset as ds
+
+    try:
+        t = ds.dataset(f"{norms_path}/segment_id={int(segment_id)}",
+                       format="parquet").to_table(columns=["doc_id", "doc_len"])
+    except FileNotFoundError:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    return t.column("doc_id").to_numpy(), t.column("doc_len").to_numpy()
 
 
 def segment_tombstones(tombstones_path: str, segment_id: int) -> np.ndarray:

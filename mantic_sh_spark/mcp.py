@@ -127,7 +127,8 @@ TOOLS = [
     },
     {
         "name": "index_stats",
-        "description": "Corpus size, average doc length, and reader cache/read-amplification counters.",
+        "description": "Corpus size, average doc length, reader cache/read-amplification "
+                       "counters and the doc-length table's memory (doc_lens_bytes).",
         "inputSchema": {"type": "object", "properties": {
             "indexDir": {"type": "string",
                          "description": "target another committed index (LRU pool)"},

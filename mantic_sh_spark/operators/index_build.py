@@ -63,12 +63,14 @@ from .docs import build_docs, doc_stats
 #  dominant fixed cost;
 #  v6: doc_gaps drops each block's first doc id, which first_doc holds;
 #  v7: each tfs value folds in the posting's tier code of
-#  codec.DEFAULT_TIER_SPECS, plus a per-block `min_tier` column)
-INDEX_FORMAT = 7
+#  codec.DEFAULT_TIER_SPECS, plus a per-block `min_tier` column;
+#  v8: blocks drop the per-posting doc lengths — scorers gather them
+#  from the norms sidecar, liveness.DocLens)
+INDEX_FORMAT = 8
 
 BLOCK_ROW_SCHEMA = (
     "tid long, segment_id int, first_doc long, last_doc long, "
-    "block_max double, n int, doc_gaps binary, tfs binary, dls binary, "
+    "block_max double, n int, doc_gaps binary, tfs binary, "
     "nbytes int, min_tier tinyint"
 )
 BLOCK_ROW_SCHEMA_POS = BLOCK_ROW_SCHEMA + ", positions binary"

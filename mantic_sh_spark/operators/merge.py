@@ -17,7 +17,10 @@ per batch, with only one term's short tail carried between batches.
 Every block is re-encoded at the merge-time avgdl, which the dst
 segment records as its build_avgdl: block maxima are idf-independent
 (functions/codec.py), and the query-time bound inflation
-max(1, avgdl_now / build_avgdl) covers any later drift.
+max(1, avgdl_now / build_avgdl) covers any later drift. Blocks store
+no doc lengths, so the compactor's tasks read them from the sources'
+norms partitions, which stay on disk until after the 'committed'
+barrier.
 """
 
 from __future__ import annotations
@@ -529,7 +532,7 @@ def merge_segments(
         .sortWithinPartitions("tid", "first_doc")
         .mapInArrow(
             codec.compact_stream_fn(
-                avgdl, k1, b,
+                avgdl, k1, b, (paths.norms, srcs),
                 dead_src=(paths.tombstones, srcs) if purge_df is not None else None,
                 with_positions=has_positions,
                 split_ranges=split_ranges,

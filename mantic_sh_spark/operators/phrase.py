@@ -28,22 +28,24 @@ from ..functions.codec import decode_blocks
 from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize
 from ..sources.catalog import IndexPaths
-from .wand import _TermBlocks, cached_postings, split_blocks
+from .wand import _TermBlocks, split_blocks
 
 
-def _term_postings(tb: _TermBlocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Blocks of one term → (ascending doc_ids, flat positions, offsets):
-    doc j's within-doc positions are flat[off[j]:off[j+1]] — one batched
-    decode of every block. Ragged (flat + offsets) rather than a list of
-    per-doc arrays — the verification pass operates on the whole
-    candidate set at once and never touches per-doc Python objects.
+def _term_postings(tb: _TermBlocks) -> tuple[np.ndarray, ...]:
+    """Blocks of one term → (ascending doc_ids, flat positions, offsets,
+    the blocks' first_doc ascending, their n in that order): doc j's
+    within-doc positions are flat[off[j]:off[j+1]] — one batched decode
+    of every block; the last two tag a decode-cache entry. Ragged
+    (flat + offsets) rather than a list of per-doc arrays — the
+    verification pass operates on the whole candidate set at once and
+    never touches per-doc Python objects.
     Blocks decode in first_doc order, which gives ascending docs unless
     blocks overlap (a legacy non-contiguous compaction envelops another
     segment's range); then the docs and their position runs are
     re-sorted, since callers binary-search them."""
-    o = np.argsort(tb.first, kind="stable")
-    docs, tf, _dl, _code, flat = decode_blocks(
-        tb.n[o], tb.first[o], tb.gaps[o], tb.tfs[o], tb.dls[o], tb.positions[o])
+    bo = np.argsort(tb.first, kind="stable")
+    docs, tf, _code, flat = decode_blocks(tb.n[bo], tb.first[bo], tb.gaps[bo], tb.tfs[bo],
+                                          tb.positions[bo])
     off = np.zeros(len(docs) + 1, dtype=np.int64)
     np.cumsum(tf, out=off[1:])
     if np.any(docs[1:] < docs[:-1]):
@@ -51,7 +53,18 @@ def _term_postings(tb: _TermBlocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]
         flat = _gather_runs(flat, off[o], tf[o])
         docs = docs[o]
         np.cumsum(tf[o], out=off[1:])
-    return docs, flat, off
+    return docs, flat, off, tb.first[bo], tb.n[bo]
+
+
+def _holds(entry, tb: _TermBlocks, m: np.ndarray) -> bool:
+    """Does a decode-cache entry (_term_postings' tuple) hold every
+    block of `tb` that `m` selects? A block is its (first_doc, n): a
+    doc has one posting per term, so first_doc names a term's block."""
+    first, n = entry[3], entry[4]
+    if not len(first):
+        return False
+    j = np.minimum(np.searchsorted(first, tb.first[m]), len(first) - 1)
+    return bool(np.all((first[j] == tb.first[m]) & (n[j] == tb.n[m])))
 
 
 def _kept_blocks(tbs: list[_TermBlocks]) -> list[np.ndarray]:
@@ -109,11 +122,15 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
 
     Only the blocks _kept_blocks keeps are decoded. `decoded_cache`
     (optional .get(term) / .put(term, value), like the serving reader's
-    byte-budgeted decoded LRU) holds whole terms, tagged with their
-    blocks' first_doc / n columns (wand.cached_postings): a term whose
-    kept blocks hold at least half of its postings is decoded whole and
-    cached — no more than the query spends on it anyway — else only its
-    kept blocks decode and nothing is cached. `stats` accumulates
+    byte-budgeted decoded LRU) holds one decode per term, tagged with
+    its blocks' first_doc / n: a run whose kept blocks the entry holds
+    decodes nothing. Otherwise the kept blocks decode together with the
+    ones the entry held (so repeated runs with different partners —
+    definitions' probes — converge on one entry), and the whole term
+    decodes once those hold at least half of its postings — no more
+    than the query spends on it anyway. Any superset of the kept blocks
+    verifies the same: a doc's posting sits in one block, and a doc
+    holding every term sits in a kept block of each. `stats` accumulates
     blocks_considered (before the block filter), blocks_decoded,
     decoded_hits and `segs`, the segment ids of the kept blocks."""
     if not terms or any(not len(by_term.get(t, ())) for t in terms):
@@ -129,17 +146,19 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
         return None
     decoded = {}
     for t, tb, m in zip(uniq, tbs, kept):
-        got = cached_postings(decoded_cache, t, tb)
-        if got is None:
-            whole = 2 * int(tb.n[m].sum()) >= int(tb.n.sum())
-            part = tb if whole else tb.take(np.flatnonzero(m))
+        got = decoded_cache.get(t) if decoded_cache is not None else None
+        if got is not None and _holds(got, tb, m):
+            if stats is not None:
+                stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
+        else:
+            if got is not None:
+                m = m | np.isin(tb.first, got[3])
+            part = tb if 2 * int(tb.n[m].sum()) >= int(tb.n.sum()) else tb.take(np.flatnonzero(m))
             if stats is not None:
                 stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(part)
             got = _term_postings(part)
-            if whole and decoded_cache is not None:
-                decoded_cache.put(t, got + (tb.first, tb.n))
-        elif stats is not None:
-            stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
+            if decoded_cache is not None:
+                decoded_cache.put(t, got)
         decoded[t] = got
     # candidate docs: the smallest doc list, narrowed by binary search
     # in each other list (all ascending)

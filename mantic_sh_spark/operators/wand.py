@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import B, K1, idf as idf_fn
 from ..functions.codec import decode_blocks, tf_norm
-from ..functions.liveness import DeadDocs, segment_tombstones
+from ..functions.liveness import DeadDocs, DocLens, segment_norms, segment_tombstones
 from ..functions.tokenize import tokenize_query
 from ..sources.catalog import IndexPaths
 from .query import rank_topk
@@ -69,12 +69,11 @@ class _TermBlocks:
     `positions` the position bytes of a positional fetch (else None).
     Blocks are ordered by (segment, first_doc)."""
 
-    __slots__ = ("first", "last", "bmax", "mint", "n", "gaps", "tfs", "dls", "seg",
-                 "positions")
+    __slots__ = ("first", "last", "bmax", "mint", "n", "gaps", "tfs", "seg", "positions")
 
-    def __init__(self, first, last, bmax, mint, n, gaps, tfs, dls, seg, positions=None):
+    def __init__(self, first, last, bmax, mint, n, gaps, tfs, seg, positions=None):
         self.first, self.last, self.bmax, self.mint, self.n = first, last, bmax, mint, n
-        self.gaps, self.tfs, self.dls, self.seg = gaps, tfs, dls, seg
+        self.gaps, self.tfs, self.seg = gaps, tfs, seg
         self.positions = positions
 
     def __len__(self) -> int:
@@ -103,7 +102,7 @@ def split_blocks(data, tid2term: dict[int, str],
     may carry a sentinel tid — _tid_filter). `bound_factors` ({segment:
     factor ≥ 1}, the avgdl-drift bound inflation) pre-scales block_max
     per row's segment. A term's global df is its blocks' n summed."""
-    dtypes = (np.int64, np.float64, np.int64, np.int64, object, object, object)
+    dtypes = (np.int64, np.float64, np.int64, np.int64, object, object)
     out = dict.fromkeys(tid2term.values(), _TermBlocks(
         *(np.empty(0, dtype=t) for t in (np.int64,) + dtypes + (np.int64,))))
     if data is None or not len(data):
@@ -119,7 +118,7 @@ def split_blocks(data, tid2term: dict[int, str],
     tid, seg = tid[o], seg[o]
     cols = [first[o]] + [
         np.asarray(data[c], dtype=dt)[o]
-        for c, dt in zip(("last_doc", "block_max", "min_tier", "n", "doc_gaps", "tfs", "dls"),
+        for c, dt in zip(("last_doc", "block_max", "min_tier", "n", "doc_gaps", "tfs"),
                          dtypes)]
     if bound_factors:
         segs, inv = np.unique(seg, return_inverse=True)
@@ -134,12 +133,10 @@ def split_blocks(data, tid2term: dict[int, str],
 
 
 def cached_postings(decode_cache, term: str, tb: _TermBlocks):
-    """The decode cache's entry for `term` — the top-k kernel's (docs,
-    tf_norm, tier codes, first_doc, n), the phrase kernel's (docs,
-    positions, offsets, first_doc, n) — when it was decoded from blocks
-    with exactly tb's first_doc / n columns, else None: blocks in
-    another order, or from another epoch (a query straddling refresh),
-    are a miss."""
+    """The top-k decode cache's entry for `term` — (docs, tf_norm, tier
+    codes, first_doc, n) — when it was decoded from blocks with exactly
+    tb's first_doc / n columns, else None: blocks in another order, or
+    from another epoch (a query straddling refresh), are a miss."""
     c = decode_cache.get(term) if decode_cache is not None else None
     if c is None or not (np.array_equal(c[3], tb.first) and np.array_equal(c[4], tb.n)):
         return None
@@ -154,7 +151,7 @@ def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
 
 def segment_topk(by_term: dict[str, _TermBlocks], terms: list[str],
                  idf_map: dict[str, float], avgdl: float, k: int,
-                 k1: float, b: float, bound_factor: float = 1.0,
+                 k1: float, b: float, lens: DocLens, bound_factor: float = 1.0,
                  dead: DeadDocs | None = None,
                  stats: dict | None = None,
                  decode_cache=None,
@@ -177,6 +174,8 @@ def segment_topk(by_term: dict[str, _TermBlocks], terms: list[str],
     bound is T unless every term has a block covering it, then the max
     over terms of the covering blocks' min_tier.
 
+    `lens` holds the doc lengths of every doc the blocks hold (blocks
+    store none): each decode gathers its postings' lengths from it.
     `dead` docs are dropped at finalization (θ only ever stays lower,
     so the prune stays sound). `decode_cache` (optional .get(term) /
     .put(term, value)) memoizes the idf-independent (docs, tf_norm,
@@ -237,11 +236,11 @@ def segment_topk(by_term: dict[str, _TermBlocks], terms: list[str],
         if len(dec):
             if not decoded:  # first decode: the blocks' byte columns
                 raw.extend(np.concatenate([getattr(tb, c) for tb in tbs])
-                           for c in ("gaps", "tfs", "dls"))
+                           for c in ("gaps", "tfs"))
             to_decode[dec] = False
-            d, tf, dl, code = decode_blocks(n[dec], first[dec], *(col[dec] for col in raw))
+            d, tf, code = decode_blocks(n[dec], first[dec], *(col[dec] for col in raw))
             blk = np.repeat(dec, n[dec])
-            decoded.append((blk, d, tf_norm(tf, dl, avgdl, k1, b), code))
+            decoded.append((blk, d, tf_norm(tf, lens.get(d), avgdl, k1, b), code))
             parts.append((term[blk],) + decoded[-1][1:])
         cac = new[is_cached[new]]
         if len(cac) and len(cac) == n_cached:  # every cached block
@@ -414,7 +413,7 @@ def _load_dead(dead_src, seg: int) -> DeadDocs | None:
 
 
 def _wand_udf(queries: dict[int, list[str]], idf_map: dict[str, float],
-              avgdl: float, k: int, k1: float, b: float,
+              avgdl: float, k: int, k1: float, b: float, norms_path: str,
               bound_factors: dict[int, float] | None = None,
               dead_src: "tuple[str, frozenset[int]] | None" = None,
               tid2term: dict[int, str] | None = None):
@@ -422,6 +421,9 @@ def _wand_udf(queries: dict[int, list[str]], idf_map: dict[str, float],
         seg = int(pdf["segment_id"].iloc[0])
         bf = (bound_factors or {}).get(seg, 1.0)
         dead = _load_dead(dead_src, seg)
+        # doc lengths: this segment's norms partition lists exactly the
+        # docs whose postings live here (norms rows move with merges)
+        lens = DocLens.from_batches([segment_norms(norms_path, seg)])
         # posting rows carry the int64 tid; the (query-sized) tid2term
         # closure maps them back to the query terms (split_blocks drops
         # the _tid_filter sentinel)
@@ -429,7 +431,7 @@ def _wand_udf(queries: dict[int, list[str]], idf_map: dict[str, float],
         out_q, out_d, out_s = [], [], []
         for qid, terms in queries.items():
             for doc, score in segment_topk(by_term, terms, idf_map, avgdl, k,
-                                           k1, b, bf, dead):
+                                           k1, b, lens, bf, dead):
                 out_q.append(qid)
                 out_d.append(doc)
                 out_s.append(score)
@@ -540,7 +542,7 @@ def _postings_scan(spark: SparkSession, paths: IndexPaths,
     df = _SCAN_CACHE.get(key)
     if df is None:
         cols = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "min_tier", "n",
-                "doc_gaps", "tfs", "dls"]
+                "doc_gaps", "tfs"]
         df = spark.read.parquet(paths.postings)
         if with_positions:
             if "positions" not in df.columns:
@@ -646,7 +648,7 @@ def wand_topk(
         # common case keeps the codegen-stable plan shape
         blocks = blocks.filter(~F.col("segment_id").isin(sorted(excluded)))
     per_seg = blocks.groupBy("segment_id").applyInPandas(
-        _wand_udf(q_map, idf_map, avgdl, k, k1, b, bound_factors,
+        _wand_udf(q_map, idf_map, avgdl, k, k1, b, paths.norms, bound_factors,
                   dead_src=dead_src, tid2term=tid2term),
         schema="query_id int, doc_id long, score double",
     )

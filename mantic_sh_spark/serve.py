@@ -48,7 +48,7 @@ import numpy as np
 
 from .functions.bm25 import B, K1, idf as idf_fn
 from .functions.codec import DEFAULT_TIER_SPECS
-from .functions.liveness import DeadDocs
+from .functions.liveness import DeadDocs, DocLens
 from .functions.tokenize import tokenize_query
 from .operators.wand import split_blocks
 from .sources.catalog import IndexPaths
@@ -56,7 +56,7 @@ from .sources.catalog import IndexPaths
 # posting rows are keyed by `tid`, the client-side xxhash64 of the term
 # (functions/termhash.py, bit-identical to the build's Catalyst hash)
 _POSTING_COLS = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "min_tier", "n",
-                 "doc_gaps", "tfs", "dls"]
+                 "doc_gaps", "tfs"]
 
 
 # Byte budget for the decoded-postings LRU: decoded arrays run ~12x
@@ -236,6 +236,10 @@ class IndexReader:
         # DeadDocs builds from it on the first query that needs it
         self._tombstones = self._dataset_or_none(self.paths.tombstones)
         self._dead = None
+        # doc lengths (blocks store none): likewise the norms handle
+        # now, the epoch's DocLens on the first query that decodes
+        self._norms = self._dataset_or_none(self.paths.norms)
+        self._lens = None
 
         # an empty-corpus index commits only collection_stats + manifest
         # (no postings/docs dirs) — serve it as empty, not a crash
@@ -346,6 +350,32 @@ class IndexReader:
                 if self._epoch == epoch:
                     self._dead = dead
         return dead or None
+
+    def _doc_lens(self) -> DocLens:
+        """This epoch's doc lengths, every BM25 decode's `dl` source:
+        the serving segments' norms partitions (a segment's partition
+        lists exactly the docs whose postings it holds; fold-gated
+        segments are skipped) streamed into one DocLens through the
+        norms handle opened at refresh, lazily, like _dead_docs — a
+        partition a merge retired since raises OSError into the
+        refresh-and-retry path."""
+        import pyarrow.dataset as ds
+
+        with self._lock:
+            lens, norms, excl, epoch = self._lens, self._norms, self._excluded_segs, self._epoch
+        if lens is None:
+            if norms is None or "segment_id" not in norms.schema.names:
+                lens = DocLens({})
+            else:
+                flt = ~ds.field("segment_id").isin(sorted(excl)) if excl else None
+                batches = norms.scanner(columns=["doc_id", "doc_len"], filter=flt,
+                                        batch_size=1 << 17).to_batches()
+                lens = DocLens.from_batches((b.column(0).to_numpy(), b.column(1).to_numpy())
+                                            for b in batches)
+            with self._lock:
+                if self._epoch == epoch:
+                    self._lens = lens
+        return lens
 
     def live_mask(self, ids) -> "np.ndarray":
         """bool[len(ids)]: True where the doc id is NOT tombstoned —
@@ -523,11 +553,12 @@ class IndexReader:
         stats["segments_touched"] = len(np.unique(np.concatenate(
             [tb.seg for tb in blocks.values()])))
         # ONE kernel call over every segment's blocks: bound factors are
-        # pre-scaled into the block maxima (_fetch_blocks), liveness is
-        # the epoch's one DeadDocs; the ladder needs every query term,
-        # absent ones included (a doc lacking one is in the final tier)
-        hits = segment_topk(blocks, terms, idf_map, self.avgdl, k,
-                            self.k1, self.b, dead=self._dead_docs(), stats=stats,
+        # pre-scaled into the block maxima (_fetch_blocks), doc lengths
+        # and liveness are the epoch's one DocLens and DeadDocs; the
+        # ladder needs every query term, absent ones included (a doc
+        # lacking one is in the final tier)
+        hits = segment_topk(blocks, terms, idf_map, self.avgdl, k, self.k1, self.b,
+                            self._doc_lens(), dead=self._dead_docs(), stats=stats,
                             decode_cache=_NsDecodeCache(self._decoded, ("k",), dgen),
                             deadline=deadline, tiers=tiers)
         return hits
@@ -555,9 +586,11 @@ class IndexReader:
         terms_cold (LRU-miss terms, including definitions' symbol
         probe) and decoded_hits (terms served by the decoded LRU). A
         positional query sums its counters over its kernel calls
-        (definitions runs one per definition form)."""
+        (definitions runs one per definition form). doc_lens_bytes is
+        the memory of this epoch's DocLens (0 until a query decodes)."""
         with self._lock:
-            return {"last": dict(self._last_shared), "total": dict(self.totals)}
+            return {"last": dict(self._last_shared), "total": dict(self.totals),
+                    "doc_lens_bytes": self._lens.nbytes if self._lens is not None else 0}
 
     @property
     def has_positions(self) -> bool:
@@ -643,9 +676,9 @@ class IndexReader:
                     idx = _ranges((np.cumsum(tb.n) - tb.n)[hold], tb.n[hold])
                     add(idf, hit[0][idx], hit[1][idx])
                 elif len(hold):
-                    d, tf, dl, code = decode_blocks(tb.n[hold], tb.first[hold], tb.gaps[hold],
-                                                    tb.tfs[hold], tb.dls[hold])
-                    tfn = tf_norm(tf, dl, self.avgdl, self.k1, self.b)
+                    d, tf, code = decode_blocks(tb.n[hold], tb.first[hold], tb.gaps[hold],
+                                                tb.tfs[hold])
+                    tfn = tf_norm(tf, self._doc_lens().get(d), self.avgdl, self.k1, self.b)
                     add(idf, d, tfn)
                     if len(hold) == len(tb.n):  # the whole term decoded: install
                         cache.put(t, (d, tfn, code, tb.first, tb.n))

@@ -15,16 +15,16 @@ from mantic_sh_spark.functions.bm25 import B, K1
 T = len(codec.DEFAULT_TIER_SPECS)
 
 
-def _encode(docs, tfs, dls, avgdl, codes=None):
+def _encode(docs, tfs, doc_lens, avgdl, codes=None):
     """One term's postings through the build's encoder → block rows
     (tier code T — no ladder window — unless given)."""
     codes = np.full(len(docs), T) if codes is None else codes
-    return codec.encode_rows([0], [1], [0], docs, tfs, dls, codes, avgdl, K1, B)
+    return codec.encode_rows([0], [1], [0], docs, tfs, doc_lens, codes, avgdl, K1, B)
 
 
 def _decode(rows, positions=False):
     """Every block of an Arrow batch/table or pandas frame, one decode."""
-    cols = ["doc_gaps", "tfs", "dls"] + (["positions"] if positions else [])
+    cols = ["doc_gaps", "tfs"] + (["positions"] if positions else [])
     if isinstance(rows, (pa.RecordBatch, pa.Table)):
         rows = rows.to_pandas()
     return codec.decode_blocks(rows["n"].to_numpy(), rows["first_doc"].to_numpy(),
@@ -41,14 +41,15 @@ def test_delta_roundtrip(n, hi):
     # Arrow binary columns decode zero-copy, sliced batches included
     sl = rb.slice(1)
     got = codec.decode_blocks(sl.column("n").to_numpy(), sl.column("first_doc").to_numpy(),
-                              *(sl.column(c) for c in ("doc_gaps", "tfs", "dls")))[0]
+                              *(sl.column(c) for c in ("doc_gaps", "tfs")))[0]
     assert np.array_equal(got, docs[codec.BLOCK_SIZE:])
 
 
 def test_block_stores_first_doc_once():
     """A block of n postings stores n-1 doc gaps (its first id is the
     first_doc column), so a one-posting block has empty doc_gaps;
-    nbytes is the three byte columns' length. Segment-3 ids (6-byte
+    nbytes is the two byte columns' length (blocks store no doc
+    lengths). Segment-3 ids (6-byte
     varints) round-trip, whole and as sliced Arrow columns; v5-layout
     bytes (the absolute first id kept in doc_gaps) raise instead of
     decoding to wrong ids."""
@@ -56,24 +57,25 @@ def test_block_stores_first_doc_once():
     base = 3 * codec.SEG_STRIDE
     docs = base + np.sort(rng.choice(10**7, size=300, replace=False))
     tfs = rng.integers(1, 5, size=300)
-    dls = rng.integers(10, 90, size=300)
+    lens = rng.integers(10, 90, size=300)
     # groups of 1, 2, 130 and 167 postings → blocks of 1, 2, 128, 2, 128, 39
     codes = rng.integers(0, T + 1, size=300)
-    rb = codec.encode_rows([0, 1, 3, 133], [1, 2, 3, 4], [3] * 4, docs, tfs, dls, codes,
+    rb = codec.encode_rows([0, 1, 3, 133], [1, 2, 3, 4], [3] * 4, docs, tfs, lens, codes,
                            50.0, K1, B)
     blocks = rb.to_pandas()
     assert blocks["n"].tolist() == [1, 2, 128, 2, 128, 39]
     for _, bl in blocks.iterrows():
         assert len(codec.varint_decode(bl.doc_gaps)) == bl.n - 1
-        assert bl["nbytes"] == len(bl.doc_gaps) + len(bl.tfs) + len(bl.dls)
+        assert bl["nbytes"] == len(bl.doc_gaps) + len(bl.tfs)
     assert blocks["doc_gaps"][0] == b""
-    d, t, l, c = _decode(rb)
-    assert np.array_equal(d, docs) and np.array_equal(t, tfs) and np.array_equal(l, dls)
+    assert "dls" not in blocks.columns
+    d, t, c = _decode(rb)
+    assert np.array_equal(d, docs) and np.array_equal(t, tfs)
     assert np.array_equal(c, codes)
     for b0, b1, p0, p1 in ((1, 4, 1, 133), (4, 6, 133, 300)):  # sliced Arrow columns
         sl = rb.slice(b0, b1 - b0)
         d = codec.decode_blocks(sl.column("n").to_numpy(), sl.column("first_doc").to_numpy(),
-                                *(sl.column(c) for c in ("doc_gaps", "tfs", "dls")))[0]
+                                *(sl.column(c) for c in ("doc_gaps", "tfs")))[0]
         assert np.array_equal(d, docs[p0:p1])
 
     # the v5 layout: every block's doc_gaps led by its absolute first id
@@ -84,9 +86,9 @@ def test_block_stores_first_doc_once():
         _decode(v5)
     pos = np.arange(int(tfs.sum()))
     off = np.concatenate(([0], np.cumsum(tfs)))
-    v5p = codec.encode_rows([0], [1], [3], docs, tfs, dls, codes, 50.0, K1, B,
+    v5p = codec.encode_rows([0], [1], [3], docs, tfs, lens, codes, 50.0, K1, B,
                             positions=(pos, off)).to_pandas()
-    assert np.array_equal(_decode(v5p, positions=True)[4], pos)
+    assert np.array_equal(_decode(v5p, positions=True)[3], pos)
     v5p["doc_gaps"] = [codec.varint_encode(np.array([f])) + g
                        for f, g in zip(v5p["first_doc"], v5p["doc_gaps"])]
     with pytest.raises(ValueError, match="varint values"):
@@ -111,22 +113,22 @@ def test_blocks_roundtrip_and_blockmax():
     n = 1000
     docs = np.sort(rng.choice(10**9, size=n, replace=False))
     tfs = rng.integers(1, 60, size=n)
-    dls = rng.integers(10, 800, size=n)
+    lens = rng.integers(10, 800, size=n)
     codes = rng.integers(0, T + 1, size=n)
-    avgdl = float(dls.mean())
-    blocks = _encode(docs, tfs, dls, avgdl, codes).to_pandas()
+    avgdl = float(lens.mean())
+    blocks = _encode(docs, tfs, lens, avgdl, codes).to_pandas()
     assert (blocks["n"] <= codec.BLOCK_SIZE).all()
     off = 0
     for _, bl in blocks.iterrows():
-        d, t, l, c = _decode(blocks.iloc[[_]])
+        d, t, c = _decode(blocks.iloc[[_]])
         assert np.array_equal(d, docs[off : off + bl.n])
         assert np.array_equal(t, tfs[off : off + bl.n])
-        assert np.array_equal(l, dls[off : off + bl.n])
         assert np.array_equal(c, codes[off : off + bl.n]) and bl.min_tier == c.min()
         assert bl.first_doc == d[0] and bl.last_doc == d[-1]
-        assert bl["nbytes"] == len(bl.doc_gaps) + len(bl.tfs) + len(bl.dls)
-        # soundness: block_max >= every member's tf_norm
-        norms = codec.tf_norm(t, l, avgdl, K1, B)
+        assert bl["nbytes"] == len(bl.doc_gaps) + len(bl.tfs)
+        # soundness: block_max >= every member's tf_norm (lengths are
+        # the encoder's input — blocks store none)
+        norms = codec.tf_norm(t, lens[off : off + bl.n], avgdl, K1, B)
         assert bl.block_max >= norms.max() - 1e-12
         off += bl.n
     assert off == n
@@ -144,13 +146,27 @@ def test_block_concatenation_is_merge():
     assert np.array_equal(_decode(both)[0], np.concatenate([lo, hi]))
 
 
-def _compactor_input(rng):
+def _compactor_input(rng, tmp_path):
     """Block rows of 4 terms as a merge hands them to the compactor:
     per-source runs (one per origin stride range, tiny ragged blocks)
     sorted by (tid, first_doc); term 3's source is ONE run over ranges
     0 and 2, so its blocks span the stride gap (a legacy compaction).
-    Returns (rows, {tid: (docs, tfs, dls, tier codes, flat positions)})."""
+    Every doc of ranges 0-2 has one length, written as the norms
+    partitions of src segments 0 (range 0) and 1 (ranges 1, 2).
+    Returns (rows, {tid: (docs, tfs, tier codes, flat positions)},
+    doc_len lookup, norms path)."""
     S = codec.SEG_STRIDE
+    lens = rng.integers(5, 50, size=(3, 400))
+
+    def doc_len(docs):
+        return lens[docs // S, docs % S]
+
+    norms = tmp_path / "norms"
+    for seg, ranges in ((0, [0]), (1, [1, 2])):
+        ids = np.concatenate([r * S + np.arange(400) for r in ranges])
+        (norms / f"segment_id={seg}").mkdir(parents=True)
+        pq.write_table(pa.table({"doc_id": ids, "doc_len": doc_len(ids).astype(np.int32)}),
+                       norms / f"segment_id={seg}" / "p.parquet")
     postings, parts = {}, []
     for tid in range(4):
         ranges = [[0, 2]] if tid == 3 else [[r] for r in range(int(rng.integers(1, 4)))]
@@ -160,29 +176,32 @@ def _compactor_input(rng):
                 r * S + rng.choice(400, int(rng.integers(1, 40)), replace=False)
                 for r in src]))
             tfs = rng.integers(1, 4, len(docs))
-            dls = rng.integers(5, 50, len(docs))
             codes = rng.integers(0, T + 1, len(docs))
             flat = np.concatenate([np.sort(rng.choice(60, t, replace=False)) for t in tfs])
             off = np.concatenate(([0], np.cumsum(tfs)))
             bs = int(rng.choice([2, 3, 5]))
-            parts.append(codec.encode_rows([0], [tid], [9], docs, tfs, dls, codes, 20.0, K1, B,
-                                           bs, (flat, off)))
-            tparts.append((docs, tfs, dls, codes, flat))
+            parts.append(codec.encode_rows([0], [tid], [9], docs, tfs, doc_len(docs), codes,
+                                           20.0, K1, B, bs, (flat, off)))
+            tparts.append((docs, tfs, codes, flat))
         postings[tid] = tuple(np.concatenate(x) for x in zip(*tparts))
     rows = pa.Table.from_batches(parts).sort_by([("tid", "ascending"),
                                                  ("first_doc", "ascending")])
-    return rows, postings
+    return rows, postings, doc_len, str(norms)
 
 
 def test_compact_stream_fn_regroups_and_purges(tmp_path):
     """The merge compactor fed RecordBatches of 1-3 rows (groups
     straddle batches) re-encodes exactly the input postings minus the
     dead docs, positions and tier codes included (min_tier re-derived
-    per block); only each group's last block is short; split_ranges=True
-    keeps every block in one stride range."""
+    per block), block maxima from the src segments' norms partitions;
+    only each group's last block is short; split_ranges=True keeps
+    every block in one stride range. A src norms partition gone
+    raises MissingDocLen instead of re-encoding with made-up lengths."""
+    from mantic_sh_spark.functions.liveness import MissingDocLen
+
     S = codec.SEG_STRIDE
     rng = np.random.default_rng(5)
-    rows, postings = _compactor_input(rng)
+    rows, postings, doc_len, norms = _compactor_input(rng, tmp_path)
     all_docs = np.unique(np.concatenate([p[0] for p in postings.values()]))
     dead_ids = rng.choice(all_docs, len(all_docs) // 5, replace=False)
     tomb = tmp_path / "tombstones"
@@ -200,18 +219,17 @@ def test_compact_stream_fn_regroups_and_purges(tmp_path):
                         batches.extend(rows.slice(i, int(c)).to_batches())
                     i += int(c)
                 run = codec.compact_stream_fn(
-                    avgdl, K1, B, block_size=bs, with_positions=True, split_ranges=split,
-                    dead_src=(str(tomb), [0, 1]) if purge else None)
+                    avgdl, K1, B, (norms, [0, 1]), block_size=bs, with_positions=True,
+                    split_ranges=split, dead_src=(str(tomb), [0, 1]) if purge else None)
                 out = pa.Table.from_batches(list(run(iter(batches)))).to_pandas()
-                docs, tfs, dls, codes, flat = _decode(out, positions=True)
+                docs, tfs, codes, flat = _decode(out, positions=True)
                 tid_p = np.repeat(out["tid"].to_numpy(), out["n"].to_numpy())
                 off = np.concatenate(([0], np.cumsum(tfs)))
-                for tid, (d, t, l, c, f) in postings.items():
+                for tid, (d, t, c, f) in postings.items():
                     keep = ~np.isin(d, dead_ids) if purge else np.ones(len(d), dtype=bool)
                     sel = np.flatnonzero(tid_p == tid)
                     assert np.array_equal(docs[sel], d[keep]), (bs, split, purge, tid)
                     assert np.array_equal(tfs[sel], t[keep])
-                    assert np.array_equal(dls[sel], l[keep])
                     assert np.array_equal(codes[sel], c[keep])
                     got_pos = np.concatenate([flat[off[j]:off[j + 1]] for j in sel])
                     assert np.array_equal(got_pos, f[np.repeat(keep, t)])
@@ -222,7 +240,8 @@ def test_compact_stream_fn_regroups_and_purges(tmp_path):
                 assert (out["n"] <= bs).all() and (out["segment_id"] == 9).all()
                 # blocks are re-encoded at the merge-time avgdl
                 bstarts = np.concatenate(([0], np.cumsum(out["n"])[:-1]))
-                bmax = np.maximum.reduceat(codec.tf_norm(tfs, dls, avgdl, K1, B), bstarts)
+                bmax = np.maximum.reduceat(codec.tf_norm(tfs, doc_len(docs), avgdl, K1, B),
+                                           bstarts)
                 assert np.array_equal(out["block_max"].to_numpy(), bmax)
                 assert np.array_equal(out["min_tier"].to_numpy(),
                                       np.minimum.reduceat(codes, bstarts))
@@ -231,6 +250,10 @@ def test_compact_stream_fn_regroups_and_purges(tmp_path):
                 else:
                     spans_seen |= bool((first // S != last // S).any())
     assert spans_seen  # the unsplit runs really built cross-range blocks
+    run = codec.compact_stream_fn(avgdl, K1, B, (norms, [0]), block_size=2)
+    with pytest.raises(MissingDocLen, match="no doc_len") as err:
+        list(run(iter(rows.to_batches())))
+    assert err.value.doc_id // S in (1, 2)  # range 0's norms were loaded
 
 
 def test_tier_code_folds_into_tf():
@@ -240,16 +263,16 @@ def test_tier_code_folds_into_tf():
     the worst code still takes one byte where 42 takes two."""
     docs = np.arange(6, dtype=np.int64) * 3
     tfs = np.array([1, 41, 42, 7, 41, 42])
-    dls = np.full(6, 20)
+    lens = np.full(6, 20)
     codes = np.array([0, T, T, 1, 0, 0])
-    rb = codec.encode_rows([0, 3], [1, 2], [0, 0], docs, tfs, dls, codes, 20.0, K1, B)
-    d, t, l, c = _decode(rb)
+    rb = codec.encode_rows([0, 3], [1, 2], [0, 0], docs, tfs, lens, codes, 20.0, K1, B)
+    d, t, c = _decode(rb)
     assert np.array_equal(t, tfs) and np.array_equal(c, codes) and c.dtype == np.int8
     blocks = rb.to_pandas()
     assert blocks["min_tier"].tolist() == [0, 0]
-    norms = codec.tf_norm(tfs, dls, 20.0, K1, B)
+    norms = codec.tf_norm(tfs, lens, 20.0, K1, B)
     assert blocks["block_max"].tolist() == [norms[:3].max(), norms[3:].max()]
-    plain = _encode(docs, tfs, dls, 20.0).to_pandas()  # every code T
+    plain = _encode(docs, tfs, lens, 20.0).to_pandas()  # every code T
     assert [len(codec.varint_encode(np.array([tf * (T + 1) + T]))) for tf in (41, 42)] == [1, 2]
     assert len(blocks["tfs"][0]) == 1 + 1 + 2  # tf 1, 41 at code T, 42 at code T
     assert plain["min_tier"].tolist() == [T]
@@ -293,7 +316,7 @@ def test_build_tier_codes_match_tokens(spark, tmp_path, positional):
     blocks = ds.dataset(f"{idx}/postings", format="parquet",
                         partitioning="hive").to_table().to_pandas()
     assert blocks["segment_id"].nunique() == 3  # the upsert's segment too
-    d, _tf, _dl, c = _decode(blocks)
+    d, _tf, c = _decode(blocks)
     tid_p = np.repeat(blocks["tid"].to_numpy(), blocks["n"].to_numpy())
     want = [_expected_codes(toks[int(doc)], tid_term[int(t)]) for doc, t in zip(d, tid_p)]
     assert np.array_equal(c, want)

@@ -221,3 +221,43 @@ def test_dead_docs_bitmap_matches_isin():
     assert not empty and empty.nbytes == 0
     assert not empty.mask(probe).any() and int(probe[0]) not in empty
     assert DeadDocs.from_ids(ids).mask(np.empty(0, dtype=np.int64)).shape == (0,)
+
+
+def test_doc_lens_gather_matches_dict_lookup():
+    """DocLens (one dense length array per origin segment) gathers the
+    same lengths as a dict lookup: several origin segments streamed in
+    shuffled batches, probes in block order of a merged segment whose
+    postings interleave origins, each segment's array narrowed to the
+    dtype its largest length needs, and an id with no row (past an
+    array's end, inside it, or in an unknown segment) raising
+    MissingDocLen naming it."""
+    import numpy as np
+    import pytest
+
+    from mantic_sh_spark.functions.codec import SEG_STRIDE
+    from mantic_sh_spark.functions.liveness import DocLens, MissingDocLen
+
+    rng = np.random.default_rng(3)
+    tops = {0: 200, 3: 60_000, 7: 70_000}  # largest length per origin segment
+    ids = np.concatenate([s * SEG_STRIDE + rng.permutation(3000)[:2000] for s in tops])
+    lens = np.concatenate([rng.integers(1, tops[s], 2000) for s in tops])
+    lens[::2000] = list(tops.values())
+    ref = dict(zip(ids.tolist(), lens.tolist()))
+    o = rng.permutation(len(ids))
+    dl = DocLens.from_batches(zip(np.array_split(ids[o], 7), np.array_split(lens[o], 7)))
+    assert {s: a.dtype for s, a in dl._lens.items()} == {
+        0: np.uint8, 3: np.uint16, 7: np.uint32}
+    assert dl.nbytes == sum(int(ids[ids // SEG_STRIDE == s].max() % SEG_STRIDE + 1)
+                            * {0: 1, 3: 2, 7: 4}[s] for s in tops)
+    # a merged segment's postings of one term: ascending doc ids, so the
+    # origins interleave by range; plus one origin alone (one gather)
+    merged = np.sort(rng.choice(ids, 900, replace=False))
+    for probe in (merged, merged[::-1], merged[merged // SEG_STRIDE == 3], ids):
+        assert dl.get(probe).tolist() == [ref[d] for d in probe.tolist()]
+    assert dl.get(np.empty(0, dtype=np.int64)).shape == (0,)
+    absent = sorted(set(range(3000)) - set((ids[ids < SEG_STRIDE]).tolist()))
+    for bad in (absent[0], 5 * SEG_STRIDE, 7 * SEG_STRIDE + 10**6):
+        with pytest.raises(MissingDocLen) as err:
+            dl.get(np.append(merged, bad))
+        assert err.value.doc_id == bad and f"doc {bad} " in str(err.value)
+    assert DocLens.from_batches([]).nbytes == 0

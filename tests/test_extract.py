@@ -82,7 +82,7 @@ def test_build_with_extract_matches_text_build(spark, tmp_path):
         "url", "warc_ts", "html", "text", "lang"
     ), b, n_segments=3, extract=True)
 
-    cols = ["tid", "segment_id", "first_doc", "last_doc", "n", "doc_gaps", "tfs", "dls"]
+    cols = ["tid", "segment_id", "first_doc", "last_doc", "n", "doc_gaps", "tfs"]
     pa_ = spark.read.parquet(f"{a}/postings").select(cols).orderBy("tid", "segment_id", "first_doc")
     pb_ = spark.read.parquet(f"{b}/postings").select(cols).orderBy("tid", "segment_id", "first_doc")
     assert pa_.collect() == pb_.collect()

@@ -112,7 +112,7 @@ def test_resume_produces_identical_index(spark, small_corpus, tmp_path):
     assert len(done_segments(spark, IndexPaths(part_dir))) == 4
 
     # resumed index == clean one-shot index, content-wise
-    cols = ["segment_id", "tid", "first_doc", "last_doc", "n", "doc_gaps", "tfs", "dls"]
+    cols = ["segment_id", "tid", "first_doc", "last_doc", "n", "doc_gaps", "tfs"]
     a = spark.read.parquet(f"{full_dir}/postings").select(cols)
     b = spark.read.parquet(f"{part_dir}/postings").select(cols)
     assert a.count() == b.count()
@@ -139,7 +139,7 @@ def test_pipelined_batches_match_single_batch(spark, small_corpus, tmp_path):
 
     for tbl, cols in (
         ("postings", ["segment_id", "tid", "first_doc", "last_doc", "n",
-                      "doc_gaps", "tfs", "dls", "nbytes"]),
+                      "doc_gaps", "tfs", "nbytes"]),
         ("terms", ["segment_id", "tid", "df", "max_tf_norm", "bytes"]),
     ):
         a = spark.read.parquet(f"{one}/{tbl}").select(cols)
@@ -214,7 +214,7 @@ def test_crash_between_postings_and_manifest_resumes_clean(spark, small_corpus, 
 
     build_index(spark, pages, crash, n_segments=4, batch_segments=1)
 
-    cols = ["segment_id", "tid", "first_doc", "last_doc", "n", "doc_gaps", "tfs", "dls"]
+    cols = ["segment_id", "tid", "first_doc", "last_doc", "n", "doc_gaps", "tfs"]
     a = spark.read.parquet(f"{clean}/postings").select(cols)
     b = spark.read.parquet(f"{crash}/postings").select(cols)
     assert a.count() == b.count()
@@ -477,10 +477,12 @@ def _kernel_case(seed):
     and 3 make many tiny intervals; every fourth case has all-equal
     per-term scores, so interval bounds tie θ and only the doc-id
     tie-break decides. Postings carry random tier codes, skewed to the
-    best tiers so multi-term docs reach them."""
+    best tiers so multi-term docs reach them. Each doc has one length,
+    the DocLens the kernel gathers from."""
     import pyarrow as pa
 
     from mantic_sh_spark.functions.codec import SEG_STRIDE, encode_rows
+    from mantic_sh_spark.functions.liveness import DocLens
     from mantic_sh_spark.operators.wand import split_blocks
 
     rng = np.random.default_rng(seed)
@@ -511,7 +513,8 @@ def _kernel_case(seed):
         from mantic_sh_spark.functions.liveness import DeadDocs
 
         dead = DeadDocs.from_ids(rng.choice(ids, max(1, n_docs // 10), replace=False))
-    return by_term, postings, idf_map, avgdl, avgdl / build_avgdl, dead
+    return by_term, postings, idf_map, avgdl, avgdl / build_avgdl, dead, DocLens.from_batches(
+        [(ids, dl)])
 
 
 def _brute_scores(postings, idf_map, avgdl, dead):
@@ -539,14 +542,14 @@ def test_segment_topk_matches_brute_force():
             self[key] = value
 
     for seed in range(60):
-        by_term, postings, idf_map, avgdl, bf, dead = _kernel_case(seed)
+        by_term, postings, idf_map, avgdl, bf, dead, lens = _kernel_case(seed)
         brute = _brute_scores(postings, idf_map, avgdl, dead)
         ranked = sorted(brute.items(), key=lambda x: (-x[1], x[0]))
         terms = sorted(by_term)
         cache = Cache()
         for k in (1, 7, 50, len(brute) + 5):
             stats = {}
-            got = segment_topk(by_term, terms, idf_map, avgdl, k, 1.2, 0.75,
+            got = segment_topk(by_term, terms, idf_map, avgdl, k, 1.2, 0.75, lens,
                                bound_factor=bf, dead=dead, stats=stats, decode_cache=cache)
             assert got == ranked[:k], (seed, k)
             assert "truncated" not in stats
@@ -554,18 +557,18 @@ def test_segment_topk_matches_brute_force():
         # every term was fully decoded by the k > matches run → cached
         assert set(cache) == set(terms), seed
         stats = {}
-        hot = segment_topk(by_term, terms, idf_map, avgdl, 7, 1.2, 0.75, bound_factor=bf,
-                           dead=dead, stats=stats, decode_cache=cache)
+        hot = segment_topk(by_term, terms, idf_map, avgdl, 7, 1.2, 0.75, lens,
+                           bound_factor=bf, dead=dead, stats=stats, decode_cache=cache)
         assert hot == ranked[:7] and stats["blocks_decoded"] == 0, seed
         # the same blocks in another row order must not reuse the entries
         # (one term left uncached, so cached blocks are sliced per block)
         flipped = {t: tb.take(slice(None, None, -1)) for t, tb in by_term.items()}
         part = Cache({t: v for t, v in cache.items() if t != terms[0]})
-        assert segment_topk(flipped, terms, idf_map, avgdl, 7, 1.2, 0.75, bound_factor=bf,
-                            dead=dead, decode_cache=part) == ranked[:7], seed
+        assert segment_topk(flipped, terms, idf_map, avgdl, 7, 1.2, 0.75, lens,
+                            bound_factor=bf, dead=dead, decode_cache=part) == ranked[:7], seed
 
         stats = {}
-        partial = segment_topk(by_term, terms, idf_map, avgdl, 7, 1.2, 0.75,
+        partial = segment_topk(by_term, terms, idf_map, avgdl, 7, 1.2, 0.75, lens,
                                bound_factor=bf, dead=dead, stats=stats, deadline=0.0)
         assert len(partial) <= 7 and partial == sorted(partial, key=lambda x: (-x[1], x[0]))
         assert all(brute[d] == s for d, s in partial), seed
@@ -589,7 +592,7 @@ def test_segment_topk_tier_ladder_matches_brute_force():
 
     T, seen = 2, set()
     for seed in range(60):
-        by_term, postings, idf_map, avgdl, bf, dead = _kernel_case(seed)
+        by_term, postings, idf_map, avgdl, bf, dead, lens = _kernel_case(seed)
         brute = _brute_scores(postings, idf_map, avgdl, dead)
         codes: dict[int, list[int]] = {}
         for d, _tf, _dl, code in postings.values():
@@ -602,16 +605,16 @@ def test_segment_topk_tier_ladder_matches_brute_force():
             ranked = sorted(((d, tier[d], s) for d, s in brute.items()),
                             key=lambda x: (x[1], -x[2], x[0]))
             cache = Cache()
-            segment_topk(by_term, terms, idf_map, avgdl, len(brute) + 5, 1.2, 0.75,
+            segment_topk(by_term, terms, idf_map, avgdl, len(brute) + 5, 1.2, 0.75, lens,
                          bound_factor=bf, dead=dead, decode_cache=cache)
             for k in (1, 7, 50, len(brute) + 5):
                 for dc in (None, cache):
-                    got = segment_topk(by_term, qterms, idf_map, avgdl, k, 1.2, 0.75,
+                    got = segment_topk(by_term, qterms, idf_map, avgdl, k, 1.2, 0.75, lens,
                                        bound_factor=bf, dead=dead, decode_cache=dc, tiers=T)
                     assert got == ranked[:k], (seed, absent, k, dc is None)
             seen |= {t for _, t, _ in ranked}
             stats = {}
-            partial = segment_topk(by_term, qterms, idf_map, avgdl, 7, 1.2, 0.75,
+            partial = segment_topk(by_term, qterms, idf_map, avgdl, 7, 1.2, 0.75, lens,
                                    bound_factor=bf, dead=dead, stats=stats, deadline=0.0,
                                    tiers=T)
             assert len(partial) <= 7
@@ -630,6 +633,7 @@ def test_segment_topk_visits_intervals_that_tie_theta():
     with 90, 95, 99, 91, 92; [0, 90) is bounded by a alone — exactly θ —
     and holds docs 0 and 1, which outrank 91 and 92."""
     from mantic_sh_spark.functions.codec import encode_rows
+    from mantic_sh_spark.functions.liveness import DocLens
     from mantic_sh_spark.operators.wand import segment_topk, split_blocks
 
     def blocks(docs):
@@ -639,5 +643,6 @@ def test_segment_topk_visits_intervals_that_tie_theta():
         return split_blocks(rows, {0: "t"})["t"]
 
     by_term = {"a": blocks(range(100)), "b": blocks([90, 95, 99])}
-    got = segment_topk(by_term, ["a", "b"], {"a": 1.0, "b": 1.0}, 10.0, 5, 1.2, 0.75)
+    lens = DocLens.from_batches([(np.arange(100), np.full(100, 10))])
+    got = segment_topk(by_term, ["a", "b"], {"a": 1.0, "b": 1.0}, 10.0, 5, 1.2, 0.75, lens)
     assert [d for d, _ in got] == [90, 95, 99, 0, 1]

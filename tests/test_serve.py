@@ -116,6 +116,63 @@ def test_reader_refuses_other_format_generation(spark, small_corpus, tmp_path):
         reader.refresh()
 
 
+def test_v7_index_refused_by_reader_and_wand(spark, small_corpus, tmp_path):
+    """A v7-marked index (blocks that carried per-posting doc lengths)
+    is refused by both query planes with the format_mismatch error —
+    its blocks would fail to decode, or score without the norms."""
+    import shutil
+
+    import pandas as pd
+    import pytest
+
+    from mantic_sh_spark.operators.index_build import INDEX_FORMAT
+    from mantic_sh_spark.operators.wand import wand_topk
+    from mantic_sh_spark.sources.catalog import IndexPaths, write_small_parquet
+
+    assert INDEX_FORMAT == 8
+    idx = str(tmp_path / "idx_v7")
+    shutil.copytree(small_corpus["index_dir"], idx)
+    write_small_parquet(spark, IndexPaths(idx).format_marker,
+                        pd.DataFrame({"version": pd.array([7], dtype="int32")}), "version int")
+    with pytest.raises(RuntimeError, match="format v7, this code writes v8"):
+        IndexReader(idx)
+    with pytest.raises(RuntimeError, match="format v7, this code writes v8"):
+        wand_topk(spark, idx, [(0, "w1x")], k=3)
+
+
+def test_missing_norms_partition_fails_loudly(spark, small_corpus, tmp_path):
+    """Blocks store no doc lengths, so a serving segment whose norms
+    partition is gone cannot be scored: IndexReader.topk and wand_topk
+    raise MissingDocLen naming a doc of that segment instead of
+    returning scores; the per-doc scorer too. Positional-free surfaces
+    that need no lengths (df) still answer."""
+    import shutil
+
+    import pytest
+
+    from mantic_sh_spark.functions.codec import SEG_STRIDE
+    from mantic_sh_spark.functions.liveness import MissingDocLen
+    from mantic_sh_spark.operators.wand import wand_topk
+
+    idx = str(tmp_path / "idx_no_norms")
+    shutil.copytree(small_corpus["index_dir"], idx)
+    intact = IndexReader(idx)
+    assert intact.counters()["doc_lens_bytes"] == 0  # built on the first decode
+    hits = intact.topk("w1x", k=5)
+    assert hits and 0 < intact.counters()["doc_lens_bytes"] <= 2 * small_corpus["cfg"].n_docs
+    seg = hits[0][0] // SEG_STRIDE
+    shutil.rmtree(f"{idx}/norms/segment_id={seg}")
+    reader = IndexReader(idx)
+    assert reader.df(["w1x"])["w1x"] > 0
+    with pytest.raises(MissingDocLen) as err:
+        reader.topk("w1x", k=5)
+    assert err.value.doc_id // SEG_STRIDE == seg
+    with pytest.raises(MissingDocLen):
+        reader._scores_for_docs(["w1x"], [hits[0][0]])
+    with pytest.raises(Exception, match="MissingDocLen"):
+        wand_topk(spark, idx, [(0, "w1x")], k=5).collect()
+
+
 def test_query_log_sink_and_session_boost(spark, small_corpus, tmp_path):
     """S9/R13: the serve loop persists query history as a parquet table
     a Spark session can scan, and session_doc_boost aggregates it into
@@ -370,6 +427,8 @@ def test_mcp_round_trip(spark, small_corpus):
     # stats carries corpus + read-amp counters
     st = json.loads(by_id[4]["result"]["content"][0]["text"])
     assert st["n_docs"] == 400 and "last" in st and "total" in st
+    # ... and the memory of the epoch's doc lengths (≤ 4 B/doc)
+    assert 0 < st["doc_lens_bytes"] <= 4 * 400
     # protocol errors answered, loop alive
     assert by_id[5]["error"]["code"] == -32601
     assert any("error" in l and l.get("id") is None for l in lines)  # parse error
@@ -434,6 +493,7 @@ def test_read_amplification_counters(spark, small_corpus):
     assert lines[0]["stats"]["segments_touched"] >= 1  # inline per-request
     st = [l for l in lines if l.get("ok") and "total" in l][0]
     assert st["total"]["queries"] == 1 and st["last"]["segments_touched"] >= 1
+    assert st["doc_lens_bytes"] > 0  # the DocLens the query gathered from
 
 
 def test_serve_loop_concurrent_ids(spark, small_corpus):
@@ -1015,7 +1075,7 @@ def test_split_blocks_matches_groupby_reference():
     tid2term = {101: "a", 7: "b", 55: "c", 4242: "absent"}
     factors = {0: 1.0, 1: 1.5, 2: 2.25}
     cols = [("first", "first_doc"), ("last", "last_doc"), ("mint", "min_tier"), ("n", "n"),
-            ("gaps", "doc_gaps"), ("tfs", "tfs"), ("dls", "dls"), ("seg", "segment_id")]
+            ("gaps", "doc_gaps"), ("tfs", "tfs"), ("seg", "segment_id")]
     for with_positions in (True, False):
         data = tbl if with_positions else tbl.drop_columns(["positions"])
         got = split_blocks(data, tid2term, factors)
@@ -1041,7 +1101,7 @@ def test_split_blocks_matches_groupby_reference():
     frame = split_blocks(tbl.to_pandas(), tid2term, factors)
     arrow = split_blocks(tbl, tid2term, factors)
     for t in tid2term.values():
-        for f in ("first", "last", "bmax", "mint", "n", "gaps", "tfs", "dls", "seg", "positions"):
+        for f in ("first", "last", "bmax", "mint", "n", "gaps", "tfs", "seg", "positions"):
             assert np.array_equal(getattr(frame[t], f), getattr(arrow[t], f)), (t, f)
     empty = split_blocks(tbl.slice(0, 0), tid2term, factors)
     assert all(len(tb) == 0 for tb in empty.values()) and set(empty) == set(tid2term.values())
@@ -1231,6 +1291,11 @@ def test_positional_run_across_segments_and_legacy_merge(spark, defs_corpus, tmp
         | {"zqrare"})
     assert st["blocks_considered"] > st["blocks_decoded"]
     assert in_seg("function") >= 8
+    # warm: the keyword blocks the symbol overlaps were cached as partial
+    # decodes, so a repeat call decodes nothing
+    first = cold.definitions("zqrare")
+    assert cold.definitions("zqrare") == first
+    assert cold.last_stats["blocks_decoded"] == 0, cold.last_stats
     cold = IndexReader(idx)
     assert cold.phrase_topk("zqrare function")
     assert cold.last_stats["blocks_decoded"] < in_seg("function") + in_seg("zqrare")

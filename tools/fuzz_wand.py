@@ -21,6 +21,16 @@ every segment and checks it once more. Each of those states (and the
 positional twin) also checks the reader's df — the n of its served
 blocks summed — against the Spark plane's terms-directory df.
 
+Every layout — fresh, merged, legacy, deleted, upserted, purged, the
+positional twin and a fold-gated one — also checks the reader's
+DocLens (blocks store no doc lengths; scorers gather them from the
+norms sidecar) against the docs table's doc_len for every served
+posting's doc (`doc_lens=OK`). The fold-gated layout is the purging
+merge of the upsert cases killed right after its 'committed' barrier:
+the reader serves its dst and gates the sources out, and must equal
+the Spark plane on that same snapshot before GC rolls the fold
+forward.
+
 Merging cases first tombstone a few head docs and THEN run the
 non-purge merge, so their tombstones re-home under the merge's dst
 partition: every check of the case (WAND, serving topk, tiered, and —
@@ -51,10 +61,11 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 import mantic_sh_spark.functions.codec as codec_mod
+import mantic_sh_spark.operators.merge as merge_mod
 from mantic_sh_spark.session import get_spark
 from mantic_sh_spark.functions.tokenize import tokens_col
 from mantic_sh_spark.operators.index_build import build_index
-from mantic_sh_spark.operators.merge import merge_segments
+from mantic_sh_spark.operators.merge import gc_aborted_merges, merge_segments
 from mantic_sh_spark.functions.tokenize import tokenize, tokenize_query
 from mantic_sh_spark.operators.delete import delete_docs
 from mantic_sh_spark.operators.phrase import phrase_topk
@@ -157,6 +168,53 @@ def _df_identity(reader, idx, queries):
     return reader.df(terms) == {t: m[0] for t, m in meta.items()}
 
 
+def _doc_lens_ok(reader, idx):
+    """The reader's DocLens holds, for every doc a served posting
+    names, the docs table's doc_len (gated segments skipped)."""
+    import pyarrow.dataset as ds
+
+    post = ds.dataset(f"{idx}/postings", format="parquet", partitioning="hive")
+    flt = ~ds.field("segment_id").isin(reader.gated_segments) if reader.gated_segments else None
+    t = post.to_table(filter=flt, columns=["n", "first_doc", "doc_gaps", "tfs"])
+    served = np.unique(codec_mod.decode_blocks(
+        t["n"].to_numpy(), t["first_doc"].to_numpy(),
+        t["doc_gaps"].combine_chunks(), t["tfs"].combine_chunks())[0])
+    d = ds.dataset(f"{idx}/docs", format="parquet", partitioning="hive").to_table(
+        columns=["doc_id", "doc_len"]).to_pydict()
+    truth = dict(zip(d["doc_id"], d["doc_len"]))
+    return reader._doc_lens().get(served).tolist() == [truth[x] for x in served.tolist()]
+
+
+def _fold_gated_ok(reader, idx, queries, live):
+    """Purge-merge every live segment, killed right after its
+    'committed' barrier: the reader gates the sources out and serves
+    the dst — its doc lengths and top-k must match the Spark plane on
+    that snapshot — then GC rolls the fold forward."""
+    orig = merge_mod._finish_merge
+
+    def killed(*a, **kw):
+        raise InterruptedError("killed after the committed barrier")
+
+    merge_mod._finish_merge = killed
+    try:
+        merge_segments(spark, idx, live, purge=True)
+    except InterruptedError:
+        pass
+    finally:
+        merge_mod._finish_merge = orig
+    refresh_meta(idx)
+    reader.refresh()
+    ok = sorted(reader.gated_segments) == sorted(live) and _doc_lens_ok(reader, idx)
+    rw = wand_topk(spark, idx, queries, k=8).orderBy("query_id", "rank").collect()
+    want = {}
+    for r in rw:
+        want.setdefault(r.query_id, []).append((r.doc_id, round(r.score, 4)))
+    ok &= all([(d, round(s, 4)) for d, s in reader.topk(q, k=8)] == want.get(qid, [])
+              for qid, q in queries)
+    gc_aborted_merges(spark, IndexPaths(idx))
+    return ok
+
+
 def _overlapping(reader, terms):
     """Does any term's block-interval list overlap itself?"""
     for tb in reader._blocks(sorted(set(terms))).values():
@@ -209,6 +267,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     tq = queries + [(900, st), (901, f"{st} w1x"), (902, "qqabsentterm w1x")]
     tier_ok = _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
     df_ok = _df_identity(reader, idx, tq)
+    lens_ok = _doc_lens_ok(reader, idx)
 
     # tombstone the head of several rankings; WAND + serving + tiered
     # must all equal the deleted-filtered oracles
@@ -232,6 +291,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         ) and _budget0_exact(reader, queries, 8)
         del_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dset), 8)
         df_ok &= _df_identity(reader, idx, tq)
+        lens_ok &= _doc_lens_ok(reader, idx)
 
     churn_ok = True
     if seed % 3 == 0:
@@ -248,12 +308,15 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         reader.refresh()
         churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dead), 8)
         df_ok &= _df_identity(reader, idx, tq)
+        lens_ok &= _doc_lens_ok(reader, idx)
         live = sorted({int(r.segment_id) for r in spark.read.parquet(f"{idx}/postings")
                        .select("segment_id").distinct().collect()})
-        merge_segments(spark, idx, live, purge=True)
+        lens_ok &= _fold_gated_ok(reader, idx, queries, live)
+        refresh_meta(idx)
         reader.refresh()
         churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8), 8)
         df_ok &= _df_identity(reader, idx, tq)
+        lens_ok &= _doc_lens_ok(reader, idx)
 
     phrase_ok = True
     pos_overlap = None
@@ -302,6 +365,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                    (3, f"w1x {st} w4x", seed % 3), (4, f"{st} w5x", 2), (5, "w7x", 0)]
         preader = IndexReader(posidx)
         df_ok &= _df_identity(preader, posidx, tq)
+        lens_ok &= _doc_lens_ok(preader, posidx)
         for qid, ph, slop in phrases:
             terms = tokenize(ph)
             want = {d: brute(toks, terms, slop) for d, toks in doc_toks.items()}
@@ -327,7 +391,8 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         pos_overlap = any(_overlapping(preader, tokenize(t))
                           for t in [ph for _, ph, _ in phrases] + refs)
         shutil.rmtree(posidx, ignore_errors=True)
-    fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok and churn_ok and df_ok)
+    fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok and churn_ok and df_ok
+                  and lens_ok)
     print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
           f"pre_deleted={len(pre)} overlapping_blocks={overlap}"
           f"{'' if pos_overlap is None else f' pos_overlapping_blocks={pos_overlap}'}: "
@@ -336,7 +401,8 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
           f" tier={'OK' if tier_ok else 'MISMATCH'}"
           f" del={'OK' if del_ok else 'MISMATCH'}"
           f" churn={'OK' if churn_ok else 'MISMATCH'}"
-          f" df={'OK' if df_ok else 'MISMATCH'}", flush=True)
+          f" df={'OK' if df_ok else 'MISMATCH'}"
+          f" doc_lens={'OK' if lens_ok else 'MISMATCH'}", flush=True)
     shutil.rmtree(idx, ignore_errors=True)
 print("FAILS:", fails)
 spark.stop()
