@@ -170,13 +170,10 @@ class DocLens:
         used: dict[int, int] = {}
         for ids, dl in batches:
             ids = np.asarray(ids, dtype=np.int64)
-            if not len(ids):
-                continue
             dl = np.asarray(dl, dtype=np.uint32)
             segs, rows = np.divmod(ids, SEG_STRIDE)
-            lo, hi = int(segs.min()), int(segs.max())
-            for seg in [lo] if lo == hi else np.unique(segs).tolist():
-                sel = slice(None) if lo == hi else segs == seg
+            for seg in np.unique(segs).tolist():
+                sel = segs == seg
                 r = rows[sel]
                 need = int(r.max()) + 1
                 arr = lens.get(seg, np.zeros(0, dtype=np.uint32))
@@ -196,21 +193,12 @@ class DocLens:
         """doc_len[len(ids)] (an unsigned int array); raises
         MissingDocLen when an id has no row."""
         ids = np.asarray(ids, dtype=np.int64)
-        if not len(ids):
-            return np.zeros(0, dtype=np.uint32)
         segs, rows = np.divmod(ids, SEG_STRIDE)
-        lo, hi = int(segs.min()), int(segs.max())
-        arr = self._lens.get(lo)
-        if lo == hi and arr is not None and int(rows.max()) < len(arr):
-            out = arr[rows]
-        else:
-            out = np.zeros(len(ids), dtype=np.uint32)
-            for seg, arr in self._lens.items():
-                if not lo <= seg <= hi:
-                    continue
-                sel = slice(None) if lo == hi else np.flatnonzero(segs == seg)
-                r = rows[sel]
-                out[sel] = np.where(r < len(arr), arr[np.minimum(r, len(arr) - 1)], 0)
+        out = np.zeros(len(ids), dtype=np.uint32)
+        for seg, arr in self._lens.items():
+            sel = np.flatnonzero(segs == seg)
+            r = rows[sel]
+            out[sel] = np.where(r < len(arr), arr[np.minimum(r, len(arr) - 1)], 0)
         if not out.all():
             raise MissingDocLen(int(ids[np.argmin(out)]))
         return out

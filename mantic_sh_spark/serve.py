@@ -48,7 +48,7 @@ import numpy as np
 
 from .functions.bm25 import B, K1, idf as idf_fn
 from .functions.codec import DEFAULT_TIER_SPECS
-from .functions.liveness import DeadDocs, DocLens
+from .functions.liveness import DeadDocs, DocLens, MissingDocLen
 from .functions.tokenize import tokenize_query
 from .operators.wand import split_blocks
 from .sources.catalog import IndexPaths
@@ -282,10 +282,12 @@ class IndexReader:
             the new epoch (up to twice): otherwise it could mix
             pre-refresh postings with post-refresh liveness (a
             purge-merge clears tombstones whose postings the attempt
-            already fetched → a purged doc resurfaces). The re-run
-            linearizes the answer to the post-refresh state for direct
-            library/MCP embedders; serve_loop also drains before
-            refreshing.
+            already fetched → a purged doc resurfaces) or lengths (the
+            purged doc has no row in the new epoch's DocLens, so the
+            gather raises MissingDocLen — a straddle, not a damaged
+            index, once the epoch moved). The re-run linearizes the
+            answer to the post-refresh state for direct library/MCP
+            embedders; serve_loop also drains before refreshing.
           * an I/O error on the first attempt — dataset handles that an
             EXTERNAL mutation invalidated (a merge retired segment files
             a handle still lists) — refreshes and retries once; a second
@@ -302,6 +304,10 @@ class IndexReader:
                      "blocks_decoded": 0, "terms_cold": 0}
             try:
                 out = attempt(stats)
+            except MissingDocLen:
+                if n == 2 or self._epoch == epoch0:
+                    raise
+                continue
             except OSError as first:
                 if n:
                     raise
@@ -648,21 +654,25 @@ class IndexReader:
         [first_doc, last_doc] holds a candidate decode in one call, and
         a term whose every block holds one is installed for later
         queries. Docs matching no term score 0.0. Rounding matches
-        rank_topk (4 decimals), like every ranked answer."""
+        rank_topk (4 decimals), like every ranked answer. Retries like
+        every query surface (_run), recording no stats."""
         from .functions.codec import decode_blocks, tf_norm
         from .operators.wand import _ranges, cached_postings
 
         cand, inv = np.unique(np.asarray(doc_ids, dtype=np.int64), return_inverse=True)
-        acc = np.zeros(len(cand), dtype=np.float64)
 
-        def add(idf, d, tfn):
-            # a doc holds at most one posting per term, so no candidate
-            # is hit twice by one call
-            j = np.minimum(np.searchsorted(cand, d), len(cand) - 1)
-            ok = cand[j] == d
-            acc[j[ok]] += idf * tfn[ok]
+        def attempt(_stats):
+            acc = np.zeros(len(cand), dtype=np.float64)
 
-        if len(cand) and terms:
+            def add(idf, d, tfn):
+                # a doc holds at most one posting per term, so no
+                # candidate is hit twice by one call
+                j = np.minimum(np.searchsorted(cand, d), len(cand) - 1)
+                ok = cand[j] == d
+                acc[j[ok]] += idf * tfn[ok]
+
+            if not (len(cand) and terms):
+                return acc
             dgen = self._decoded.generation  # pin BEFORE the block fetch
             cache = _NsDecodeCache(self._decoded, ("k",), dgen)
             for t, tb in self._blocks(sorted(set(terms))).items():
@@ -682,7 +692,9 @@ class IndexReader:
                     add(idf, d, tfn)
                     if len(hold) == len(tb.n):  # the whole term decoded: install
                         cache.put(t, (d, tfn, code, tb.first, tb.n))
-        return np.round(acc, 4)[inv]
+            return acc
+
+        return np.round(self._run(attempt, record=False), 4)[inv]
 
 
     def references(self, symbol: str, k: int = 10,

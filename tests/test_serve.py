@@ -1351,3 +1351,40 @@ def test_references_rerun_when_refresh_straddles(spark, defs_corpus, tmp_path):
     got = reader.references("zqrare", k=100)
     assert raced and victim not in {r["doc_id"] for r in got}
     assert got == IndexReader(idx).references("zqrare", k=100)
+
+
+def test_topk_rerun_when_refresh_straddles_lengths(spark, defs_corpus, tmp_path):
+    """topk() re-runs when a refresh() lands between its block fetch
+    and its length gather: the warm pre-purge blocks hold a doc that an
+    external purge-merge dropped, so the new epoch's DocLens (built from
+    the dst norms) has no row for it. The MissingDocLen that raises is
+    a straddle, not a damaged index — the query must answer, as the
+    post-purge state."""
+    import shutil
+
+    from mantic_sh_spark.operators.delete import delete_docs
+    from mantic_sh_spark.operators.merge import merge_segments
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(defs_corpus, idx)
+    reader = IndexReader(idx)
+    victim = reader.topk("zqrare", k=1)[0][0]
+    delete_docs(spark, idx, doc_ids=[victim])
+    reader.refresh()
+    warm = reader.topk("zqrare", k=100)
+    assert warm and victim not in {d for d, _ in warm}
+    merge_segments(spark, idx, [0, 1, 2, 3], dst_segment=9, purge=True)
+
+    orig = reader._doc_lens
+    raced = []
+
+    def racing():
+        if not raced:
+            raced.append(True)
+            reader.refresh()
+        return orig()
+
+    reader._doc_lens = racing
+    got = reader.topk("zqrare", k=100)
+    assert raced and victim not in {d for d, _ in got}
+    assert got == IndexReader(idx).topk("zqrare", k=100)

@@ -15,7 +15,10 @@ leaves an uncommitted dir, which the manifest gating already makes
 invisible and GC collects — the same state as crash-before-the-write
 plus garbage bytes).
 
-After the injected crash the scenario's HEAL step runs unpatched (the
+Right after the injected crash, the probes are queried on the index
+as the crash left it (crashed_read): every one must answer, apart from
+the two states of a fresh build that crashed before its docs stage
+committed. After that the scenario's HEAL step runs unpatched (the
 documented recovery: re-send the batch through upsert, re-run the
 build for resume, re-run the merge), and the final index must be
 indistinguishable from a control run that never crashed:
@@ -53,6 +56,7 @@ from mantic_sh_spark.operators import index_build, merge as merge_mod
 from mantic_sh_spark.operators.delete import delete_docs
 from mantic_sh_spark.operators.index_build import build_index, gc_aborted_extends
 from mantic_sh_spark.operators.merge import gc_aborted_merges, merge_segments
+from mantic_sh_spark.functions.liveness import MissingDocLen
 from mantic_sh_spark.serve import IndexReader
 from mantic_sh_spark.session import get_spark
 from mantic_sh_spark.sources import catalog
@@ -144,6 +148,36 @@ def snapshot(idx: str) -> dict:
         probes[q] = [(urls[d], s) for d, s in hits]
     st = pads.dataset(IndexPaths(idx).collection_stats).to_table().to_pylist()[0]
     return {"probes": probes, "n_docs": st["n_docs"], "sum_dl": st.get("sum_dl")}
+
+
+def crashed_read(idx: str, fresh: bool) -> str | None:
+    """Query the index as the crash left it, before any heal: every
+    probe must answer. Two states are exempt, both of a fresh build:
+    opening may fail while no format marker / stats exist yet, and a
+    query may raise MissingDocLen while the docs stage has not
+    committed — its norms write overlaps the first postings batch, and
+    the docs-done row lands only once norms are durable, so postings
+    can sit on disk without lengths until the resume re-runs the docs
+    stage. Returns a failure message, or None."""
+    try:
+        r = IndexReader(idx)
+    except (RuntimeError, OSError) as e:
+        return None if fresh else f"crashed index would not open: {e}"
+    for q in PROBES:
+        try:
+            r.topk(q, k=10)
+        except MissingDocLen as e:
+            try:
+                m = pads.dataset(IndexPaths(idx).manifest).to_table().to_pylist()
+            except FileNotFoundError:
+                m = []
+            docs_done = any(row["stage"] == "docs" and row["status"] == "done"
+                            and row["segment_id"] == -1 for row in m)
+            if not fresh or docs_done:
+                return f"crashed-state query {q!r} raised {e}"
+        except Exception as e:  # noqa: BLE001
+            return f"crashed-state query {q!r} raised {type(e).__name__}: {e}"
+    return None
 
 
 def diff_snapshots(a: dict, b: dict) -> list[str]:
@@ -372,6 +406,9 @@ def run_scenario(spark, sc: Scenario, stride: int) -> list[str]:
             failures.append(f"{tag}: injected crash was SWALLOWED — mutation "
                             f"reported success past a failed durable write")
             continue
+        bad = crashed_read(trial_dir, fresh=not os.path.exists(base_dir))
+        if bad:
+            failures.append(f"{tag}: {bad}")
         try:
             sc.heal(spark, trial_dir)
             if gc_aborted_extends(spark, IndexPaths(trial_dir)) or gc_aborted_merges(
