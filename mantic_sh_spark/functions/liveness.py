@@ -58,6 +58,13 @@ import numpy as np
 
 from .codec import SEG_STRIDE
 
+assert SEG_STRIDE & (SEG_STRIDE - 1) == 0, "SEG_STRIDE must be a power of two"
+
+
+def _seg_rows(ids):
+    """(origin segment, row) of doc ids: a shift and a mask, not a divmod."""
+    return ids >> (SEG_STRIDE.bit_length() - 1), ids & (SEG_STRIDE - 1)
+
 
 class DeadDocs:
     """Tombstoned doc-id set: one packed bitmap per ORIGIN segment
@@ -88,7 +95,7 @@ class DeadDocs:
             ids = np.asarray(ids, dtype=np.int64)
             if not len(ids):
                 continue
-            segs, rows = np.divmod(ids, SEG_STRIDE)
+            segs, rows = _seg_rows(ids)
             lo, hi = int(segs.min()), int(segs.max())
             for seg in [lo] if lo == hi else np.unique(segs).tolist():
                 r = rows if lo == hi else rows[segs == seg]
@@ -109,7 +116,7 @@ class DeadDocs:
         return sum(bm.nbytes for bm in self._bits.values())
 
     def __contains__(self, doc) -> bool:
-        seg, row = divmod(int(doc), SEG_STRIDE)
+        seg, row = _seg_rows(int(doc))
         bm = self._bits.get(seg)
         return (bm is not None and (row >> 3) < len(bm)
                 and bool((int(bm[row >> 3]) >> (row & 7)) & 1))
@@ -120,7 +127,7 @@ class DeadDocs:
         out = np.zeros(len(ids), dtype=bool)
         if not self._bits or not len(ids):
             return out
-        segs, rows = np.divmod(ids, SEG_STRIDE)
+        segs, rows = _seg_rows(ids)
         lo, hi = int(segs.min()), int(segs.max())
         for seg, bm in self._bits.items():
             if not lo <= seg <= hi:
@@ -171,7 +178,7 @@ class DocLens:
         for ids, dl in batches:
             ids = np.asarray(ids, dtype=np.int64)
             dl = np.asarray(dl, dtype=np.uint32)
-            segs, rows = np.divmod(ids, SEG_STRIDE)
+            segs, rows = _seg_rows(ids)
             for seg in np.unique(segs).tolist():
                 sel = segs == seg
                 r = rows[sel]
@@ -193,7 +200,7 @@ class DocLens:
         """doc_len[len(ids)] (an unsigned int array); raises
         MissingDocLen when an id has no row."""
         ids = np.asarray(ids, dtype=np.int64)
-        segs, rows = np.divmod(ids, SEG_STRIDE)
+        segs, rows = _seg_rows(ids)
         out = np.zeros(len(ids), dtype=np.uint32)
         for seg, arr in self._lens.items():
             sel = np.flatnonzero(segs == seg)

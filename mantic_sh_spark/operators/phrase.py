@@ -28,7 +28,7 @@ from ..functions.codec import decode_blocks
 from ..functions.liveness import DeadDocs
 from ..functions.tokenize import tokenize
 from ..sources.catalog import IndexPaths
-from .wand import _TermBlocks, split_blocks
+from .wand import _ranges, _TermBlocks, split_blocks
 
 
 def _term_postings(tb: _TermBlocks) -> tuple[np.ndarray, ...]:
@@ -50,7 +50,7 @@ def _term_postings(tb: _TermBlocks) -> tuple[np.ndarray, ...]:
     np.cumsum(tf, out=off[1:])
     if np.any(docs[1:] < docs[:-1]):
         o = np.argsort(docs, kind="stable")
-        flat = _gather_runs(flat, off[o], tf[o])
+        flat = flat[_ranges(off[o], tf[o])]
         docs = docs[o]
         np.cumsum(tf[o], out=off[1:])
     return docs, flat, off, tb.first[bo], tb.n[bo]
@@ -96,15 +96,44 @@ def _kept_blocks(tbs: list[_TermBlocks]) -> list[np.ndarray]:
 _POS_STRIDE = np.int64(1) << np.int64(32)
 
 
-def _gather_runs(flat: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Ragged gather: concatenate flat[starts[i] : starts[i]+lens[i]]
-    for all i, fully vectorized (repeat/cumsum index trick)."""
-    total = int(lens.sum())
-    if not total:
-        return np.empty(0, dtype=flat.dtype)
-    ends = np.cumsum(lens)
-    within = np.arange(total, dtype=np.int64) - np.repeat(ends - lens, lens)
-    return flat[np.repeat(starts, lens) + within]
+def _decoded_blocks(cache, t: str, tb: _TermBlocks, m: np.ndarray,
+                    stats: dict | None = None) -> tuple[np.ndarray, ...]:
+    """Term t's decoded postings (_term_postings' tuple) holding at
+    least the blocks `m` selects, through `cache` (optional .get/.put
+    by term, like the reader's decoded LRU: one entry per term, tagged
+    with its blocks' first_doc / n). An entry that holds them decodes
+    nothing; else they decode with the entry's blocks (so runs needing
+    different blocks converge on one entry), and the whole term once
+    those hold ≥ half its postings — no more than the run spends on it
+    anyway. `stats` gets blocks_decoded, decoded_hits and `segs` (the
+    selected blocks' segment ids)."""
+    if stats is not None:
+        stats.setdefault("segs", set()).update(tb.seg[m].tolist())
+    got = cache.get(t) if cache is not None else None
+    if got is not None and _holds(got, tb, m):
+        if stats is not None:
+            stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
+        return got
+    if got is not None:
+        m = m | np.isin(tb.first, got[3])
+    part = tb if 2 * int(tb.n[m].sum()) >= int(tb.n.sum()) else tb.take(np.flatnonzero(m))
+    if stats is not None:
+        stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(part)
+    got = _term_postings(part)
+    if cache is not None:
+        cache.put(t, got)
+    return got
+
+
+def _keyed_positions(entry, cand: np.ndarray) -> np.ndarray:
+    """A decoded term's positions in the ascending docs `cand` as ONE
+    ascending array keyed doc_rank·2^32 + position (doc_rank: the doc's
+    index in cand); a doc the term lacks adds none."""
+    docs, flat, off = entry[:3]
+    i = np.minimum(np.searchsorted(docs, cand), len(docs) - 1)
+    lens = np.where(docs[i] == cand, off[i + 1] - off[i], 0)
+    ranks = np.repeat(np.arange(len(cand), dtype=np.int64), lens)
+    return ranks * _POS_STRIDE + flat[_ranges(off[i], lens)]
 
 
 def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
@@ -120,19 +149,11 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
     (segment_phrase_positions — the `find_references` surface) from the
     same pass. Returns None when no candidate survives.
 
-    Only the blocks _kept_blocks keeps are decoded. `decoded_cache`
-    (optional .get(term) / .put(term, value), like the serving reader's
-    byte-budgeted decoded LRU) holds one decode per term, tagged with
-    its blocks' first_doc / n: a run whose kept blocks the entry holds
-    decodes nothing. Otherwise the kept blocks decode together with the
-    ones the entry held (so repeated runs with different partners —
-    definitions' probes — converge on one entry), and the whole term
-    decodes once those hold at least half of its postings — no more
-    than the query spends on it anyway. Any superset of the kept blocks
+    Only the blocks _kept_blocks keeps are decoded, through
+    `decoded_cache` (_decoded_blocks). Any superset of the kept blocks
     verifies the same: a doc's posting sits in one block, and a doc
     holding every term sits in a kept block of each. `stats` accumulates
-    blocks_considered (before the block filter), blocks_decoded,
-    decoded_hits and `segs`, the segment ids of the kept blocks."""
+    blocks_considered (before the block filter) and the decode counts."""
     if not terms or any(not len(by_term.get(t, ())) for t in terms):
         return None
     uniq = sorted(set(terms))
@@ -140,26 +161,10 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
     kept = _kept_blocks(tbs)
     if stats is not None:
         stats["blocks_considered"] = stats.get("blocks_considered", 0) + sum(map(len, tbs))
-        stats.setdefault("segs", set()).update(
-            np.concatenate([tb.seg[m] for tb, m in zip(tbs, kept)]).tolist())
     if not kept[0].any():  # no interval holds every term
         return None
-    decoded = {}
-    for t, tb, m in zip(uniq, tbs, kept):
-        got = decoded_cache.get(t) if decoded_cache is not None else None
-        if got is not None and _holds(got, tb, m):
-            if stats is not None:
-                stats["decoded_hits"] = stats.get("decoded_hits", 0) + 1
-        else:
-            if got is not None:
-                m = m | np.isin(tb.first, got[3])
-            part = tb if 2 * int(tb.n[m].sum()) >= int(tb.n.sum()) else tb.take(np.flatnonzero(m))
-            if stats is not None:
-                stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(part)
-            got = _term_postings(part)
-            if decoded_cache is not None:
-                decoded_cache.put(t, got)
-        decoded[t] = got
+    decoded = {t: _decoded_blocks(decoded_cache, t, tb, m, stats)
+               for t, tb, m in zip(uniq, tbs, kept)}
     # candidate docs: the smallest doc list, narrowed by binary search
     # in each other list (all ascending)
     by_len = sorted(uniq, key=lambda t: len(decoded[t][0]))
@@ -177,20 +182,10 @@ def _phrase_match_starts(by_term: dict[str, _TermBlocks], terms: list[str],
     nc = len(cand)
     if nc >= (1 << 31):  # keyed-searchsorted rank headroom (see _POS_STRIDE)
         raise ValueError(f"phrase candidate set too large for one query run: {nc}")
-    # per term: the candidate docs' position runs as ONE keyed array
-    # (doc_rank * 2^32 + position, ascending — runs are doc-ordered and
-    # ascending within a doc), plus that keyed array itself for binary
-    # search. Keys make "smallest position > p in THIS doc" a global
+    # keys make "smallest position > p in THIS doc" a global
     # searchsorted: a miss walks into the next doc's key range and is
-    # rejected by the rank check.
-    keyed: dict[str, np.ndarray] = {}
-    for t in uniq:
-        docs_t, flat_t, off_t = decoded[t][:3]
-        idx = np.searchsorted(docs_t, cand)
-        starts, lens = off_t[idx], off_t[idx + 1] - off_t[idx]
-        ranks = np.repeat(np.arange(nc, dtype=np.int64), lens)
-        keyed[t] = ranks * _POS_STRIDE + _gather_runs(flat_t, starts, lens)
-
+    # rejected by the rank check
+    keyed = {t: _keyed_positions(decoded[t], cand) for t in uniq}
     k0 = keyed[terms[0]]
     doc_rank0 = k0 // _POS_STRIDE
     p0 = k0 % _POS_STRIDE
@@ -244,30 +239,25 @@ def segment_phrase_positions(by_term: dict[str, _TermBlocks], terms: list[str],
                              dead: DeadDocs | None = None,
                              slop: int = 0,
                              decoded_cache=None,
-                             stats: dict | None = None) -> list[tuple[int, np.ndarray]]:
-    """One phrase/symbol evaluation → [(doc_id, ascending
-    match-START token positions)] — the positional payload behind
-    `find_references` (reference: src/code-intel.ts:337-383 /
-    src/mcp-server.ts:763-847 answer "where is symbol X" with per-file
+                             stats: dict | None = None) -> tuple[np.ndarray, ...]:
+    """One phrase/symbol evaluation → (ascending doc_ids, flat
+    match-START token positions, offsets), ragged like _term_postings:
+    doc j's ascending starts are flat[off[j]:off[j+1]] — the positional
+    payload behind `find_references` (reference: src/code-intel.ts:337-383
+    / src/mcp-server.ts:763-847 answer "where is symbol X" with per-file
     occurrence positions; here a symbol is its tokenized form, so
-    camelCase identifiers match as exact phrases). Same batched kernel
-    as segment_phrase_matches — the starts are already computed; this
-    just groups them by doc instead of counting."""
+    camelCase identifiers match as exact phrases) and the anchors of
+    `definitions`. Same batched kernel as segment_phrase_matches — the
+    starts are already computed; this just groups them by doc instead
+    of counting."""
     r = _phrase_match_starts(by_term, terms, dead, slop,
                              decoded_cache=decoded_cache, stats=stats)
     if r is None:
-        return []
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.zeros(1, dtype=np.int64)
     cand, doc_rank0, p0, valid = r
-    ranks, starts = doc_rank0[valid], p0[valid]
-    if not len(ranks):
-        return []
-    # starts are ascending within each rank run (keyed array order)
-    order = np.argsort(ranks, kind="stable")
-    ranks, starts = ranks[order], starts[order]
-    boundaries = np.flatnonzero(np.diff(ranks)) + 1
-    groups = np.split(starts, boundaries)
-    uniq = ranks[np.concatenate(([0], boundaries))]
-    return [(int(cand[r_]), g) for r_, g in zip(uniq, groups)]
+    # rank runs ascend, and starts within each (keyed array order)
+    ranks, counts = np.unique(doc_rank0[valid], return_counts=True)
+    return cand[ranks], p0[valid], np.concatenate(([0], np.cumsum(counts)))
 
 
 def _phrase_udf(queries: dict[int, list[str]], dead_src=None,

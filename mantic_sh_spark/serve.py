@@ -717,14 +717,15 @@ class IndexReader:
 
         def attempt(stats):
             blocks, dead, cache = self._pos_run(terms, stats, "find_references")
-            hits = segment_phrase_positions(blocks, terms, dead, decoded_cache=cache,
-                                            stats=stats)
-            hits.sort(key=lambda x: (-len(x[1]), x[0]))
-            url_map = self.urls([d for d, _ in hits[:k]])
+            docs, starts, off = segment_phrase_positions(blocks, terms, dead,
+                                                         decoded_cache=cache, stats=stats)
+            n = np.diff(off)
+            top = np.lexsort((docs, -n))[:k].tolist()
+            url_map = self.urls(docs[top].tolist())
             return [
-                {"doc_id": d, "url": url_map.get(d), "n_matches": len(p),
-                 "positions": p[:max_positions].tolist()}
-                for d, p in hits[:k]
+                {"doc_id": int(docs[i]), "url": url_map.get(int(docs[i])), "n_matches": int(n[i]),
+                 "positions": starts[off[i]:off[i + 1]][:max_positions].tolist()}
+                for i in top
             ]
 
         return self._run(attempt)
@@ -733,8 +734,7 @@ class IndexReader:
     # "definition" of symbol X is an occurrence of X immediately
     # preceded by one of these (the positional-index analog of the
     # reference's language-pattern walk, src/code-intel.ts:154-332 —
-    # it matches `def X` / `class X` / `function X` / … text patterns;
-    # here each is literally the phrase [kw, *tokenize(X)])
+    # it matches `def X` / `class X` / `function X` / … text patterns)
     DEF_KEYWORDS = ("def", "class", "function", "interface", "struct",
                     "type", "const", "fn", "var", "let")
 
@@ -743,81 +743,79 @@ class IndexReader:
     # Foo()`, `X = require(...)`) — the reference's tree-sitter walk
     # catches these (src/code-intel.ts:154-332). The tokenizer erases
     # the `=`, so their tokenized signature is the SYMBOL immediately
-    # followed by a definition-introducing token: one phrase probe
-    # [*symbol-tokens, trailer] per trailer. (A bare arrow `X = (a) =>
-    # b` leaves no token at all to anchor on — out of reach without
-    # punctuation in the index; `async` arrows and every listed form
-    # are covered.) Reported as keyword "=<trailer>", ranked below all
-    # leading-keyword forms.
+    # followed by a definition-introducing token. (A bare arrow `X =
+    # (a) => b` leaves no token at all to anchor on — out of reach
+    # without punctuation in the index; `async` arrows and every listed
+    # form are covered.) Reported as keyword "=<trailer>", ranked below
+    # all leading-keyword forms.
     DEF_TRAILERS = ("function", "async", "lambda", "new", "require")
 
-    # prose-reference guard for the trailer probes: "call the parseHtml
+    # prose-reference guard for the trailer forms: "call the parseHtml
     # function" tokenizes to [..., the, parse, html, function, ...] and
-    # would match [*sym, function] at the symbol — but a real
-    # assignment (`parseHtml = function ...`) is never preceded by a
-    # determiner (the '=' the tokenizer erased sat there). A trailer
-    # hit whose symbol is immediately preceded by one of these is
-    # dropped (checked with one [det, *sym, trailer] probe per
-    # determiner, which decodes only the determiner blocks the symbol's
-    # blocks overlap) — review r5 finding.
+    # has `function` right after the symbol — but a real assignment
+    # (`parseHtml = function ...`) is never preceded by a determiner
+    # (the '=' the tokenizer erased sat there), so a trailer hit whose
+    # symbol one of these immediately precedes is dropped.
     DEF_PROSE_GUARD = ("the", "a", "an", "this", "that")
 
     def definitions(self, symbol: str, k: int = 10) -> list[dict]:
         """Where is `symbol` DEFINED — [(url, keyword, position)] ranked
-        (keyword priority, position asc, doc_id asc): the serving form
-        of the reference's `get_definition` MCP tool
-        (src/mcp-server.ts:763-847). Each definition form is one phrase
-        probe over positional postings: leading-keyword forms
-        [kw, *symbol-tokens] (`def X` / `class X` / …) and
-        assignment-style trailer forms [*symbol-tokens, trailer]
-        (`X = function` / `X = async () =>` / `X = lambda` — see
-        DEF_TRAILERS). The reported position is always the SYMBOL's
-        token position. Returns at most one hit per (doc, form) — the
-        first occurrence, like a goto-definition target. Each probe is
-        one phrase-kernel run over every segment, so a rare symbol
-        decodes only the keyword blocks its own blocks overlap; retries
-        like topk (_run)."""
+        (form, position asc, doc_id asc): the serving form of the
+        reference's `get_definition` MCP tool
+        (src/mcp-server.ts:763-847). One anchored pass: one
+        phrase-kernel run finds the symbol's live occurrences, keyed
+        doc_rank·2^32 + position; each form is then one membership test
+        against a neighbour term's positions, keyed alike — a keyword
+        (DEF_KEYWORDS: `def X`, `class X`, …) just before the symbol, or
+        a trailer (DEF_TRAILERS: `X = function`, `X = lambda`, …) just
+        after it with no determiner (DEF_PROSE_GUARD) before it. A
+        neighbour decodes only its blocks that hold a symbol doc. The
+        position is the SYMBOL's; at most one hit per (doc, form), the
+        first, like a goto-definition target; retries like topk (_run)."""
         from .functions.tokenize import tokenize
-        from .operators.phrase import segment_phrase_positions
+        from .operators.phrase import (_POS_STRIDE, _decoded_blocks, _keyed_positions,
+                                       segment_phrase_positions)
 
         sym = tokenize(symbol)
-        # (label, phrase, symbol-position offset within the phrase), in
-        # rank order: leading-keyword probes above every trailer probe
-        forms = [(kw, [kw] + sym, 1) for kw in self.DEF_KEYWORDS]
-        forms += [(f"={tw}", sym + [tw], 0) for tw in self.DEF_TRAILERS]
+        kws, trs, dets = self.DEF_KEYWORDS, self.DEF_TRAILERS, self.DEF_PROSE_GUARD
+        labels = [*kws, *(f"={tw}" for tw in trs)]
 
         def attempt(stats):
             if not self.has_positions:
                 raise ValueError(
                     "get_definition requires an index built with store_positions=True")
             # the symbol's BM25 blocks FIRST (no position payloads): an
-            # absent symbol token means no definition phrase can match,
-            # so a typo symbol returns before any head-term keyword's
-            # (large) positional postings are read and LRU-cached
+            # absent symbol token means no definition can match, so a
+            # typo symbol returns before any head-term keyword's (large)
+            # positional postings are read and LRU-cached
             if not sym or not all(map(len, self._blocks(sorted(set(sym)), stats).values())):
                 return []
-            blocks, dead, cache = self._pos_run(
-                [t for _, ph, _ in forms for t in ph] + list(self.DEF_PROSE_GUARD),
-                stats, "get_definition")
-            hits: list[tuple[int, int, int]] = []  # (form rank, position, doc)
-            for rank, (_, phrase, sym_off) in enumerate(forms):
-                matches = segment_phrase_positions(blocks, phrase, dead,
-                                                   decoded_cache=cache, stats=stats)
-                if not sym_off and matches:
-                    # trailer form: drop prose references ("the X
-                    # function") — symbol positions immediately preceded
-                    # by a determiner
-                    prose = {(doc, p + 1) for det in self.DEF_PROSE_GUARD
-                             for doc, dpos in segment_phrase_positions(
-                                 blocks, [det] + phrase, dead, decoded_cache=cache, stats=stats)
-                             for p in dpos.tolist()}
-                    matches = [(doc, [p for p in pos.tolist() if (doc, p) not in prose])
-                               for doc, pos in matches]
-                hits += [(rank, int(pos[0]) + sym_off, doc) for doc, pos in matches if len(pos)]
-            hits = sorted(hits)[:k]
+            blocks, dead, cache = self._pos_run(sym + [*kws, *trs, *dets], stats,
+                                                "get_definition")
+            occ = segment_phrase_positions(blocks, sym, dead, decoded_cache=cache, stats=stats)
+            docs = occ[0]
+            if not len(docs):
+                return []
+            key = _keyed_positions(occ, docs)
+            near = {}  # neighbour term → its positions in the symbol docs, keyed alike
+            for t in {*kws, *trs, *dets}:
+                tb = blocks[t]
+                stats["blocks_considered"] += len(tb)
+                hold = np.searchsorted(docs, tb.first) < np.searchsorted(docs, tb.last, "right")
+                near[t] = (_keyed_positions(_decoded_blocks(cache, t, tb, hold, stats), docs)
+                           if hold.any() else key[:0])
+            prose = np.isin(key - 1, np.concatenate([key[:0]] + [near[t] for t in dets]))
+            hit = np.array([np.isin(key - 1, near[t]) for t in kws]
+                           + [np.isin(key + len(sym), near[t]) & ~prose for t in trs])
+            form, j = np.nonzero(hit.reshape(len(labels), len(key)))
+            rank, pos = np.divmod(key[j], _POS_STRIDE)
+            # the first hit per (form, doc) is its lowest position: keys ascend
+            first = np.unique(form * len(docs) + rank, return_index=True)[1]
+            hits = sorted(zip(form[first].tolist(), pos[first].tolist(),
+                              docs[rank[first]].tolist()))[:k]
             url_map = self.urls([d for _, _, d in hits])
-            return [{"doc_id": d, "url": url_map.get(d), "keyword": forms[rank][0], "position": p}
-                    for rank, p, d in hits]
+            return [{"doc_id": d, "url": url_map.get(d), "keyword": labels[f], "position": p}
+                    for f, p, d in hits]
 
         return self._run(attempt)
 

@@ -192,7 +192,8 @@ def test_dead_docs_bitmap_matches_isin():
     """DeadDocs (one packed bitmap per origin segment) must agree with
     np.isin on random probes: ids over several origin segments,
     unsorted + duplicated input, probes past a bitmap's end and in
-    segments with no bitmap, streamed batches, and the empty set."""
+    segments with no bitmap, each segment's largest row id beside the
+    next segment's row 0, streamed batches, and the empty set."""
     import numpy as np
 
     from mantic_sh_spark.functions.codec import SEG_STRIDE
@@ -201,15 +202,19 @@ def test_dead_docs_bitmap_matches_isin():
     rng = np.random.default_rng(7)
     ids = np.concatenate([rng.integers(0, 4000, 500) + s * SEG_STRIDE
                           for s in (0, 2, 5, 11)])
-    ids = np.concatenate([ids, ids[::7]])  # duplicates
+    # duplicates, and row 0 of each segment: the neighbour of the
+    # previous segment's largest row id
+    ids = np.concatenate([ids, ids[::7], [s * SEG_STRIDE for s in (2, 5, 11)]])
     rng.shuffle(ids)
+    edge = np.array([s * SEG_STRIDE + d for s in (1, 2, 5, 6, 11, 12) for d in (-1, 0)])
     probe = np.concatenate([rng.integers(0, 9000, 3000) + s * SEG_STRIDE
-                            for s in (0, 1, 2, 5, 11, 12)])
+                            for s in (0, 1, 2, 5, 11, 12)] + [edge])
     ref = np.isin(probe, ids)
     for dd in (DeadDocs.from_ids(ids),
                DeadDocs.from_batches(np.array_split(ids, 9))):
         assert (dd.mask(probe) == ref).all()
         assert [int(p) in dd for p in probe[::13]] == ref[::13].tolist()
+        assert [int(p) in dd for p in edge] == np.isin(edge, ids).tolist()
         # one bitmap per origin segment, sized by its largest dead row
         rows = {s: int(ids[ids // SEG_STRIDE == s].max() % SEG_STRIDE)
                 for s in (0, 2, 5, 11)}
@@ -229,8 +234,8 @@ def test_doc_lens_gather_matches_dict_lookup():
     shuffled batches, probes in block order of a merged segment whose
     postings interleave origins, each segment's array narrowed to the
     dtype its largest length needs, and an id with no row (past an
-    array's end, inside it, or in an unknown segment) raising
-    MissingDocLen naming it."""
+    array's end, inside it, in an unknown segment, or the largest row
+    id of a segment) raising MissingDocLen naming it."""
     import numpy as np
     import pytest
 
@@ -255,8 +260,12 @@ def test_doc_lens_gather_matches_dict_lookup():
     for probe in (merged, merged[::-1], merged[merged // SEG_STRIDE == 3], ids):
         assert dl.get(probe).tolist() == [ref[d] for d in probe.tolist()]
     assert dl.get(np.empty(0, dtype=np.int64)).shape == (0,)
+    assert dl.get([3 * SEG_STRIDE]).tolist() == [ref[3 * SEG_STRIDE]]
     absent = sorted(set(range(3000)) - set((ids[ids < SEG_STRIDE]).tolist()))
-    for bad in (absent[0], 5 * SEG_STRIDE, 7 * SEG_STRIDE + 10**6):
+    # ... or the largest row id of segment 3 (past its array's end) and
+    # of segment 2 (no array; one below segment 3's row 0, which has one)
+    for bad in (absent[0], 5 * SEG_STRIDE, 7 * SEG_STRIDE + 10**6,
+                4 * SEG_STRIDE - 1, 3 * SEG_STRIDE - 1):
         with pytest.raises(MissingDocLen) as err:
             dl.get(np.append(merged, bad))
         assert err.value.doc_id == bad and f"doc {bad} " in str(err.value)

@@ -1231,7 +1231,9 @@ def _check_positional_oracles(spark, idx, reader):
     from mantic_sh_spark.operators.phrase import phrase_topk
 
     doc_toks = _doc_tokens(spark, idx)
-    for symbol in ("zqrare", "w1x", "w7x w8x"):
+    # "function" is a keyword and a trailer (an occurrence is its own
+    # neighbour), "the" a determiner, "a the" a symbol holding one
+    for symbol in ("zqrare", "w1x", "w7x w8x", "function", "the", "a the"):
         got = [(d["keyword"], d["position"], d["doc_id"])
                for d in reader.definitions(symbol, k=10**6)]
         assert got == _defs_oracle(doc_toks, symbol, 10**6), symbol

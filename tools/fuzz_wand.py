@@ -44,8 +44,10 @@ kernels rank over overlapping block intervals.
 Odd-seeded cases additionally build POSITIONALLY and fuzz the phrase
 engine (incl. stop-term phrases — the batched keyed-searchsorted
 verifier's worst case — and random slop) against an INDEPENDENT
-per-doc greedy oracle in pure Python, plus reader↔engine identity.
-The reader runs the phrase kernel once over every segment's blocks,
+per-doc greedy oracle in pure Python, plus reader↔engine identity,
+and the reader's references and definitions against token-scan
+oracles (`defs=OK`; definition forms set to corpus terms on that
+reader, since the synth corpus has no code keywords). The reader runs the phrase kernel once over every segment's blocks,
 so `pos_overlapping_blocks` reports whether the positional twin's
 phrase and reference terms had self-overlapping block lists (True on
 the legacy cases: the global run met the enveloping blocks).
@@ -215,6 +217,25 @@ def _fold_gated_ok(reader, idx, queries, live):
     return ok
 
 
+def _defs_want(reader, doc_toks, symbol):
+    """Token-scan definitions under `reader`'s DEF_* sets: the symbol
+    preceded by a keyword, or followed by a trailer and not preceded by
+    a determiner; the first occurrence per (doc, form), ranked (form,
+    position, doc) — [(label, position, doc_id)]."""
+    kws, trs, dets = reader.DEF_KEYWORDS, reader.DEF_TRAILERS, reader.DEF_PROSE_GUARD
+    sym = tokenize(symbol)
+    m = len(sym)
+    hits = []
+    for d, toks in doc_toks.items():
+        at = [i for i in range(len(toks) - m + 1) if toks[i:i + m] == sym]
+        forms = [[i for i in at if i and toks[i - 1] == kw] for kw in kws]
+        forms += [[i for i in at if i + m < len(toks) and toks[i + m] == tw
+                   and not (i and toks[i - 1] in dets)] for tw in trs]
+        hits += [(rank, pos[0], d) for rank, pos in enumerate(forms) if pos]
+    labels = list(kws) + [f"={tw}" for tw in trs]
+    return [(labels[r], p, d) for r, p, d in sorted(hits)]
+
+
 def _overlapping(reader, terms):
     """Does any term's block-interval list overlap itself?"""
     for tb in reader._blocks(sorted(set(terms))).values():
@@ -319,6 +340,8 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         lens_ok &= _doc_lens_ok(reader, idx)
 
     phrase_ok = True
+    defs_ok = True
+    defs_hits = None
     pos_overlap = None
     if seed % 2 == 1:
         # positional build on the same corpus/layout; fuzz phrase+slop
@@ -388,16 +411,30 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                     for r in preader.references(sym, k=10**6, max_positions=10**6)}
             if rgot != rwant:
                 phrase_ok = False
+        # definitions: the synth corpus has no code keywords, so this
+        # reader's definition forms are corpus terms — the stop term is
+        # a keyword and a determiner, w1x a keyword and a trailer
+        preader.DEF_KEYWORDS = (st, "w1x", "w2x")
+        preader.DEF_TRAILERS = ("w3x", "w4x", "w1x")
+        preader.DEF_PROSE_GUARD = (st, "w5x")
+        defs_hits = 0
+        for sym in refs:
+            dwant = _defs_want(preader, doc_toks, sym)
+            defs_hits += len(dwant)
+            defs_ok &= [(d["keyword"], d["position"], d["doc_id"])
+                        for d in preader.definitions(sym, k=10**6)] == dwant
         pos_overlap = any(_overlapping(preader, tokenize(t))
                           for t in [ph for _, ph, _ in phrases] + refs)
         shutil.rmtree(posidx, ignore_errors=True)
-    fails += not (ok and serve_ok and phrase_ok and tier_ok and del_ok and churn_ok and df_ok
-                  and lens_ok)
+    fails += not (ok and serve_ok and phrase_ok and defs_ok and tier_ok and del_ok and churn_ok
+                  and df_ok and lens_ok)
     print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
           f"pre_deleted={len(pre)} overlapping_blocks={overlap}"
-          f"{'' if pos_overlap is None else f' pos_overlapping_blocks={pos_overlap}'}: "
+          f"{'' if pos_overlap is None else f' pos_overlapping_blocks={pos_overlap}'}"
+          f"{'' if defs_hits is None else f' defs_hits={defs_hits}'}: "
           f"{'OK' if ok else 'MISMATCH'} serve={'OK' if serve_ok else 'MISMATCH'}"
           f" phrase={'OK' if phrase_ok else 'MISMATCH'}"
+          f" defs={'OK' if defs_ok else 'MISMATCH'}"
           f" tier={'OK' if tier_ok else 'MISMATCH'}"
           f" del={'OK' if del_ok else 'MISMATCH'}"
           f" churn={'OK' if churn_ok else 'MISMATCH'}"
