@@ -126,9 +126,10 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument("--concurrency", type=int, default=1,
                     help="query worker threads (IndexReader is thread-safe)")
     sv.add_argument("--prewarm", type=int, default=0, metavar="N",
-                    help="before serving, replay the N most recent distinct "
-                         "queries from --log-dir to fault the hot caches "
-                         "(cold p90 is ~50%% fetch; prewarmed repeats are ~ms)")
+                    help="before serving, warm the hot caches with the N most "
+                         "recent distinct queries from --log-dir: one postings "
+                         "read and one decode pass for all their terms (cold "
+                         "p90 is ~50%% fetch; prewarmed repeats are ~ms)")
 
     mc = sub.add_parser("mcp", help="MCP stdio server (JSON-RPC; search_files tool "
                                     "backed by the long-lived reader — see "
@@ -140,7 +141,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "serve" and args.prewarm and not args.log_dir:
         # a silent no-op here would leave the operator believing the
         # cache is warm while first traffic pays full cold-fetch p90
-        p.error("--prewarm replays the query log and requires --log-dir")
+        p.error("--prewarm warms from the query log and requires --log-dir")
 
     if args.cmd == "serve":
         # serving replicas read the committed parquet directly — no JVM

@@ -132,11 +132,27 @@ def split_blocks(data, tid2term: dict[int, str],
     return out
 
 
+def decoded_entry(tb: _TermBlocks, docs, tfn, codes) -> tuple:
+    """The top-k decode cache's entry for one term: the (docs, tf_norm,
+    tier codes) of ALL of tb's postings, in block order, tagged with
+    tb's first_doc / n columns — the one layout cached_postings accepts
+    and every writer (segment_topk, the reader's prewarm and per-doc
+    scorer) builds here."""
+    return docs, tfn, codes, tb.first, tb.n
+
+
+def decoded_nbytes(tb: _TermBlocks) -> int:
+    """The bytes decoded_entry holds for tb, known before decoding: an
+    int64 doc id, a float64 tf_norm and an int8 tier code per posting,
+    plus the two int64 tag columns."""
+    return 17 * int(tb.n.sum()) + tb.first.nbytes + tb.n.nbytes
+
+
 def cached_postings(decode_cache, term: str, tb: _TermBlocks):
-    """The top-k decode cache's entry for `term` — (docs, tf_norm, tier
-    codes, first_doc, n) — when it was decoded from blocks with exactly
-    tb's first_doc / n columns, else None: blocks in another order, or
-    from another epoch (a query straddling refresh), are a miss."""
+    """The top-k decode cache's entry for `term` (decoded_entry) when it
+    was decoded from blocks with exactly tb's first_doc / n columns,
+    else None: blocks in another order, or from another epoch (a query
+    straddling refresh), are a miss."""
     c = decode_cache.get(term) if decode_cache is not None else None
     if c is None or not (np.array_equal(c[3], tb.first) and np.array_equal(c[4], tb.n)):
         return None
@@ -382,8 +398,7 @@ def segment_topk(by_term: dict[str, _TermBlocks], terms: list[str],
             for i in full:
                 s = np.flatnonzero(tt == i)
                 s = s[np.argsort(blk[s], kind="stable")]  # block order
-                decode_cache.put(present[i], (docs[s], tfn[s], codes[s], tbs[i].first,
-                                              tbs[i].n))
+                decode_cache.put(present[i], decoded_entry(tbs[i], docs[s], tfn[s], codes[s]))
     if stats is not None:
         stats["blocks_considered"] = stats.get("blocks_considered", 0) + len(n)
         stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + int(

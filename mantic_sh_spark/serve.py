@@ -657,7 +657,7 @@ class IndexReader:
         rank_topk (4 decimals), like every ranked answer. Retries like
         every query surface (_run), recording no stats."""
         from .functions.codec import decode_blocks, tf_norm
-        from .operators.wand import _ranges, cached_postings
+        from .operators.wand import _ranges, cached_postings, decoded_entry
 
         cand, inv = np.unique(np.asarray(doc_ids, dtype=np.int64), return_inverse=True)
 
@@ -691,7 +691,7 @@ class IndexReader:
                     tfn = tf_norm(tf, self._doc_lens().get(d), self.avgdl, self.k1, self.b)
                     add(idf, d, tfn)
                     if len(hold) == len(tb.n):  # the whole term decoded: install
-                        cache.put(t, (d, tfn, code, tb.first, tb.n))
+                        cache.put(t, decoded_entry(tb, d, tfn, code))
             return acc
 
         return np.round(self._run(attempt, record=False), 4)[inv]
@@ -850,32 +850,83 @@ class IndexReader:
             for i, (d, cols) in enumerate(hits)
         ]
 
-    def prewarm(self, queries: "list[str]", k: int = 10,
-                tiered: bool = False) -> int:
-        """Fault the serving caches (the hot-term BM25 block LRU, which
-        also answers df, and the decoded postings) by replaying a query
-        list — e.g. the query-log tail via `recent_queries` — so a fresh
-        replica does not pay cold-fetch latency on its first real
-        traffic. A query's cold terms cost one pruned postings read
-        split into per-term block columns, plus the kernel run that
-        fills the decoded LRU. Queries that error are skipped: warming
-        is best-effort by definition. Returns the number replayed
-        successfully."""
+    def prewarm(self, queries: "list[str]", k: int = 10) -> int:
+        """Fault the serving caches for a query list — e.g. the query-log
+        tail via `recent_queries` — so a fresh replica does not pay
+        cold-fetch latency on its first real traffic. One attempt (_run)
+        over the union of the list's terms, each placed at its last
+        query so LRU recency follows the list: ONE pruned postings read
+        fetches the cold terms into the hot-term block LRU (df
+        included); this epoch's DocLens and DeadDocs are built; ONE
+        varint pass decodes every term with postings into the ("k",)
+        decoded entry topk and tiered_topk both read. Only the list's
+        last max_hot_terms terms are fetched, and only the last the
+        decoded LRU's budget holds are decoded: the LRUs would evict the
+        rest. `k` changes nothing (every posting of a warmed term is
+        decoded); it stays for callers of the per-query replay this
+        replaced. Best-effort and recording no query stats: a query that
+        does not tokenize is skipped, a failed attempt warms nothing and
+        returns 0. Returns the number of queries warmed."""
+        from .functions.codec import decode_blocks, tf_norm
+        from .operators.wand import cached_postings, decoded_entry, decoded_nbytes
+
+        last = {}  # term → (its last query, term): the list's recency order
         n = 0
-        for q in queries:
+        for i, q in enumerate(queries):
             try:
-                self.tiered_topk(q, k=k) if tiered else self.topk(q, k=k)
-                n += 1
+                terms = tokenize_query(q)
             except Exception:
                 continue
+            n += 1
+            last.update((t, (i, t)) for t in terms)
+        warm = sorted(last, key=last.get)
+        warm = warm[max(0, len(warm) - self.max_hot_terms):]
+
+        if not warm:
+            return n
+
+        def attempt(_stats):
+            dgen = self._decoded.generation  # pin BEFORE the block fetch
+            blocks = self._blocks(warm)
+            with self._lock:  # list order, terms that were already hot included
+                for t in warm:
+                    if t in self._blocks_lru:
+                        self._blocks_lru.move_to_end(t)
+            self._dead_docs()  # built here, not by the first query
+            lens = self._doc_lens()
+            cache = _NsDecodeCache(self._decoded, ("k",), dgen)
+            have = [t for t in warm if len(blocks[t])]
+            nb = np.array([decoded_nbytes(blocks[t]) for t in have], dtype=np.int64)
+            fits = nb <= self._decoded.budget  # a larger entry is never cached
+            keep = fits & (np.cumsum((nb * fits)[::-1])[::-1] <= self._decoded.budget)
+            entries = {t: cached_postings(cache, t, blocks[t])
+                       for t, ok in zip(have, keep) if ok}
+            cold = [t for t, e in entries.items() if e is None]
+            if cold:
+                tbs = [blocks[t] for t in cold]
+                d, tf, code = decode_blocks(*(np.concatenate([getattr(tb, c) for tb in tbs])
+                                              for c in ("n", "first", "gaps", "tfs")))
+                tfn = tf_norm(tf, lens.get(d), self.avgdl, self.k1, self.b)
+                off = np.cumsum([0] + [int(tb.n.sum()) for tb in tbs]).tolist()
+                # copies: an entry must not pin the whole pass's arrays
+                # once the LRU has evicted its siblings
+                for t, tb, lo, hi in zip(cold, tbs, off, off[1:]):
+                    entries[t] = decoded_entry(tb, *(x[lo:hi].copy() for x in (d, tfn, code)))
+            for t, e in entries.items():
+                cache.put(t, e)
+
+        try:
+            self._run(attempt, record=False)
+        except Exception:
+            return 0
         return n
 
 
 def recent_queries(log_dir: str, limit: int = 100) -> list[str]:
     """The most recent `limit` DISTINCT query strings from a QueryLog
-    directory (newest first) — the natural prewarm feed: replaying
-    yesterday's tail warms exactly the terms tomorrow's traffic
-    repeats. Pure pyarrow (no Spark), like every serving-path read."""
+    directory (newest first) — the natural prewarm feed: yesterday's
+    tail holds exactly the terms tomorrow's traffic repeats. Pure
+    pyarrow (no Spark), like every serving-path read."""
     import os
 
     import pyarrow.parquet as pq
@@ -1054,24 +1105,27 @@ def serve_loop(index_dir: str, stdin=None, stdout=None, k1: float = K1, b: float
       {"q": ..., "id": 7}                          → id echoed in response
       {"op": "stats"}                              → read-amp counters
       {"op": "prewarm", "queries": [...]?}         → fault hot caches
-        (omitting "queries" replays the log_dir's recent distinct tail)
+        (IndexReader.prewarm; "queries" is a list of query strings —
+        omitted, the log_dir's "limit" (100) recent distinct ones)
       {"op": "refresh"}                            → reload metadata
       {"op": "ping"}                               → liveness
       {"op": "quit"}                               → exit
     Response per line: {"results": [...], "ms": 1.8} (or {"ok": true},
-    or {"error": "..."} — the loop never dies on a bad request).
+    or {"error": "..."} — the loop never dies on a bad request, control
+    ops included).
     log_dir persists the session's query history (see QueryLog).
 
     concurrency > 1 serves queries from a thread pool (the IndexReader
     is thread-safe; see its docstring): responses may interleave out of
     request order, so clients pass "id" to correlate. Control ops
-    (refresh/quit) drain in-flight queries first — the single-writer
-    refresh discipline. Returns the number of queries served.
+    (refresh/prewarm/quit) drain in-flight queries first — the
+    single-writer refresh discipline. Returns the number of queries
+    served.
 
-    prewarm > 0 replays that many recent distinct log_dir queries
-    through THIS loop's reader before serving (same effect as an
-    initial {"op": "prewarm"} request) — a restarted replica picks up
-    where the last one's hot set left off.
+    prewarm > 0 warms THIS loop's reader with that many recent distinct
+    log_dir queries before serving (same effect as an initial
+    {"op": "prewarm"} request) — a restarted replica picks up where the
+    last one's hot set left off.
     """
     import sys
     from concurrent.futures import ThreadPoolExecutor, wait
@@ -1125,10 +1179,13 @@ def serve_loop(index_dir: str, stdin=None, stdout=None, k1: float = K1, b: float
                 resp["id"] = req["id"]
             _emit(resp)
         except Exception as exc:  # serve loops answer errors, not crash
-            err = {"error": f"{type(exc).__name__}: {exc}"}
-            if "id" in req:
-                err["id"] = req["id"]
-            _emit(err)
+            _emit_error(exc, req)
+
+    def _emit_error(exc: Exception, req: dict) -> None:
+        err = {"error": f"{type(exc).__name__}: {exc}"}
+        if "id" in req:
+            err["id"] = req["id"]
+        _emit(err)
 
     n_workers = max(1, int(concurrency))
     pool = ThreadPoolExecutor(max_workers=n_workers)
@@ -1140,6 +1197,29 @@ def serve_loop(index_dir: str, stdin=None, stdout=None, k1: float = K1, b: float
             wait(pending)
             pending = []
 
+    def _control(op: str, req: dict) -> dict:
+        if op == "refresh":
+            _drain()  # single-writer: no query may straddle the swap
+            reader.refresh()
+            return {"ok": True}
+        if op == "ping":
+            return {"ok": True, "n_docs": reader.n_docs}
+        if op == "stats":
+            return {"ok": True, **reader.counters()}
+        # prewarm, a control op like refresh: drain in-flight queries
+        # first (qlog.flush below races worker record() calls otherwise)
+        # and warm inline — a startup/idle operation, not something to
+        # run under live load
+        _drain()
+        qs = req.get("queries")
+        if qs is None:
+            if qlog is not None:
+                qlog.flush()  # include this session's tail
+            qs = recent_queries(log_dir, int(req.get("limit", 100))) if log_dir else []
+        elif not isinstance(qs, list):
+            raise TypeError(f"queries is a list of query strings, not {type(qs).__name__}")
+        return {"ok": True, "warmed": reader.prewarm(qs)}
+
     try:
         for line in stdin:
             line = line.strip()
@@ -1150,36 +1230,17 @@ def serve_loop(index_dir: str, stdin=None, stdout=None, k1: float = K1, b: float
             except ValueError as exc:
                 _emit({"error": f"{type(exc).__name__}: {exc}"})
                 continue
+            if not isinstance(req, dict):
+                _emit({"error": f"TypeError: a request is a JSON object, not {type(req).__name__}"})
+                continue
             op = req.get("op")
             if op == "quit":
                 break
-            if op == "refresh":
-                _drain()  # single-writer: no query may straddle the swap
-                reader.refresh()
-                _emit({"ok": True})
-                continue
-            if op == "ping":
-                _emit({"ok": True, "n_docs": reader.n_docs})
-                continue
-            if op == "stats":
-                _emit({"ok": True, **reader.counters()})
-                continue
-            if op == "prewarm":
-                # control op like refresh: drain in-flight queries
-                # first (qlog.flush below races worker record() calls
-                # otherwise) and replay inline — prewarm is a startup/
-                # idle operation, not something to run under live load
-                _drain()
-                qs = req.get("queries")
-                if qs is None:
-                    if qlog is not None:
-                        qlog.flush()  # include this session's tail
-                    qs = (recent_queries(log_dir, int(req.get("limit", 100)))
-                          if log_dir else [])
-                _emit({"ok": True,
-                       "warmed": reader.prewarm(list(qs),
-                                                k=int(req.get("k", 10)),
-                                                tiered=bool(req.get("tiered", False)))})
+            if op in ("refresh", "ping", "stats", "prewarm"):
+                try:
+                    _emit(_control(op, req))
+                except Exception as exc:  # like _answer: the loop never dies
+                    _emit_error(exc, req)
                 continue
             if "q" not in req and "symbol" not in req:
                 _emit({"error": "KeyError: 'q'"})

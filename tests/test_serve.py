@@ -954,6 +954,136 @@ def test_prewarm_and_recent_queries(spark, small_corpus, tmp_path):
     assert lines[1]["stats"]["terms_cold"] == 0
 
 
+def test_prewarm_one_read_one_decode(spark, small_corpus, tmp_path, monkeypatch):
+    """prewarm() on a clean, a tombstoned and a fold-gated index: ONE
+    postings read for the whole list; the hot LRU holds every term in
+    last-occurrence order (absent ones as empty blocks); every term
+    with postings has the ("k",) entry cached_postings accepts; the
+    epoch's DocLens and DeadDocs are built; the following topk and
+    tiered_topk fetch and decode nothing and answer like a cold
+    reader. A small max_hot_terms warms only the list's last terms, a
+    small decoded budget decodes only the last terms it holds, and a
+    refresh() between the fetch and the install leaves nothing
+    behind (the generation pin drops the decoded puts)."""
+    import shutil
+
+    from mantic_sh_spark.operators import merge as merge_mod
+    from mantic_sh_spark.operators.delete import delete_docs
+    from mantic_sh_spark.operators.merge import merge_segments
+    from mantic_sh_spark.operators.wand import cached_postings, decoded_nbytes
+    from mantic_sh_spark.serve import _decoded_nbytes, _NsDecodeCache
+
+    clean = small_corpus["index_dir"]
+    tomb = str(tmp_path / "tomb")
+    shutil.copytree(clean, tomb)
+    delete_docs(spark, tomb, doc_ids=[d for d, _ in IndexReader(tomb).topk("w1x w2x", k=3)])
+    gated = str(tmp_path / "gated")
+    shutil.copytree(tomb, gated)
+
+    def killed(*a, **kw):
+        raise RuntimeError("killed after the committed barrier")
+
+    monkeypatch.setattr(merge_mod, "_finish_merge", killed)
+    with pytest.raises(RuntimeError, match="committed barrier"):
+        merge_segments(spark, gated, [0, 1], dst_segment=9, purge=False)
+    monkeypatch.undo()
+
+    queries = ["w1x w2x w3x", "w4x w1x", "w2x qqabsent w5x", "w6x"]
+    order = ["w3x", "w1x", "w4x", "qqabsent", "w2x", "w5x", "w6x"]
+
+    class CountingReads:
+        def __init__(self, dataset):
+            self.dataset, self.reads = dataset, 0
+
+        def to_table(self, **kw):
+            self.reads += 1
+            return self.dataset.to_table(**kw)
+
+        def __getattr__(self, name):
+            return getattr(self.dataset, name)
+
+    for idx in (clean, tomb, gated):
+        r = IndexReader(idx)
+        assert (r.gated_segments == [0, 1]) == (idx == gated)
+        r._postings = CountingReads(r._postings)
+        assert r.prewarm(queries, k=3) == len(queries)
+        assert r._postings.reads == 1
+        assert list(r._blocks_lru) == order
+        assert r._lens is not None and r._dead is not None
+        has = [t for t in order if len(r._blocks_lru[t])]
+        assert "qqabsent" not in has and len(has) == 6
+        assert list(r._decoded._d) == [("k", t) for t in has]
+        cache = _NsDecodeCache(r._decoded, ("k",))
+        for t in has:
+            entry = cached_postings(cache, t, r._blocks_lru[t])
+            assert entry is not None
+            assert _decoded_nbytes(entry) == decoded_nbytes(r._blocks_lru[t])
+        cold = IndexReader(idx)
+        for q in queries + ["w1x w6x", "w2x w4x w5x"]:
+            for run in ("topk", "tiered_topk"):
+                assert getattr(r, run)(q, k=5) == getattr(cold, run)(q, k=5)
+                assert r.last_stats["terms_cold"] == 0
+                assert r.last_stats["blocks_decoded"] == 0
+        assert r._postings.reads == 1
+
+        # a second list orders its terms by ITS last queries, whether
+        # they were hot already (w1x, w3x) or not (w7x)
+        before = [t for t in r._blocks_lru if t not in ("w1x", "w3x")]
+        r.prewarm(["w7x w1x", "w3x"])
+        assert list(r._blocks_lru) == before + ["w1x", "w7x", "w3x"]
+        assert list(r._decoded._d)[-3:] == [("k", "w1x"), ("k", "w7x"), ("k", "w3x")]
+
+    capped = IndexReader(clean, max_hot_terms=3)
+    capped._postings = CountingReads(capped._postings)
+    capped.prewarm(queries)
+    assert capped._postings.reads == 1
+    assert list(capped._blocks_lru) == order[-3:]
+    assert list(capped._decoded._d) == [("k", t) for t in order[-3:]]
+
+    # a decoded LRU budget of the last two terms decodes only those two
+    budgeted = IndexReader(clean)
+    budgeted._decoded.budget = sum(
+        decoded_nbytes(tb) for tb in IndexReader(clean)._blocks(order[-2:]).values())
+    budgeted.prewarm(queries)
+    assert list(budgeted._blocks_lru) == order
+    assert list(budgeted._decoded._d) == [("k", t) for t in order[-2:]]
+
+    raced = IndexReader(clean)
+    orig = raced._doc_lens
+
+    def refreshing():
+        raced.refresh()  # between every attempt's fetch and its install
+        return orig()
+
+    raced._doc_lens = refreshing
+    assert raced.prewarm(queries) == len(queries)
+    assert not raced._decoded._d and not raced._blocks_lru
+
+
+def test_serve_loop_control_ops_answer_errors(spark, small_corpus, tmp_path):
+    """A bad control op is answered with an error and the loop keeps
+    serving: a non-list prewarm "queries" (a string would warm its
+    characters), a bad "limit", a non-object line. A prewarm "k" no
+    longer matters, so a non-integer one is ignored."""
+    lines = [{"op": "prewarm", "queries": ["w1x"], "k": "x", "id": 1},
+             {"op": "prewarm", "queries": "w1x w2x", "id": 2},
+             {"op": "prewarm", "limit": "x", "id": 3},
+             5,
+             {"q": "w1x", "k": 2, "id": 4},
+             {"op": "quit"}]
+    out = io.StringIO()
+    serve_loop(small_corpus["index_dir"],
+               stdin=io.StringIO("".join(json.dumps(x) + "\n" for x in lines)),
+               stdout=out, log_dir=str(tmp_path / "qlog"))
+    got = [json.loads(line) for line in out.getvalue().splitlines()]
+    assert got[0] == {"ok": True, "warmed": 1}
+    assert got[1]["id"] == 2 and got[1]["error"].startswith("TypeError: queries")
+    assert got[2]["id"] == 3 and got[2]["error"].startswith("ValueError")
+    assert got[3]["error"].startswith("TypeError")
+    assert got[4]["id"] == 4 and len(got[4]["results"]) == 2
+    assert len(got) == 5
+
+
 def test_mcp_tiered_search(spark, small_corpus):
     """search_files tiered=true serves the R1 ladder over MCP,
     value-identical to IndexReader.tiered_topk, with urls + snippets;

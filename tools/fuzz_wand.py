@@ -25,7 +25,10 @@ Every layout — fresh, merged, legacy, deleted, upserted, purged, the
 positional twin and a fold-gated one — also checks the reader's
 DocLens (blocks store no doc lengths; scorers gather them from the
 norms sidecar) against the docs table's doc_len for every served
-posting's doc (`doc_lens=OK`). The fold-gated layout is the purging
+posting's doc (`doc_lens=OK`), and prewarms a second reader with the
+case's queries: its topk and tiered_topk must equal the checked
+reader's with no block decoded and no term fetched (`warm=OK`). The
+fold-gated layout is the purging
 merge of the upsert cases killed right after its 'committed' barrier:
 the reader serves its dst and gates the sources out, and must equal
 the Spark plane on that same snapshot before GC rolls the fold
@@ -187,11 +190,27 @@ def _doc_lens_ok(reader, idx):
     return reader._doc_lens().get(served).tolist() == [truth[x] for x in served.tolist()]
 
 
+def _warm_ok(reader, idx, queries):
+    """A second reader, prewarmed with `queries`, answers their topk
+    and tiered_topk like `reader` without fetching a term or decoding a
+    block: the prewarm's one read and one decode pass left exactly the
+    state those runs need."""
+    warm = IndexReader(idx)
+    warm.prewarm([q for _, q in queries])
+    ok = True
+    for _, q in queries:
+        for run in ("topk", "tiered_topk"):
+            ok &= getattr(warm, run)(q, k=8) == getattr(reader, run)(q, k=8)
+            ok &= warm.last_stats["terms_cold"] == warm.last_stats["blocks_decoded"] == 0
+    return ok
+
+
 def _fold_gated_ok(reader, idx, queries, live):
     """Purge-merge every live segment, killed right after its
     'committed' barrier: the reader gates the sources out and serves
     the dst — its doc lengths and top-k must match the Spark plane on
-    that snapshot — then GC rolls the fold forward."""
+    that snapshot — then GC rolls the fold forward. Returns that check
+    and _warm_ok's on the gated snapshot."""
     orig = merge_mod._finish_merge
 
     def killed(*a, **kw):
@@ -213,8 +232,9 @@ def _fold_gated_ok(reader, idx, queries, live):
         want.setdefault(r.query_id, []).append((r.doc_id, round(r.score, 4)))
     ok &= all([(d, round(s, 4)) for d, s in reader.topk(q, k=8)] == want.get(qid, [])
               for qid, q in queries)
+    warm = _warm_ok(reader, idx, queries)
     gc_aborted_merges(spark, IndexPaths(idx))
-    return ok
+    return ok, warm
 
 
 def _defs_want(reader, doc_toks, symbol):
@@ -289,6 +309,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
     tier_ok = _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=pre), 8)
     df_ok = _df_identity(reader, idx, tq)
     lens_ok = _doc_lens_ok(reader, idx)
+    warm_ok = _warm_ok(reader, idx, tq)
 
     # tombstone the head of several rankings; WAND + serving + tiered
     # must all equal the deleted-filtered oracles
@@ -313,6 +334,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         del_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dset), 8)
         df_ok &= _df_identity(reader, idx, tq)
         lens_ok &= _doc_lens_ok(reader, idx)
+        warm_ok &= _warm_ok(reader, idx, tq)
 
     churn_ok = True
     if seed % 3 == 0:
@@ -330,14 +352,18 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8, exclude=dead), 8)
         df_ok &= _df_identity(reader, idx, tq)
         lens_ok &= _doc_lens_ok(reader, idx)
+        warm_ok &= _warm_ok(reader, idx, tq)
         live = sorted({int(r.segment_id) for r in spark.read.parquet(f"{idx}/postings")
                        .select("segment_id").distinct().collect()})
-        lens_ok &= _fold_gated_ok(reader, idx, queries, live)
+        gated_ok, gated_warm = _fold_gated_ok(reader, idx, queries, live)
+        lens_ok &= gated_ok
+        warm_ok &= gated_warm
         refresh_meta(idx)
         reader.refresh()
         churn_ok &= _tiered_identity(reader, tq, _tiered_want(idx, tq, 8), 8)
         df_ok &= _df_identity(reader, idx, tq)
         lens_ok &= _doc_lens_ok(reader, idx)
+        warm_ok &= _warm_ok(reader, idx, tq)
 
     phrase_ok = True
     defs_ok = True
@@ -389,6 +415,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
         preader = IndexReader(posidx)
         df_ok &= _df_identity(preader, posidx, tq)
         lens_ok &= _doc_lens_ok(preader, posidx)
+        warm_ok &= _warm_ok(preader, posidx, tq)
         for qid, ph, slop in phrases:
             terms = tokenize(ph)
             want = {d: brute(toks, terms, slop) for d, toks in doc_toks.items()}
@@ -427,7 +454,7 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
                           for t in [ph for _, ph, _ in phrases] + refs)
         shutil.rmtree(posidx, ignore_errors=True)
     fails += not (ok and serve_ok and phrase_ok and defs_ok and tier_ok and del_ok and churn_ok
-                  and df_ok and lens_ok)
+                  and df_ok and lens_ok and warm_ok)
     print(f"seed={seed} bs={bs} cs={cs} nseg={nseg} vocab={vocab} merge={do_merge} "
           f"pre_deleted={len(pre)} overlapping_blocks={overlap}"
           f"{'' if pos_overlap is None else f' pos_overlapping_blocks={pos_overlap}'}"
@@ -439,7 +466,8 @@ for seed, bs, cs, nseg, vocab, do_merge in cases:
           f" del={'OK' if del_ok else 'MISMATCH'}"
           f" churn={'OK' if churn_ok else 'MISMATCH'}"
           f" df={'OK' if df_ok else 'MISMATCH'}"
-          f" doc_lens={'OK' if lens_ok else 'MISMATCH'}", flush=True)
+          f" doc_lens={'OK' if lens_ok else 'MISMATCH'}"
+          f" warm={'OK' if warm_ok else 'MISMATCH'}", flush=True)
     shutil.rmtree(idx, ignore_errors=True)
 print("FAILS:", fails)
 spark.stop()
