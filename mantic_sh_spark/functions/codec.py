@@ -45,9 +45,8 @@ the cost class of the DeadDocs mask every kernel already pays. Building
 that DocLens is not: tombstones are few, norms are one row per doc, so
 a load costs O(docs of the segments it covers) — once per epoch in the
 serving reader, but once per task in the Spark query plane and the
-merge compactor. The encoder still takes `dl`: block_max (and the
-terms directory's max_tf_norm) are computed from tf and dl at build
-and merge time.
+merge compactor. The encoder still takes `dl`: block_max is computed
+from tf and dl at build and merge time.
 
 The format has ONE decoder, decode_blocks (any batch of blocks in one
 varint pass — every reader: the top-k kernel, phrase, the per-doc
@@ -399,8 +398,8 @@ def encode_table(tbl, avgdl: float, k1: float, b: float, block_size: int = BLOCK
     string, computed Catalyst-side before the wide shuffle): the build
     never ships term STRINGS through its shuffle — an int64 key
     shuffles/sorts for a fraction of the bytes and compares in one
-    instruction, and the term→string mapping lives in the (vocabulary-
-    sized) terms directory instead of on every posting row.
+    instruction, and the term→string mapping lives in the optional
+    term_dictionary sidecar instead of on every posting row.
 
     Input rows are one per (term, doc) posting, sorted by (tid, doc_id)
     — segment and salt are derived vectorized from doc_id (segment = id

@@ -15,7 +15,7 @@ that pulls typed tokens out of the query string
 
 All driver-side pure Python: query strings are tiny; the expensive
 part of fuzzy expansion (candidate lookup) stays a row-group-pruned
-prefix read of the terms directory, never a vocabulary scan.
+prefix read of the term_dictionary sidecar, never a vocabulary scan.
 """
 
 from __future__ import annotations
@@ -126,8 +126,7 @@ def expand_fuzzy_term(index_dir: str, term: str, max_dist: int = 2,
     never a vocabulary scan.
 
     Candidates come from the `term_dictionary` sidecar — the core index
-    stores no term strings (postings and the terms directory are keyed
-    by the int64 tid), so fuzzy matching is exactly what the optional
+    stores no term strings (postings are keyed by the int64 tid), so fuzzy matching is exactly what the optional
     vocabulary artifact exists for. Build it once per index with
     `operators/index_build.build_term_dictionary`. Every index MUTATION
     (extend/upsert/purge) deletes the sidecar — a stale dictionary

@@ -1,13 +1,13 @@
 """Client-side term-id hashing: a pure-Python xxHash64 bit-identical to
 Spark's `F.xxhash64(string_col)` (seed 42).
 
-The index keys posting rows AND the terms directory by
-`tid = xxhash64(term)` — term strings never travel through the build
-shuffle and are not stored per posting. Query paths (the distributed
-engine's driver, the serving reader — which has no JVM at all) resolve
-term → tid with THIS function; `tests/test_termhash.py` locks the two
-implementations together over random unicode strings exactly the way
-the tokenizer is locked across its three implementations.
+The index keys posting rows by `tid = xxhash64(term)` — term strings
+never travel through the build shuffle and are not stored per posting.
+Query paths (the distributed engine's driver, the serving reader —
+which has no JVM at all) resolve term → tid with THIS function;
+`tests/test_termhash.py` locks the two implementations together over
+random unicode strings exactly the way the tokenizer is locked across
+its three implementations.
 
 xxHash64 is public domain (Yann Collet); this is the reference
 algorithm restated in Python integers. Speed is irrelevant here — it

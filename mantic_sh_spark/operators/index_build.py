@@ -22,10 +22,11 @@ Pipeline (all DataFrame + mapInArrow; no per-row Python):
                              │   chunk outputs concatenate in doc-id
                              │   order with no second merge pass)
                              ▼
-            postings/segment_id=K (sorted by tid, first_doc)
-            terms/segment_id=K    (tid, df, max_tf_norm, bytes — no
-                                   strings; clients hash query terms
+            postings/segment_id=K (sorted by tid, first_doc; no term
+                                   strings — clients hash query terms
                                    with functions/termhash.py)
+            terms/segment_id=K    (one summary row: n_terms, n_postings,
+                                   bytes — the manifest row's metrics)
             build_manifest        (per-segment lineage + metrics + build_avgdl)
 
 Resume (reference analog: stale-file diff src/cache.ts:147-186): a
@@ -65,8 +66,9 @@ from .docs import build_docs, doc_stats
 #  v7: each tfs value folds in the posting's tier code of
 #  codec.DEFAULT_TIER_SPECS, plus a per-block `min_tier` column;
 #  v8: blocks drop the per-posting doc lengths — scorers gather them
-#  from the norms sidecar, liveness.DocLens)
-INDEX_FORMAT = 8
+#  from the norms sidecar, liveness.DocLens;
+#  v9: terms/ holds one summary row per segment instead of per-term rows)
+INDEX_FORMAT = 9
 
 BLOCK_ROW_SCHEMA = (
     "tid long, segment_id int, first_doc long, last_doc long, "
@@ -78,8 +80,8 @@ BLOCK_ROW_SCHEMA_POS = BLOCK_ROW_SCHEMA + ", positions binary"
 
 def tid_col(term) -> F.Column:
     """Dictionary-encoded term key: xxhash64 of the term string (Spark's
-    XxHash64 expression, seed 42). Postings AND the terms directory are
-    keyed by this int64 — term strings never travel through the build's
+    XxHash64 expression, seed 42). Postings are keyed by this int64 —
+    term strings never travel through the build's
     wide shuffle and are not stored in the core index at all. Query
     clients recover the key with the bit-identical pure-Python xxhash64
     (functions/termhash.py; lock-step test). Collision risk is
@@ -210,11 +212,10 @@ def _trace(label: str, t0: float) -> float:
     return t1
 
 
-# Conditional-sum fanout cap for observed per-segment aggregates: above
-# this many segments in one batch/stage the observation is skipped and
-# the old one-pass agg jobs run instead (3 observed columns per segment
-# in the terms commit; 1 in the norms writes). Tests lower it to force
-# the fallback branches.
+# Conditional-sum fanout cap for observed per-segment doc counts: above
+# this many segments in one docs/norms write the observation is skipped
+# and the postings commit counts norms with one agg job instead (one
+# observed column per segment). Tests lower it to force the fallback.
 _OBS_SEG_CAP = 64
 
 
@@ -485,9 +486,9 @@ def build_postings_for_segments(
     chunk_size: int | None = None,
     n_docs_by_seg: dict[int, int] | None = None,
 ) -> list[dict]:
-    """Build + commit postings/terms for the given segments; return
-    manifest metric rows (not yet appended). store_positions adds a
-    varint-encoded within-doc position list per posting (phrase /
+    """Build + commit postings and their terms/ summaries for the given
+    segments; return manifest metric rows (not yet appended).
+    store_positions adds a varint-encoded within-doc position list per posting (phrase /
     proximity queries — operators/phrase.py). chunk_size must match the
     docs table's salt chunking (operators/docs.py) — segment and salt
     are pure functions of doc_id, so the wide shuffle never ships them
@@ -499,7 +500,7 @@ def build_postings_for_segments(
 
     Split into two halves so multi-batch builds can PIPELINE: the wide
     shuffle + postings write (_encode_and_write_postings) runs on the
-    caller's thread, while the terms-directory commit + metrics
+    caller's thread, while the summary commit + metrics
     (_commit_terms_and_metrics) for the PREVIOUS batch overlaps it from
     a single commit worker (build_index). The two halves touch
     different table roots, so the concurrent writes never share an
@@ -607,6 +608,57 @@ def _encode_and_write_postings(
     return segs
 
 
+def write_segment_summary(spark: SparkSession, paths: IndexPaths,
+                          segs: list[int]) -> list[dict]:
+    """Commit each segment's one-row terms/ summary (n_terms, n_postings,
+    bytes) and return the summaries as manifest metrics, zero-filled for
+    a segment with no postings (it gets no row, but is still marked done,
+    so a resume never re-cleans and rebuilds it). One aggregate job over
+    the committed postings' int columns (per-block `nbytes`, format v4,
+    keeps the scan off the binary payloads); the rows are written
+    driver-side. The build batches, extend/upsert and merge_segments all
+    commit through here, before their manifest barrier."""
+    got = {
+        r.segment_id: {"segment_id": r.segment_id, "n_terms": int(r.n_terms),
+                       "n_postings": int(r.n_postings), "bytes": int(r.bytes)}
+        for r in spark.read.parquet(paths.postings)
+        .filter(F.col("segment_id").isin(segs))
+        .groupBy("segment_id")
+        .agg(F.countDistinct("tid").alias("n_terms"), F.sum("n").alias("n_postings"),
+             F.sum("nbytes").alias("bytes"))
+        .collect()
+    }
+    cols = ("n_terms", "n_postings", "bytes")
+    for s, m in got.items():
+        write_small_parquet(
+            spark, f"{paths.terms}/segment_id={s}",
+            pd.DataFrame({c: pd.array([m[c]], dtype="int64") for c in cols}),
+            "n_terms long, n_postings long, bytes long",
+        )
+    return [got.get(s, {"segment_id": s, "n_terms": 0, "n_postings": 0, "bytes": 0})
+            for s in segs]
+
+
+def read_segment_summary(paths: IndexPaths,
+                         spark: SparkSession | None = None) -> dict[int, tuple]:
+    """{segment: (n_terms, n_postings, bytes)} from the terms/ summary
+    rows — a pyarrow read, no Spark job, except for a non-local URI
+    scheme given a session (spark_reads)."""
+    cols = ("segment_id", "n_terms", "n_postings", "bytes")
+    if spark_reads(paths.terms, spark):
+        t = read_or_none(spark, paths.terms)
+        rows = [] if t is None else t.select(*cols).collect()
+    else:
+        import pyarrow.dataset as ds
+
+        try:
+            d = ds.dataset(paths.terms, format="parquet", partitioning="hive").to_table().to_pydict()
+        except FileNotFoundError:
+            d = {}
+        rows = zip(*(d.get(c, []) for c in cols))
+    return {int(s): (int(t), int(p), int(b)) for s, t, p, b in rows}
+
+
 def _commit_terms_and_metrics(
     spark: SparkSession,
     paths: IndexPaths,
@@ -615,91 +667,13 @@ def _commit_terms_and_metrics(
     started: float,
     n_docs_by_seg: dict[int, int] | None = None,
 ) -> list[dict]:
-    """Second half: terms-directory commit over the committed postings
-    + manifest metric rows. Reads/writes only paths.postings (read) and
-    paths.terms (append) — safe to overlap with the NEXT batch's
-    postings write from a single commit worker (different roots, so no
-    shared FileOutputCommitter staging)."""
+    """Second half: the segments' terms/ summaries + manifest metric
+    rows. Reads paths.postings and paths.norms and writes only
+    paths.terms — safe to overlap with the NEXT batch's postings write
+    from a single commit worker."""
     _t = time.time()
-    # Term directory: per-(segment, tid) df + score upper bound +
-    # compressed size. ONE Catalyst agg pass over the committed blocks
-    # (re-read → lineage cut). NO term strings here: clients resolve
-    # term → tid with the bit-identical pure-Python xxhash64
-    # (functions/termhash.py), so the build never pays a
-    # corpus-rescanning vocabulary pass — at 100 TB that pass would
-    # re-tokenize the whole corpus (measured ~30% of build time even at
-    # sf0.1). Human-readable strings live in the OPTIONAL
-    # `term_dictionary` sidecar (build_term_dictionary) that fuzzy
-    # expansion and debugging build on demand.
-    written = spark.read.parquet(paths.postings).filter(F.col("segment_id").isin(segs))
-    # sizes come from the stored per-block `nbytes` (format v4): the agg
-    # scan prunes to five int/double columns and never touches the
-    # binary payloads (measured 2.8 s of a 4.5 s job at sf0.1)
-    terms = written.groupBy("segment_id", "tid").agg(
-        F.sum("n").alias("df"),
-        F.max("block_max").alias("max_tf_norm"),
-        F.sum("nbytes").cast("long").alias("bytes"),
-    )
-    # per-segment manifest metrics ride the terms write as OBSERVED
-    # aggregates (CollectMetrics) — zero extra jobs in the serial tail.
-    # Conditional-sum fanout is 3 columns per segment, so cap it at
-    # _OBS_SEG_CAP segments per batch and fall back to the old one-pass
-    # agg job for wider batches (batch_segments bounds this in real
-    # builds). The observe is attached AFTER the repartition exchange
-    # so CollectMetrics executes in the RESULT (write) stage, where
-    # Spark dedupes accumulator updates across task retries and
-    # speculation — placed before the exchange it would sit in a
-    # shuffle-map stage, and a fetch-failure stage retry on a real
-    # cluster could double-count the metrics (review r4 finding).
-    from pyspark.sql import Observation
-
-    obs = None
-    shaped = terms.repartition("segment_id")
-    if len(segs) <= _OBS_SEG_CAP:
-        obs = Observation()
-        exprs = []
-        for s in segs:
-            is_s = F.col("segment_id") == s
-            exprs += [
-                F.sum(F.when(is_s, F.col("df")).otherwise(F.lit(0))).alias(f"p{s}"),
-                F.sum(F.when(is_s, 1).otherwise(0)).alias(f"t{s}"),
-                F.sum(F.when(is_s, F.col("bytes")).otherwise(F.lit(0))).alias(f"b{s}"),
-            ]
-        shaped = shaped.observe(obs, *exprs)
-    shaped.sortWithinPartitions("tid").write.mode("append").partitionBy(
-        "segment_id"
-    ).parquet(paths.terms)
+    metrics = write_segment_summary(spark, paths, segs)
     _t = _trace("terms dir", _t)
-
-    if obs is not None:
-        vals = obs.get
-        metrics = [
-            {"segment_id": s, "n_postings": int(vals[f"p{s}"] or 0),
-             "n_terms": int(vals[f"t{s}"] or 0), "bytes": int(vals[f"b{s}"] or 0)}
-            for s in segs
-        ]
-    else:
-        got = {
-            r.segment_id: r.asDict()
-            for r in (
-                spark.read.parquet(paths.terms)
-                .filter(F.col("segment_id").isin(segs))
-                .groupBy("segment_id")
-                .agg(
-                    F.sum("df").alias("n_postings"),
-                    F.count(F.lit(1)).alias("n_terms"),
-                    F.sum("bytes").alias("bytes"),
-                )
-                .collect()
-            )
-        }
-        # zero-fill segments that produced no postings so BOTH paths
-        # mark every requested segment done (a zero-posting segment
-        # must not be re-cleaned and rebuilt on every resume)
-        metrics = [
-            got.get(s, {"segment_id": s, "n_postings": 0, "n_terms": 0, "bytes": 0})
-            for s in segs
-        ]
     if n_docs_by_seg is None or any(s not in n_docs_by_seg for s in segs):
         n_docs_by_seg = {
             r.segment_id: r.n
@@ -715,13 +689,10 @@ def _commit_terms_and_metrics(
     finished = time.time()
     return [
         {
-            "segment_id": m["segment_id"],
+            **m,
             "stage": "postings",
             "status": "done",
             "n_docs": n_docs_by_seg.get(m["segment_id"], 0),
-            "n_terms": m["n_terms"],
-            "n_postings": m["n_postings"],
-            "bytes": m["bytes"],
             "started_at": started,
             "finished_at": finished,
             "build_avgdl": float(avgdl),
@@ -922,7 +893,7 @@ def build_index(
     if max_batches is not None:
         batches = batches[:max_batches]
     # PIPELINED commits: the docs-stage norms+manifest commit and batch
-    # i's terms-directory commit + manifest append run on ONE commit
+    # i's terms/ summary commit + manifest append run on ONE commit
     # worker while the postings wide shuffles run on this thread — the
     # serial metadata tail overlaps the data stages instead of adding
     # to the critical path (a single-batch build overlaps the norms
@@ -1093,7 +1064,7 @@ def build_term_dictionary(spark: SparkSession, index_dir: str) -> int:
     the human-readable vocabulary map that fuzzy expansion
     (functions/intent.py) and debugging read. Deliberately OFF the
     build hot path: it re-scans + re-tokenizes the docs table (the
-    exact cost that keying postings/terms by tid removed from every
+    exact cost that keying postings by tid removed from every
     build), so it runs once on demand, not per batch. The shuffle is
     vocabulary-bounded (explode(array_distinct) partial-aggregates
     per-partition-distinct terms before the exchange); output is one
@@ -1133,7 +1104,9 @@ def build_term_dictionary(spark: SparkSession, index_dir: str) -> int:
 
 
 def index_stats(spark: SparkSession, index_dir: str) -> dict:
-    """Build metrics summary (driver-side, small)."""
+    """Build metrics summary: the snapshot's stats plus the terms/
+    summary rows of the served segments (driver-side reads, no Spark
+    job on a local index)."""
     paths = IndexPaths(index_dir)
     snap = read_snapshot(paths.root, spark)
     out: dict = {"n_docs": snap.n_docs, "avgdl": snap.avgdl}
@@ -1146,10 +1119,8 @@ def index_stats(spark: SparkSession, index_dir: str) -> dict:
         out["gated_segments"] = sorted(excluded)
     live = [s for s in _list_segments(spark, paths.postings) if s not in excluded]
     out["segments"] = len(live)
-    t = read_or_none(spark, paths.terms)
-    if t is not None:
-        if excluded:
-            t = t.filter(~F.col("segment_id").isin(sorted(excluded)))
-        agg = t.agg(F.sum("df").alias("postings"), F.sum("bytes").alias("bytes")).collect()[0]
-        out.update(postings=agg.postings, index_bytes=agg.bytes)
+    summary = read_segment_summary(paths, spark)
+    if summary:
+        kept = [v for s, v in summary.items() if s not in excluded]
+        out.update(postings=sum(v[1] for v in kept), index_bytes=sum(v[2] for v in kept))
     return out

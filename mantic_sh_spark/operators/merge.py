@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from ..functions import codec
 from ..functions.bm25 import B, K1
 from ..sources.catalog import IndexPaths, append_manifest, read_or_none
-from .index_build import BLOCK_ROW_SCHEMA, BLOCK_ROW_SCHEMA_POS, _delete_path
+from .index_build import (BLOCK_ROW_SCHEMA, BLOCK_ROW_SCHEMA_POS, _delete_path,
+                          read_segment_summary, write_segment_summary)
 
 
 def _write_complete(spark, path: str) -> bool:
@@ -343,13 +344,7 @@ def maybe_compact(
     segs = _list_segments(spark, paths.postings)
     if len(segs) <= max_segments:
         return None
-    sizes = {
-        r.segment_id: r.bytes
-        for r in spark.read.parquet(paths.terms)
-        .groupBy("segment_id")
-        .agg(F.sum("bytes").alias("bytes"))
-        .collect()
-    }
+    sizes = {s: v[2] for s, v in read_segment_summary(paths, spark).items()}
     by_size = sorted(segs, key=lambda s: (sizes.get(s, 0), s))
     n_fold = max(2, len(segs) - max_segments + 1)
     victims = by_size[:n_fold]
@@ -550,18 +545,9 @@ def merge_segments(
     _delete_path(spark, dst_dir)  # clear a rolled-back attempt's debris
     merged.drop("segment_id").write.mode("overwrite").parquet(dst_dir)
 
-    final = spark.read.parquet(dst_dir)
-    n_postings = final.agg(F.sum("n")).collect()[0][0]
-    n_terms = final.select("tid").distinct().count()
-    nbytes = final.agg(F.sum("nbytes")).collect()[0][0]
-    terms = final.groupBy("tid").agg(
-        F.sum("n").alias("df"),
-        F.max("block_max").alias("max_tf_norm"),
-        F.sum("nbytes").cast("long").alias("bytes"),
-    )
-    terms.coalesce(1).sortWithinPartitions("tid").write.mode("overwrite").parquet(
-        f"{paths.terms}/segment_id={int(dst_segment)}"
-    )
+    # the dst's terms/ summary row, and its manifest metrics
+    m = write_segment_summary(spark, paths, [dst_segment])[0]
+    n_terms, n_postings, nbytes = m["n_terms"], m["n_postings"], m["bytes"]
     # norms: the source norm rows land under the dst segment dir (minus
     # purged docs) BEFORE the barrier — retirement after 'committed'
     # only ever deletes

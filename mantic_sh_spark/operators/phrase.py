@@ -307,8 +307,8 @@ def phrase_topk(
     from .wand import _index_meta, _term_meta
 
     _n, _a, _bf, dead_src, excluded = _index_meta(spark, paths)
-    # resolve term → tid via the terms directory (posting rows carry
-    # only the dictionary-encoded key); absent terms simply contribute
+    # resolve term → tid with the client-side hash and df from the
+    # postings' block counts (wand._term_meta); absent terms contribute
     # no postings — the per-segment kernel already requires every
     # phrase term present in a segment before verifying
     meta = _term_meta(spark, paths, all_terms, excluded=excluded)

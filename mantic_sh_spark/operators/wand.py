@@ -581,20 +581,21 @@ def _postings_scan(spark: SparkSession, paths: IndexPaths,
 # pure-Python xxhash64 that is bit-identical to the build's Catalyst
 # expression (functions/termhash.py; lock-step test) — the index
 # stores no term strings, so a df lookup is a row-group-pruned int64
-# probe of the tid-sorted terms directory.
+# probe of the tid-sorted postings, summing the blocks' `n`.
 _DF_CACHE: dict[str, dict[str, tuple[int, int]]] = {}
 
 
 def _term_meta(spark: SparkSession, paths: IndexPaths, terms: list[str],
                excluded: frozenset = frozenset()) -> dict[str, tuple[int, int]]:
-    """{term: (global df, tid)} per query term (df 0 when absent).
-    Driver-side pyarrow row-group-pruned read of the (tiny, tid-sorted)
-    terms directory — no Spark job on the query path; a Spark agg only
-    for a non-local URI scheme (index_build.spark_reads). A local read
-    error propagates.
+    """{term: (global df, tid)} per query term (df 0 when absent): df
+    is the `n` of the term's posting blocks summed, as the serving
+    reader computes it. Driver-side pyarrow read of the postings' (tid,
+    n) columns — no Spark job on the query path; a Spark agg only for a
+    non-local URI scheme (index_build.spark_reads). A local read error
+    propagates.
     `excluded` segments (an in-flight/crashed fold's partial dirs)
-    are dropped from the df sum — their terms rows would double-count
-    df against the live sources. Cache safety: the exclusion set is
+    are dropped from the df sum — their blocks would double-count df
+    against the live sources. Cache safety: the exclusion set is
     constant per refresh epoch and refresh_meta clears _DF_CACHE."""
     from ..functions.termhash import term_tid
     from .index_build import spark_reads
@@ -604,24 +605,23 @@ def _term_meta(spark: SparkSession, paths: IndexPaths, terms: list[str],
     if missing:
         tid_of = {t: term_tid(t) for t in missing}
         tids = sorted(tid_of.values())
-        if spark_reads(paths.terms, spark):
-            sdf = spark.read.parquet(paths.terms).filter(F.col("tid").isin(tids))
+        if spark_reads(paths.postings, spark):
+            sdf = _postings_scan(spark, paths).filter(_tid_filter(tids))
             if excluded:
                 sdf = sdf.filter(~F.col("segment_id").isin(sorted(excluded)))
-            rows = sdf.groupBy("tid").agg(F.sum("df").alias("df")).collect()
-            dfs = {int(r.tid): int(r.df) for r in rows}
+            rows = sdf.groupBy("tid").agg(F.sum("n")).collect()
         else:
             import pyarrow.dataset as ds
 
             flt = ds.field("tid").isin(tids)
             if excluded:
                 flt = flt & ~ds.field("segment_id").isin(sorted(excluded))
-            tbl = ds.dataset(paths.terms, format="parquet", partitioning="hive").to_table(
-                filter=flt, columns=["tid", "df"]
+            tbl = ds.dataset(paths.postings, format="parquet", partitioning="hive").to_table(
+                filter=flt, columns=["tid", "n"]
             )
-            dfs = {}
-            for t, v in zip(tbl["tid"].to_pylist(), tbl["df"].to_pylist()):
-                dfs[t] = dfs.get(t, 0) + v
+            g = tbl.group_by("tid").aggregate([("n", "sum")])
+            rows = zip(g["tid"].to_pylist(), g["n_sum"].to_pylist())
+        dfs = {int(t): int(n) for t, n in rows}
         cache.update({t: (dfs.get(tid_of[t], 0), tid_of[t]) for t in missing})
     return {t: cache[t] for t in terms}
 
@@ -636,8 +636,8 @@ def wand_topk(
 ) -> DataFrame:
     """Top-k via the index: per-segment segment_topk (applyInPandas) → global
     rank-window merge. Parquet scan is pruned to the query terms
-    (predicate pushdown on `term` + row-group stats from the
-    sort-by-term layout)."""
+    (predicate pushdown on the int64 `tid` + row-group stats from the
+    tid-sorted layout)."""
     paths = IndexPaths(index_dir)
     n_docs, avgdl, bound_factors, dead_src, excluded = _index_meta(spark, paths)
 
@@ -647,7 +647,7 @@ def wand_topk(
         return spark.createDataFrame([], "query_id int, doc_id long, score double, rank int")
 
     # global df + tid per query term (driver-side pruned read, memoized —
-    # keeps the terms-directory Spark job off the per-query path)
+    # keeps a df Spark job off the per-query path)
     meta = _term_meta(spark, paths, all_terms, excluded=excluded)
     idf_map = {t: idf_fn(n_docs, m[0]) for t, m in meta.items() if m[0] > 0}
     tid2term = {meta[t][1]: t for t in idf_map}

@@ -67,18 +67,13 @@ _POSTING_COLS = ["tid", "segment_id", "first_doc", "last_doc", "block_max", "min
 _DECODE_BUDGET = 256 * 1024 * 1024
 
 
-def _decoded_nbytes(value) -> int:
-    """Recursive nbytes of a decoded payload (tuples/lists of ndarrays)."""
-    if isinstance(value, (tuple, list)):
-        return sum(_decoded_nbytes(v) for v in value)
-    return int(getattr(value, "nbytes", 0))
-
-
 class _DecodedLRU:
     """Byte-budgeted LRU of decoded posting payloads, keyed by
-    (namespace, term). Thread-safe; the reader clears it on refresh()
-    (same lifetime discipline as the compressed block LRUs). An entry
-    larger than the whole budget is served but never cached.
+    (namespace, term); every payload is a flat tuple of ndarrays
+    (wand.decoded_entry, phrase._term_postings), sized by summing their
+    nbytes. Thread-safe; the reader clears it on refresh() (same
+    lifetime discipline as the compressed block LRUs). An entry larger
+    than the whole budget is served but never cached.
 
     clear() bumps a GENERATION; puts carry the generation their decode
     started under and are dropped if a clear raced in between (checked
@@ -104,7 +99,7 @@ class _DecodedLRU:
             return hit[0]
 
     def put(self, key, value, generation: int | None = None) -> None:
-        nb = _decoded_nbytes(value)
+        nb = sum(v.nbytes for v in value)
         if nb > self.budget:
             return
         with self._lock:

@@ -61,6 +61,11 @@ class IndexPaths:
 
     @property
     def terms(self) -> str:
+        """One summary row per segment (n_terms, n_postings, bytes —
+        the segment's manifest metrics; index_build.write_segment_summary).
+        Per-term df is Σn over postings, so no per-term table exists; the
+        directory keeps its name because tools outside the package
+        (perfbench's per-segment bytes) read `<index>/terms`."""
         return os.path.join(self.root, "terms")
 
     @property

@@ -78,9 +78,10 @@ def _serve(idx, cfg, queries_text):
     return {q: r.topk(q, k=8) for q in queries_text}
 
 
-def _df_agrees(spark, idx, queries_text):
-    """The reader's df (the n of its served blocks summed) equals the
-    Spark plane's terms-directory df under the same fold gating."""
+def _df_agrees(spark, idx, queries_text, decoded_df):
+    """The reader's df (the n of its served blocks summed) equals the df
+    counted by decoding every block the reader serves (decoded_df, under
+    the reader's gating) and the Spark plane's df under its gating."""
     from mantic_sh_spark.functions.tokenize import tokenize_query
     from mantic_sh_spark.operators.wand import _index_meta, _term_meta
     from mantic_sh_spark.sources.catalog import IndexPaths
@@ -88,7 +89,10 @@ def _df_agrees(spark, idx, queries_text):
     terms = sorted({t for q in queries_text for t in tokenize_query(q)} | {"qqabsent"})
     paths = IndexPaths(idx)
     meta = _term_meta(spark, paths, terms, excluded=_index_meta(spark, paths)[4])
-    return IndexReader(idx).df(terms) == {t: m[0] for t, m in meta.items()}
+    reader = IndexReader(idx)
+    got = reader.df(terms)
+    return (got == decoded_df(idx, reader.gated_segments, terms)
+            and got == {t: m[0] for t, m in meta.items()})
 
 
 def _meta_agrees(spark, idx, gated):
@@ -105,7 +109,7 @@ def _meta_agrees(spark, idx, gated):
             and excluded == frozenset(gated))
 
 
-def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch):
+def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch, decoded_df):
     """Crash BEFORE the 'committed' barrier (partial dst postings/terms
     dirs on disk, sources + tombstones untouched): fresh readers must
     serve the exact pre-fold view without any GC having run."""
@@ -139,7 +143,7 @@ def test_readers_exclude_inflight_merge_dst(spark, tmp_path, monkeypatch):
     refresh_meta(idx)  # simulate a fresh process (drop memoized meta)
     assert _wand(spark, idx, queries) == before
     assert _serve(idx, cfg, qtexts) == serve_before
-    assert _df_agrees(spark, idx, qtexts)
+    assert _df_agrees(spark, idx, qtexts, decoded_df)
     assert _meta_agrees(spark, idx, {9})
 
 
@@ -206,7 +210,8 @@ def test_readers_exclude_crashed_extend_segments(spark, tmp_path, monkeypatch):
     assert _index_meta(spark, paths)[4] == frozenset()
 
 
-def test_readers_serve_committed_fold_via_union_liveness(spark, tmp_path, monkeypatch):
+def test_readers_serve_committed_fold_via_union_liveness(spark, tmp_path, monkeypatch,
+                                                        decoded_df):
     """Crash right AFTER the 'committed' barrier (dst fully written and
     live; sources not yet retired; tombstones not yet re-homed off the
     src partitions): fresh readers must serve the POST-fold view —
@@ -239,5 +244,5 @@ def test_readers_serve_committed_fold_via_union_liveness(spark, tmp_path, monkey
     refresh_meta(idx)
     assert _wand(spark, idx, queries) == control
     assert _serve(idx, cfg, qtexts) == serve_control
-    assert _df_agrees(spark, idx, qtexts)
+    assert _df_agrees(spark, idx, qtexts, decoded_df)
     assert _meta_agrees(spark, idx, {0, 1})

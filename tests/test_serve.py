@@ -118,8 +118,9 @@ def test_reader_refuses_other_format_generation(spark, small_corpus, tmp_path):
 
 def test_v7_index_refused_by_reader_and_wand(spark, small_corpus, tmp_path):
     """A v7-marked index (blocks that carried per-posting doc lengths)
-    is refused by both query planes with the format_mismatch error —
-    its blocks would fail to decode, or score without the norms."""
+    and a v8-marked one (per-term terms/ rows) are refused by both query
+    planes with the format_mismatch error — v7 blocks would fail to
+    decode, or score without the norms."""
     import shutil
 
     import pandas as pd
@@ -129,15 +130,17 @@ def test_v7_index_refused_by_reader_and_wand(spark, small_corpus, tmp_path):
     from mantic_sh_spark.operators.wand import wand_topk
     from mantic_sh_spark.sources.catalog import IndexPaths, write_small_parquet
 
-    assert INDEX_FORMAT == 8
-    idx = str(tmp_path / "idx_v7")
-    shutil.copytree(small_corpus["index_dir"], idx)
-    write_small_parquet(spark, IndexPaths(idx).format_marker,
-                        pd.DataFrame({"version": pd.array([7], dtype="int32")}), "version int")
-    with pytest.raises(RuntimeError, match="format v7, this code writes v8"):
-        IndexReader(idx)
-    with pytest.raises(RuntimeError, match="format v7, this code writes v8"):
-        wand_topk(spark, idx, [(0, "w1x")], k=3)
+    assert INDEX_FORMAT == 9
+    for old in (7, 8):
+        idx = str(tmp_path / f"idx_v{old}")
+        shutil.copytree(small_corpus["index_dir"], idx)
+        write_small_parquet(spark, IndexPaths(idx).format_marker,
+                            pd.DataFrame({"version": pd.array([old], dtype="int32")}),
+                            "version int")
+        with pytest.raises(RuntimeError, match=f"format v{old}, this code writes v9"):
+            IndexReader(idx)
+        with pytest.raises(RuntimeError, match=f"format v{old}, this code writes v9"):
+            wand_topk(spark, idx, [(0, "w1x")], k=3)
 
 
 def test_missing_norms_partition_fails_loudly(spark, small_corpus, tmp_path):
@@ -971,7 +974,7 @@ def test_prewarm_one_read_one_decode(spark, small_corpus, tmp_path, monkeypatch)
     from mantic_sh_spark.operators.delete import delete_docs
     from mantic_sh_spark.operators.merge import merge_segments
     from mantic_sh_spark.operators.wand import cached_postings, decoded_nbytes
-    from mantic_sh_spark.serve import _decoded_nbytes, _NsDecodeCache
+    from mantic_sh_spark.serve import _NsDecodeCache
 
     clean = small_corpus["index_dir"]
     tomb = str(tmp_path / "tomb")
@@ -1017,7 +1020,7 @@ def test_prewarm_one_read_one_decode(spark, small_corpus, tmp_path, monkeypatch)
         for t in has:
             entry = cached_postings(cache, t, r._blocks_lru[t])
             assert entry is not None
-            assert _decoded_nbytes(entry) == decoded_nbytes(r._blocks_lru[t])
+            assert sum(v.nbytes for v in entry) == decoded_nbytes(r._blocks_lru[t])
         cold = IndexReader(idx)
         for q in queries + ["w1x w6x", "w2x w4x w5x"]:
             for run in ("topk", "tiered_topk"):
@@ -1237,12 +1240,13 @@ def test_split_blocks_matches_groupby_reference():
     assert all(len(tb) == 0 for tb in empty.values()) and set(empty) == set(tid2term.values())
 
 
-def test_reader_serves_without_terms_dir(spark, tmp_path):
+def test_reader_serves_without_terms_dir(spark, tmp_path, decoded_df):
     """Serving never reads the terms directory: a reader on a copy
     whose terms/ is deleted answers topk, tiered_topk, phrase_topk,
     definitions and _scores_for_docs exactly like a reader on the intact
-    index, its df equals the Spark plane's terms-directory df, and an
-    absent term is cached as empty blocks."""
+    index, its df equals the df counted by decoding every block
+    (decoded_df) and the Spark plane's, and an absent term is cached as
+    empty blocks."""
     import shutil
 
     import numpy as np
@@ -1286,7 +1290,7 @@ def test_reader_serves_without_terms_dir(spark, tmp_path):
 
     terms = ["w0x", "w1x", "w2x", "parse", "html", "qqabsent"]
     meta = _term_meta(spark, IndexPaths(idx), terms)
-    assert reader.df(terms) == {t: m[0] for t, m in meta.items()}
+    assert reader.df(terms) == decoded_df(bare, [], terms) == {t: m[0] for t, m in meta.items()}
 
 
 _DEF_WORDS = ("the", "a", "function", "def", "class", "new", "const", "this")

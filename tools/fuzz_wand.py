@@ -19,7 +19,8 @@ then UPSERTS modified versions of a few head docs (tombstones + a fresh
 segment) and re-checks tiered identity, then PURGES with a merge of
 every segment and checks it once more. Each of those states (and the
 positional twin) also checks the reader's df — the n of its served
-blocks summed — against the Spark plane's terms-directory df.
+blocks summed — against each term's distinct docs counted over the
+decoded served blocks and against the Spark plane's df.
 
 Every layout — fresh, merged, legacy, deleted, upserted, purged, the
 positional twin and a fold-gated one — also checks the reader's
@@ -71,6 +72,7 @@ from mantic_sh_spark.session import get_spark
 from mantic_sh_spark.functions.tokenize import tokens_col
 from mantic_sh_spark.operators.index_build import build_index
 from mantic_sh_spark.operators.merge import gc_aborted_merges, merge_segments
+from mantic_sh_spark.functions.termhash import term_tid
 from mantic_sh_spark.functions.tokenize import tokenize, tokenize_query
 from mantic_sh_spark.operators.delete import delete_docs
 from mantic_sh_spark.operators.phrase import phrase_topk
@@ -163,14 +165,35 @@ def _budget0_exact(reader, queries, k):
     return True
 
 
+def _served_postings(reader, idx):
+    """(tid, doc_id) of every posting the reader serves, by decoding
+    every block outside its gated segments (codec.decode_blocks raises
+    when a block's bytes disagree with its n)."""
+    import pyarrow.dataset as ds
+
+    post = ds.dataset(f"{idx}/postings", format="parquet", partitioning="hive")
+    flt = ~ds.field("segment_id").isin(reader.gated_segments) if reader.gated_segments else None
+    t = post.to_table(filter=flt, columns=["tid", "n", "first_doc", "doc_gaps", "tfs"])
+    n = t["n"].to_numpy()
+    docs = codec_mod.decode_blocks(n, t["first_doc"].to_numpy(),
+                                   t["doc_gaps"].combine_chunks(), t["tfs"].combine_chunks())[0]
+    return np.repeat(t["tid"].to_numpy(), n), docs
+
+
 def _df_identity(reader, idx, queries):
-    """The reader's df (the n of its served blocks summed) equals the
-    Spark plane's terms-directory df, both under the same fold gating."""
+    """The reader's df (the n of its served blocks summed) equals each
+    term's distinct docs counted over the decoded served blocks, and the
+    Spark plane's df (wand._term_meta) under its own fold gating."""
     terms = sorted({t for _, q in queries for t in tokenize_query(q)})
+    tids, docs = _served_postings(reader, idx)
+    pairs = np.unique(np.stack([tids, docs]), axis=1)
+    have = dict(zip(*(a.tolist() for a in np.unique(pairs[0], return_counts=True))))
     refresh_meta(idx)
     paths = IndexPaths(idx)
     meta = _term_meta(spark, paths, terms, excluded=_index_meta(spark, paths)[4])
-    return reader.df(terms) == {t: m[0] for t, m in meta.items()}
+    got = reader.df(terms)
+    return (got == {t: have.get(term_tid(t), 0) for t in terms}
+            and got == {t: m[0] for t, m in meta.items()})
 
 
 def _doc_lens_ok(reader, idx):
@@ -178,12 +201,7 @@ def _doc_lens_ok(reader, idx):
     names, the docs table's doc_len (gated segments skipped)."""
     import pyarrow.dataset as ds
 
-    post = ds.dataset(f"{idx}/postings", format="parquet", partitioning="hive")
-    flt = ~ds.field("segment_id").isin(reader.gated_segments) if reader.gated_segments else None
-    t = post.to_table(filter=flt, columns=["n", "first_doc", "doc_gaps", "tfs"])
-    served = np.unique(codec_mod.decode_blocks(
-        t["n"].to_numpy(), t["first_doc"].to_numpy(),
-        t["doc_gaps"].combine_chunks(), t["tfs"].combine_chunks())[0])
+    served = np.unique(_served_postings(reader, idx)[1])
     d = ds.dataset(f"{idx}/docs", format="parquet", partitioning="hive").to_table(
         columns=["doc_id", "doc_len"]).to_pydict()
     truth = dict(zip(d["doc_id"], d["doc_len"]))
